@@ -240,13 +240,6 @@ object Dedup {
     // micro-batch — a tracked handle per batch would accumulate).
     val p0 = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize p0 EAGERLY: its four references below land in ONE
-    // union stage, and concurrent tasks of different union branches
-    // hitting the same not-yet-cached partition each recompute the
-    // upstream pair join — a cache stampede measured as ~4x the
-    // pairwise-cosine work on q112's pair graph (r21 attribution).
-    // One cheap count materializes every partition exactly once.
-    p0.count()
     val sym = p0.union(p0.select(col("v").as("u"), col("u").as("v")))
     val edges = sym.union(sym.select(col("u"), col("u").as("v"))).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -268,6 +261,14 @@ object Dedup {
     var edgeRows = 0L
     var vertices = 0L
     try {
+      // materialize p0 EAGERLY: its four references below land in ONE
+      // union stage, and concurrent tasks of different union branches
+      // hitting the same not-yet-cached partition each recompute the
+      // upstream pair join — a cache stampede measured as ~4x the
+      // pairwise-cosine work on q112's pair graph (r21 attribution).
+      // One cheap count materializes every partition exactly once.
+      // Inside the try: a task failure here must release p0 as well.
+      p0.count()
       while (!converged && i < maxIter) {
         // each vertex adopts min(own label, neighbors' labels)…
         // localCheckpoint (NOT persist): truncates the logical plan to

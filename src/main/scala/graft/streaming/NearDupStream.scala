@@ -146,9 +146,12 @@ object NearDupStream {
       ccMaxIter: Int, onNonConvergence: NonConvergence): Unit = {
     val spark = batch.sparkSession
     val b = batch.persist()
+    // declared outside the try (building it runs no job) so the finally
+    // releases it on ANY exit: a Fail-policy batch throws mid-try, and
+    // the stream's replay would otherwise pile up one cache per attempt
+    val buckets = Dedup.bandBuckets(b, "doc_id", "text", k, bands, shingleN)
+      .persist()
     try {
-      val buckets = Dedup.bandBuckets(b, "doc_id", "text", k, bands, shingleN)
-        .persist()
       val seen =
         if (Files.exists(stateDir) && hasParquet(stateDir))
           spark.read.parquet(stateDir.toString)
@@ -203,8 +206,8 @@ object NearDupStream {
       // 5. register every batch bucket (transitive chaining)
       buckets.select("bucket").distinct()
         .write.mode("append").parquet(stateDir.toString)
-      buckets.unpersist(blocking = false)
     } finally {
+      buckets.unpersist(blocking = false)
       b.unpersist(blocking = false)
       // a micro-batch is one unit of work: free the checkpoint blocks
       // connectedComponents registered for this batch's in-batch CC
@@ -310,11 +313,12 @@ object NearDupStream {
     val spark = batch.sparkSession
     import spark.implicits._
     val b = batch.persist()
+    // narrow decode+hash pass: ~8 rows of (id, bucket, hash) leave per
+    // image; the container bytes never shuffle. Outside the try, as in
+    // the text tier, so the finally releases it on any exit.
+    val keys = b.flatMap(r => mediaBandRows(r.doc_id, r.data))
+      .toDF("id", "bucket", "hash").persist()
     try {
-      // narrow decode+hash pass: ~8 rows of (id, bucket, hash) leave
-      // per image; the container bytes never shuffle
-      val keys = b.flatMap(r => mediaBandRows(r.doc_id, r.data))
-        .toDF("id", "bucket", "hash").persist()
       val seen =
         if (Files.exists(stateDir) && hasParquet(stateDir))
           spark.read.parquet(stateDir.toString)
@@ -363,8 +367,8 @@ object NearDupStream {
         .write.mode("append").parquet(outDir.toString)
       keys.select("bucket", "hash").distinct()
         .write.mode("append").parquet(stateDir.toString)
-      keys.unpersist(blocking = false)
     } finally {
+      keys.unpersist(blocking = false)
       b.unpersist(blocking = false)
       graft.CacheRegistry.releaseAll()
     }

@@ -218,6 +218,30 @@ class DedupSpec extends SparkSpec {
       s"leaked blocks: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
   }
 
+  test("connected components releases its input cache when the eager " +
+      "pair count fails on a non-local input") {
+    // spark.range is not a local relation, so raise_error fires inside
+    // a task of CC's first job (the eager materialization of the pair
+    // cache), not while the plan is optimized.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val trackedBefore = CacheRegistry.trackedCount
+    val poisoned = spark.range(0, 100, 1, 4)
+      .select(col("id").as("a"), (col("id") + 1).as("b"))
+      .withColumn("a",
+        when(col("a") === 57L, raise_error(lit("boom")).cast("long"))
+          .otherwise(col("a")))
+    val e = intercept[Exception] {
+      Dedup.connectedComponents(poisoned).count()
+    }
+    // the injected task failure, not a planning error, ended the call
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)
+    assert(messages(e).exists(_.contains("boom")), s"got: $e")
+    assert(CacheRegistry.trackedCount == trackedBefore)
+    val leaked = persistedSince(before)
+    assert(leaked.isEmpty, s"leaked blocks: ${leaked.mkString(", ")}")
+  }
+
   test("packed SimHash votes fail loudly at 2^21 tokens, not corrupt silently") {
     // The 3×21-bit packed counters are carry-free only below 2^21
     // tokens per document; the guard converts the documented assumption

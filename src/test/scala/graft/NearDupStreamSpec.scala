@@ -145,9 +145,14 @@ class NearDupStreamSpec extends SparkSpec {
     val docs = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[Doc]].schema)
       .parquet(dir.toString).as[Doc]
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       NearDupStream.drain(spark, docs, stateDir, outDir, ccMaxIter = 0)
     }
+    // the failed batch releases every cache it made, its band buckets
+    // included
+    val leaked = persistedSince(before)
+    assert(leaked.isEmpty, s"leaked blocks: ${leaked.mkString(", ")}")
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)
     val all = messages(e).mkString(" | ")

@@ -31,6 +31,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 
+  /** Persistent RDDs registered since `before` (a
+    * `getPersistentRDDs.keySet` snapshot): residue measured from a
+    * test's own starting point, so another suite's leak cannot fail it. */
+  def persistedSince(before: collection.Set[Int]): Seq[String] =
+    spark.sparkContext.getPersistentRDDs.toSeq
+      .collect { case (id, rdd) if !before.contains(id) => rdd.toString }
+
   /** Write `df` as ONE parquet file into `dir` with a deterministic
     * ascending mod-time — streaming file sources process oldest-first,
     * so chunk index order IS arrival order. */

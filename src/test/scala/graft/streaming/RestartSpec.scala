@@ -18,7 +18,8 @@ import graft.operators.Multimodal.MediaRecord
   *    append, so a crash between the two replays to DUPLICATE output
   *    rows — at-least-once, never lossy; and losing state (the
   *    compaction mid-swap hazard) only over-ADMITS, never drops a
-  *    novel doc.
+  *    novel doc. A batch that fails outright (the Fail poison pill)
+  *    admits nothing and leaves no cache behind for its replay.
   */
 class RestartSpec extends SparkSpec {
   import spark.implicits._
@@ -134,6 +135,34 @@ class RestartSpec extends SparkSpec {
       // the offline exact backstop recovers exactly-once
       assert(spark.read.parquet(outDir.toString)
         .dropDuplicates("doc_id").count() == 2L)
+    } finally {
+      StreamingResidue.deleteRecursively(stateDir)
+      StreamingResidue.deleteRecursively(outDir)
+    }
+  }
+
+  test("processMediaBatch poison pill (Fail): the failed batch admits " +
+      "nothing and releases every cache it made") {
+    // ccMaxIter = 0 forces CC non-convergence; under Fail the batch
+    // throws mid-way, after its band-key cache is materialized. The
+    // replay of a failed batch must not find the previous attempt's
+    // blocks still pinned, so residue is compared before and after.
+    val stateDir = Files.createTempDirectory("graft_media_pp_state")
+    val outDir = Files.createTempDirectory("graft_media_pp_out")
+    try {
+      val batch = media(0L, 1L, 6L).toDS()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[IllegalStateException] {
+        NearDupStream.processMediaBatch(batch, 0L, stateDir, outDir,
+          maxHamming = 6, ccMaxIter = 0,
+          onNonConvergence = NearDupStream.Fail)
+      }
+      assert(e.getMessage.contains("ccMaxIter") &&
+        e.getMessage.contains("Fallback"), s"playbook not surfaced: $e")
+      val leaked = persistedSince(before)
+      assert(leaked.isEmpty, s"leaked blocks: ${leaked.mkString(", ")}")
+      // failed before its output append: nothing admitted
+      assert(outDir.toFile.list().isEmpty)
     } finally {
       StreamingResidue.deleteRecursively(stateDir)
       StreamingResidue.deleteRecursively(outDir)
