@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of named queries (all
   * if no args). Usage: sbt "runMain graft.Explain q34_ngram_jaccard_pairs"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors))
-    val spark = Scratch.tuneCheckpoints(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same extension surface as Verify/Bench/Prof — conf-gated rule
-      // queries (q228, q339, q374…) fail their plan asserts otherwise
-      .withExtensions(new GraftExtensions))
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = args.toSet
     SparkEntry.queries

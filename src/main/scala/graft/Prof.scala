@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiling scratch: run one query N times in a warm session.
   *
@@ -41,25 +40,11 @@ object Prof {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val n = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // SPARK_GRAFT_CPUS honored like Bench so low-core-count behaviour
-    // (the driver benches at 8 cores too) is reproducible under Prof
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = Scratch.tuneCheckpoints(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same extension surface as Verify/Bench — conf-gated optimizer
-      // rules (q228, q339, q374…) must fire here too or their plan
-      // asserts fail under profiling
-      .withExtensions(new GraftExtensions))
     // dev knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" for conf experiments
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
-      _.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';').filter(_.contains('=')))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = Harness.session(extraConf = extraConf)
     spark.sparkContext.setLogLevel("WARN")
     val mem = new MemListener
     spark.sparkContext.addSparkListener(mem)

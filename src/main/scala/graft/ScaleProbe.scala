@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scaling scratch (companion to [[Prof]]): time semantic dedup
   * in its two reachable configurations, so the k-vs-N scaling
   * contract is measurable instead of argued —
@@ -18,12 +16,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     val emb = Tables(spark, sfDir, "embeddings")
     val n = emb.count()

@@ -27,13 +27,23 @@ object Tables {
     // is UTC everywhere (Bench/Verify/specs), so the NTZ→TZ cast is a
     // pure re-tag matching DuckDB's epoch_us on the same wall-clock
     // values. Each branch stays a pure columnar scan — prune/pushdown
-    // intact. Set-if-changed: redundant conf writes churn SQLConf in
-    // packed multi-query sessions.
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // intact.
+    nanosAsLong(spark)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
+
+  /** Turn on `spark.sql.legacy.parquet.nanosAsLong` for the session,
+    * and leave it on. It is the one session setting graft does not
+    * scope with [[Conf.scoped]]: [[apply]] returns lazy frames whose
+    * parquet scan runs after the caller has returned, and the scan
+    * must still see the setting. Set-if-changed: redundant conf writes
+    * churn SQLConf in packed multi-query sessions. */
+  def nanosAsLong(spark: SparkSession): Unit =
+    if (!spark.conf.getOption(NanosAsLongKey).contains("true"))
+      spark.conf.set(NanosAsLongKey, "true")
+
+  private val NanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Resolved physical type of an events `ts` column, if present. */
   def eventTsType(df: DataFrame): Option[DataType] =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftagg.HllAgg
 import org.apache.spark.sql.graftgen.CharNgrams
-import graft.{QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Tables}
 
 /** Round-14 engine-surface queries: each exercises a custom-function
   * extension point END TO END from the registry (the q228 lesson — an
@@ -912,11 +912,8 @@ ORDER BY kind, x
   val q322 = QuerySpec("q322_distinct_elim",
     (s, dir) => {
       val base = s"$dir/orders.parquet"
-      val prevPath = s.conf.getOption("spark.graft.unique.path")
-      val prevCols = s.conf.getOption("spark.graft.unique.cols")
-      s.conf.set("spark.graft.unique.path", base)
-      s.conf.set("spark.graft.unique.cols", "o_orderkey")
-      try {
+      Conf.scoped(s)("spark.graft.unique.path" -> base,
+          "spark.graft.unique.cols" -> "o_orderkey") {
         val out = s.read.parquet(base)
           .where(col("o_orderpriority") === "1-URGENT")
           .select(col("o_orderkey"), col("o_orderpriority"),
@@ -937,15 +934,6 @@ ORDER BY kind, x
             .plans.logical.Aggregate]),
           "distinct elimination fired without the unique key — unsound")
         out
-      } finally {
-        prevPath match {
-          case Some(p) => s.conf.set("spark.graft.unique.path", p)
-          case None => s.conf.unset("spark.graft.unique.path")
-        }
-        prevCols match {
-          case Some(p) => s.conf.set("spark.graft.unique.cols", p)
-          case None => s.conf.unset("spark.graft.unique.cols")
-        }
       }
     },
     Some(raw"""
@@ -1262,14 +1250,10 @@ FROM events GROUP BY 1, 2 ORDER BY win_start, event_type
     (s, dir) => {
       val factPath = s"$dir/lineitem.parquet"
       val dimPath = s"$dir/orders.parquet"
-      val keys = Seq("spark.graft.fk.factPath", "spark.graft.fk.factCol",
-        "spark.graft.fk.dimPath", "spark.graft.fk.dimCol")
-      val prev = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set("spark.graft.fk.factPath", factPath)
-      s.conf.set("spark.graft.fk.factCol", "l_orderkey")
-      s.conf.set("spark.graft.fk.dimPath", dimPath)
-      s.conf.set("spark.graft.fk.dimCol", "o_orderkey")
-      try {
+      Conf.scoped(s)("spark.graft.fk.factPath" -> factPath,
+          "spark.graft.fk.factCol" -> "l_orderkey",
+          "spark.graft.fk.dimPath" -> dimPath,
+          "spark.graft.fk.dimCol" -> "o_orderkey") {
         val li = s.read.parquet(factPath)
         val ord = s.read.parquet(dimPath)
         val out = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
@@ -1290,9 +1274,6 @@ FROM events GROUP BY 1, 2 ORDER BY win_start, event_type
             .plans.logical.Join]),
           "join elimination fired with a consumed dim column — unsound")
         out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
     Some(raw"""
@@ -1325,13 +1306,9 @@ ORDER BY l_orderkey, l_linenumber
     (s, dir) => {
       import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
       val dimPath = s"$dir/part.parquet"
-      val keys = Seq("spark.graft.eagerAgg.enabled",
-        "spark.graft.unique.path", "spark.graft.unique.cols")
-      val prev = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set("spark.graft.eagerAgg.enabled", "true")
-      s.conf.set("spark.graft.unique.path", dimPath)
-      s.conf.set("spark.graft.unique.cols", "p_partkey")
-      try {
+      Conf.scoped(s)("spark.graft.eagerAgg.enabled" -> "true",
+          "spark.graft.unique.path" -> dimPath,
+          "spark.graft.unique.cols" -> "p_partkey") {
         def rollup(): org.apache.spark.sql.DataFrame = {
           val li = Tables(s, dir, "lineitem")
           val part = s.read.parquet(dimPath)
@@ -1360,9 +1337,6 @@ ORDER BY l_orderkey, l_linenumber
           "partial aggregate below join with the rewrite disabled")
         s.conf.set("spark.graft.eagerAgg.enabled", "true")
         out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
     Some(raw"""
@@ -1455,9 +1429,7 @@ FROM est ORDER BY exact_cnt DESC, user_id
     (s, dir) => {
       import org.apache.spark.sql.graftagg.CountMinAgg
       import org.apache.spark.sql.expressions.Window
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      Conf.scoped(s)("spark.sql.shuffle.partitions" -> "8") {
         val agg = graft.streaming.StreamingOps
           .eventsStream(s, s"$dir/{events.parquet}",
             schemaProbePath = Some(s"$dir/events.parquet"))
@@ -1495,7 +1467,7 @@ FROM est ORDER BY exact_cnt DESC, user_id
             col("exact_cnt"), col("cms_est"), col("tbl_sum"),
             col("tbl_fp"))
           .orderBy("win_start", "event_type")
-      } finally s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
+      }
     },
     Some(raw"""
 WITH ev AS (
@@ -1559,9 +1531,7 @@ ORDER BY e.win_start, e.event_type
     * declarative answers must agree exactly. */
   val q344 = QuerySpec("q344_scripted_search",
     (s, dir) => {
-      val prev = s.conf.getOption("spark.sql.scripting.enabled")
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      // AQE off for the scripted loop only (saved/restored): every
+      // AQE off for the scripted loop only (scoped): every
       // probe is a global count over the cached 1-column frame — one
       // trivial partial-count exchange AQE can neither coalesce nor
       // re-plan usefully at any scale — and AQE's stage-as-a-job
@@ -1569,9 +1539,8 @@ ORDER BY e.win_start, e.event_type
       // statements x 4 jobs -> x1; measured 161 jobs -> ~45,
       // warm solo 6.7 -> 5.8 s at 32 cores). Scale-safe: a count's
       // reduce side is #partitions rows regardless of corpus size.
-      val prevAqe = s.conf.getOption("spark.sql.adaptive.enabled")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      try Conf.scoped(s)("spark.sql.scripting.enabled" -> "true",
+          "spark.sql.adaptive.enabled" -> "false") {
         // materialize the 1-column probe frame once (tracked cache,
         // released with the query): the scripted WHILE loop issues
         // ~log2(maxPrice) sequential filtered counts, and without
@@ -1599,17 +1568,7 @@ ORDER BY e.win_start, e.event_type
           |  SELECT t AS threshold_cents, CAST(it AS BIGINT) AS doublings,
           |    cnt AS n_below, n AS n_total;
           |END""".stripMargin)
-      } finally {
-        s.catalog.dropTempView("q344_ord_v")
-        prev match {
-          case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-          case None => s.conf.unset("spark.sql.scripting.enabled")
-        }
-        prevAqe match {
-          case Some(v) => s.conf.set("spark.sql.adaptive.enabled", v)
-          case None => s.conf.unset("spark.sql.adaptive.enabled")
-        }
-      }
+      } finally s.catalog.dropTempView("q344_ord_v")
     },
     Some(raw"""
 WITH o AS (
@@ -1652,9 +1611,7 @@ FROM cnts CROSS JOIN tot WHERE cnt * 2 >= n ORDER BY t LIMIT 1
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
       val tmp = graft.Scratch.dir("graft_q345_keyed")
       val ConfKey = "spark.sql.sources.v2.bucketing.enabled"
-      val prev = s.conf.getOption(ConfKey)
-      s.conf.set(ConfKey, "true")
-      try {
+      try Conf.scoped(s)(ConfKey -> "true") {
         Tables(s, dir, "orders")
           .select(col("o_orderpriority").as("g"),
             expr("cast(round(o_totalprice * 100) as bigint)").as("x"))
@@ -1701,13 +1658,7 @@ FROM cnts CROSS JOIN tot WHERE cnt * 2 >= n ORDER BY t LIMIT 1
         s.conf.set(ConfKey, "true")
         val sunk = out.orderBy("g").collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(ConfKey, v)
-          case None => s.conf.unset(ConfKey)
-        }
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
     },
     Some(raw"""
 SELECT o_orderpriority AS g, CAST(count(*) AS BIGINT) AS n,
@@ -1744,11 +1695,7 @@ FROM orders GROUP BY 1 ORDER BY g
       val tmp = graft.Scratch.dir("graft_q346_spj")
       val BucketKey = "spark.sql.sources.v2.bucketing.enabled"
       val BcastKey = "spark.sql.autoBroadcastJoinThreshold"
-      val prevB = s.conf.getOption(BucketKey)
-      val prevT = s.conf.getOption(BcastKey)
-      s.conf.set(BucketKey, "true")
-      s.conf.set(BcastKey, "-1")
-      try {
+      try Conf.scoped(s)(BucketKey -> "true", BcastKey -> "-1") {
         val ord = Tables(s, dir, "orders")
         // exact integer key-range midpoint: identical in both engines
         // (an approximate median would split differently per engine)
@@ -1795,13 +1742,7 @@ FROM orders GROUP BY 1 ORDER BY g
         s.conf.set(BucketKey, "true")
         val sunk = out.orderBy("g").collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        Seq((BucketKey, prevB), (BcastKey, prevT)).foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
     },
     Some(raw"""
 WITH mid AS (
@@ -1843,9 +1784,7 @@ FROM early JOIN late USING (g) ORDER BY g
     (s, dir) => {
       import org.apache.spark.sql.catalyst.plans.logical.Expand
       val ConfKey = "spark.graft.bitmapDistinct.enabled"
-      val prev = s.conf.getOption(ConfKey)
-      s.conf.set(ConfKey, "true")
-      try {
+      Conf.scoped(s)(ConfKey -> "true") {
         def profile(): org.apache.spark.sql.DataFrame =
           Tables(s, dir, "events")
             .select(col("event_type"), col("user_id"),
@@ -1866,9 +1805,6 @@ FROM early JOIN late USING (g) ORDER BY g
           "no Expand without the rewrite — the assert proves nothing")
         s.conf.set(ConfKey, "true")
         out
-      } finally prev match {
-        case Some(v) => s.conf.set(ConfKey, v)
-        case None => s.conf.unset(ConfKey)
       }
     },
     Some(raw"""
@@ -1965,9 +1901,6 @@ GROUP BY 1 ORDER BY 1
       // convert, 32 don't). Zero the guard inside the query so the
       // assert is scale- and core-count-robust; results unchanged.
       val Ratio = "spark.sql.adaptive.nonEmptyPartitionRatioForBroadcastJoin"
-      val prevT = s.conf.getOption(Thresh)
-      val prevA = s.conf.getOption(Aqe)
-      val prevR = s.conf.getOption(Ratio)
       // the threshold must sit BETWEEN the static estimate (the file
       // size scaled by column pruning's width ratio — the filter is
       // non-pushable, so planning sees every row) and the runtime
@@ -1979,9 +1912,8 @@ GROUP BY 1 ORDER BY 1
         if (f.isFile) f.length
         else Option(f.listFiles).getOrElse(Array.empty).map(sizeOf).sum
       val dimBytes = sizeOf(new java.io.File(s"$dir/orders.parquet"))
-      s.conf.set(Thresh, math.max(4096L, dimBytes / 16).toString)
-      s.conf.set(Ratio, "0.0")
-      try {
+      Conf.scoped(s)(Thresh -> math.max(4096L, dimBytes / 16).toString,
+          Ratio -> "0.0", Aqe -> "true") {
         def q(): org.apache.spark.sql.DataFrame = {
           val li = Tables(s, dir, "lineitem")
           val ord = Tables(s, dir, "orders")
@@ -2009,7 +1941,6 @@ GROUP BY 1 ORDER BY 1
             case p => walk(p)
           }
         }
-        s.conf.set(Aqe, "true")
         val out = q()
         require(joins(out, run = true)
           .exists(_.isInstanceOf[BroadcastHashJoinExec]),
@@ -2021,11 +1952,6 @@ GROUP BY 1 ORDER BY 1
             "not being exercised")
         s.conf.set(Aqe, "true")
         out
-      } finally {
-        Seq((Thresh, prevT), (Aqe, prevA), (Ratio, prevR)).foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
       }
     },
     Some(raw"""
@@ -2056,10 +1982,7 @@ GROUP BY 1 ORDER BY 1
   val q350 = QuerySpec("q350_exchange_reuse",
     (s, dir) => {
       import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-      val Aqe = "spark.sql.adaptive.enabled"
-      val prevA = s.conf.getOption(Aqe)
-      s.conf.set(Aqe, "false")
-      try {
+      Conf.scoped(s)("spark.sql.adaptive.enabled" -> "false") {
         val daily = Tables(s, dir, "events")
           .select(expr("cast(floor(cast(ts as long) / 86400) as bigint)")
             .as("day_idx"))
@@ -2073,9 +1996,6 @@ GROUP BY 1 ORDER BY 1
           .exists(_.isInstanceOf[ReusedExchangeExec]),
           "the daily aggregate's exchange was not reused")
         out
-      } finally prevA match {
-        case Some(v) => s.conf.set(Aqe, v)
-        case None => s.conf.unset(Aqe)
       }
     },
     Some(raw"""
@@ -2106,15 +2026,11 @@ FROM daily ORDER BY day_idx
     (s, dir) => {
       val V1List = "spark.sql.sources.useV1SourceList"
       val AggPd = "spark.sql.parquet.aggregatePushdown"
-      val prevV = s.conf.getOption(V1List)
-      val prevA = s.conf.getOption(AggPd)
       // route parquet through DSv2 (drop it from the V1 list), enable
       // the footer-stats pushdown
-      val v1 = prevV.getOrElse("avro,csv,json,kafka,orc,parquet,text")
-      s.conf.set(V1List, v1.split(",").map(_.trim)
-        .filter(_.toLowerCase != "parquet").mkString(","))
-      s.conf.set(AggPd, "true")
-      try {
+      Conf.scoped(s)(V1List -> s.conf.get(V1List).split(",").map(_.trim)
+          .filter(_.toLowerCase != "parquet").mkString(","),
+          AggPd -> "true") {
         def stats(): org.apache.spark.sql.DataFrame =
           s.read.parquet(s"$dir/orders.parquet")
             .agg(expr("count(*)").as("n"),
@@ -2130,11 +2046,6 @@ FROM daily ORDER BY day_idx
           "pushdown marker present with the conf off — assert is vacuous")
         s.conf.set(AggPd, "true")
         out
-      } finally {
-        Seq((V1List, prevV), (AggPd, prevA)).foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
       }
     },
     Some(raw"""

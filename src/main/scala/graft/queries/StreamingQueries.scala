@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.QuerySpec
+import graft.{Conf, QuerySpec}
 import graft.streaming.StreamingOps
 
 /** Streaming query inventory. Each runs a real Structured Streaming
@@ -651,12 +651,9 @@ FROM f GROUP BY 1 ORDER BY event_type
   val q277 = QuerySpec("q277_stream_tws_gaps",
     (s, dir) => {
       import graft.streaming.GapStream
-      val prevProvider = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      try {
+      Conf.scoped(s)("spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider")) {
         val ev = graft.Tables(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("event_type"),
             expr("unix_micros(ts)").as("ts_us"))
@@ -679,11 +676,6 @@ FROM f GROUP BY 1 ORDER BY event_type
             max("max_gap_us").as("max_gap_us"),
             sum("n_first").as("n_first_of_type"))
           .orderBy("event_type")
-      } finally prevProvider match {
-        case Some(p) => s.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
       }
     },
     Some(raw"""

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Tables}
 import graft.functions.{Text => T}
 
 /** Round-13 warehouse-maintenance tier: the operators that keep a
@@ -710,8 +710,8 @@ ORDER BY snap
     (s, dir) => {
       import java.nio.file.Files
       val wh = graft.Scratch.dir("graft_q287_wh")
-      val prevBroadcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
+      // broadcast off so the join must use the bucketed layout
+      try Conf.scoped(s)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         Tables(s, dir, "orders")
           .write.mode("overwrite")
           .bucketBy(8, "o_custkey").sortBy("o_custkey")
@@ -720,7 +720,6 @@ ORDER BY snap
           .write.mode("overwrite")
           .bucketBy(8, "c_custkey").sortBy("c_custkey")
           .option("path", s"$wh/customer_b287").saveAsTable("customer_b287")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val j = s.table("orders_b287")
           .join(s.table("customer_b287"),
             col("o_custkey") === col("c_custkey"))
@@ -737,7 +736,6 @@ ORDER BY snap
           "bucketed join unexpectedly shuffled its join keys")
         s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
       } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
         s.sql("DROP TABLE IF EXISTS orders_b287")
         s.sql("DROP TABLE IF EXISTS customer_b287")
         graft.streaming.StreamingResidue.deleteRecursively(wh)

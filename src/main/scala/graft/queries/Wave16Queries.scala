@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Tables}
+import graft.sources.GraftCatalog
 
 /** Round-16 engine wave: the Spark 4 surfaces a 100 TB deployment
   * leans on that the registry had not yet certified — watermarked
@@ -187,10 +188,8 @@ GROUP BY 1 ORDER BY et
     (s, dir) => {
       val tmp = graft.Scratch.dir("graft_q362")
       val tag = s"graft_cbo_${System.nanoTime()}"
-      val conf = Seq("spark.sql.cbo.enabled",
-        "spark.sql.cbo.joinReorder.enabled")
-      val saved = conf.map(k => k -> s.conf.getOption(k))
-      try {
+      try Conf.scoped(s)("spark.sql.cbo.enabled" -> "false",
+          "spark.sql.cbo.joinReorder.enabled" -> "false") {
         Tables(s, dir, "lineitem")
           .select("l_orderkey", "l_suppkey", "l_quantity")
           .write.parquet(s"$tmp/li")
@@ -212,7 +211,6 @@ GROUP BY 1 ORDER BY et
              |JOIN ${tag}_sup p ON l.l_suppkey = p.s_suppkey
              |WHERE p.s_nationkey = 3
              |GROUP BY 1 ORDER BY 1""".stripMargin
-        s.conf.set("spark.sql.cbo.enabled", "false")
         val before = s.sql(sql).queryExecution.optimizedPlan
         s.conf.set("spark.sql.cbo.enabled", "true")
         s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
@@ -233,8 +231,6 @@ GROUP BY 1 ORDER BY et
         val rows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
       } finally {
-        saved.foreach { case (k, v) =>
-          v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
         Seq("li", "ord", "sup").foreach(t =>
           s.sql(s"DROP TABLE IF EXISTS ${tag}_$t"))
         graft.streaming.StreamingResidue.deleteRecursively(tmp)
@@ -885,20 +881,17 @@ FROM lines ORDER BY line_no
       import org.apache.spark.sql.catalyst.plans.logical.{Expand, Join}
       val factPath = s"$dir/lineitem.parquet"
       val dimPath = s"$dir/orders.parquet"
-      val keys = Seq("spark.graft.fk.factPath", "spark.graft.fk.factCol",
-        "spark.graft.fk.dimPath", "spark.graft.fk.dimCol",
-        "spark.graft.bitmapDistinct.enabled")
-      val prev = keys.map(k => k -> s.conf.getOption(k))
+      val fkConf = Seq("spark.graft.fk.factPath" -> factPath,
+        "spark.graft.fk.factCol" -> "l_orderkey",
+        "spark.graft.fk.dimPath" -> dimPath,
+        "spark.graft.fk.dimCol" -> "o_orderkey")
+      val BitmapKey = "spark.graft.bitmapDistinct.enabled"
+      // the fk rule reads an empty setting as off
       def setAll(fk: Boolean, bitmap: Boolean): Unit = {
-        if (fk) {
-          s.conf.set("spark.graft.fk.factPath", factPath)
-          s.conf.set("spark.graft.fk.factCol", "l_orderkey")
-          s.conf.set("spark.graft.fk.dimPath", dimPath)
-          s.conf.set("spark.graft.fk.dimCol", "o_orderkey")
-        } else keys.take(4).foreach(s.conf.unset)
-        s.conf.set("spark.graft.bitmapDistinct.enabled", bitmap.toString)
+        fkConf.foreach { case (k, v) => s.conf.set(k, if (fk) v else "") }
+        s.conf.set(BitmapKey, bitmap.toString)
       }
-      try {
+      Conf.scoped(s)(fkConf :+ (BitmapKey -> "true"): _*) {
         def rollup(): org.apache.spark.sql.DataFrame = {
           val li = s.read.parquet(factPath)
           val ord = s.read.parquet(dimPath)
@@ -920,7 +913,6 @@ FROM lines ORDER BY line_no
             opt.exists(_.isInstanceOf[Expand]),
             opt.toString.contains("graft_bitmap_distinct"))
         }
-        setAll(fk = true, bitmap = true)
         val out = rollup()
         require(shape(out) == ((false, false, true)),
           s"composed rewrite shape ${shape(out)}, " +
@@ -936,9 +928,6 @@ FROM lines ORDER BY line_no
           "both-off control: plain Catalyst plan expected")
         setAll(fk = true, bitmap = true)
         out
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
     Some(raw"""
@@ -979,9 +968,7 @@ GROUP BY 1 ORDER BY 1
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
       import org.apache.spark.sql.expressions.Window
       val ConfKey = "spark.sql.sources.v2.bucketing.enabled"
-      val prev = s.conf.getOption(ConfKey)
-      s.conf.set(ConfKey, "true")
-      try {
+      Conf.scoped(s)(ConfKey -> "true") {
         val tmp = graft.FixtureCache.staged(dir, "ord_prio_sorted_csv")(
           t => Tables(s, dir, "orders")
             .select(col("o_orderpriority").as("g"),
@@ -1033,11 +1020,6 @@ GROUP BY 1 ORDER BY 1
         s.conf.set(ConfKey, "true")
         val sunk = out.orderBy("g").collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(ConfKey, v)
-          case None => s.conf.unset(ConfKey)
-        }
       }
     },
     Some(raw"""
@@ -1112,9 +1094,7 @@ FROM r WHERE rn = CAST(ceil(n * 0.9) AS BIGINT) ORDER BY g
     (s, dir) => {
       import java.nio.file.{Files, Paths}
       import org.apache.spark.sql.streaming.Trigger
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      Conf.scoped(s)("spark.sql.shuffle.partitions" -> "8") {
         val replayDir = graft.FixtureCache.staged(dir, "events_replay4")(
           t => stageEventSegments(s, dir, t))
         val agg = s.readStream.format("graft-replay")
@@ -1147,8 +1127,6 @@ FROM r WHERE rn = CAST(ceil(n * 0.9) AS BIGINT) ORDER BY g
           s.catalog.dropTempView(name)
           graft.streaming.StreamingResidue.release(ckpt)
         }
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
       }
     },
     Some(raw"""
@@ -1184,9 +1162,7 @@ FROM events GROUP BY 1, 2 ORDER BY win_start, event_type
       import java.nio.file.Files
       import org.apache.spark.sql.streaming.Trigger
       val tmp = graft.Scratch.dir("graft_q377_relay")
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)("spark.sql.shuffle.partitions" -> "8") {
         val replayDir = graft.FixtureCache.staged(dir, "events_replay4")(
           t => stageEventSegments(s, dir, t))
         val outDir = tmp.resolve("landed")
@@ -1223,10 +1199,7 @@ FROM events GROUP BY 1, 2 ORDER BY win_start, event_type
           .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
           .orderBy("event_type")
         s.createDataFrame(sunk.collectAsList(), sunk.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
     },
     Some(raw"""
 SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -1339,13 +1312,8 @@ FROM orders GROUP BY 1 ORDER BY 1
       // demands ALL join keys in the children's partitioning unless
       // this knob says subset co-partitioning is acceptable
       val SubsetKey = "spark.sql.requireAllClusterKeysForCoPartition"
-      val prev = Seq(BucketKey, BcastKey, AqeBcastKey, SubsetKey)
-        .map(k => k -> s.conf.getOption(k))
-      s.conf.set(BucketKey, "true")
-      s.conf.set(BcastKey, "-1")
-      s.conf.set(AqeBcastKey, "-1")
-      s.conf.set(SubsetKey, "false")
-      try {
+      Conf.scoped(s)(BucketKey -> "true", BcastKey -> "-1",
+          AqeBcastKey -> "-1", SubsetKey -> "false") {
         // exact CENTS join keys with PLANTED cross-snapshot duplicates
         // (every 37th early order re-appears in the late era — the
         // re-crawled-record shape): cents are near-unique, so the
@@ -1432,11 +1400,6 @@ FROM orders GROUP BY 1 ORDER BY 1
         s.conf.set(BucketKey, "true")
         val sunk = out.orderBy("g").collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        prev.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
       }
     },
     Some(raw"""
@@ -1813,9 +1776,7 @@ FROM w GROUP BY lang ORDER BY lang
       // per-run catalog name: a catalog instance pins its root conf at
       // first use and is cached by name for the session's lifetime
       val cat = s"graftrl${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.balances (k BIGINT, seg STRING, " +
           "v BIGINT)")
@@ -1852,11 +1813,7 @@ FROM w GROUP BY lang ORDER BY lang
         val sunk = out.collect()
         s.catalog.dropTempView(s"ord_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -1903,9 +1860,7 @@ FROM updated WHERE v >= 50000000 ORDER BY k
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q385_cat")
       val cat = s"graftv${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         def seedSql(where: String): String = s"""
           SELECT o_custkey % 500 AS k,
@@ -1936,11 +1891,7 @@ FROM updated WHERE v >= 50000000 ORDER BY k
         val sunk = out.collect()
         s.catalog.dropTempView(s"ord_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (

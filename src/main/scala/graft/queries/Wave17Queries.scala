@@ -1,7 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Tables}
+import graft.sources.GraftCatalog
 
 /** Round-17 engine wave: the DML tier grows into its production
   * geometry. Round 16 introduced the DSv2 TableCatalog with
@@ -51,10 +52,8 @@ object Wave17Queries {
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q386_cat")
       val cat = s"graftmg${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
       val hook = graft.sources.GraftCatalogTestHook
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.mg (k BIGINT, seg STRING, v BIGINT)")
         val tdir = root.resolve("db").resolve("mg")
@@ -104,11 +103,7 @@ object Wave17Queries {
         s.catalog.dropTempView(s"src_$cat")
         s.catalog.dropTempView(s"delta_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -161,10 +156,8 @@ FROM deleted ORDER BY k
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q387_cat")
       val cat = s"graftrt${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
       val hook = graft.sources.GraftCatalogTestHook
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.bal (k BIGINT, seg STRING, v BIGINT)")
         s.sql(s"INSERT INTO $cat.db.bal " +
@@ -208,11 +201,7 @@ FROM deleted ORDER BY k
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"rdelta_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -276,9 +265,7 @@ SELECT * FROM (
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q388_cat")
       val cat = s"graftma${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.ma (k BIGINT, seg STRING, v BIGINT)")
         // v is NULLed on every 7th key so count(v)/min(v) exercise the
@@ -312,11 +299,7 @@ SELECT * FROM (
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"masrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -351,10 +334,8 @@ FROM t
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q389_cat")
       val cat = s"graftmd${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
       val hook = graft.sources.GraftCatalogTestHook
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.md (k BIGINT, seg STRING, v BIGINT)")
         val tdir = root.resolve("db").resolve("md")
@@ -384,11 +365,7 @@ FROM t
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"mdsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -424,16 +401,11 @@ FROM seed WHERE k >= 50 ORDER BY k
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q390_cat")
       val cat = s"graftpj${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      val prev = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "true")
-      s.conf.set(keys(1), "-1")
-      s.conf.set(keys(2), "-1")
-      try {
+      val BucketKey = "spark.sql.sources.v2.bucketing.enabled"
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) ++ Seq(
+          BucketKey -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         for (t <- Seq("early", "late"))
           s.sql(s"CREATE TABLE $cat.db.$t (k BIGINT, seg STRING, " +
@@ -471,24 +443,16 @@ FROM seed WHERE k >= 50 ORDER BY k
         val (exchanged, rows) = collectAndCheck(out)
         require(!exchanged,
           "storage-partitioned catalog join should plan zero exchanges")
-        s.conf.set(keys(0), "false")
+        s.conf.set(BucketKey, "false")
         require(collectAndCheck(reconcile)._1,
           "bucketing-off control lost its exchange — assert is vacuous")
-        s.conf.set(keys(0), "true")
+        s.conf.set(BucketKey, "true")
         // k is unique (both sides GROUP BY k), so the driver-side sort
         // of the collected rows IS orderBy("k") — no third execution
         val sunk = rows.sortBy(_.getLong(0))
         s.catalog.dropTempView(s"ord_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        prev.foreach {
-          case (k, Some(v)) => s.conf.set(k, v)
-          case (k, None) => s.conf.unset(k)
-        }
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH early AS (
@@ -608,9 +572,7 @@ ORDER BY a, b
     (s, dir) => {
       import java.nio.file.Files
       import org.apache.spark.sql.streaming.Trigger
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      Conf.scoped(s)("spark.sql.shuffle.partitions" -> "8") {
         val replayDir = graft.FixtureCache.staged(dir, "events_replay4")(
           t => Wave16Queries.stageEventSegments(s, dir, t))
         val segs = Option(replayDir.toFile.listFiles())
@@ -663,8 +625,6 @@ ORDER BY a, b
           s.catalog.dropTempView(name)
           graft.streaming.StreamingResidue.release(ckpt)
         }
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
       }
     },
     Some(raw"""
@@ -692,9 +652,7 @@ FROM events GROUP BY 1 ORDER BY event_type
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q393_cat")
       val cat = s"graftse${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.ev (k BIGINT, seg STRING, v BIGINT)")
         val tdir = root.resolve("db").resolve("ev")
@@ -726,11 +684,7 @@ FROM events GROUP BY 1 ORDER BY event_type
         val sunk = out.collect()
         s.catalog.dropTempView(s"ord_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH early AS (
@@ -778,11 +732,8 @@ FROM unioned ORDER BY k, coalesce(delta, -1), v
       import org.apache.spark.sql.streaming.Trigger
       val root = graft.Scratch.dir("graft_q394_cat")
       val cat = s"graftcs${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.feed (k BIGINT, seg STRING, " +
           "v BIGINT)")
@@ -823,12 +774,7 @@ FROM unioned ORDER BY k, coalesce(delta, -1), v
           s.catalog.dropTempView(name)
           graft.streaming.StreamingResidue.release(ckpt)
         }
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH eras AS (

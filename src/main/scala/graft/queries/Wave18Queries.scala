@@ -1,7 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Tables}
+import graft.sources.GraftCatalog
 
 /** Round-18 engine wave: the DML tier's MAINTENANCE and DERIVED-STATE
   * surfaces. Round 17 gave [[graft.sources.GraftCatalog]] file-keyed
@@ -58,12 +59,9 @@ object Wave18Queries {
       import org.apache.spark.sql.streaming.Trigger
       val root = graft.Scratch.dir("graft_q395_cat")
       val cat = s"graftop${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
       val hook = graft.sources.GraftCatalogTestHook
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.fr (k BIGINT, seg STRING, v BIGINT)")
         val tdir = root.resolve("db").resolve("fr")
@@ -150,12 +148,7 @@ object Wave18Queries {
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"src_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -190,11 +183,8 @@ ORDER BY k
       import org.apache.spark.sql.streaming.Trigger
       val root = graft.Scratch.dir("graft_q396_cat")
       val cat = s"graftmv${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.feed (k BIGINT, seg STRING, v BIGINT)")
         s.sql(s"CREATE TABLE $cat.db.mv (seg STRING, n_slices BIGINT, " +
@@ -266,12 +256,7 @@ ORDER BY k
         val sunk = out.collect()
         s.catalog.dropTempView(s"ord_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH eras AS (
@@ -318,9 +303,7 @@ FROM eras GROUP BY seg ORDER BY seg
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q397_cat")
       val cat = s"graftts${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.px (k BIGINT, seg STRING, v DOUBLE)")
         // disjoint typed domains per group: v ∈ [0,34) / [34,67) /
@@ -360,11 +343,7 @@ FROM eras GROUP BY seg ORDER BY seg
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"pxsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -405,10 +384,8 @@ SELECT * FROM (
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q398_cat")
       val cat = s"grafttg${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
       val hook = graft.sources.GraftCatalogTestHook
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.bal (k BIGINT, seg STRING, v BIGINT)")
         val tdir = root.resolve("db").resolve("bal")
@@ -459,11 +436,7 @@ SELECT * FROM (
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"tdelta_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -504,9 +477,7 @@ SELECT * FROM (
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q399_cat")
       val cat = s"graftsy${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.sync (k BIGINT, seg STRING, v BIGINT)")
         s.sql(s"INSERT INTO $cat.db.sync " +
@@ -531,11 +502,7 @@ SELECT * FROM (
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"sdelta_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -592,11 +559,8 @@ SELECT CAST(k AS BIGINT) AS k, seg, CAST(v AS BIGINT) AS v FROM (
       import org.apache.spark.sql.streaming.Trigger
       val root = graft.Scratch.dir("graft_q400_cat")
       val cat = s"graftdv${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.dv (k BIGINT, seg STRING, v BIGINT)" +
           " TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
@@ -655,12 +619,7 @@ SELECT CAST(k AS BIGINT) AS k, seg, CAST(v AS BIGINT) AS v FROM (
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"dvsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -690,10 +649,8 @@ FROM seed WHERE k % 10 <> 7 AND k >= 34 ORDER BY k
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q401_cat")
       val cat = s"graftmu${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
       val hook = graft.sources.GraftCatalogTestHook
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.mu (k BIGINT, seg STRING, v BIGINT)" +
           " TBLPROPERTIES ('update.mode' = 'merge-on-read')")
@@ -737,11 +694,7 @@ FROM seed WHERE k % 10 <> 7 AND k >= 34 ORDER BY k
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"musrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -770,9 +723,7 @@ FROM seed ORDER BY k
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q402_cat")
       val cat = s"graftmm${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.sync (k BIGINT, seg STRING, v BIGINT)" +
           " TBLPROPERTIES ('merge.mode' = 'merge-on-read')")
@@ -825,11 +776,7 @@ FROM seed ORDER BY k
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"mdelta_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (

@@ -1,7 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Tables}
+import graft.sources.GraftCatalog
 
 /** Round-19 engine wave: the catalog tier's CONCURRENCY and
   * MAINTENANCE-AT-SCALE surfaces. Round 18 made
@@ -57,11 +58,8 @@ object Wave19Queries {
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q403_cat")
       val cat = s"graftfd${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.fd (k BIGINT, seg STRING, v BIGINT)" +
           " TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
@@ -108,12 +106,7 @@ object Wave19Queries {
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"fdsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS ($oracleSeed)
@@ -142,11 +135,8 @@ ORDER BY k
       val root = graft.Scratch.dir("graft_q404_cat")
       val ck = graft.Scratch.dir("graft_q404_ck")
       val cat = s"graftsw${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.src (k BIGINT, seg STRING, v BIGINT)")
         s.sql(s"CREATE TABLE $cat.db.snk (k BIGINT, seg STRING, v BIGINT)")
@@ -198,9 +188,6 @@ ORDER BY k
         s.catalog.dropTempView(s"swsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
       } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         graft.streaming.StreamingResidue.deleteRecursively(root)
         graft.streaming.StreamingResidue.deleteRecursively(ck)
       }
@@ -229,11 +216,8 @@ ORDER BY k
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q405_cat")
       val cat = s"graftdo${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.dop (k BIGINT, seg STRING, v BIGINT)" +
           " TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
@@ -271,12 +255,7 @@ ORDER BY k
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"dosrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS ($oracleSeed)
@@ -301,11 +280,8 @@ WHERE k <> 30 ORDER BY k
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q406_cat")
       val cat = s"graftdl${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.led (k BIGINT, seg STRING, v BIGINT)" +
           " TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
@@ -336,12 +312,7 @@ WHERE k <> 30 ORDER BY k
         import s.implicits._
         Seq((total, live, total - live, after.map(_._2).sum))
           .toDF("total_rows", "live_rows", "dead_rows", "rows_after_fold")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS ($oracleSeed)
@@ -368,11 +339,8 @@ FROM seed
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q407_cat")
       val cat = s"graftse${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.se (k BIGINT, seg STRING, v BIGINT)")
         val tdir = root.resolve("db").resolve("se")
@@ -418,12 +386,7 @@ FROM seed
         s.catalog.dropTempView(s"sesrc_$cat")
         s.catalog.dropTempView(s"sedelta_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS ($oracleSeed),
@@ -463,11 +426,8 @@ FROM (
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q408_cat")
       val cat = s"grafth${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.h (k BIGINT, seg STRING, v BIGINT)" +
           " TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
@@ -499,12 +459,7 @@ FROM (
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"hsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 SELECT CAST(version AS BIGINT) AS version, operation,
@@ -534,11 +489,8 @@ ORDER BY version
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q409_cat")
       val cat = s"graftcl${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.cl (k BIGINT, seg STRING, v BIGINT)")
         val tdir = root.resolve("db").resolve("cl")
@@ -579,12 +531,7 @@ ORDER BY version
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"clsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS ($oracleSeed)
@@ -613,11 +560,8 @@ FROM seed GROUP BY seg ORDER BY seg
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q410_cat")
       val cat = s"graftdf${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         Tables(s, dir, "customer").createOrReplaceTempView(s"cust_$cat")
         s.sql(s"CREATE TABLE $cat.db.df (k BIGINT, seg STRING, v BIGINT)")
@@ -674,12 +618,7 @@ FROM seed GROUP BY seg ORDER BY seg
         s.catalog.dropTempView(s"cust_$cat")
         s.catalog.dropTempView(s"dfsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sorted: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS ($oracleSeed),
@@ -711,11 +650,8 @@ GROUP BY f.seg ORDER BY f.seg
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q411_cat")
       val cat = s"graftpr${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.pr (k BIGINT, seg STRING, v BIGINT)" +
           " TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
@@ -750,12 +686,7 @@ GROUP BY f.seg ORDER BY f.seg
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"prsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS ($oracleSeed),
@@ -789,11 +720,8 @@ SELECT item, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b FROM (
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q412_cat")
       val cat = s"graftga${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.ga (era BIGINT, k BIGINT, " +
           "v BIGINT) PARTITIONED BY (era)")
@@ -816,12 +744,7 @@ SELECT item, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b FROM (
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"gasrc_$cat")
         out
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 SELECT CAST(year(o_orderdate) AS BIGINT) AS era,

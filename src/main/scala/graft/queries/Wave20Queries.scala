@@ -1,7 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Tables}
+import graft.sources.GraftCatalog
 
 /** Round-20 engine wave: the catalog tier's remaining
   * LAKEHOUSE-PARITY surfaces. q414 proves MULTI-COLUMN Z-ORDER
@@ -39,11 +40,8 @@ object Wave20Queries {
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q414_cat")
       val cat = s"graftzo${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.zf (id BIGINT, x BIGINT, " +
           "y BIGINT, v BIGINT)")
@@ -121,12 +119,7 @@ object Wave20Queries {
         s.catalog.dropTempView(s"ord_$cat")
         s.catalog.dropTempView(s"zfsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (
@@ -156,12 +149,9 @@ FROM seed GROUP BY x // 16, y // 16 ORDER BY xb, yb
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q415_cat")
       val cat = s"graftcdf${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       val ck = graft.Scratch.dir("graft_q415_ck")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.cdf (k BIGINT, v BIGINT) " +
           "TBLPROPERTIES ('delete.mode'='merge-on-read'," +
@@ -210,9 +200,6 @@ FROM seed GROUP BY x // 16, y // 16 ORDER BY xb, yb
         s.catalog.dropTempView(s"cdfsrc_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
       } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         graft.streaming.StreamingResidue.deleteRecursively(root)
         graft.streaming.StreamingResidue.deleteRecursively(ck)
       }
@@ -262,13 +249,10 @@ FROM changes ORDER BY "_commit_version", "_change_type", k, v
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q416_cat")
       val cat = s"graftsu${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       val ck = graft.Scratch.dir("graft_q416_ck")
       val ckStale = graft.Scratch.dir("graft_q416_cks")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.cdcsrc (k BIGINT, v BIGINT)")
         s.sql(s"CREATE TABLE $cat.db.target (k BIGINT, v BIGINT) " +
@@ -345,9 +329,6 @@ FROM changes ORDER BY "_commit_version", "_change_type", k, v
         s.catalog.dropTempView(s"ord_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
       } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
         graft.streaming.StreamingResidue.deleteRecursively(root)
         graft.streaming.StreamingResidue.deleteRecursively(ck)
         graft.streaming.StreamingResidue.deleteRecursively(ckStale)
@@ -379,11 +360,8 @@ FROM orders GROUP BY 1 ORDER BY k
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q417_cat")
       val cat = s"graftpe${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.pe (p1 BIGINT, p2 BIGINT, " +
           "v BIGINT) PARTITIONED BY (p1)")
@@ -423,12 +401,7 @@ FROM orders GROUP BY 1 ORDER BY k
         val sunk = out.collect()
         s.catalog.dropTempView(s"ord_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 SELECT o_custkey % 4 AS p1, o_orderkey % 5 AS p2,
@@ -457,11 +430,8 @@ FROM orders GROUP BY 1, 2 ORDER BY p1, p2
     (s, dir) => {
       val root = graft.Scratch.dir("graft_q418_cat")
       val cat = s"graftbw${System.nanoTime()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
-      val savedShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+          ("spark.sql.shuffle.partitions" -> "8"): _*) {
         Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
         s.sql(s"CREATE TABLE $cat.db.wap (k BIGINT, v BIGINT) " +
           "TBLPROPERTIES ('delete.mode'='merge-on-read')")
@@ -522,12 +492,7 @@ FROM orders GROUP BY 1, 2 ORDER BY p1, p2
         val sunk = out.collect()
         s.catalog.dropTempView(s"ord_$cat")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-        s.conf.unset(s"spark.sql.catalog.$cat")
-        s.conf.unset(s"spark.sql.catalog.$cat.root")
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-      }
+      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
     },
     Some(raw"""
 WITH seed AS (

@@ -401,6 +401,12 @@ class GraftCatalog extends TableCatalog
 }
 
 object GraftCatalog {
+  /** The session settings that register a catalog `name` rooted at
+    * `root`, for [[graft.Conf.scoped]]. */
+  def conf(name: String, root: Path): Seq[(String, String)] = Seq(
+    s"spark.sql.catalog.$name" -> classOf[GraftCatalog].getName,
+    s"spark.sql.catalog.$name.root" -> root.toString)
+
   /** Result of [[expireSnapshots]]: which manifest versions were
     * retired, which now-unreferenced data files were vacuumed, and
     * which versions remain addressable. */

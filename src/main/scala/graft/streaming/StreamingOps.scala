@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Conf, Tables}
 
 /** Structured Streaming form of the engine's event analytics: file
   * source → watermarked tumbling-window aggregation → sink. The
@@ -41,28 +41,21 @@ object StreamingOps {
     * drained to completion with AvailableNow and returned as a batch
     * DataFrame (memory sink). Matches the batch q14 frame exactly.
     */
-  def hourlyEventStats(spark: SparkSession, dir: String): DataFrame = {
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def hourlyEventStats(spark: SparkSession, dir: String): DataFrame =
     // State-store partition tuning: each shuffle partition materializes
     // a state store (files + maintenance). The aggregate has a few
     // thousand (window, type) keys — 8 stores ample locally; a real
     // cluster sizes this to executor count × cores.
-    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try hourlyEventStatsInner(spark, dir)
-    finally spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-  }
-
-  private def hourlyEventStatsInner(spark: SparkSession, dir: String): DataFrame =
-    // brace-glob: the streaming file source requires a directory base
-    // path; the glob makes it treat `dir` as the base and match the
-    // single file (real ingest points this at a partitioned directory —
-    // see eventsStream + MultiFileStreamSpec)
-    drainToBatch(spark,
-      hourlyAgg(eventsStream(spark, s"$dir/{events.parquet}",
-        schemaProbePath = Some(s"$dir/events.parquet"))),
-      "stream_hourly")
+    Conf.scoped(spark)("spark.sql.shuffle.partitions" -> "8") {
+      // brace-glob: the streaming file source requires a directory base
+      // path; the glob makes it treat `dir` as the base and match the
+      // single file (real ingest points this at a partitioned
+      // directory — see eventsStream + MultiFileStreamSpec)
+      drainToBatch(spark,
+        hourlyAgg(eventsStream(spark, s"$dir/{events.parquet}",
+          schemaProbePath = Some(s"$dir/events.parquet"))),
+        "stream_hourly")
+    }
 
   /** Streaming HOPPING-window aggregation (1-hour windows every 15
     * minutes — q184's overlapping-window shape run online): identical
@@ -70,12 +63,8 @@ object StreamingOps {
     * updates FOUR window states. Drained AvailableNow and compared to
     * the batch hopping aggregate — overlap must not change a single
     * count. */
-  def hoppingEventStats(spark: SparkSession, dir: String): DataFrame = {
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+  def hoppingEventStats(spark: SparkSession, dir: String): DataFrame =
+    Conf.scoped(spark)("spark.sql.shuffle.partitions" -> "8") {
       val agg = eventsStream(spark, s"$dir/{events.parquet}",
           schemaProbePath = Some(s"$dir/events.parquet"))
         .withWatermark("ts", "1 hour")
@@ -85,19 +74,14 @@ object StreamingOps {
           round(sum(col("value").cast("decimal(28,10)")), 2)
             .cast("double").as("total_value"))
       drainToBatch(spark, agg, "stream_hopping")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-  }
+    }
 
   /** 6-hour windowed top-3 events by value per type through the
     * native bounded-heap top-k aggregate under the streaming state
     * store (q308): merge-order independence makes the drained result
     * equal the batch computation under ANY micro-batch split. */
-  def streamTopK(spark: SparkSession, dir: String): DataFrame = {
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+  def streamTopK(spark: SparkSession, dir: String): DataFrame =
+    Conf.scoped(spark)("spark.sql.shuffle.partitions" -> "8") {
       val agg = eventsStream(spark, s"$dir/{events.parquet}",
           schemaProbePath = Some(s"$dir/events.parquet"))
         .withWatermark("ts", "1 hour")
@@ -111,8 +95,7 @@ object StreamingOps {
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
             .as("win_start"),
           col("event_type"), col("top3"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-  }
+    }
 
   /** Windowed EXACT distinct users per event type through the native
     * bitmap aggregate under the streaming state store: the
@@ -121,12 +104,8 @@ object StreamingOps {
     * under any micro-batch split — the same equivalence class as
     * streamTopK, but for an exact set cardinality, where the HLL
     * stream (q261's twin) only promises identical merge trees. */
-  def streamBitmapDistinct(spark: SparkSession, dir: String): DataFrame = {
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+  def streamBitmapDistinct(spark: SparkSession, dir: String): DataFrame =
+    Conf.scoped(spark)("spark.sql.shuffle.partitions" -> "8") {
       val agg = eventsStream(spark, s"$dir/{events.parquet}",
           schemaProbePath = Some(s"$dir/events.parquet"))
         .withWatermark("ts", "1 hour")
@@ -139,8 +118,7 @@ object StreamingOps {
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
             .as("win_start"),
           col("event_type"), col("n_users"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-  }
+    }
 
   /** Streaming reader over an events path (file or partitioned
     * directory). `maxFilesPerTrigger` is the backlog-draining rate
@@ -160,8 +138,7 @@ object StreamingOps {
   def eventsStream(spark: SparkSession, path: String,
       maxFilesPerTrigger: Option[Int] = None,
       schemaProbePath: Option[String] = None): DataFrame = {
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.nanosAsLong(spark)
     // probe path: the streaming source accepts brace-glob paths that the
     // batch footer reader does not — callers using a glob pass the plain
     // file path for schema resolution. An EMPTY landing directory (the

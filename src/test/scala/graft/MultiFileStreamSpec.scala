@@ -22,8 +22,7 @@ import graft.streaming.{DedupStream, StreamingOps}
 class MultiFileStreamSpec extends SparkSpec {
 
   test("hourly agg over a 4-file backlog, maxFilesPerTrigger=1 == batch") {
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.nanosAsLong(spark)
     // sf0.001 events re-laid-out as 4 event-time-ranged files (raw
     // long-nanos ts, the same values the NANOS files carry)
     val raw = spark.read.schema(StreamingOps.eventsSchema)
@@ -66,8 +65,7 @@ class MultiFileStreamSpec extends SparkSpec {
   }
 
   test("restart from checkpoint: new files only, state recovered exactly") {
-    if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.nanosAsLong(spark)
     val raw = spark.read.schema(StreamingOps.eventsSchema)
       .parquet("/root/testdata/sf0.001/events.parquet")
     val Array(lo, hi) = raw.agg(min("ts"), max("ts")).collect()

@@ -37,7 +37,11 @@ class RegistryLintSpec extends SparkSpec {
   test("every query's output schema is scalar, driver-hashable, " +
       "deduplicated — no arrays/structs/maps/dates at top level") {
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]
+    // the one intentionally sticky setting (Tables.nanosAsLong) goes in
+    // first, so the per-query conf comparison below sees only drift
+    Tables(spark, dir, "region")
     for (q <- graft.queries.Registry.all) {
+      val confBefore = spark.conf.getAll
       try {
         val schema = q.fn(spark, dir).schema
         val dup = schema.fieldNames.diff(schema.fieldNames.distinct)
@@ -61,6 +65,14 @@ class RegistryLintSpec extends SparkSpec {
       }
       CacheRegistry.releaseAll()
       spark.catalog.clearCache()
+      // every session-conf override must be released on every exit
+      val confAfter = spark.conf.getAll
+      val drift = (confBefore.keySet ++ confAfter.keySet).toSeq.sorted
+        .filter(k => confBefore.get(k) != confAfter.get(k))
+        .map(k => s"$k: ${confBefore.getOrElse(k, "<unset>")} -> " +
+          confAfter.getOrElse(k, "<unset>"))
+      if (drift.nonEmpty)
+        bad += s"${q.name}: session conf drift ${drift.mkString("; ")}"
     }
     assert(bad.isEmpty, "\n" + bad.mkString("\n"))
   }

@@ -4,19 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all suites (one JVM, Test/fork=true).
-  * Mirrors the driver harness config: few shuffle partitions, UTC, no UI.
+/** Shared local SparkSession for all suites (one JVM, Test/fork=true):
+  * the harness session at a fixed 4 cores.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = Scratch.tuneCheckpoints(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val s = Harness.session("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
