@@ -23,9 +23,14 @@ import java.nio.file.{Files, Path, Paths}
   *     platforms without a tmpfs.
   *
   * This changes WHERE ephemeral state lives, never WHAT is computed:
-  * every query still computes from its parquet inputs each run, and
-  * nothing under the scratch base outlives its query (Bench/Verify
-  * release residue per query exactly as before).
+  * every query still computes from its parquet inputs each run.
+  *
+  * Scope contract: [[scoped]] is the only way to get a scratch dir. It
+  * lends a fresh dir under [[base]] to its body and deletes the whole
+  * tree when the body exits, normally or by exception, so nothing under
+  * the base outlives the scope that made it. A scope must therefore
+  * close only once nothing reads its files again: a frame returned out
+  * of a scope must not scan the dir (checkpoint or collect it first).
   */
 object Scratch {
   lazy val base: Path = {
@@ -41,8 +46,13 @@ object Scratch {
     root
   }
 
-  /** Drop-in replacement for `Files.createTempDirectory(prefix)`. */
-  def dir(prefix: String): Path = Files.createTempDirectory(base, prefix)
+  /** Lend a fresh dir named `prefix…` under [[base]] to `body`, and
+    * delete its tree on every exit. */
+  def scoped[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(base, prefix)
+    try body(dir)
+    finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+  }
 
   /** Ephemeral-checkpoint I/O settings for a session builder, applied
     * by every harness main (Bench/Verify/Prof/...). Two measured costs

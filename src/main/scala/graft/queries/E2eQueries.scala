@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QuerySpec, Tables}
+import graft.{QuerySpec, Scratch, Tables}
 import graft.functions.{Text => T}
 import graft.operators.{Dedup, HtmlExtract, Packing, Sampling}
 
@@ -71,7 +71,6 @@ object E2eQueries {
     * per consumer). */
   val q132 = QuerySpec("q132_e2e_pipeline",
     (s, dir) => {
-      import java.nio.file.Files
       import s.implicits._
       val docs = Tables(s, dir, "documents")
 
@@ -96,41 +95,41 @@ object E2eQueries {
             s"\r\nContent-Length: ${http.length}\r\n\r\n").getBytes("US-ASCII")
           warcHead ++ http ++ "\r\n".getBytes("US-ASCII")
         }
-      val tmp = graft.Scratch.dir("graft_q132_warc")
-      val tmpStr = tmp.toString
-      // one gzip member per partition and gz members are unsplittable:
-      // the shard count IS the ingest parallelism (Sources warns at
-      // 4 files / 32 cores) — derive it from the session, don't pin 8
-      staged.repartition(s.sparkContext.defaultParallelism).foreachPartition {
-        (it: Iterator[Array[Byte]]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val out = new java.util.zip.GZIPOutputStream(
-            new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(s"$tmpStr/part-$pid.warc.gz")))
-          try it.foreach(out.write) finally out.close()
-      }
-
-      // ---- stages 1-2: streaming ingest + HTTP status + charset
-      val base0 = graft.sources.Sources.readWarcBytes(s, tmpStr)
-        .where(col("record_type") === "response")
-        .select(regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-          .cast("long").as("doc_id"), col("body"))
-        .as[(Long, Array[Byte])]
-        .map { case (id, payload) =>
-          graft.sources.Sources.httpSplitBytes(payload) match {
-            case Some((200, headers, bytes)) =>
-              graft.sources.Sources.decodeHttpBody(headers, bytes) match {
-                case Some((cs, html)) => (id, true, Option(cs), Option(html))
-                case None =>
-                  (id, true, Option.empty[String], Option.empty[String])
-              }
-            case _ => (id, false, Option.empty[String], Option.empty[String])
-          }
-        }.toDF("doc_id", "http_ok", "charset", "html")
       // checkpoint so the staging dir deletes eagerly and the WARC
       // parse runs ONCE however many stages consume it
-      val base = graft.CacheRegistry.trackCheckpoint(base0.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      val base = Scratch.scoped("graft_q132_warc") { tmp =>
+        val tmpStr = tmp.toString
+        // one gzip member per partition and gz members are unsplittable:
+        // the shard count IS the ingest parallelism (Sources warns at
+        // 4 files / 32 cores) — derive it from the session, don't pin 8
+        staged.repartition(s.sparkContext.defaultParallelism).foreachPartition {
+          (it: Iterator[Array[Byte]]) =>
+            val pid = org.apache.spark.TaskContext.getPartitionId()
+            val out = new java.util.zip.GZIPOutputStream(
+              new java.io.BufferedOutputStream(
+                new java.io.FileOutputStream(s"$tmpStr/part-$pid.warc.gz")))
+            try it.foreach(out.write) finally out.close()
+        }
+
+        // ---- stages 1-2: streaming ingest + HTTP status + charset
+        val base0 = graft.sources.Sources.readWarcBytes(s, tmpStr)
+          .where(col("record_type") === "response")
+          .select(regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
+            .cast("long").as("doc_id"), col("body"))
+          .as[(Long, Array[Byte])]
+          .map { case (id, payload) =>
+            graft.sources.Sources.httpSplitBytes(payload) match {
+              case Some((200, headers, bytes)) =>
+                graft.sources.Sources.decodeHttpBody(headers, bytes) match {
+                  case Some((cs, html)) => (id, true, Option(cs), Option(html))
+                  case None =>
+                    (id, true, Option.empty[String], Option.empty[String])
+                }
+              case _ => (id, false, Option.empty[String], Option.empty[String])
+            }
+          }.toDF("doc_id", "http_ok", "charset", "html")
+        graft.CacheRegistry.trackCheckpoint(base0.localCheckpoint(true))
+      }
 
       // ---- stages 3-5: extract + language + quality, scored once
       val pagesDs = base.where(col("html").isNotNull)
@@ -201,35 +200,34 @@ object E2eQueries {
         .select(col("doc_id"), expr("(cum - n_tokens) div 512").as("seq")))
 
       // ---- stage 11: sharded .zst JSONL write + read-back
-      val shardTmp = graft.Scratch.dir("graft_q132_shards")
-      val outDocs = s9
-        .join(scored.select(col("doc_id"), col("extracted").as("text")), "doc_id")
-        .select("doc_id", "text")
-      graft.sources.Sources.writeJsonl(outDocs, shardTmp.toString,
-        shards = s.sparkContext.defaultParallelism, compression = "zstd")
-      val back = graft.sources.Sources.readJsonl(s, shardTmp.toString,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))))
-        .select(col("doc_id"), lit(true).as("in_shard"))
+      Scratch.scoped("graft_q132_shards") { shardTmp =>
+        val outDocs = s9
+          .join(scored.select(col("doc_id"), col("extracted").as("text")), "doc_id")
+          .select("doc_id", "text")
+        graft.sources.Sources.writeJsonl(outDocs, shardTmp.toString,
+          shards = s.sparkContext.defaultParallelism, compression = "zstd")
+        val back = graft.sources.Sources.readJsonl(s, shardTmp.toString,
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("doc_id",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("text",
+                org.apache.spark.sql.types.StringType))))
+          .select(col("doc_id"), lit(true).as("in_shard"))
 
-      // ---- the audit ledger: one row per staged record, every verdict
-      val out = base.select("doc_id", "http_ok", "charset")
-        .join(scored.select("doc_id", "lang_pred", "quality",
-          "lang_keep", "quality_keep"), Seq("doc_id"), "left")
-        .join(exact, Seq("doc_id"), "left")
-        .join(canon, Seq("doc_id"), "left")
-        .join(decon, Seq("doc_id"), "left")
-        .join(mixed, Seq("doc_id"), "left")
-        .join(pk, Seq("doc_id"), "left")
-        .join(back, Seq("doc_id"), "left")
-        .withColumn("in_shard", coalesce(col("in_shard"), lit(false)))
-        .orderBy("doc_id")
-      val result = graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(shardTmp)
-      result
+        // ---- the audit ledger: one row per staged record, every verdict
+        val out = base.select("doc_id", "http_ok", "charset")
+          .join(scored.select("doc_id", "lang_pred", "quality",
+            "lang_keep", "quality_keep"), Seq("doc_id"), "left")
+          .join(exact, Seq("doc_id"), "left")
+          .join(canon, Seq("doc_id"), "left")
+          .join(decon, Seq("doc_id"), "left")
+          .join(mixed, Seq("doc_id"), "left")
+          .join(pk, Seq("doc_id"), "left")
+          .join(back, Seq("doc_id"), "left")
+          .withColumn("in_shard", coalesce(col("in_shard"), lit(false)))
+          .orderBy("doc_id")
+        graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
+      }
     },
     Some(raw"""
 WITH RECURSIVE

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftagg.HllAgg
 import org.apache.spark.sql.graftgen.CharNgrams
-import graft.{Conf, QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Scratch, Tables}
 
 /** Round-14 engine-surface queries: each exercises a custom-function
   * extension point END TO END from the registry (the q228 lesson — an
@@ -476,9 +476,7 @@ ORDER BY o_orderpriority
     * rows) so the shard staging can be deleted eagerly. */
   val q282 = QuerySpec("q282_agg_pushdown",
     (s, dir) => {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_q282_shards")
-      try {
+      Scratch.scoped("graft_q282_shards") { tmp =>
         Tables(s, dir, "lineitem")
           .select(concat(col("l_returnflag"), col("l_linestatus")).as("g"),
             expr("cast(round(l_extendedprice * 100) as bigint)").as("x"))
@@ -495,7 +493,7 @@ ORDER BY o_orderpriority
           "graft-shard aggregate pushdown did not engage")
         val sunk = out.collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT l_returnflag || l_linestatus AS g, CAST(count(*) AS BIGINT) AS n,
@@ -732,10 +730,8 @@ GROUP BY 1, 2 ORDER BY win_start, event_type
     * the query author, decides eligibility. */
   val q313 = QuerySpec("q313_summary_rewrite",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-      val tmp = graft.Scratch.dir("graft_q313_summary")
-      try {
+      Scratch.scoped("graft_q313_summary") { tmp =>
         val s2 = s.newSession()
         s2.conf.set("spark.sql.shuffle.partitions",
           s.conf.get("spark.sql.shuffle.partitions"))
@@ -773,7 +769,7 @@ GROUP BY 1, 2 ORDER BY win_start, event_type
           s"summary rewrite did not engage (scans: $scanned)")
         val rows = out.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
@@ -852,9 +848,7 @@ GROUP BY 1 ORDER BY 1
     * plan-asserted via the scan's PushedTopN/PushedLimit markers. */
   val q321 = QuerySpec("q321_limit_topn_pushdown",
     (s, dir) => {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_q321_shards")
-      try {
+      Scratch.scoped("graft_q321_shards") { tmp =>
         Tables(s, dir, "orders")
           .select(col("o_orderpriority").as("g"),
             (expr("cast(round(o_totalprice * 100) as bigint)") *
@@ -880,7 +874,7 @@ GROUP BY 1 ORDER BY 1
           "graft-shard limit pushdown did not engage")
         val sunk = top.unionByName(limited).orderBy("kind", "x").collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), top.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 WITH o AS (
@@ -955,9 +949,7 @@ ORDER BY o_orderkey
     * both parts from the base parquet. */
   val q328 = QuerySpec("q328_filter_prune_pushdown",
     (s, dir) => {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_q328_shards")
-      try {
+      Scratch.scoped("graft_q328_shards") { tmp =>
         Tables(s, dir, "orders")
           .select(col("o_orderpriority").as("g"),
             expr("cast(round(o_totalprice * 100) as bigint)").as("x"))
@@ -988,7 +980,7 @@ ORDER BY o_orderkey
           "filtered aggregate pushdown did not engage")
         val sunk = rows.unionByName(agg).orderBy("part", "g").collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), rows.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 WITH o AS (
@@ -1019,36 +1011,32 @@ ORDER BY part, g
     * from the base table. */
   val q332 = QuerySpec("q332_runtime_filtering",
     (s, dir) => {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_q332_shards")
-      val dimTmp = graft.Scratch.dir("graft_q332_dim")
-      try {
-        val orders = Tables(s, dir, "orders")
-        orders.select(col("o_orderpriority").as("g"),
-            expr("cast(round(o_totalprice * 100) as bigint)").as("x"))
-          .repartition(32)
-          .write.mode("overwrite").csv(tmp.toString)
-        // dim: one row per priority with a rank column to filter on
-        orders.select(col("o_orderpriority").as("g")).distinct()
-          .withColumn("rank",
-            expr("cast(substring(g, 1, 1) as int)"))
-          .write.mode("overwrite").parquet(dimTmp.toString)
-        val fact = s.read.format("graft-shard")
-          .option("path", tmp.toString).load()
-        val dim = s.read.parquet(dimTmp.toString)
-          .where(col("rank") <= 2) // 1-URGENT, 2-HIGH
-        val out = fact.join(dim.select("g"), "g")
-          .groupBy("g")
-          .agg(count(lit(1)).as("n"), sum("x").as("sum_cents"))
-          .orderBy("g")
-        val sunk = out.collect()
-        require(out.queryExecution.executedPlan.toString.toLowerCase
-          .contains("dynamicpruning"),
-          "runtime filter was not planned into the v2 scan")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-        graft.streaming.StreamingResidue.deleteRecursively(dimTmp)
+      Scratch.scoped("graft_q332_shards") { tmp =>
+        Scratch.scoped("graft_q332_dim") { dimTmp =>
+          val orders = Tables(s, dir, "orders")
+          orders.select(col("o_orderpriority").as("g"),
+              expr("cast(round(o_totalprice * 100) as bigint)").as("x"))
+            .repartition(32)
+            .write.mode("overwrite").csv(tmp.toString)
+          // dim: one row per priority with a rank column to filter on
+          orders.select(col("o_orderpriority").as("g")).distinct()
+            .withColumn("rank",
+              expr("cast(substring(g, 1, 1) as int)"))
+            .write.mode("overwrite").parquet(dimTmp.toString)
+          val fact = s.read.format("graft-shard")
+            .option("path", tmp.toString).load()
+          val dim = s.read.parquet(dimTmp.toString)
+            .where(col("rank") <= 2) // 1-URGENT, 2-HIGH
+          val out = fact.join(dim.select("g"), "g")
+            .groupBy("g")
+            .agg(count(lit(1)).as("n"), sum("x").as("sum_cents"))
+            .orderBy("g")
+          val sunk = out.collect()
+          require(out.queryExecution.executedPlan.toString.toLowerCase
+            .contains("dynamicpruning"),
+            "runtime filter was not planned into the v2 scan")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
       }
     },
     Some(raw"""
@@ -1605,60 +1593,60 @@ FROM cnts CROSS JOIN tot WHERE cnt * 2 >= n ORDER BY t LIMIT 1
     * every group). */
   val q345 = QuerySpec("q345_storage_partitioned_agg",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
       import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-      val tmp = graft.Scratch.dir("graft_q345_keyed")
       val ConfKey = "spark.sql.sources.v2.bucketing.enabled"
-      try Conf.scoped(s)(ConfKey -> "true") {
-        Tables(s, dir, "orders")
-          .select(col("o_orderpriority").as("g"),
-            expr("cast(round(o_totalprice * 100) as bigint)").as("x"))
-          .repartition(8)
-          .write.mode("overwrite").partitionBy("g").csv(tmp.toString)
-        def profile(): org.apache.spark.sql.DataFrame =
-          s.read.format("graft-shard-keyed")
-            .option("path", tmp.toString).load()
-            .groupBy("g").agg(count(lit(1)).as("n"),
-              sum("x").as("sum_cents"), min("x").as("min_cents"),
-              max("x").as("max_cents"))
-        def shuffleBelowAgg(df: org.apache.spark.sql.DataFrame): Boolean = {
-          import org.apache.spark.sql.execution.SparkPlan
-          import org.apache.spark.sql.execution.adaptive.QueryStageExec
-          df.collect() // force execution so the adaptive plan is final
-          val plan = df.queryExecution.executedPlan match {
-            case a: AdaptiveSparkPlanExec => a.executedPlan
-            case p => p
+      Scratch.scoped("graft_q345_keyed") { tmp =>
+        Conf.scoped(s)(ConfKey -> "true") {
+          Tables(s, dir, "orders")
+            .select(col("o_orderpriority").as("g"),
+              expr("cast(round(o_totalprice * 100) as bigint)").as("x"))
+            .repartition(8)
+            .write.mode("overwrite").partitionBy("g").csv(tmp.toString)
+          def profile(): org.apache.spark.sql.DataFrame =
+            s.read.format("graft-shard-keyed")
+              .option("path", tmp.toString).load()
+              .groupBy("g").agg(count(lit(1)).as("n"),
+                sum("x").as("sum_cents"), min("x").as("min_cents"),
+                max("x").as("max_cents"))
+          def shuffleBelowAgg(df: org.apache.spark.sql.DataFrame): Boolean = {
+            import org.apache.spark.sql.execution.SparkPlan
+            import org.apache.spark.sql.execution.adaptive.QueryStageExec
+            df.collect() // force execution so the adaptive plan is final
+            val plan = df.queryExecution.executedPlan match {
+              case a: AdaptiveSparkPlanExec => a.executedPlan
+              case p => p
+            }
+            // an executed AQE plan nests materialized stages as LEAVES
+            // (Result/ShuffleQueryStageExec: children = Nil, real tree
+            // on .plan) — ordinary TreeNode traversal never sees inside,
+            // so both walks descend through query-stage boundaries
+            def hasShuffle(p: SparkPlan): Boolean = p match {
+              case _: ShuffleExchangeLike => true
+              case qs: QueryStageExec => hasShuffle(qs.plan)
+              case _ => p.children.exists(hasShuffle)
+            }
+            def aggs(p: SparkPlan): Seq[BaseAggregateExec] = p match {
+              case a: BaseAggregateExec => a +: a.children.flatMap(aggs)
+              case qs: QueryStageExec => aggs(qs.plan)
+              case _ => p.children.flatMap(aggs)
+            }
+            aggs(plan).exists(_.children.exists(hasShuffle))
           }
-          // an executed AQE plan nests materialized stages as LEAVES
-          // (Result/ShuffleQueryStageExec: children = Nil, real tree
-          // on .plan) — ordinary TreeNode traversal never sees inside,
-          // so both walks descend through query-stage boundaries
-          def hasShuffle(p: SparkPlan): Boolean = p match {
-            case _: ShuffleExchangeLike => true
-            case qs: QueryStageExec => hasShuffle(qs.plan)
-            case _ => p.children.exists(hasShuffle)
-          }
-          def aggs(p: SparkPlan): Seq[BaseAggregateExec] = p match {
-            case a: BaseAggregateExec => a +: a.children.flatMap(aggs)
-            case qs: QueryStageExec => aggs(qs.plan)
-            case _ => p.children.flatMap(aggs)
-          }
-          aggs(plan).exists(_.children.exists(hasShuffle))
+          val out = profile()
+          require(!shuffleBelowAgg(out),
+            "source-reported partitioning did not eliminate the exchange")
+          // control: without v2 bucketing the same plan must shuffle
+          s.conf.set(ConfKey, "false")
+          require(shuffleBelowAgg(profile()),
+            "no exchange even without the reported partitioning — " +
+              "the assert proves nothing")
+          s.conf.set(ConfKey, "true")
+          val sunk = out.orderBy("g").collect()
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
-        val out = profile()
-        require(!shuffleBelowAgg(out),
-          "source-reported partitioning did not eliminate the exchange")
-        // control: without v2 bucketing the same plan must shuffle
-        s.conf.set(ConfKey, "false")
-        require(shuffleBelowAgg(profile()),
-          "no exchange even without the reported partitioning — " +
-            "the assert proves nothing")
-        s.conf.set(ConfKey, "true")
-        val sunk = out.orderBy("g").collect()
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT o_orderpriority AS g, CAST(count(*) AS BIGINT) AS n,
@@ -1688,61 +1676,61 @@ FROM orders GROUP BY 1 ORDER BY g
     * must shuffle; the oracle reconciles the eras from base parquet. */
   val q346 = QuerySpec("q346_storage_partitioned_join",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-      val tmp = graft.Scratch.dir("graft_q346_spj")
       val BucketKey = "spark.sql.sources.v2.bucketing.enabled"
       val BcastKey = "spark.sql.autoBroadcastJoinThreshold"
-      try Conf.scoped(s)(BucketKey -> "true", BcastKey -> "-1") {
-        val ord = Tables(s, dir, "orders")
-        // exact integer key-range midpoint: identical in both engines
-        // (an approximate median would split differently per engine)
-        val mid = ord.agg(
-          expr("(min(o_orderkey) + max(o_orderkey)) div 2").as("m"))
-          .head().getLong(0)
-        def side(name: String, cond: org.apache.spark.sql.Column): Unit =
-          ord.where(cond)
-            .select(col("o_orderpriority").as("g"),
-              expr("cast(round(o_totalprice * 100) as bigint)").as("x"))
-            .repartition(8)
-            .write.mode("overwrite").partitionBy("g").csv(s"$tmp/$name")
-        side("early", col("o_orderkey") <= mid)
-        side("late", col("o_orderkey") > mid)
-        def profile(name: String, tag: String) =
-          s.read.format("graft-shard-keyed")
-            .option("path", s"$tmp/$name").load()
-            .groupBy("g").agg(count(lit(1)).as(s"n_$tag"),
-              sum("x").as(s"cents_$tag"))
-        def reconcile() = profile("early", "early")
-          .join(profile("late", "late"), "g")
-          .select(col("g"), col("n_early"), col("n_late"),
-            col("cents_early"), col("cents_late"),
-            (col("cents_late") - col("cents_early")).as("cents_shift"))
-        def anyShuffle(df: org.apache.spark.sql.DataFrame): Boolean = {
-          df.collect()
-          def walk(p: SparkPlan): Boolean = p match {
-            case _: ShuffleExchangeLike => true
-            case qs: QueryStageExec => walk(qs.plan)
-            case _ => p.children.exists(walk)
+      Scratch.scoped("graft_q346_spj") { tmp =>
+        Conf.scoped(s)(BucketKey -> "true", BcastKey -> "-1") {
+          val ord = Tables(s, dir, "orders")
+          // exact integer key-range midpoint: identical in both engines
+          // (an approximate median would split differently per engine)
+          val mid = ord.agg(
+            expr("(min(o_orderkey) + max(o_orderkey)) div 2").as("m"))
+            .head().getLong(0)
+          def side(name: String, cond: org.apache.spark.sql.Column): Unit =
+            ord.where(cond)
+              .select(col("o_orderpriority").as("g"),
+                expr("cast(round(o_totalprice * 100) as bigint)").as("x"))
+              .repartition(8)
+              .write.mode("overwrite").partitionBy("g").csv(s"$tmp/$name")
+          side("early", col("o_orderkey") <= mid)
+          side("late", col("o_orderkey") > mid)
+          def profile(name: String, tag: String) =
+            s.read.format("graft-shard-keyed")
+              .option("path", s"$tmp/$name").load()
+              .groupBy("g").agg(count(lit(1)).as(s"n_$tag"),
+                sum("x").as(s"cents_$tag"))
+          def reconcile() = profile("early", "early")
+            .join(profile("late", "late"), "g")
+            .select(col("g"), col("n_early"), col("n_late"),
+              col("cents_early"), col("cents_late"),
+              (col("cents_late") - col("cents_early")).as("cents_shift"))
+          def anyShuffle(df: org.apache.spark.sql.DataFrame): Boolean = {
+            df.collect()
+            def walk(p: SparkPlan): Boolean = p match {
+              case _: ShuffleExchangeLike => true
+              case qs: QueryStageExec => walk(qs.plan)
+              case _ => p.children.exists(walk)
+            }
+            df.queryExecution.executedPlan match {
+              case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+              case p => walk(p)
+            }
           }
-          df.queryExecution.executedPlan match {
-            case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-            case p => walk(p)
-          }
+          val out = reconcile()
+          require(!anyShuffle(out),
+            "storage-partitioned join did not run exchange-free")
+          s.conf.set(BucketKey, "false")
+          require(anyShuffle(reconcile()),
+            "no exchange without the reported partitioning — " +
+              "the assert proves nothing")
+          s.conf.set(BucketKey, "true")
+          val sunk = out.orderBy("g").collect()
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
-        val out = reconcile()
-        require(!anyShuffle(out),
-          "storage-partitioned join did not run exchange-free")
-        s.conf.set(BucketKey, "false")
-        require(anyShuffle(reconcile()),
-          "no exchange without the reported partitioning — " +
-            "the assert proves nothing")
-        s.conf.set(BucketKey, "true")
-        val sunk = out.orderBy("g").collect()
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 WITH mid AS (
@@ -1830,9 +1818,7 @@ FROM events GROUP BY 1 ORDER BY 1
     * across the format boundary is the round-trip claim. */
   val q348 = QuerySpec("q348_orc_roundtrip",
     (s, dir) => {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_q348_orc")
-      try {
+      Scratch.scoped("graft_q348_orc") { tmp =>
         Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
             expr("cast(l_quantity as bigint)").as("qty"),
@@ -1859,7 +1845,7 @@ FROM events GROUP BY 1 ORDER BY 1
         // caller writes the returned frame lazily)
         val sunk = out.collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT l_linenumber, CAST(count(*) AS BIGINT) AS n,

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QuerySpec, Tables}
+import graft.{QuerySpec, Scratch, Tables}
 import graft.functions.{Text => T}
 
 /** Raw-corpus ingestion queries: the formats an LLM-data pipeline
@@ -31,7 +31,6 @@ object IngestQueries {
     */
   val q46 = QuerySpec("q46_jsonl_ingest",
     (s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
       val plain = to_json(struct(col("doc_id"), col("text"), col("lang"),
         col("source"), col("n_chars")))
@@ -41,28 +40,27 @@ object IngestQueries {
         when(col("doc_id") % 97 === 0, concat(lit("{corrupt "), plain))
           .when(col("doc_id") % 5 === 0, quotedN)
           .otherwise(plain).as("value"))
-      val tmp = graft.Scratch.dir("graft_q46_jsonl")
-      lines.write.mode("overwrite").option("compression", "gzip")
-        .text(tmp.toString)
-      // tracked persist: (a) both consumers below (dedup + corrupt
-      // audit) reuse one gunzip+parse pass; (b) Spark refuses a raw
-      // JSON query whose pruned columns are ONLY the internal corrupt
-      // record column (the nCorrupt agg) — materializing first is the
-      // documented treatment.
-      val parsed = graft.CacheRegistry.persistTracked(
-        graft.sources.Sources.documentsFromJsonl(s, tmp.toString))
-      val deduped = parsed.where(!col("is_corrupt"))
-        .withColumn("fp", T.fingerprint(col("text")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("fp").orderBy("doc_id")))
-        .where(col("rn") === 1)
-        .select("doc_id", "source", "n_chars", "fp")
-      val nCorrupt = parsed
-        .agg(sum(col("is_corrupt").cast("long")).as("n_corrupt"))
-      val out = deduped.crossJoin(broadcast(nCorrupt)).orderBy("doc_id")
-      val result = graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      result
+      Scratch.scoped("graft_q46_jsonl") { tmp =>
+        lines.write.mode("overwrite").option("compression", "gzip")
+          .text(tmp.toString)
+        // tracked persist: (a) both consumers below (dedup + corrupt
+        // audit) reuse one gunzip+parse pass; (b) Spark refuses a raw
+        // JSON query whose pruned columns are ONLY the internal corrupt
+        // record column (the nCorrupt agg) — materializing first is the
+        // documented treatment.
+        val parsed = graft.CacheRegistry.persistTracked(
+          graft.sources.Sources.documentsFromJsonl(s, tmp.toString))
+        val deduped = parsed.where(!col("is_corrupt"))
+          .withColumn("fp", T.fingerprint(col("text")))
+          .withColumn("rn", row_number().over(
+            Window.partitionBy("fp").orderBy("doc_id")))
+          .where(col("rn") === 1)
+          .select("doc_id", "source", "n_chars", "fp")
+        val nCorrupt = parsed
+          .agg(sum(col("is_corrupt").cast("long")).as("n_corrupt"))
+        val out = deduped.crossJoin(broadcast(nCorrupt)).orderBy("doc_id")
+        graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
+      }
     },
     Some(raw"""
 WITH good AS (
@@ -99,7 +97,6 @@ FROM d WHERE rn = 1 ORDER BY doc_id
     */
   val q22 = QuerySpec("q22_wet_ingest",
     (s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
       val staged = docs
         .withColumn("body", concat(col("text"),
@@ -116,26 +113,25 @@ FROM d WHERE rn = 1 ORDER BY doc_id
       val warcinfo = s.range(1).select(lit(-1L).as("ord"),
         lit("WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 25\r\n" +
           "\r\nsoftware: graft-wet-stage\r\n").as("value"))
-      val tmp = graft.Scratch.dir("graft_q22_wet")
-      // multi-shard staging: records are self-contained, so any
-      // row→file assignment yields valid shards — and the source's
-      // per-FILE parallelism (the real WET layout: thousands of
-      // ~150 MB shards) is actually exercised instead of one task
-      // parsing the whole corpus
-      warcinfo.unionByName(staged).repartition(8).select("value")
-        .write.mode("overwrite").option("compression", "gzip")
-        .text(tmp.toString)
-      val parsed = graft.sources.Sources.readWet(s, tmp.toString)
-      val out = parsed.where(col("record_type") === "conversion")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          col("content_length"),
-          md5(col("body")).as("fp"))
-        .orderBy("doc_id")
-      val result = graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      result
+      Scratch.scoped("graft_q22_wet") { tmp =>
+        // multi-shard staging: records are self-contained, so any
+        // row→file assignment yields valid shards — and the source's
+        // per-FILE parallelism (the real WET layout: thousands of
+        // ~150 MB shards) is actually exercised instead of one task
+        // parsing the whole corpus
+        warcinfo.unionByName(staged).repartition(8).select("value")
+          .write.mode("overwrite").option("compression", "gzip")
+          .text(tmp.toString)
+        val parsed = graft.sources.Sources.readWet(s, tmp.toString)
+        val out = parsed.where(col("record_type") === "conversion")
+          .select(
+            regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
+              .cast("long").as("doc_id"),
+            col("content_length"),
+            md5(col("body")).as("fp"))
+          .orderBy("doc_id")
+        graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
+      }
     },
     Some(raw"""
 SELECT doc_id,
@@ -216,7 +212,6 @@ FROM f GROUP BY host, tld ORDER BY host, tld
     * which is the point: `.zst` in, identical rows out). */
   val q101 = QuerySpec("q101_zstd_ingest",
     (s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
       val plain = to_json(struct(col("doc_id"), col("text"), col("lang"),
         col("source"), col("n_chars")))
@@ -226,24 +221,23 @@ FROM f GROUP BY host, tld ORDER BY host, tld
         when(col("doc_id") % 89 === 0, concat(lit("{corrupt "), plain))
           .when(col("doc_id") % 3 === 0, quotedN)
           .otherwise(plain).as("value"))
-      val tmp = graft.Scratch.dir("graft_q101_zst")
-      lines.repartition(4).write.mode("overwrite")
-        .option("compression", graft.sources.Zstd.codecName)
-        .text(tmp.toString)
-      val parsed = graft.CacheRegistry.persistTracked(
-        graft.sources.Sources.documentsFromJsonl(s, tmp.toString))
-      val perSource = parsed.where(!col("is_corrupt"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("sum_chars"),
-          min("doc_id").as("min_id"),
-          max("doc_id").as("max_id"))
-      val nCorrupt = parsed
-        .agg(sum(col("is_corrupt").cast("long")).as("n_corrupt"))
-      val out = perSource.crossJoin(broadcast(nCorrupt)).orderBy("source")
-      val result = graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      result
+      Scratch.scoped("graft_q101_zst") { tmp =>
+        lines.repartition(4).write.mode("overwrite")
+          .option("compression", graft.sources.Zstd.codecName)
+          .text(tmp.toString)
+        val parsed = graft.CacheRegistry.persistTracked(
+          graft.sources.Sources.documentsFromJsonl(s, tmp.toString))
+        val perSource = parsed.where(!col("is_corrupt"))
+          .groupBy("source")
+          .agg(count(lit(1)).as("n_docs"),
+            sum("n_chars").as("sum_chars"),
+            min("doc_id").as("min_id"),
+            max("doc_id").as("max_id"))
+        val nCorrupt = parsed
+          .agg(sum(col("is_corrupt").cast("long")).as("n_corrupt"))
+        val out = perSource.crossJoin(broadcast(nCorrupt)).orderBy("source")
+        graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
+      }
     },
     Some(raw"""
 SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
@@ -267,7 +261,6 @@ GROUP BY source ORDER BY source
     * aggregation; raw lines never shuffle. */
   val q110 = QuerySpec("q110_schema_drift",
     (s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
       val base = struct(col("doc_id"), col("lang"), col("n_chars"))
       val m11 = struct(col("doc_id"), col("lang"), col("n_chars"),
@@ -281,17 +274,16 @@ GROUP BY source ORDER BY source
           .when(col("doc_id") % 11 === 0, to_json(m11))
           .when(col("doc_id") % 23 === 0, to_json(m23))
           .otherwise(to_json(base)).as("value"))
-      val tmp = graft.Scratch.dir("graft_q110_drift")
-      lines.repartition(2).write.mode("overwrite")
-        .option("compression", "gzip").text(tmp.toString)
-      val out = s.read.text(tmp.toString)
-        .select(explode(json_object_keys(col("value"))).as("key"))
-        .groupBy("key").agg(count(lit(1)).as("n_docs"))
-        .withColumn("expected", col("key").isin("doc_id", "lang", "n_chars"))
-        .orderBy("key")
-      val result = graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      result
+      Scratch.scoped("graft_q110_drift") { tmp =>
+        lines.repartition(2).write.mode("overwrite")
+          .option("compression", "gzip").text(tmp.toString)
+        val out = s.read.text(tmp.toString)
+          .select(explode(json_object_keys(col("value"))).as("key"))
+          .groupBy("key").agg(count(lit(1)).as("n_docs"))
+          .withColumn("expected", col("key").isin("doc_id", "lang", "n_chars"))
+          .orderBy("key")
+        graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
+      }
     },
     Some(raw"""
 SELECT key, n_docs, expected FROM (
@@ -438,7 +430,6 @@ GROUP BY rd ORDER BY rd
     * payload bytes never shuffle. */
   val q125 = QuerySpec("q125_warc_http_extract",
     (s, dir) => {
-      import java.nio.file.Files
       import s.implicits._
       val docs = Tables(s, dir, "documents")
       val staged = graft.operators.HtmlExtract.encodePages(docs)
@@ -455,29 +446,28 @@ GROUP BY rd ORDER BY rd
             s"\r\nContent-Length: $httpLen\r\n\r\n" + http + "\r\n"
           (p.doc_id, rec)
         }.toDF("ord", "value")
-      val tmp = graft.Scratch.dir("graft_q125_warc")
-      staged.repartition(8).select("value")
-        .write.mode("overwrite").option("compression", "gzip")
-        .text(tmp.toString)
-      val parsed = graft.sources.Sources.readWet(s, tmp.toString)
-      val pages = parsed.where(col("record_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          col("body"))
-        .as[(Long, String)]
-        .flatMap { case (id, payload) =>
-          graft.sources.Sources.httpSplit(payload).collect {
-            case (200, headers, html)
-                if headers.get("content-type").exists(_.startsWith("text/html")) =>
-              graft.operators.HtmlExtract.Page(id, html)
+      Scratch.scoped("graft_q125_warc") { tmp =>
+        staged.repartition(8).select("value")
+          .write.mode("overwrite").option("compression", "gzip")
+          .text(tmp.toString)
+        val parsed = graft.sources.Sources.readWet(s, tmp.toString)
+        val pages = parsed.where(col("record_type") === "response")
+          .select(
+            regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
+              .cast("long").as("doc_id"),
+            col("body"))
+          .as[(Long, String)]
+          .flatMap { case (id, payload) =>
+            graft.sources.Sources.httpSplit(payload).collect {
+              case (200, headers, html)
+                  if headers.get("content-type").exists(_.startsWith("text/html")) =>
+                graft.operators.HtmlExtract.Page(id, html)
+            }
           }
-        }
-      val out = graft.operators.HtmlExtract.extractMainText(pages)
-        .toDF().orderBy("doc_id")
-      val result = graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      result
+        val out = graft.operators.HtmlExtract.extractMainText(pages)
+          .toDF().orderBy("doc_id")
+        graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
+      }
     },
     Some(raw"""
 WITH k AS (
@@ -523,7 +513,6 @@ FROM k ORDER BY doc_id
     * shuffle. */
   val q128 = QuerySpec("q128_charset_ingest",
     (s, dir) => {
-      import java.nio.file.Files
       import s.implicits._
       val docs = Tables(s, dir, "documents")
       val staged: org.apache.spark.sql.Dataset[Array[Byte]] =
@@ -565,41 +554,40 @@ FROM k ORDER BY doc_id
             s"\r\nContent-Length: ${http.length}\r\n\r\n").getBytes("US-ASCII")
           warcHead ++ http ++ "\r\n".getBytes("US-ASCII")
         }
-      val tmp = graft.Scratch.dir("graft_q128_warc")
-      // capture the path as a String: java.nio.file.Path is not
-      // Serializable and would poison the foreachPartition closure
-      val tmpStr = tmp.toString
-      staged.repartition(8).foreachPartition {
-        (it: Iterator[Array[Byte]]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val f = new java.io.BufferedOutputStream(
-            new java.io.FileOutputStream(s"$tmpStr/part-$pid.warc"))
-          try it.foreach(f.write) finally f.close()
+      Scratch.scoped("graft_q128_warc") { tmp =>
+        // capture the path as a String: java.nio.file.Path is not
+        // Serializable and would poison the foreachPartition closure
+        val tmpStr = tmp.toString
+        staged.repartition(8).foreachPartition {
+          (it: Iterator[Array[Byte]]) =>
+            val pid = org.apache.spark.TaskContext.getPartitionId()
+            val f = new java.io.BufferedOutputStream(
+              new java.io.FileOutputStream(s"$tmpStr/part-$pid.warc"))
+            try it.foreach(f.write) finally f.close()
+        }
+        val parsed = graft.sources.Sources.readWarcBytes(s, tmp.toString)
+        val pages = parsed.where(col("record_type") === "response")
+          .select(
+            regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
+              .cast("long").as("doc_id"),
+            col("body"))
+          .as[(Long, Array[Byte])]
+          .flatMap { case (id, payload) =>
+            graft.sources.Sources.httpSplitBytes(payload).toSeq.collect {
+              case (200, headers, bytes) =>
+                graft.sources.Sources.decodeHttpBody(headers, bytes)
+                  .map { case (cs, html) => (id, cs, html) }
+            }.flatten
+          }.toDF("doc_id", "charset", "html")
+        val extracted = graft.operators.HtmlExtract.extractMainText(
+          pages.select(col("doc_id"), col("html")).as[(Long, String)]
+            .map { case (id, h) => graft.operators.HtmlExtract.Page(id, h) })
+        val out = pages.select("doc_id", "charset")
+          .join(extracted.toDF().select(col("doc_id"), col("extracted")),
+            Seq("doc_id"))
+          .orderBy("doc_id")
+        graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
       }
-      val parsed = graft.sources.Sources.readWarcBytes(s, tmp.toString)
-      val pages = parsed.where(col("record_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          col("body"))
-        .as[(Long, Array[Byte])]
-        .flatMap { case (id, payload) =>
-          graft.sources.Sources.httpSplitBytes(payload).toSeq.collect {
-            case (200, headers, bytes) =>
-              graft.sources.Sources.decodeHttpBody(headers, bytes)
-                .map { case (cs, html) => (id, cs, html) }
-          }.flatten
-        }.toDF("doc_id", "charset", "html")
-      val extracted = graft.operators.HtmlExtract.extractMainText(
-        pages.select(col("doc_id"), col("html")).as[(Long, String)]
-          .map { case (id, h) => graft.operators.HtmlExtract.Page(id, h) })
-      val out = pages.select("doc_id", "charset")
-        .join(extracted.toDF().select(col("doc_id"), col("extracted")),
-          Seq("doc_id"))
-        .orderBy("doc_id")
-      val result = graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(tmp)
-      result
     },
     Some(raw"""
 SELECT doc_id,
@@ -634,35 +622,33 @@ ORDER BY doc_id
     * same xor fold. */
   val q138 = QuerySpec("q138_shard_manifest",
     (s, dir) => {
-      import java.nio.file.Files
       val docs = Tables(s, dir, "documents")
       val nShards = 4
       val withShard = docs.select(col("doc_id"), col("text"),
         (graft.operators.Sampling.hashBucket(col("doc_id"), "shard")
           % nShards).cast("int").as("shard"))
-      val outDir = graft.Scratch.dir("graft_q138_shards")
-      graft.sources.Sources.writeJsonl(withShard, outDir.toString,
-        shards = nShards, compression = "zstd")
-      val back = graft.sources.Sources.readJsonl(s, outDir.toString,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("shard",
-            org.apache.spark.sql.types.IntegerType))))
-      val manifest = back.groupBy("shard").agg(
-          count(lit(1)).as("n_docs"),
-          sum(T.tokenCount(col("text")).cast("long")).as("n_tokens"),
-          min("doc_id").as("first_doc"),
-          max("doc_id").as("last_doc"),
-          expr("bit_xor(cast(conv(substring(md5(cast(doc_id as string))," +
-            " 1, 15), 16, 10) as bigint))").as("ids_fp"))
-        .orderBy("shard")
-      val result = graft.CacheRegistry.trackCheckpoint(
-        manifest.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(outDir)
-      result
+      Scratch.scoped("graft_q138_shards") { outDir =>
+        graft.sources.Sources.writeJsonl(withShard, outDir.toString,
+          shards = nShards, compression = "zstd")
+        val back = graft.sources.Sources.readJsonl(s, outDir.toString,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("doc_id",
+              org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("text",
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("shard",
+              org.apache.spark.sql.types.IntegerType))))
+        val manifest = back.groupBy("shard").agg(
+            count(lit(1)).as("n_docs"),
+            sum(T.tokenCount(col("text")).cast("long")).as("n_tokens"),
+            min("doc_id").as("first_doc"),
+            max("doc_id").as("last_doc"),
+            expr("bit_xor(cast(conv(substring(md5(cast(doc_id as string))," +
+              " 1, 15), 16, 10) as bigint))").as("ids_fp"))
+          .orderBy("shard")
+        graft.CacheRegistry.trackCheckpoint(
+          manifest.localCheckpoint(true))
+      }
     },
     Some(raw"""
 WITH t AS (
@@ -890,9 +876,7 @@ FROM m ORDER BY shard
     * |langs|·|sources|) so the staging deletes eagerly. */
   val q286 = QuerySpec("q286_xml_ingest",
     (s, dir) => {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_q286_xml")
-      try {
+      Scratch.scoped("graft_q286_xml") { tmp =>
         // each partition becomes one well-formed XML file: a <docs>
         // root wrapping the to_xml rows (the xml source requires a
         // rooted document; rowTag elements are located inside it)
@@ -918,7 +902,7 @@ FROM m ORDER BY shard
           .orderBy("lang", "source")
         val sunk = out.collect()
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -977,9 +961,7 @@ GROUP BY 1 ORDER BY 1
     * multi-format lake runs before trusting a new writer path. */
   val q352 = QuerySpec("q352_format_matrix_audit",
     (s, dir) => {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_q352_fmt")
-      try {
+      Scratch.scoped("graft_q352_fmt") { tmp =>
         val base = Tables(s, dir, "orders")
           .select(col("o_orderkey"),
             expr("cast(round(o_totalprice * 100) as bigint)").as("cents"),
@@ -1025,7 +1007,7 @@ GROUP BY 1 ORDER BY 1
           .distinct.length == 1,
           "format round-trips disagree — a writer or reader is lossy")
         s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 WITH base AS (

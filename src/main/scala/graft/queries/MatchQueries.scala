@@ -283,20 +283,24 @@ FROM cand GROUP BY 1 ORDER BY 1
           .select(col("user_id"),
             (col("v_seq") * lit(2147483648L) + col("p_seq")).as("akey"),
             col("v_seq")))
-      var st = cand.groupBy("user_id")
+      // every round's checkpoint is tracked: each one truncates the
+      // lineage to the one before it, so the last alone would not
+      // reach them
+      var st = graft.CacheRegistry.trackCheckpoint(cand.groupBy("user_id")
         .agg(lit(-1L).as("cursor"), lit(0L).as("n"))
-        .localCheckpoint(true)
+        .localCheckpoint(true))
       for (_ <- 1 to greedyRounds) {
         val nx = st.join(cand, Seq("user_id"))
           .where(col("v_seq") > col("cursor"))
           .groupBy("user_id").agg(min(col("akey")).as("nkey"))
-        st = st.join(nx, Seq("user_id"), "left_outer")
-          .select(col("user_id"),
-            coalesce(col("nkey") % 2147483648L, col("cursor"))
-              .as("cursor"),
-            (col("n") + when(col("nkey").isNotNull, 1L).otherwise(0L))
-              .as("n"))
-          .localCheckpoint(true)
+        st = graft.CacheRegistry.trackCheckpoint(
+          st.join(nx, Seq("user_id"), "left_outer")
+            .select(col("user_id"),
+              coalesce(col("nkey") % 2147483648L, col("cursor"))
+                .as("cursor"),
+              (col("n") + when(col("nkey").isNotNull, 1L).otherwise(0L))
+                .as("n"))
+            .localCheckpoint(true))
       }
       st.select(col("user_id"), col("n").as("n_matches"))
         .where(col("n_matches") >= 1L)

@@ -505,16 +505,19 @@ GROUP BY 1, 2 ORDER BY 1, 2
         covRows.toDF("i", "j", "c"))
       var v = s.range(0, kDim.toLong)
         .select(col("id").as("j"), lit(1000000L).as("vj"))
+      // every round's checkpoint is tracked: each one truncates the
+      // lineage to the one before it, so the last alone would not
+      // reach them
       for (_ <- 1 to 3) {
         val u = cov.join(v, "j")
           .groupBy("i")
           .agg(sum(col("c").cast("decimal(38,0)") *
             col("vj").cast("decimal(38,0)")).as("u"))
         val mx = u.agg(max(abs(col("u"))).as("mx"))
-        v = u.crossJoin(broadcast(mx))
+        v = graft.CacheRegistry.trackCheckpoint(u.crossJoin(broadcast(mx))
           .select(col("i").as("j"),
             expr("(u * 1000000) div mx").as("vj"))
-          .localCheckpoint(true)
+          .localCheckpoint(true))
       }
       val vc = v
       val ray = cov

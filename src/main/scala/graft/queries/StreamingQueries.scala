@@ -1,7 +1,11 @@
 package graft.queries
 
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.{Conf, QuerySpec}
+import graft.{Conf, QuerySpec, Scratch}
 import graft.streaming.StreamingOps
 
 /** Streaming query inventory. Each runs a real Structured Streaming
@@ -11,38 +15,40 @@ import graft.streaming.StreamingOps
   */
 object StreamingQueries {
 
-  /** Stages a frame as `n` event-time-monotone parquet micro-batches:
-    * repartitionByRange on the given sort columns writes part files
-    * in range order; pinned ascending mod-times make file order =
-    * batch order = event-time order under maxFilesPerTrigger=1, so
-    * per-key sequence order is preserved across ALL batch boundaries.
-    * Parallel write — a coalesce(1) staging measured 31× slower at
-    * 100× rows on the single-threaded write alone (q276 lesson).
-    * Caller deletes the returned directory after draining.
+  /** Stages a frame into `inDir` as `n` event-time-monotone parquet
+    * micro-batches: repartitionByRange on the given sort columns writes
+    * part files in range order, so file order = batch order =
+    * event-time order under maxFilesPerTrigger=1, and per-key sequence
+    * order is preserved across ALL batch boundaries. Parallel write — a
+    * coalesce(1) staging measured 31× slower at 100× rows on the
+    * single-threaded write alone (q276 lesson).
     */
-  private[queries] def stageMonotoneBatches(
-      df: org.apache.spark.sql.DataFrame, n: Int,
-      sortCols: org.apache.spark.sql.Column*): java.nio.file.Path = {
-    import java.nio.file.Files
-    val inDir = graft.Scratch.dir("graft_stream_in")
-    val tmp = graft.Scratch.dir("graft_stream_stage")
-    df.repartitionByRange(n, sortCols: _*)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val parts = scala.util.Using.resource(Files.list(tmp)) { st =>
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
+  private[queries] def stageMonotoneBatches(df: DataFrame, inDir: Path,
+      n: Int, sortCols: Column*): Unit =
+    stageParts(df.repartitionByRange(n, sortCols: _*), inDir, 0)
+
+  /** Stages `df` into `inDir` as ONE parquet file, micro-batch `idx`. */
+  private def stageBatch(df: DataFrame, inDir: Path, idx: Int): Unit =
+    stageParts(df.coalesce(1), inDir, idx)
+
+  /** Writes `df` to a scratch dir and moves its parquet parts into
+    * `inDir` as `part-<i>.parquet`, numbered from `first` in part-name
+    * order, with ascending mod-times pinned: FileStreamSource orders
+    * files by mod time, so file order = micro-batch order. */
+  private def stageParts(df: DataFrame, inDir: Path, first: Int): Unit =
+    Scratch.scoped("graft_stream_stage") { tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString)
+      val parts = scala.util.Using.resource(Files.list(tmp)) { st =>
+        st.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .toSeq.sortBy(_.getFileName.toString)
+      }
+      for ((f, i) <- parts.zipWithIndex; idx = first + i) {
+        val dest = inDir.resolve(f"part-$idx%04d.parquet")
+        Files.move(f, dest)
+        Files.setLastModifiedTime(dest,
+          FileTime.fromMillis(1000000000L + idx * 60000L))
+      }
     }
-    parts.zipWithIndex.foreach { case (f, idx) =>
-      val dest = inDir.resolve(f"part-$idx%04d.parquet")
-      Files.move(f, dest)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(
-          1000000000L + idx * 60000L))
-    }
-    graft.streaming.StreamingResidue.deleteRecursively(tmp)
-    inDir
-  }
 
   /** q40 — streaming hourly window aggregation == batch q14. */
   val q40 = QuerySpec("q40_stream_hourly",
@@ -71,7 +77,6 @@ FROM events GROUP BY 1, 2 ORDER BY hour, event_type
     */
   val q45 = QuerySpec("q45_stream_dedup",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.expressions.Window
       import graft.streaming.DedupStream
       val docsTable = graft.Tables(s, dir, "documents")
@@ -92,35 +97,21 @@ FROM events GROUP BY 1, 2 ORDER BY hour, event_type
         (col("doc_id") + shift).as("doc_id"),
         when(col("doc_id") % 2 === 1, concat(col("text"), lit(" novelmark")))
           .otherwise(col("text")).as("text"))
-      val inDir = graft.Scratch.dir("graft_q45_in")
-      def stage(df: org.apache.spark.sql.DataFrame, idx: Int): Unit = {
-        val part = df.select(col("doc_id"),
-          (col("doc_id") + 1000000L).as("ts_us"), col("text"))
-        val tmp = graft.Scratch.dir("graft_q45_stage")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val f = scala.util.Using.resource(Files.list(tmp)) { st =>
-          st.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        }
-        val dest = inDir.resolve(f"part-$idx%04d.parquet")
-        Files.move(f, dest)
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-        // file order = micro-batch order (FileStreamSource sorts by
-        // mod time): pin it explicitly
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000L + idx * 60000L))
+      def timed(df: DataFrame) = df.select(col("doc_id"),
+        (col("doc_id") + 1000000L).as("ts_us"), col("text"))
+      Scratch.scoped("graft_q45_in") { inDir =>
+        stageBatch(timed(keepers), inDir, 0)
+        stageBatch(timed(batch2), inDir, 1)
+        import s.implicits._
+        val docs = s.readStream
+          .schema(implicitly[org.apache.spark.sql.Encoder[DedupStream.Doc]].schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(inDir.toString).as[DedupStream.Doc]
+        val admitted = graft.streaming.StreamingOps.drainToBatch(s,
+          DedupStream.firstOccurrences(docs), "stream_dedup",
+          outputMode = "append")
+        admitted.select(col("doc_id"), col("fp")).orderBy("doc_id")
       }
-      stage(keepers, 0)
-      stage(batch2, 1)
-      import s.implicits._
-      val docs = s.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[DedupStream.Doc]].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString).as[DedupStream.Doc]
-      val admitted = graft.streaming.StreamingOps.drainToBatch(s,
-        DedupStream.firstOccurrences(docs), "stream_dedup",
-        outputMode = "append")
-      graft.streaming.StreamingResidue.deleteRecursively(inDir)
-      admitted.select(col("doc_id"), col("fp")).orderBy("doc_id")
     },
     Some("""
 WITH k AS (
@@ -165,7 +156,6 @@ ORDER BY doc_id
     * equi-joins, no all-pairs); the fixture staging is test-only. */
   val q135 = QuerySpec("q135_stream_media_neardup",
     (s, dir) => {
-      import java.nio.file.Files
       import s.implicits._
       import graft.operators.Multimodal
       val docs = graft.Tables(s, dir, "documents")
@@ -176,35 +166,22 @@ ORDER BY doc_id
       // lesson). With it, each stage is a cheap cached-block merge.
       val recs = graft.CacheRegistry.persistTracked(
         Multimodal.encodePerceptualFixture(docs).toDF())
-      val inDir = graft.Scratch.dir("graft_q135_in")
-      val stateDir = graft.Scratch.dir("graft_q135_state")
-      val outDir = graft.Scratch.dir("graft_q135_out")
-      def stage(df: org.apache.spark.sql.DataFrame, idx: Int): Unit = {
-        val tmp = graft.Scratch.dir("graft_q135_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val f = scala.util.Using.resource(Files.list(tmp)) { st =>
-          st.filter(_.toString.endsWith(".parquet")).findFirst().get()
+      Scratch.scoped("graft_q135_in") { inDir =>
+        Scratch.scoped("graft_q135_state") { stateDir =>
+          Scratch.scoped("graft_q135_out") { outDir =>
+            stageBatch(recs.where(col("doc_id") % 3 === 0), inDir, 0)
+            stageBatch(recs.where(col("doc_id") % 3 =!= 0), inDir, 1)
+            val media = s.readStream
+              .schema(implicitly[org.apache.spark.sql.Encoder[Multimodal.MediaRecord]].schema)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(inDir.toString).as[Multimodal.MediaRecord]
+            graft.streaming.NearDupStream.drainMedia(s, media, stateDir, outDir)
+            val kept = s.read.parquet(outDir.toString)
+              .select("doc_id").orderBy("doc_id")
+            graft.CacheRegistry.trackCheckpoint(kept.localCheckpoint(true))
+          }
         }
-        val dest = inDir.resolve(f"part-$idx%04d.parquet")
-        Files.move(f, dest)
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000L + idx * 60000L))
       }
-      stage(recs.where(col("doc_id") % 3 === 0), 0)
-      stage(recs.where(col("doc_id") % 3 =!= 0), 1)
-      val media = s.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[Multimodal.MediaRecord]].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString).as[Multimodal.MediaRecord]
-      graft.streaming.NearDupStream.drainMedia(s, media, stateDir, outDir)
-      val kept = s.read.parquet(outDir.toString)
-        .select("doc_id").orderBy("doc_id")
-      val result = graft.CacheRegistry.trackCheckpoint(kept.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(inDir)
-      graft.streaming.StreamingResidue.deleteRecursively(stateDir)
-      graft.streaming.StreamingResidue.deleteRecursively(outDir)
-      result
     },
     Some(raw"""
 WITH RECURSIVE
@@ -339,7 +316,6 @@ ORDER BY doc_id
     * key; bounded by key cardinality, not corpus size. */
   val q137 = QuerySpec("q137_stream_quota",
     (s, dir) => {
-      import java.nio.file.Files
       import s.implicits._
       import graft.streaming.QuotaStream
       val docs = graft.Tables(s, dir, "documents")
@@ -347,31 +323,19 @@ ORDER BY doc_id
       val nSources = docs.select("source").distinct().count()
       val quota = (nDocs / nSources * 3 / 5).toInt
       val keyed = docs.select(col("doc_id"), col("source").as("key"))
-      val inDir = graft.Scratch.dir("graft_q137_in")
-      def stage(df: org.apache.spark.sql.DataFrame, idx: Int): Unit = {
-        val tmp = graft.Scratch.dir("graft_q137_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val f = scala.util.Using.resource(Files.list(tmp)) { st =>
-          st.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        }
-        val dest = inDir.resolve(f"part-$idx%04d.parquet")
-        Files.move(f, dest)
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000L + idx * 60000L))
+      Scratch.scoped("graft_q137_in") { inDir =>
+        stageBatch(keyed.where(col("doc_id") % 2 === 0), inDir, 0)
+        stageBatch(keyed.where(col("doc_id") % 2 =!= 0), inDir, 1)
+        val stream = s.readStream
+          .schema(implicitly[org.apache.spark.sql.Encoder[QuotaStream.KeyedDoc]].schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(inDir.toString).as[QuotaStream.KeyedDoc]
+        val admitted = StreamingOps.drainToBatch(s,
+          QuotaStream.firstKPerKey(stream, quota).toDF(), "stream_quota",
+          outputMode = "append")
+        admitted.select(col("doc_id"), col("key").as("source"))
+          .orderBy("doc_id")
       }
-      stage(keyed.where(col("doc_id") % 2 === 0), 0)
-      stage(keyed.where(col("doc_id") % 2 =!= 0), 1)
-      val stream = s.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[QuotaStream.KeyedDoc]].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString).as[QuotaStream.KeyedDoc]
-      val admitted = StreamingOps.drainToBatch(s,
-        QuotaStream.firstKPerKey(stream, quota).toDF(), "stream_quota",
-        outputMode = "append")
-      graft.streaming.StreamingResidue.deleteRecursively(inDir)
-      admitted.select(col("doc_id"), col("key").as("source"))
-        .orderBy("doc_id")
     },
     Some("""
 WITH q AS (
@@ -397,39 +361,25 @@ SELECT doc_id, source FROM r, q WHERE rn <= q.quota ORDER BY doc_id
     * float sum term for term. */
   val q156 = QuerySpec("q156_stream_drift",
     (s, dir) => {
-      import java.nio.file.Files
       import s.implicits._
       import graft.streaming.DriftStream
       val docs = graft.Tables(s, dir, "documents")
       val keyed = docs.select(col("doc_id"), col("lang").as("key"))
-      val inDir = graft.Scratch.dir("graft_q156_in")
-      val stateDir = graft.Scratch.dir("graft_q156_state")
-      val outDir = graft.Scratch.dir("graft_q156_out")
-      def stage(df: org.apache.spark.sql.DataFrame, idx: Int): Unit = {
-        val tmp = graft.Scratch.dir("graft_q156_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val f = scala.util.Using.resource(Files.list(tmp)) { st =>
-          st.filter(_.toString.endsWith(".parquet")).findFirst().get()
+      Scratch.scoped("graft_q156_in") { inDir =>
+        Scratch.scoped("graft_q156_state") { stateDir =>
+          Scratch.scoped("graft_q156_out") { outDir =>
+            (0 until 3).foreach(i =>
+              stageBatch(keyed.where(col("doc_id") % 3 === i), inDir, i))
+            val stream = s.readStream
+              .schema(implicitly[org.apache.spark.sql.Encoder[DriftStream.KeyedDoc]].schema)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(inDir.toString).as[DriftStream.KeyedDoc]
+            DriftStream.drain(s, stream, stateDir, outDir, threshold = 0.05)
+            val out = s.read.parquet(outDir.toString).orderBy("batch_id")
+            graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
+          }
         }
-        val dest = inDir.resolve(f"part-$idx%04d.parquet")
-        Files.move(f, dest)
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000L + idx * 60000L))
       }
-      (0 until 3).foreach(i =>
-        stage(keyed.where(col("doc_id") % 3 === i), i))
-      val stream = s.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[DriftStream.KeyedDoc]].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString).as[DriftStream.KeyedDoc]
-      DriftStream.drain(s, stream, stateDir, outDir, threshold = 0.05)
-      val out = s.read.parquet(outDir.toString).orderBy("batch_id")
-      val result = graft.CacheRegistry.trackCheckpoint(out.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(inDir)
-      graft.streaming.StreamingResidue.deleteRecursively(stateDir)
-      graft.streaming.StreamingResidue.deleteRecursively(outDir)
-      result
     },
     Some(raw"""
 WITH b AS (
@@ -476,7 +426,6 @@ ORDER BY n.batch_id
     * the oracle computes. */
   val q171 = QuerySpec("q171_stream_upsert",
     (s, dir) => {
-      import java.nio.file.Files
       val docs = graft.Tables(s, dir, "documents")
       val base = docs.select(col("doc_id"), lit(1L).as("version"),
         col("text"))
@@ -486,23 +435,6 @@ ORDER BY n.batch_id
         .unionByName(docs.where(col("doc_id") % 13 === 0)
           .select((col("doc_id") + 500000L).as("doc_id"),
             lit(2L).as("version"), col("text")))
-      val inDir = graft.Scratch.dir("graft_q171_in")
-      val tableDir = graft.Scratch.dir("graft_q171_table")
-      def stage(df: org.apache.spark.sql.DataFrame, idx: Int): Unit = {
-        val tmp = graft.Scratch.dir("graft_q171_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val f = scala.util.Using.resource(Files.list(tmp)) { st =>
-          st.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        }
-        val dest = inDir.resolve(f"part-$idx%04d.parquet")
-        Files.move(f, dest)
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1000000000L + idx * 60000L))
-      }
-      stage(base, 0)
-      stage(delta, 1)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType),
@@ -510,19 +442,21 @@ ORDER BY n.batch_id
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("text",
           org.apache.spark.sql.types.StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-      val finalSnap = graft.streaming.UpsertSink
-        .drainUpsert(s, stream, tableDir.toString)
-        .select(col("doc_id"), col("version"),
-          length(col("text")).cast("long").as("n_chars"))
-        .orderBy("doc_id")
-      val result = graft.CacheRegistry.trackCheckpoint(
-        finalSnap.localCheckpoint(true))
-      graft.streaming.StreamingResidue.deleteRecursively(inDir)
-      graft.streaming.StreamingResidue.deleteRecursively(tableDir)
-      result
+      Scratch.scoped("graft_q171_in") { inDir =>
+        Scratch.scoped("graft_q171_table") { tableDir =>
+          stageBatch(base, inDir, 0)
+          stageBatch(delta, inDir, 1)
+          val stream = s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inDir.toString)
+          val finalSnap = graft.streaming.UpsertSink
+            .drainUpsert(s, stream, tableDir.toString)
+            .select(col("doc_id"), col("version"),
+              length(col("text")).cast("long").as("n_chars"))
+            .orderBy("doc_id")
+          graft.CacheRegistry.trackCheckpoint(finalSnap.localCheckpoint(true))
+        }
+      }
     },
     Some(raw"""
 WITH base AS (
@@ -588,31 +522,31 @@ FROM hop GROUP BY win_start, event_type ORDER BY win_start, event_type
     * batch semantics coincide. */
   val q276 = QuerySpec("q276_stream_velocity",
     (s, dir) => {
-      import java.nio.file.Files
       import graft.streaming.VelocityStream
       val ev = graft.Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
           expr("unix_micros(ts)").as("ts_us"))
-      // 4 micro-batches, each a contiguous (ts, event_id) range — the
-      // tuple key makes boundaries exact even at timestamp ties
-      val inDir = stageMonotoneBatches(ev.toDF(), 4,
-        col("ts_us"), col("event_id"))
-      import s.implicits._
-      val stream = s.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[
-          VelocityStream.Ev]].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString).as[VelocityStream.Ev]
-      val flagged = graft.streaming.StreamingOps.drainToBatch(s,
-        VelocityStream.flags(stream).toDF(), "stream_velocity",
-        outputMode = "append")
-      graft.streaming.StreamingResidue.deleteRecursively(inDir)
-      flagged.groupBy("event_type")
-        .agg(sum("n_events").as("n_events"),
-          sum("n_flags").as("n_flags"),
-          countDistinct(when(col("n_flags") > 0L, col("user_id")))
-            .as("n_users_flagged"))
-        .orderBy("event_type")
+      Scratch.scoped("graft_q276_in") { inDir =>
+        // 4 micro-batches, each a contiguous (ts, event_id) range — the
+        // tuple key makes boundaries exact even at timestamp ties
+        stageMonotoneBatches(ev.toDF(), inDir, 4,
+          col("ts_us"), col("event_id"))
+        import s.implicits._
+        val stream = s.readStream
+          .schema(implicitly[org.apache.spark.sql.Encoder[
+            VelocityStream.Ev]].schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(inDir.toString).as[VelocityStream.Ev]
+        val flagged = graft.streaming.StreamingOps.drainToBatch(s,
+          VelocityStream.flags(stream).toDF(), "stream_velocity",
+          outputMode = "append")
+        flagged.groupBy("event_type")
+          .agg(sum("n_events").as("n_events"),
+            sum("n_flags").as("n_flags"),
+            countDistinct(when(col("n_flags") > 0L, col("user_id")))
+              .as("n_users_flagged"))
+          .orderBy("event_type")
+      }
     },
     Some(raw"""
 WITH e AS (
@@ -657,25 +591,25 @@ FROM f GROUP BY 1 ORDER BY event_type
         val ev = graft.Tables(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("event_type"),
             expr("unix_micros(ts)").as("ts_us"))
-        val inDir = stageMonotoneBatches(ev, 4,
-          col("ts_us"), col("event_id"))
-        import s.implicits._
-        val stream = s.readStream
-          .schema(implicitly[org.apache.spark.sql.Encoder[
-            GapStream.Ev]].schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir.toString).as[GapStream.Ev]
-        val partials = graft.streaming.StreamingOps.drainToBatch(s,
-          GapStream.gapStats(stream).toDF(), "stream_tws_gaps",
-          outputMode = "append")
-        graft.streaming.StreamingResidue.deleteRecursively(inDir)
-        partials.groupBy("event_type")
-          .agg(sum("n_events").as("n_events"),
-            sum("n_gaps").as("n_gaps"),
-            sum("sum_gap_us").as("sum_gap_us"),
-            max("max_gap_us").as("max_gap_us"),
-            sum("n_first").as("n_first_of_type"))
-          .orderBy("event_type")
+        Scratch.scoped("graft_q277_in") { inDir =>
+          stageMonotoneBatches(ev, inDir, 4, col("ts_us"), col("event_id"))
+          import s.implicits._
+          val stream = s.readStream
+            .schema(implicitly[org.apache.spark.sql.Encoder[
+              GapStream.Ev]].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inDir.toString).as[GapStream.Ev]
+          val partials = graft.streaming.StreamingOps.drainToBatch(s,
+            GapStream.gapStats(stream).toDF(), "stream_tws_gaps",
+            outputMode = "append")
+          partials.groupBy("event_type")
+            .agg(sum("n_events").as("n_events"),
+              sum("n_gaps").as("n_gaps"),
+              sum("sum_gap_us").as("sum_gap_us"),
+              max("max_gap_us").as("max_gap_us"),
+              sum("n_first").as("n_first_of_type"))
+            .orderBy("event_type")
+        }
       }
     },
     Some(raw"""
@@ -716,45 +650,44 @@ FROM g GROUP BY 1 ORDER BY event_type
       val ev = graft.Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("ts"))
-      val vDir = stageMonotoneBatches(
-        ev.where(col("event_type") === "view").drop("event_type"), 3,
-        col("ts"), col("event_id"))
-      val pDir = stageMonotoneBatches(
-        ev.where(col("event_type") === "purchase").drop("event_type"), 3,
-        col("ts"), col("event_id"))
       val schema = StructType(Seq(
         StructField("user_id", LongType), StructField("event_id", LongType),
         StructField("ts", TimestampType)))
-      def stream(p: java.nio.file.Path) = s.readStream.schema(schema)
+      def stream(p: Path) = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(p.toString)
-      val joined = graft.streaming.StreamJoin.within(
-        stream(vDir), stream(pDir), "user_id", "1 HOUR", "2 hours")
       val partials =
         scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      val ckpt = graft.Scratch.dir("graft_q291_ckpt")
-      try {
-        val q = joined.writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], _: Long) =>
-            val r = df.agg(count(lit(1)),
-              sum(expr("unix_micros(right_ts) - unix_micros(left_ts)")),
-              max(expr("unix_micros(right_ts) - unix_micros(left_ts)")))
-              .head()
-            partials.synchronized {
-              partials += ((r.getLong(0),
-                if (r.isNullAt(1)) 0L else r.getLong(1),
-                if (r.isNullAt(2)) 0L else r.getLong(2)))
-            }
-            ()
+      Scratch.scoped("graft_q291_views") { vDir =>
+        Scratch.scoped("graft_q291_purchases") { pDir =>
+          Scratch.scoped("graft_q291_ckpt") { ckpt =>
+            stageMonotoneBatches(
+              ev.where(col("event_type") === "view").drop("event_type"),
+              vDir, 3, col("ts"), col("event_id"))
+            stageMonotoneBatches(
+              ev.where(col("event_type") === "purchase").drop("event_type"),
+              pDir, 3, col("ts"), col("event_id"))
+            val joined = graft.streaming.StreamJoin.within(
+              stream(vDir), stream(pDir), "user_id", "1 HOUR", "2 hours")
+            val q = joined.writeStream
+              .foreachBatch { (df: org.apache.spark.sql.Dataset[
+                  org.apache.spark.sql.Row], _: Long) =>
+                val r = df.agg(count(lit(1)),
+                  sum(expr("unix_micros(right_ts) - unix_micros(left_ts)")),
+                  max(expr("unix_micros(right_ts) - unix_micros(left_ts)")))
+                  .head()
+                partials.synchronized {
+                  partials += ((r.getLong(0),
+                    if (r.isNullAt(1)) 0L else r.getLong(1),
+                    if (r.isNullAt(2)) 0L else r.getLong(2)))
+                }
+                ()
+              }
+              .option("checkpointLocation", ckpt.toString)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .start()
+            q.awaitTermination()
           }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        graft.streaming.StreamingResidue.deleteRecursively(ckpt)
-        graft.streaming.StreamingResidue.deleteRecursively(vDir)
-        graft.streaming.StreamingResidue.deleteRecursively(pDir)
+        }
       }
       import s.implicits._
       Seq((partials.map(_._1).sum, partials.map(_._2).sum,

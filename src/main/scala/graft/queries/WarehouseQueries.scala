@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Conf, QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Scratch, Tables}
 import graft.functions.{Text => T}
 
 /** Round-13 warehouse-maintenance tier: the operators that keep a
@@ -708,37 +708,36 @@ ORDER BY snap
     * the base parquet. */
   val q287 = QuerySpec("q287_bucketed_join",
     (s, dir) => {
-      import java.nio.file.Files
-      val wh = graft.Scratch.dir("graft_q287_wh")
-      // broadcast off so the join must use the bucketed layout
-      try Conf.scoped(s)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        Tables(s, dir, "orders")
-          .write.mode("overwrite")
-          .bucketBy(8, "o_custkey").sortBy("o_custkey")
-          .option("path", s"$wh/orders_b287").saveAsTable("orders_b287")
-        Tables(s, dir, "customer")
-          .write.mode("overwrite")
-          .bucketBy(8, "c_custkey").sortBy("c_custkey")
-          .option("path", s"$wh/customer_b287").saveAsTable("customer_b287")
-        val j = s.table("orders_b287")
-          .join(s.table("customer_b287"),
-            col("o_custkey") === col("c_custkey"))
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n_orders"),
-            sum(expr("cast(round(o_totalprice * 100) as bigint)"))
-              .as("cents"))
-          .orderBy("c_mktsegment")
-        val rows = j.collect()
-        val plan = j.queryExecution.executedPlan.toString
-        require(plan.contains("Bucketed: true") &&
-          !plan.contains("Exchange hashpartitioning(o_custkey") &&
-          !plan.contains("Exchange hashpartitioning(c_custkey"),
-          "bucketed join unexpectedly shuffled its join keys")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
-      } finally {
-        s.sql("DROP TABLE IF EXISTS orders_b287")
-        s.sql("DROP TABLE IF EXISTS customer_b287")
-        graft.streaming.StreamingResidue.deleteRecursively(wh)
+      Scratch.scoped("graft_q287_wh") { wh =>
+        // broadcast off so the join must use the bucketed layout
+        try Conf.scoped(s)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          Tables(s, dir, "orders")
+            .write.mode("overwrite")
+            .bucketBy(8, "o_custkey").sortBy("o_custkey")
+            .option("path", s"$wh/orders_b287").saveAsTable("orders_b287")
+          Tables(s, dir, "customer")
+            .write.mode("overwrite")
+            .bucketBy(8, "c_custkey").sortBy("c_custkey")
+            .option("path", s"$wh/customer_b287").saveAsTable("customer_b287")
+          val j = s.table("orders_b287")
+            .join(s.table("customer_b287"),
+              col("o_custkey") === col("c_custkey"))
+            .groupBy("c_mktsegment")
+            .agg(count(lit(1)).as("n_orders"),
+              sum(expr("cast(round(o_totalprice * 100) as bigint)"))
+                .as("cents"))
+            .orderBy("c_mktsegment")
+          val rows = j.collect()
+          val plan = j.queryExecution.executedPlan.toString
+          require(plan.contains("Bucketed: true") &&
+            !plan.contains("Exchange hashpartitioning(o_custkey") &&
+            !plan.contains("Exchange hashpartitioning(c_custkey"),
+            "bucketed join unexpectedly shuffled its join keys")
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
+        } finally {
+          s.sql("DROP TABLE IF EXISTS orders_b287")
+          s.sql("DROP TABLE IF EXISTS customer_b287")
+        }
       }
     },
     Some(raw"""
@@ -762,9 +761,7 @@ GROUP BY 1 ORDER BY 1
     * parquet. */
   val q288 = QuerySpec("q288_partition_pruning",
     (s, dir) => {
-      import java.nio.file.Files
-      val tmp = graft.Scratch.dir("graft_q288_part")
-      try {
+      Scratch.scoped("graft_q288_part") { tmp =>
         Tables(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("value"),
             col("event_type"))
@@ -783,7 +780,7 @@ GROUP BY 1 ORDER BY 1
           .findFirstIn(plan).isDefined,
           "partitioned scan did not prune on event_type")
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT event_type, CAST(count(*) AS BIGINT) AS n,

@@ -1,8 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
-import graft.{Conf, QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Scratch, Tables}
 import graft.sources.GraftCatalog
 
 /** Round-16 engine wave: the Spark 4 surfaces a 100 TB deployment
@@ -47,20 +48,20 @@ object Wave16Queries {
           col("ts"))
       val echoed = ev.union(
         ev.withColumn("ts", col("ts") + expr("INTERVAL 30 MINUTES")))
-      val inDir = StreamingQueries.stageMonotoneBatches(echoed, 3,
-        col("ts"), col("event_id"))
-      val stream = s.readStream.schema(echoed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir.toString)
-      val deduped = stream
-        .withWatermark("ts", "2 hours")
-        .dropDuplicatesWithinWatermark("event_id")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"))
-      val out = graft.streaming.StreamingOps.drainToBatch(s,
-        deduped, "stream_dedup_wm")
-      graft.streaming.StreamingResidue.deleteRecursively(inDir)
-      out.orderBy("event_type")
+      Scratch.scoped("graft_q359_in") { inDir =>
+        StreamingQueries.stageMonotoneBatches(echoed, inDir, 3,
+          col("ts"), col("event_id"))
+        val stream = s.readStream.schema(echoed.schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(inDir.toString)
+        val deduped = stream
+          .withWatermark("ts", "2 hours")
+          .dropDuplicatesWithinWatermark("event_id")
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n_events"))
+        graft.streaming.StreamingOps.drainToBatch(s,
+          deduped, "stream_dedup_wm").orderBy("event_type")
+      }
     },
     Some(raw"""
 SELECT event_type, CAST(count(DISTINCT event_id) AS BIGINT) AS n_events
@@ -81,8 +82,7 @@ FROM events GROUP BY 1 ORDER BY event_type
   val q360 = QuerySpec("q360_state_store_read",
     (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val ckpt = graft.Scratch.dir("graft_q360_ckpt")
-      try {
+      Scratch.scoped("graft_q360_ckpt") { ckpt =>
         val ev = graft.streaming.StreamingOps.eventsStream(s,
           s"$dir/{events.parquet}",
           schemaProbePath = Some(s"$dir/events.parquet"))
@@ -106,7 +106,7 @@ FROM events GROUP BY 1 ORDER BY event_type
         // detach from the checkpoint files before they are deleted
         val rows = state.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), state.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(ckpt)
+      }
     },
     Some(raw"""
 SELECT strftime(time_bucket(INTERVAL '6 hours', ts),
@@ -129,8 +129,7 @@ FROM events GROUP BY 1, 2 ORDER BY win_start, event_type
     * way. */
   val q361 = QuerySpec("q361_dynamic_partition_pruning",
     (s, dir) => {
-      val tmp = graft.Scratch.dir("graft_q361")
-      try {
+      Scratch.scoped("graft_q361") { tmp =>
         Tables(s, dir, "events")
           .select(col("event_id"), col("user_id"), col("value"),
             col("event_type"))
@@ -162,7 +161,7 @@ FROM events GROUP BY 1, 2 ORDER BY win_start, event_type
         require(plan.contains("dynamicpruningexpression"),
           "join-driven scan must carry a dynamic partition pruning filter")
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT event_type AS et, CAST(count(*) AS BIGINT) AS n,
@@ -186,54 +185,54 @@ GROUP BY 1 ORDER BY et
     * finally. */
   val q362 = QuerySpec("q362_cbo_join_reorder",
     (s, dir) => {
-      val tmp = graft.Scratch.dir("graft_q362")
       val tag = s"graft_cbo_${System.nanoTime()}"
-      try Conf.scoped(s)("spark.sql.cbo.enabled" -> "false",
-          "spark.sql.cbo.joinReorder.enabled" -> "false") {
-        Tables(s, dir, "lineitem")
-          .select("l_orderkey", "l_suppkey", "l_quantity")
-          .write.parquet(s"$tmp/li")
-        Tables(s, dir, "orders").select("o_orderkey", "o_orderpriority")
-          .write.parquet(s"$tmp/ord")
-        Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-          .write.parquet(s"$tmp/sup")
-        s.sql(s"CREATE TABLE ${tag}_li USING parquet LOCATION '$tmp/li'")
-        s.sql(s"CREATE TABLE ${tag}_ord USING parquet LOCATION '$tmp/ord'")
-        s.sql(s"CREATE TABLE ${tag}_sup USING parquet LOCATION '$tmp/sup'")
-        Seq(s"${tag}_li", s"${tag}_ord", s"${tag}_sup").foreach(t =>
-          s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS"))
-        val sql =
-          s"""SELECT o.o_orderpriority,
-             |  CAST(count(*) AS BIGINT) AS n,
-             |  CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS qty
-             |FROM ${tag}_li l
-             |JOIN ${tag}_ord o ON l.l_orderkey = o.o_orderkey
-             |JOIN ${tag}_sup p ON l.l_suppkey = p.s_suppkey
-             |WHERE p.s_nationkey = 3
-             |GROUP BY 1 ORDER BY 1""".stripMargin
-        val before = s.sql(sql).queryExecution.optimizedPlan
-        s.conf.set("spark.sql.cbo.enabled", "true")
-        s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        require(s.table(s"${tag}_li").queryExecution.optimizedPlan
-          .stats.rowCount.isDefined,
-          "ANALYZE row count must be visible on the table plan")
-        val out = s.sql(sql)
-        val after = out.queryExecution.optimizedPlan
-        // deepest Join (collect is pre-order, so last = innermost)
-        def deepest(p: org.apache.spark.sql.catalyst.plans.logical
-            .LogicalPlan): String = p.collect {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-        }.last.toString
-        require(deepest(before).contains(s"${tag}_ord"),
-          "stats-less plan should keep the authored join order")
-        require(deepest(after).contains(s"${tag}_sup"),
-          "CBO must reorder the selective supplier join innermost")
-        val rows = out.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally {
-        Seq("li", "ord", "sup").foreach(t =>
-          s.sql(s"DROP TABLE IF EXISTS ${tag}_$t"))
-        graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      Scratch.scoped("graft_q362") { tmp =>
+        try Conf.scoped(s)("spark.sql.cbo.enabled" -> "false",
+            "spark.sql.cbo.joinReorder.enabled" -> "false") {
+          Tables(s, dir, "lineitem")
+            .select("l_orderkey", "l_suppkey", "l_quantity")
+            .write.parquet(s"$tmp/li")
+          Tables(s, dir, "orders").select("o_orderkey", "o_orderpriority")
+            .write.parquet(s"$tmp/ord")
+          Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+            .write.parquet(s"$tmp/sup")
+          s.sql(s"CREATE TABLE ${tag}_li USING parquet LOCATION '$tmp/li'")
+          s.sql(s"CREATE TABLE ${tag}_ord USING parquet LOCATION '$tmp/ord'")
+          s.sql(s"CREATE TABLE ${tag}_sup USING parquet LOCATION '$tmp/sup'")
+          Seq(s"${tag}_li", s"${tag}_ord", s"${tag}_sup").foreach(t =>
+            s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS"))
+          val sql =
+            s"""SELECT o.o_orderpriority,
+               |  CAST(count(*) AS BIGINT) AS n,
+               |  CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS qty
+               |FROM ${tag}_li l
+               |JOIN ${tag}_ord o ON l.l_orderkey = o.o_orderkey
+               |JOIN ${tag}_sup p ON l.l_suppkey = p.s_suppkey
+               |WHERE p.s_nationkey = 3
+               |GROUP BY 1 ORDER BY 1""".stripMargin
+          val before = s.sql(sql).queryExecution.optimizedPlan
+          s.conf.set("spark.sql.cbo.enabled", "true")
+          s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+          require(s.table(s"${tag}_li").queryExecution.optimizedPlan
+            .stats.rowCount.isDefined,
+            "ANALYZE row count must be visible on the table plan")
+          val out = s.sql(sql)
+          val after = out.queryExecution.optimizedPlan
+          // deepest Join (collect is pre-order, so last = innermost)
+          def deepest(p: org.apache.spark.sql.catalyst.plans.logical
+              .LogicalPlan): String = p.collect {
+            case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+          }.last.toString
+          require(deepest(before).contains(s"${tag}_ord"),
+            "stats-less plan should keep the authored join order")
+          require(deepest(after).contains(s"${tag}_sup"),
+            "CBO must reorder the selective supplier join innermost")
+          val rows = out.collect()
+          s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+        } finally {
+          Seq("li", "ord", "sup").foreach(t =>
+            s.sql(s"DROP TABLE IF EXISTS ${tag}_$t"))
+        }
       }
     },
     Some(raw"""
@@ -369,8 +368,7 @@ FROM events GROUP BY 1 ORDER BY n DESC, event_type
     * the oracle certifies both against the original table. */
   val q366 = QuerySpec("q366_dsv2_write_roundtrip",
     (s, dir) => {
-      val tmp = graft.Scratch.dir("graft_q366")
-      try {
+      Scratch.scoped("graft_q366") { tmp =>
         Tables(s, dir, "lineitem")
           .select(col("l_returnflag").as("g"),
             col("l_quantity").cast("long").as("x"))
@@ -390,7 +388,7 @@ FROM events GROUP BY 1 ORDER BY n DESC, event_type
           .forall(f => !f.getName.startsWith(".staging")),
           "job commit must leave no staging residue")
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT l_returnflag AS g, CAST(count(*) AS BIGINT) AS n,
@@ -409,8 +407,7 @@ FROM lineitem GROUP BY 1 ORDER BY g
     * O(page), not O(corpus). Plan-asserted on PushedOffset. */
   val q367 = QuerySpec("q367_offset_pushdown",
     (s, dir) => {
-      val tmp = graft.Scratch.dir("graft_q367")
-      try {
+      Scratch.scoped("graft_q367") { tmp =>
         Tables(s, dir, "orders")
           .select(col("o_orderpriority").as("g"),
             col("o_orderkey").cast("long").as("x"))
@@ -425,7 +422,7 @@ FROM lineitem GROUP BY 1 ORDER BY g
           plan.contains("PushedLimit[150]"),
           s"paged read must push offset+limit into the scan")
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT o_orderpriority AS g, CAST(o_orderkey AS BIGINT) AS x
@@ -445,8 +442,7 @@ FROM orders ORDER BY x LIMIT 50 OFFSET 100
   val q368 = QuerySpec("q368_state_metadata",
     (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val ckpt = graft.Scratch.dir("graft_q368_ckpt")
-      try {
+      Scratch.scoped("graft_q368_ckpt") { ckpt =>
         val s2 = s.newSession()
         s2.conf.set("spark.sql.shuffle.partitions", "4")
         val ev = graft.streaming.StreamingOps.eventsStream(s2,
@@ -472,7 +468,7 @@ FROM orders ORDER BY x LIMIT 50 OFFSET 100
           .orderBy("operator_id", "state_store_name")
         val rows = md.collect()
         s.createDataFrame(java.util.Arrays.asList(rows: _*), md.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(ckpt)
+      }
     },
     Some(raw"""
 SELECT CAST(0 AS BIGINT) AS operator_id,
@@ -572,7 +568,6 @@ GROUP BY 1 ORDER BY 1
     * can't split. Plan-asserted on the final adaptive plan. */
   val q371 = QuerySpec("q371_aqe_skew_join",
     (s, dir) => {
-      val tmp = graft.Scratch.dir("graft_q371")
       val s2 = s.newSession()
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       // AQE's RUNTIME broadcast conversion must be off too, or the
@@ -604,7 +599,7 @@ GROUP BY 1 ORDER BY 1
         thresholdB.toString)
       s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         (thresholdB / 2).toString)
-      try {
+      Scratch.scoped("graft_q371") { tmp =>
         // Two probe lessons baked in: (1) a skewed REDUCER partition
         // is split at MAP-OUTPUT granularity, so a single-file scan
         // (one map task) is UNSPLITTABLE — repartition(16) gives the
@@ -641,7 +636,7 @@ GROUP BY 1 ORDER BY 1
         require(plan.contains("skew=true"),
           "the hot key's partition must be split by OptimizeSkewedJoin")
         s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 WITH fact AS (
@@ -1074,8 +1069,7 @@ FROM r WHERE rn = CAST(ceil(n * 0.9) AS BIGINT) ORDER BY g
     val Array(lo, hi) = ev.agg(min("ts_us"), max("ts_us"))
       .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
     val span = math.max(1L, (hi - lo) / 4 + 1)
-    val work = graft.Scratch.dir("graft_replay_stage")
-    try {
+    Scratch.scoped("graft_replay_stage") { work =>
       for (i <- 0 until 4) {
         val stage = work.resolve(s"stage$i")
         ev.where(col("ts_us") >= lo + i * span &&
@@ -1087,7 +1081,7 @@ FROM r WHERE rn = CAST(ceil(n * 0.9) AS BIGINT) ORDER BY g
           .find(f => f.getName.startsWith("part-")).get
         Files.move(part.toPath, target.resolve(f"seg$i%02d.csv"))
       }
-    } finally graft.streaming.StreamingResidue.deleteRecursively(work)
+    }
   }
 
   val q376 = QuerySpec("q376_custom_stream_source",
@@ -1104,28 +1098,29 @@ FROM r WHERE rn = CAST(ceil(n * 0.9) AS BIGINT) ORDER BY g
           .groupBy(window(col("ts"), "6 hours"), col("event_type"))
           .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
         val name = s"replay_agg_${System.nanoTime()}"
-        val ckpt = graft.Scratch.dir("graft_q376_ckpt")
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try {
-          q.awaitTermination()
-          val fedBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(fedBatches >= 3,
-            s"replay drained in $fedBatches micro-batches — admission " +
-              "control did not split the backlog")
-          val sunk = s.table(name)
-            .select(
-              date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-                .as("win_start"),
-              col("event_type"), col("n"), col("sum_cents"))
-            .orderBy("win_start", "event_type")
-          s.createDataFrame(sunk.collectAsList(), sunk.schema)
-        } finally {
-          q.stop()
-          s.catalog.dropTempView(name)
-          graft.streaming.StreamingResidue.release(ckpt)
+        Scratch.scoped("graft_q376_ckpt") { ckpt =>
+          val q = agg.writeStream.format("memory").queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt.toString)
+            .trigger(Trigger.AvailableNow()).start()
+          try {
+            q.awaitTermination()
+            val fedBatches = q.recentProgress.count(_.numInputRows > 0)
+            require(fedBatches >= 3,
+              s"replay drained in $fedBatches micro-batches — admission " +
+                "control did not split the backlog")
+            val sunk = s.table(name)
+              .select(
+                date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
+                  .as("win_start"),
+                col("event_type"), col("n"), col("sum_cents"))
+              .orderBy("win_start", "event_type")
+            s.createDataFrame(sunk.collectAsList(), sunk.schema)
+          } finally {
+            q.stop()
+            s.catalog.dropTempView(name)
+            StateStore.stop()
+          }
         }
       }
     },
@@ -1159,47 +1154,48 @@ FROM events GROUP BY 1, 2 ORDER BY win_start, event_type
     * the idempotence and abort contracts directly. */
   val q377 = QuerySpec("q377_custom_stream_sink",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.streaming.Trigger
-      val tmp = graft.Scratch.dir("graft_q377_relay")
-      try Conf.scoped(s)("spark.sql.shuffle.partitions" -> "8") {
-        val replayDir = graft.FixtureCache.staged(dir, "events_replay4")(
-          t => stageEventSegments(s, dir, t))
-        val outDir = tmp.resolve("landed")
-        val ckpt = graft.Scratch.dir("graft_q377_ckpt")
-        val q = s.readStream.format("graft-replay")
-          .option("path", replayDir.toString)
-          .option("maxFilesPerBatch", 1).load()
-          .where(col("cents") >= 5000L)
-          .writeStream.format("graft-replay")
-          .option("path", outDir.toString)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try {
-          q.awaitTermination()
-          val fedBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(fedBatches >= 3,
-            s"relay drained in $fedBatches micro-batches")
-        } finally {
-          q.stop()
-          graft.streaming.StreamingResidue.release(ckpt)
+      Scratch.scoped("graft_q377_relay") { tmp =>
+        Conf.scoped(s)("spark.sql.shuffle.partitions" -> "8") {
+          val replayDir = graft.FixtureCache.staged(dir, "events_replay4")(
+            t => stageEventSegments(s, dir, t))
+          val outDir = tmp.resolve("landed")
+          Scratch.scoped("graft_q377_ckpt") { ckpt =>
+            val q = s.readStream.format("graft-replay")
+              .option("path", replayDir.toString)
+              .option("maxFilesPerBatch", 1).load()
+              .where(col("cents") >= 5000L)
+              .writeStream.format("graft-replay")
+              .option("path", outDir.toString)
+              .outputMode("append")
+              .option("checkpointLocation", ckpt.toString)
+              .trigger(Trigger.AvailableNow()).start()
+            try {
+              q.awaitTermination()
+              val fedBatches = q.recentProgress.count(_.numInputRows > 0)
+              require(fedBatches >= 3,
+                s"relay drained in $fedBatches micro-batches")
+            } finally {
+              q.stop()
+              StateStore.stop()
+            }
+          }
+          val published = Option(outDir.toFile.listFiles())
+            .getOrElse(Array.empty).map(_.getName)
+          require(published.count(_.matches("epoch\\d+-p\\d+\\.csv")) >= 3,
+            s"expected >=3 published epoch segments, got " +
+              published.mkString(","))
+          require(!published.exists(_.startsWith(".stage-")),
+            "staged residue left behind after commit")
+          val sunk = s.read
+            .schema(graft.sources.ReplaySource.rowSchema)
+            .csv(outDir.toString)
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
+            .orderBy("event_type")
+          s.createDataFrame(sunk.collectAsList(), sunk.schema)
         }
-        val published = Option(outDir.toFile.listFiles())
-          .getOrElse(Array.empty).map(_.getName)
-        require(published.count(_.matches("epoch\\d+-p\\d+\\.csv")) >= 3,
-          s"expected >=3 published epoch segments, got " +
-            published.mkString(","))
-        require(!published.exists(_.startsWith(".stage-")),
-          "staged residue left behind after commit")
-        val sunk = s.read
-          .schema(graft.sources.ReplaySource.rowSchema)
-          .csv(outDir.toString)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
-          .orderBy("event_type")
-        s.createDataFrame(sunk.collectAsList(), sunk.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     },
     Some(raw"""
 SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -1772,48 +1768,49 @@ FROM w GROUP BY lang ORDER BY lang
     * balances, whale reclassification, dust purge. */
   val q384 = QuerySpec("q384_sql_dml_battery",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q384_cat")
       // per-run catalog name: a catalog instance pins its root conf at
       // first use and is cached by name for the session's lifetime
       val cat = s"graftrl${System.nanoTime()}"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.balances (k BIGINT, seg STRING, " +
-          "v BIGINT)")
-        s.sql(s"""
-          INSERT INTO $cat.db.balances
-          SELECT o_custkey % 500 AS k,
-            CASE WHEN (o_custkey % 500) % 3 = 0 THEN 'retail'
-                 WHEN (o_custkey % 500) % 3 = 1 THEN 'pro'
-                 ELSE 'inst' END AS seg,
-            sum(cast(round(o_totalprice * 100) as bigint)) AS v
-          FROM ord_$cat WHERE o_orderdate < DATE'1996-01-01'
-          GROUP BY 1""")
-        s.sql(s"CREATE TABLE $cat.db.delta (k BIGINT, seg STRING, " +
-          "v BIGINT)")
-        s.sql(s"""
-          INSERT INTO $cat.db.delta
-          SELECT o_custkey % 500 AS k,
-            CASE WHEN (o_custkey % 500) % 3 = 0 THEN 'retail'
-                 WHEN (o_custkey % 500) % 3 = 1 THEN 'pro'
-                 ELSE 'inst' END AS seg,
-            sum(cast(round(o_totalprice * 100) as bigint)) AS v
-          FROM ord_$cat WHERE o_orderdate >= DATE'1996-01-01'
-          GROUP BY 1""")
-        s.sql(s"""
-          MERGE INTO $cat.db.balances t USING $cat.db.delta d ON t.k = d.k
-          WHEN MATCHED THEN UPDATE SET v = t.v + d.v
-          WHEN NOT MATCHED THEN INSERT (k, seg, v) VALUES (d.k, d.seg, d.v)
-        """)
-        s.sql(s"UPDATE $cat.db.balances SET seg = 'whale' " +
-          "WHERE v > 300000000")
-        s.sql(s"DELETE FROM $cat.db.balances WHERE v < 50000000")
-        val out = s.sql(
-          s"SELECT k, seg, v FROM $cat.db.balances ORDER BY k")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q384_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.balances (k BIGINT, seg STRING, " +
+            "v BIGINT)")
+          s.sql(s"""
+            INSERT INTO $cat.db.balances
+            SELECT o_custkey % 500 AS k,
+              CASE WHEN (o_custkey % 500) % 3 = 0 THEN 'retail'
+                   WHEN (o_custkey % 500) % 3 = 1 THEN 'pro'
+                   ELSE 'inst' END AS seg,
+              sum(cast(round(o_totalprice * 100) as bigint)) AS v
+            FROM ord_$cat WHERE o_orderdate < DATE'1996-01-01'
+            GROUP BY 1""")
+          s.sql(s"CREATE TABLE $cat.db.delta (k BIGINT, seg STRING, " +
+            "v BIGINT)")
+          s.sql(s"""
+            INSERT INTO $cat.db.delta
+            SELECT o_custkey % 500 AS k,
+              CASE WHEN (o_custkey % 500) % 3 = 0 THEN 'retail'
+                   WHEN (o_custkey % 500) % 3 = 1 THEN 'pro'
+                   ELSE 'inst' END AS seg,
+              sum(cast(round(o_totalprice * 100) as bigint)) AS v
+            FROM ord_$cat WHERE o_orderdate >= DATE'1996-01-01'
+            GROUP BY 1""")
+          s.sql(s"""
+            MERGE INTO $cat.db.balances t USING $cat.db.delta d ON t.k = d.k
+            WHEN MATCHED THEN UPDATE SET v = t.v + d.v
+            WHEN NOT MATCHED THEN INSERT (k, seg, v) VALUES (d.k, d.seg, d.v)
+          """)
+          s.sql(s"UPDATE $cat.db.balances SET seg = 'whale' " +
+            "WHERE v > 300000000")
+          s.sql(s"DELETE FROM $cat.db.balances WHERE v < 50000000")
+          val out = s.sql(
+            s"SELECT k, seg, v FROM $cat.db.balances ORDER BY k")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH seed AS (
@@ -1858,40 +1855,41 @@ FROM updated WHERE v >= 50000000 ORDER BY k
     * every snapshot through the sum/count/distinct-seg algebra. */
   val q385 = QuerySpec("q385_time_travel_audit",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q385_cat")
       val cat = s"graftv${System.nanoTime()}"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        def seedSql(where: String): String = s"""
-          SELECT o_custkey % 500 AS k,
-            CASE WHEN (o_custkey % 500) % 3 = 0 THEN 'retail'
-                 WHEN (o_custkey % 500) % 3 = 1 THEN 'pro'
-                 ELSE 'inst' END AS seg,
-            sum(cast(round(o_totalprice * 100) as bigint)) AS v
-          FROM ord_$cat WHERE $where GROUP BY 1"""
-        s.sql(s"CREATE TABLE $cat.db.bal (k BIGINT, seg STRING, v BIGINT)")
-        s.sql(s"INSERT INTO $cat.db.bal " +
-          seedSql("o_orderdate < DATE'1996-01-01'"))
-        s.sql(s"CREATE TABLE $cat.db.d (k BIGINT, seg STRING, v BIGINT)")
-        s.sql(s"INSERT INTO $cat.db.d " +
-          seedSql("o_orderdate >= DATE'1996-01-01'"))
-        s.sql(s"""
-          MERGE INTO $cat.db.bal t USING $cat.db.d d ON t.k = d.k
-          WHEN MATCHED THEN UPDATE SET v = t.v + d.v
-          WHEN NOT MATCHED THEN INSERT (k, seg, v) VALUES (d.k, d.seg, d.v)
-        """)
-        s.sql(s"UPDATE $cat.db.bal SET seg = 'whale' WHERE v > 300000000")
-        s.sql(s"DELETE FROM $cat.db.bal WHERE v < 50000000")
-        val out = (1 to 4).map { v =>
-          s.sql(s"SELECT CAST($v AS BIGINT) AS version, " +
-            "count(*) AS n_keys, sum(v) AS total_cents, " +
-            "count(DISTINCT seg) AS n_segs " +
-            s"FROM $cat.db.bal VERSION AS OF $v")
-        }.reduce(_ unionByName _).orderBy("version")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q385_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          def seedSql(where: String): String = s"""
+            SELECT o_custkey % 500 AS k,
+              CASE WHEN (o_custkey % 500) % 3 = 0 THEN 'retail'
+                   WHEN (o_custkey % 500) % 3 = 1 THEN 'pro'
+                   ELSE 'inst' END AS seg,
+              sum(cast(round(o_totalprice * 100) as bigint)) AS v
+            FROM ord_$cat WHERE $where GROUP BY 1"""
+          s.sql(s"CREATE TABLE $cat.db.bal (k BIGINT, seg STRING, v BIGINT)")
+          s.sql(s"INSERT INTO $cat.db.bal " +
+            seedSql("o_orderdate < DATE'1996-01-01'"))
+          s.sql(s"CREATE TABLE $cat.db.d (k BIGINT, seg STRING, v BIGINT)")
+          s.sql(s"INSERT INTO $cat.db.d " +
+            seedSql("o_orderdate >= DATE'1996-01-01'"))
+          s.sql(s"""
+            MERGE INTO $cat.db.bal t USING $cat.db.d d ON t.k = d.k
+            WHEN MATCHED THEN UPDATE SET v = t.v + d.v
+            WHEN NOT MATCHED THEN INSERT (k, seg, v) VALUES (d.k, d.seg, d.v)
+          """)
+          s.sql(s"UPDATE $cat.db.bal SET seg = 'whale' WHERE v > 300000000")
+          s.sql(s"DELETE FROM $cat.db.bal WHERE v < 50000000")
+          val out = (1 to 4).map { v =>
+            s.sql(s"SELECT CAST($v AS BIGINT) AS version, " +
+              "count(*) AS n_keys, sum(v) AS total_cents, " +
+              "count(DISTINCT seg) AS n_segs " +
+              s"FROM $cat.db.bal VERSION AS OF $v")
+          }.reduce(_ unionByName _).orderBy("version")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH seed AS (

@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
-import graft.{Conf, QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Scratch, Tables}
 import graft.sources.GraftCatalog
 
 /** Round-17 engine wave: the DML tier grows into its production
@@ -50,60 +51,61 @@ object Wave17Queries {
     * at sf0.001), so the geometry asserts never run vacuously. */
   val q386 = QuerySpec("q386_multigroup_dml",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q386_cat")
       val cat = s"graftmg${System.nanoTime()}"
       val hook = graft.sources.GraftCatalogTestHook
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.mg (k BIGINT, seg STRING, v BIGINT)")
-        val tdir = root.resolve("db").resolve("mg")
-        // bounded rollups (≤100 rows each): materialize once instead
-        // of re-aggregating the corpus for every range slice
-        s.sql(seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))
-          .createOrReplaceTempView(s"src_$cat")
-        for (slice <- Seq("k < 34", "k >= 34 AND k <= 66", "k >= 67"))
-          s.sql(s"INSERT INTO $cat.db.mg " +
-            s"SELECT /*+ REPARTITION(1) */ k, seg, v FROM src_$cat " +
-            s"WHERE $slice")
-        val f1 = hook.manifestFiles(tdir, 1L).toSet
-        val f2 = hook.manifestFiles(tdir, 2L).toSet
-        val f3 = hook.manifestFiles(tdir, 3L).toSet
-        val (g1, gMid, g3) = (f1.head, (f2 -- f1).head, (f3 -- f2).head)
-        require(f3.size == 3, s"expected 3 seed groups, got $f3")
-        // MERGE: delta keys only in the middle range → runtime group
-        // filtering must confine the rewrite to that one file
-        s.sql(seedSql(s"ord_$cat", "o_orderdate >= DATE'1996-01-01'"))
-          .where("k >= 34 AND k <= 66")
-          .createOrReplaceTempView(s"delta_$cat")
-        s.sql(s"""
-          MERGE INTO $cat.db.mg t USING delta_$cat d ON t.k = d.k
-          WHEN MATCHED THEN UPDATE SET v = t.v + d.v
-          WHEN NOT MATCHED THEN INSERT (k, seg, v) VALUES (d.k, d.seg, d.v)
-        """)
-        val v4 = hook.manifestFiles(tdir, 4L).toSet
-        require(v4.intersect(f3) == f3 - gMid,
-          s"MERGE should have replaced exactly the middle group " +
-            s"$gMid: before=$f3 after=$v4")
-        // DELETE keyed under group 1 → manifest min/max stats prune
-        // the other groups before any I/O
-        s.sql(s"DELETE FROM $cat.db.mg WHERE k < 10")
-        val v5 = hook.manifestFiles(tdir, 5L).toSet
-        require(v4 -- v5 == Set(g1),
-          s"DELETE should have replaced exactly $g1: " +
-            s"before=$v4 after=$v5")
-        // UPDATE keyed into group 3 → same static pruning
-        s.sql(s"UPDATE $cat.db.mg SET seg = 'whale' WHERE k >= 90")
-        val v6 = hook.manifestFiles(tdir, 6L).toSet
-        require(v5 -- v6 == Set(g3),
-          s"UPDATE should have replaced exactly $g3: " +
-            s"before=$v5 after=$v6")
-        val out = s.sql(s"SELECT k, seg, v FROM $cat.db.mg ORDER BY k")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.catalog.dropTempView(s"src_$cat")
-        s.catalog.dropTempView(s"delta_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q386_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.mg (k BIGINT, seg STRING, v BIGINT)")
+          val tdir = root.resolve("db").resolve("mg")
+          // bounded rollups (≤100 rows each): materialize once instead
+          // of re-aggregating the corpus for every range slice
+          s.sql(seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))
+            .createOrReplaceTempView(s"src_$cat")
+          for (slice <- Seq("k < 34", "k >= 34 AND k <= 66", "k >= 67"))
+            s.sql(s"INSERT INTO $cat.db.mg " +
+              s"SELECT /*+ REPARTITION(1) */ k, seg, v FROM src_$cat " +
+              s"WHERE $slice")
+          val f1 = hook.manifestFiles(tdir, 1L).toSet
+          val f2 = hook.manifestFiles(tdir, 2L).toSet
+          val f3 = hook.manifestFiles(tdir, 3L).toSet
+          val (g1, gMid, g3) = (f1.head, (f2 -- f1).head, (f3 -- f2).head)
+          require(f3.size == 3, s"expected 3 seed groups, got $f3")
+          // MERGE: delta keys only in the middle range → runtime group
+          // filtering must confine the rewrite to that one file
+          s.sql(seedSql(s"ord_$cat", "o_orderdate >= DATE'1996-01-01'"))
+            .where("k >= 34 AND k <= 66")
+            .createOrReplaceTempView(s"delta_$cat")
+          s.sql(s"""
+            MERGE INTO $cat.db.mg t USING delta_$cat d ON t.k = d.k
+            WHEN MATCHED THEN UPDATE SET v = t.v + d.v
+            WHEN NOT MATCHED THEN INSERT (k, seg, v) VALUES (d.k, d.seg, d.v)
+          """)
+          val v4 = hook.manifestFiles(tdir, 4L).toSet
+          require(v4.intersect(f3) == f3 - gMid,
+            s"MERGE should have replaced exactly the middle group " +
+              s"$gMid: before=$f3 after=$v4")
+          // DELETE keyed under group 1 → manifest min/max stats prune
+          // the other groups before any I/O
+          s.sql(s"DELETE FROM $cat.db.mg WHERE k < 10")
+          val v5 = hook.manifestFiles(tdir, 5L).toSet
+          require(v4 -- v5 == Set(g1),
+            s"DELETE should have replaced exactly $g1: " +
+              s"before=$v4 after=$v5")
+          // UPDATE keyed into group 3 → same static pruning
+          s.sql(s"UPDATE $cat.db.mg SET seg = 'whale' WHERE k >= 90")
+          val v6 = hook.manifestFiles(tdir, 6L).toSet
+          require(v5 -- v6 == Set(g3),
+            s"UPDATE should have replaced exactly $g3: " +
+              s"before=$v5 after=$v6")
+          val out = s.sql(s"SELECT k, seg, v FROM $cat.db.mg ORDER BY k")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.catalog.dropTempView(s"src_$cat")
+          s.catalog.dropTempView(s"delta_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH seed AS (
@@ -154,54 +156,55 @@ FROM deleted ORDER BY k
     * every version's files live until retention retires them. */
   val q387 = QuerySpec("q387_snapshot_retention_audit",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q387_cat")
       val cat = s"graftrt${System.nanoTime()}"
       val hook = graft.sources.GraftCatalogTestHook
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.bal (k BIGINT, seg STRING, v BIGINT)")
-        s.sql(s"INSERT INTO $cat.db.bal " +
-          seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))  // v1
-        s.sql(seedSql(s"ord_$cat", "o_orderdate >= DATE'1996-01-01'"))
-          .createOrReplaceTempView(s"rdelta_$cat")
-        s.sql(s"""
-          MERGE INTO $cat.db.bal t USING rdelta_$cat d ON t.k = d.k
-          WHEN MATCHED THEN UPDATE SET v = t.v + d.v
-          WHEN NOT MATCHED THEN INSERT (k, seg, v) VALUES (d.k, d.seg, d.v)
-        """)                                                       // v2
-        s.sql(s"UPDATE $cat.db.bal SET seg = 'whale' " +
-          "WHERE v > 300000000")                                   // v3
-        s.sql(s"DELETE FROM $cat.db.bal WHERE v < 50000000")       // v4
-        def audit(v: Int, phase: String) = s.sql(
-          s"SELECT CAST($v AS BIGINT) AS version, '$phase' AS phase, " +
-            "count(*) AS n_keys, sum(v) AS total_cents " +
-            s"FROM $cat.db.bal VERSION AS OF $v")
-        val pre = Seq(audit(3, "pre"), audit(4, "pre"))
-          .reduce(_ unionByName _).collect().toSeq
-        val tdir = root.resolve("db").resolve("bal")
-        val res = hook.expireSnapshots(tdir, retainLast = 2)
-        require(res.retainedVersions == Seq(3L, 4L) &&
-          res.expiredVersions == Seq(0L, 1L, 2L),
-          s"retain-last-2 over v0..v4 expired wrongly: $res")
-        require(res.deletedDataFiles.nonEmpty,
-          "expiry reclaimed no files — the lifecycle replaced groups, " +
-            "so v0..v2 must have held now-unreferenced ones")
-        // expired history refuses loudly; never-existed stays distinct
-        val gone = try { s.sql(s"SELECT * FROM $cat.db.bal " +
-          "VERSION AS OF 1").collect(); None }
-          catch { case e: Exception => Some(e.getMessage) }
-        require(gone.exists(_.contains("expired")),
-          s"VERSION AS OF 1 should refuse as expired, got $gone")
-        val post = Seq(audit(3, "post"), audit(4, "post"))
-          .reduce(_ unionByName _).collect().toSeq
-        val out = s.createDataFrame(
-          java.util.Arrays.asList((pre ++ post): _*),
-          audit(3, "pre").schema).orderBy("version", "phase")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.catalog.dropTempView(s"rdelta_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q387_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.bal (k BIGINT, seg STRING, v BIGINT)")
+          s.sql(s"INSERT INTO $cat.db.bal " +
+            seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))  // v1
+          s.sql(seedSql(s"ord_$cat", "o_orderdate >= DATE'1996-01-01'"))
+            .createOrReplaceTempView(s"rdelta_$cat")
+          s.sql(s"""
+            MERGE INTO $cat.db.bal t USING rdelta_$cat d ON t.k = d.k
+            WHEN MATCHED THEN UPDATE SET v = t.v + d.v
+            WHEN NOT MATCHED THEN INSERT (k, seg, v) VALUES (d.k, d.seg, d.v)
+          """)                                                       // v2
+          s.sql(s"UPDATE $cat.db.bal SET seg = 'whale' " +
+            "WHERE v > 300000000")                                   // v3
+          s.sql(s"DELETE FROM $cat.db.bal WHERE v < 50000000")       // v4
+          def audit(v: Int, phase: String) = s.sql(
+            s"SELECT CAST($v AS BIGINT) AS version, '$phase' AS phase, " +
+              "count(*) AS n_keys, sum(v) AS total_cents " +
+              s"FROM $cat.db.bal VERSION AS OF $v")
+          val pre = Seq(audit(3, "pre"), audit(4, "pre"))
+            .reduce(_ unionByName _).collect().toSeq
+          val tdir = root.resolve("db").resolve("bal")
+          val res = hook.expireSnapshots(tdir, retainLast = 2)
+          require(res.retainedVersions == Seq(3L, 4L) &&
+            res.expiredVersions == Seq(0L, 1L, 2L),
+            s"retain-last-2 over v0..v4 expired wrongly: $res")
+          require(res.deletedDataFiles.nonEmpty,
+            "expiry reclaimed no files — the lifecycle replaced groups, " +
+              "so v0..v2 must have held now-unreferenced ones")
+          // expired history refuses loudly; never-existed stays distinct
+          val gone = try { s.sql(s"SELECT * FROM $cat.db.bal " +
+            "VERSION AS OF 1").collect(); None }
+            catch { case e: Exception => Some(e.getMessage) }
+          require(gone.exists(_.contains("expired")),
+            s"VERSION AS OF 1 should refuse as expired, got $gone")
+          val post = Seq(audit(3, "post"), audit(4, "post"))
+            .reduce(_ unionByName _).collect().toSeq
+          val out = s.createDataFrame(
+            java.util.Arrays.asList((pre ++ post): _*),
+            audit(3, "pre").schema).orderBy("version", "phase")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.catalog.dropTempView(s"rdelta_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH seed AS (
@@ -263,43 +266,44 @@ SELECT * FROM (
     * relationally from the corpus. */
   val q388 = QuerySpec("q388_metadata_only_agg",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q388_cat")
       val cat = s"graftma${System.nanoTime()}"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.ma (k BIGINT, seg STRING, v BIGINT)")
-        // v is NULLed on every 7th key so count(v)/min(v) exercise the
-        // per-file null-count stats, not just row counts
-        s.sql(s"""
-          SELECT k, seg, CASE WHEN k % 7 = 0 THEN NULL ELSE v END AS v
-          FROM (${seedSql(s"ord_$cat",
-            "o_orderdate < DATE'1996-01-01'")})""")
-          .createOrReplaceTempView(s"masrc_$cat")
-        for (slice <- Seq("k < 34", "k >= 34 AND k <= 66", "k >= 67"))
-          s.sql(s"INSERT INTO $cat.db.ma " +
-            s"SELECT /*+ REPARTITION(1) */ k, seg, v FROM masrc_$cat " +
-            s"WHERE $slice")
-        val fast = s.sql(s"SELECT count(*) AS n, count(v) AS nv, " +
-          s"min(k) AS mink, max(k) AS maxk, min(v) AS minv, " +
-          s"max(v) AS maxv FROM $cat.db.ma")
-        require(fast.queryExecution.executedPlan.toString
-          .contains("graft-rl-agg"),
-          "metadata-only aggregate scan missing from the plan")
-        // guarded fallbacks: a filter or a grouping defeats the proof
-        val hi = s.sql(
-          s"SELECT count(*) AS n_hi FROM $cat.db.ma WHERE k >= 67")
-        require(!hi.queryExecution.executedPlan.toString
-          .contains("graft-rl-agg"),
-          "a filtered aggregate must NOT take the metadata path")
-        require(!s.sql(s"SELECT seg, count(*) FROM $cat.db.ma GROUP BY seg")
-          .queryExecution.executedPlan.toString.contains("graft-rl-agg"),
-          "a grouped aggregate must NOT take the metadata path")
-        val out = fast.crossJoin(hi)
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.catalog.dropTempView(s"masrc_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q388_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.ma (k BIGINT, seg STRING, v BIGINT)")
+          // v is NULLed on every 7th key so count(v)/min(v) exercise the
+          // per-file null-count stats, not just row counts
+          s.sql(s"""
+            SELECT k, seg, CASE WHEN k % 7 = 0 THEN NULL ELSE v END AS v
+            FROM (${seedSql(s"ord_$cat",
+              "o_orderdate < DATE'1996-01-01'")})""")
+            .createOrReplaceTempView(s"masrc_$cat")
+          for (slice <- Seq("k < 34", "k >= 34 AND k <= 66", "k >= 67"))
+            s.sql(s"INSERT INTO $cat.db.ma " +
+              s"SELECT /*+ REPARTITION(1) */ k, seg, v FROM masrc_$cat " +
+              s"WHERE $slice")
+          val fast = s.sql(s"SELECT count(*) AS n, count(v) AS nv, " +
+            s"min(k) AS mink, max(k) AS maxk, min(v) AS minv, " +
+            s"max(v) AS maxv FROM $cat.db.ma")
+          require(fast.queryExecution.executedPlan.toString
+            .contains("graft-rl-agg"),
+            "metadata-only aggregate scan missing from the plan")
+          // guarded fallbacks: a filter or a grouping defeats the proof
+          val hi = s.sql(
+            s"SELECT count(*) AS n_hi FROM $cat.db.ma WHERE k >= 67")
+          require(!hi.queryExecution.executedPlan.toString
+            .contains("graft-rl-agg"),
+            "a filtered aggregate must NOT take the metadata path")
+          require(!s.sql(s"SELECT seg, count(*) FROM $cat.db.ma GROUP BY seg")
+            .queryExecution.executedPlan.toString.contains("graft-rl-agg"),
+            "a grouped aggregate must NOT take the metadata path")
+          val out = fast.crossJoin(hi)
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.catalog.dropTempView(s"masrc_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH seed AS (
@@ -332,40 +336,41 @@ FROM t
     * every pre-delete version addressable. */
   val q389 = QuerySpec("q389_metadata_only_delete",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q389_cat")
       val cat = s"graftmd${System.nanoTime()}"
       val hook = graft.sources.GraftCatalogTestHook
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.md (k BIGINT, seg STRING, v BIGINT)")
-        val tdir = root.resolve("db").resolve("md")
-        s.sql(seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))
-          .createOrReplaceTempView(s"mdsrc_$cat")
-        for (slice <- Seq("k < 34", "k >= 34 AND k <= 66", "k >= 67"))
-          s.sql(s"INSERT INTO $cat.db.md " +
-            s"SELECT /*+ REPARTITION(1) */ k, seg, v FROM mdsrc_$cat " +
-            s"WHERE $slice")
-        def disk: Set[String] = Option(tdir.toFile.listFiles())
-          .getOrElse(Array.empty).map(_.getName)
-          .filter(n => n.startsWith("data-") && n.endsWith(".parquet")).toSet
-        val before = disk
-        val g1 = hook.manifestFiles(tdir, 1L).toSet
-        s.sql(s"DELETE FROM $cat.db.md WHERE k < 34") // aligned → v4
-        require(disk == before,
-          "aligned delete must be metadata-only: no data file " +
-            "created or removed")
-        require(hook.manifestFiles(tdir, 4L).toSet ==
-          hook.manifestFiles(tdir, 3L).toSet -- g1,
-          "aligned delete should have dropped exactly the first group")
-        s.sql(s"DELETE FROM $cat.db.md WHERE k < 50") // splits group 2
-        require(disk != before,
-          "misaligned delete must fall back to the COW rewrite")
-        val out = s.sql(s"SELECT k, seg, v FROM $cat.db.md ORDER BY k")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.catalog.dropTempView(s"mdsrc_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q389_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.md (k BIGINT, seg STRING, v BIGINT)")
+          val tdir = root.resolve("db").resolve("md")
+          s.sql(seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))
+            .createOrReplaceTempView(s"mdsrc_$cat")
+          for (slice <- Seq("k < 34", "k >= 34 AND k <= 66", "k >= 67"))
+            s.sql(s"INSERT INTO $cat.db.md " +
+              s"SELECT /*+ REPARTITION(1) */ k, seg, v FROM mdsrc_$cat " +
+              s"WHERE $slice")
+          def disk: Set[String] = Option(tdir.toFile.listFiles())
+            .getOrElse(Array.empty).map(_.getName)
+            .filter(n => n.startsWith("data-") && n.endsWith(".parquet")).toSet
+          val before = disk
+          val g1 = hook.manifestFiles(tdir, 1L).toSet
+          s.sql(s"DELETE FROM $cat.db.md WHERE k < 34") // aligned → v4
+          require(disk == before,
+            "aligned delete must be metadata-only: no data file " +
+              "created or removed")
+          require(hook.manifestFiles(tdir, 4L).toSet ==
+            hook.manifestFiles(tdir, 3L).toSet -- g1,
+            "aligned delete should have dropped exactly the first group")
+          s.sql(s"DELETE FROM $cat.db.md WHERE k < 50") // splits group 2
+          require(disk != before,
+            "misaligned delete must fall back to the COW rewrite")
+          val out = s.sql(s"SELECT k, seg, v FROM $cat.db.md ORDER BY k")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.catalog.dropTempView(s"mdsrc_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH seed AS (
@@ -399,60 +404,61 @@ FROM seed WHERE k >= 50 ORDER BY k
     * strategy under test. The oracle replays the join relationally. */
   val q390 = QuerySpec("q390_partitioned_catalog_spj",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q390_cat")
       val cat = s"graftpj${System.nanoTime()}"
       val BucketKey = "spark.sql.sources.v2.bucketing.enabled"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root) ++ Seq(
-          BucketKey -> "true",
-          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-          "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        for (t <- Seq("early", "late"))
-          s.sql(s"CREATE TABLE $cat.db.$t (k BIGINT, seg STRING, " +
-            "v BIGINT) PARTITIONED BY (k)")
-        s.sql(s"INSERT INTO $cat.db.early " +
-          seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))
-        s.sql(s"INSERT INTO $cat.db.late " +
-          seedSql(s"ord_$cat", "o_orderdate >= DATE'1996-01-01'"))
-        def reconcile = s.sql(s"""
-          SELECT e.k AS k, e.seg AS seg,
-            e.v AS early_cents, l.v AS late_cents, e.v + l.v AS total
-          FROM $cat.db.early e JOIN $cat.db.late l ON e.k = l.k""")
-        import org.apache.spark.sql.execution.SparkPlan
-        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-        import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-        // collectAndCheck returns BOTH the fired-plan exchange verdict
-        // and the rows of the same execution, so the assert and the
-        // result share one run of the join (this query used to execute
-        // the 100-partition SPJ three times: assert, control, result —
-        // r21 guide §1.2 don't compute things twice)
-        def collectAndCheck(df: org.apache.spark.sql.DataFrame)
-            : (Boolean, Array[org.apache.spark.sql.Row]) = {
-          val rows = df.collect()
-          def walk(p: SparkPlan): Boolean = p match {
-            case qs: QueryStageExec => walk(qs.plan)
-            case _ => p.isInstanceOf[ShuffleExchangeLike] ||
-              p.children.exists(walk)
+      Scratch.scoped("graft_q390_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root) ++ Seq(
+            BucketKey -> "true",
+            "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          for (t <- Seq("early", "late"))
+            s.sql(s"CREATE TABLE $cat.db.$t (k BIGINT, seg STRING, " +
+              "v BIGINT) PARTITIONED BY (k)")
+          s.sql(s"INSERT INTO $cat.db.early " +
+            seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))
+          s.sql(s"INSERT INTO $cat.db.late " +
+            seedSql(s"ord_$cat", "o_orderdate >= DATE'1996-01-01'"))
+          def reconcile = s.sql(s"""
+            SELECT e.k AS k, e.seg AS seg,
+              e.v AS early_cents, l.v AS late_cents, e.v + l.v AS total
+            FROM $cat.db.early e JOIN $cat.db.late l ON e.k = l.k""")
+          import org.apache.spark.sql.execution.SparkPlan
+          import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+          import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+          // collectAndCheck returns BOTH the fired-plan exchange verdict
+          // and the rows of the same execution, so the assert and the
+          // result share one run of the join (this query used to execute
+          // the 100-partition SPJ three times: assert, control, result —
+          // r21 guide §1.2 don't compute things twice)
+          def collectAndCheck(df: org.apache.spark.sql.DataFrame)
+              : (Boolean, Array[org.apache.spark.sql.Row]) = {
+            val rows = df.collect()
+            def walk(p: SparkPlan): Boolean = p match {
+              case qs: QueryStageExec => walk(qs.plan)
+              case _ => p.isInstanceOf[ShuffleExchangeLike] ||
+                p.children.exists(walk)
+            }
+            (walk(df.queryExecution.executedPlan match {
+              case a: AdaptiveSparkPlanExec => a.executedPlan
+              case p => p
+            }), rows)
           }
-          (walk(df.queryExecution.executedPlan match {
-            case a: AdaptiveSparkPlanExec => a.executedPlan
-            case p => p
-          }), rows)
+          val out = reconcile
+          val (exchanged, rows) = collectAndCheck(out)
+          require(!exchanged,
+            "storage-partitioned catalog join should plan zero exchanges")
+          s.conf.set(BucketKey, "false")
+          require(collectAndCheck(reconcile)._1,
+            "bucketing-off control lost its exchange — assert is vacuous")
+          s.conf.set(BucketKey, "true")
+          // k is unique (both sides GROUP BY k), so the driver-side sort
+          // of the collected rows IS orderBy("k") — no third execution
+          val sunk = rows.sortBy(_.getLong(0))
+          s.catalog.dropTempView(s"ord_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
-        val out = reconcile
-        val (exchanged, rows) = collectAndCheck(out)
-        require(!exchanged,
-          "storage-partitioned catalog join should plan zero exchanges")
-        s.conf.set(BucketKey, "false")
-        require(collectAndCheck(reconcile)._1,
-          "bucketing-off control lost its exchange — assert is vacuous")
-        s.conf.set(BucketKey, "true")
-        // k is unique (both sides GROUP BY k), so the driver-side sort
-        // of the collected rows IS orderBy("k") — no third execution
-        val sunk = rows.sortBy(_.getLong(0))
-        s.catalog.dropTempView(s"ord_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      }
     },
     Some(raw"""
 WITH early AS (
@@ -570,7 +576,6 @@ ORDER BY a, b
     * rebatching preserved exactly-once delivery. */
   val q392 = QuerySpec("q392_replay_byte_admission",
     (s, dir) => {
-      import java.nio.file.Files
       import org.apache.spark.sql.streaming.Trigger
       Conf.scoped(s)("spark.sql.shuffle.partitions" -> "8") {
         val replayDir = graft.FixtureCache.staged(dir, "events_replay4")(
@@ -607,23 +612,24 @@ ORDER BY a, b
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
         val name = s"replay_bytes_${System.nanoTime()}"
-        val ckpt = graft.Scratch.dir("graft_q392_ckpt")
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try {
-          q.awaitTermination()
-          val fed = q.recentProgress.count(_.numInputRows > 0)
-          require(fed == expectedBatches,
-            s"byte budget $budget over segments $sizes should drain " +
-              s"in exactly $expectedBatches micro-batches, got $fed")
-          val sunk = s.table(name).orderBy("event_type")
-          s.createDataFrame(sunk.collectAsList(), sunk.schema)
-        } finally {
-          q.stop()
-          s.catalog.dropTempView(name)
-          graft.streaming.StreamingResidue.release(ckpt)
+        Scratch.scoped("graft_q392_ckpt") { ckpt =>
+          val q = agg.writeStream.format("memory").queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt.toString)
+            .trigger(Trigger.AvailableNow()).start()
+          try {
+            q.awaitTermination()
+            val fed = q.recentProgress.count(_.numInputRows > 0)
+            require(fed == expectedBatches,
+              s"byte budget $budget over segments $sizes should drain " +
+                s"in exactly $expectedBatches micro-batches, got $fed")
+            val sunk = s.table(name).orderBy("event_type")
+            s.createDataFrame(sunk.collectAsList(), sunk.schema)
+          } finally {
+            q.stop()
+            s.catalog.dropTempView(name)
+            StateStore.stop()
+          }
         }
       }
     },
@@ -650,41 +656,42 @@ FROM events GROUP BY 1 ORDER BY event_type
     * both eras relationally with the same NULL discipline. */
   val q393 = QuerySpec("q393_schema_evolution",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q393_cat")
       val cat = s"graftse${System.nanoTime()}"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.ev (k BIGINT, seg STRING, v BIGINT)")
-        val tdir = root.resolve("db").resolve("ev")
-        s.sql(s"INSERT INTO $cat.db.ev " +
-          seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))
-        def disk: Set[String] = Option(tdir.toFile.listFiles())
-          .getOrElse(Array.empty).map(_.getName)
-          .filter(n => n.startsWith("data-") && n.endsWith(".parquet")).toSet
-        val before = disk
-        s.sql(s"ALTER TABLE $cat.db.ev ADD COLUMNS (delta BIGINT)")
-        require(disk == before,
-          "ADD COLUMNS must not rewrite any data file")
-        s.sql(s"INSERT INTO $cat.db.ev SELECT k, seg, v, v AS delta " +
-          s"FROM (${seedSql(s"ord_$cat",
-            "o_orderdate >= DATE'1996-01-01'")})")
-        // the metadata aggregate path survives the evolution boundary
-        val fast = s.sql(s"SELECT count(*) AS n, count(delta) AS nd " +
-          s"FROM $cat.db.ev")
-        require(fast.queryExecution.executedPlan.toString
-          .contains("graft-rl-agg"),
-          "count over the added column defeated the metadata path")
-        // time travel reads v1 through the CURRENT schema
-        require(s.sql(s"SELECT count(delta) FROM $cat.db.ev " +
-          "VERSION AS OF 1").collect().head.getLong(0) == 0L,
-          "pre-evolution snapshot must read the added column as NULL")
-        val out = s.sql(s"""
-          SELECT k, seg, v, delta FROM $cat.db.ev
-          ORDER BY k, coalesce(delta, -1), v""")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q393_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.ev (k BIGINT, seg STRING, v BIGINT)")
+          val tdir = root.resolve("db").resolve("ev")
+          s.sql(s"INSERT INTO $cat.db.ev " +
+            seedSql(s"ord_$cat", "o_orderdate < DATE'1996-01-01'"))
+          def disk: Set[String] = Option(tdir.toFile.listFiles())
+            .getOrElse(Array.empty).map(_.getName)
+            .filter(n => n.startsWith("data-") && n.endsWith(".parquet")).toSet
+          val before = disk
+          s.sql(s"ALTER TABLE $cat.db.ev ADD COLUMNS (delta BIGINT)")
+          require(disk == before,
+            "ADD COLUMNS must not rewrite any data file")
+          s.sql(s"INSERT INTO $cat.db.ev SELECT k, seg, v, v AS delta " +
+            s"FROM (${seedSql(s"ord_$cat",
+              "o_orderdate >= DATE'1996-01-01'")})")
+          // the metadata aggregate path survives the evolution boundary
+          val fast = s.sql(s"SELECT count(*) AS n, count(delta) AS nd " +
+            s"FROM $cat.db.ev")
+          require(fast.queryExecution.executedPlan.toString
+            .contains("graft-rl-agg"),
+            "count over the added column defeated the metadata path")
+          // time travel reads v1 through the CURRENT schema
+          require(s.sql(s"SELECT count(delta) FROM $cat.db.ev " +
+            "VERSION AS OF 1").collect().head.getLong(0) == 0L,
+            "pre-evolution snapshot must read the added column as NULL")
+          val out = s.sql(s"""
+            SELECT k, seg, v, delta FROM $cat.db.ev
+            ORDER BY k, coalesce(delta, -1), v""")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH early AS (
@@ -730,51 +737,53 @@ FROM unioned ORDER BY k, coalesce(delta, -1), v
   val q394 = QuerySpec("q394_catalog_change_stream",
     (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val root = graft.Scratch.dir("graft_q394_cat")
       val cat = s"graftcs${System.nanoTime()}"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
-          ("spark.sql.shuffle.partitions" -> "8"): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.feed (k BIGINT, seg STRING, " +
-          "v BIGINT)")
-        // three landing eras → versions 1..3
-        for (era <- Seq(
-          "o_orderdate < DATE'1994-06-01'",
-          "o_orderdate >= DATE'1994-06-01' AND " +
-            "o_orderdate < DATE'1996-01-01'",
-          "o_orderdate >= DATE'1996-01-01'"))
-          s.sql(s"INSERT INTO $cat.db.feed " + seedSql(s"ord_$cat", era))
-        val ckpt = graft.Scratch.dir("graft_q394_ck")
-        val name = s"feed_sink_${System.nanoTime()}"
-        val q = s.readStream.table(s"$cat.db.feed")
-          .groupBy("seg")
-          .agg(count(lit(1)).as("n_slices"), sum("v").as("total_cents"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try {
-          q.awaitTermination()
-          // assert admission on the OFFSETS, not numInputRows (the
-          // first AvailableNow batch of a table-resolved stream
-          // reports 0 input rows even when it served data — the
-          // oracle equality below is what proves no row was lost):
-          // three committed single-version spans, one per landing
-          val ends = q.recentProgress.toSeq
-            .flatMap(_.sources.headOption)
-            .flatMap(s0 => Option(s0.endOffset))
-            .map(_.trim.toLong).distinct.sorted
-          require(ends == Seq(1L, 2L, 3L),
-            s"three landed versions should drain as three " +
-              s"single-version micro-batches, got offset ends $ends")
-          val sunk = s.table(name).orderBy("seg")
-          s.createDataFrame(sunk.collectAsList(), sunk.schema)
-        } finally {
-          q.stop()
-          s.catalog.dropTempView(name)
-          graft.streaming.StreamingResidue.release(ckpt)
+      Scratch.scoped("graft_q394_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+            ("spark.sql.shuffle.partitions" -> "8"): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.feed (k BIGINT, seg STRING, " +
+            "v BIGINT)")
+          // three landing eras → versions 1..3
+          for (era <- Seq(
+            "o_orderdate < DATE'1994-06-01'",
+            "o_orderdate >= DATE'1994-06-01' AND " +
+              "o_orderdate < DATE'1996-01-01'",
+            "o_orderdate >= DATE'1996-01-01'"))
+            s.sql(s"INSERT INTO $cat.db.feed " + seedSql(s"ord_$cat", era))
+          val name = s"feed_sink_${System.nanoTime()}"
+          Scratch.scoped("graft_q394_ck") { ckpt =>
+            val q = s.readStream.table(s"$cat.db.feed")
+              .groupBy("seg")
+              .agg(count(lit(1)).as("n_slices"), sum("v").as("total_cents"))
+              .writeStream.format("memory").queryName(name)
+              .outputMode("complete")
+              .option("checkpointLocation", ckpt.toString)
+              .trigger(Trigger.AvailableNow()).start()
+            try {
+              q.awaitTermination()
+              // assert admission on the OFFSETS, not numInputRows (the
+              // first AvailableNow batch of a table-resolved stream
+              // reports 0 input rows even when it served data — the
+              // oracle equality below is what proves no row was lost):
+              // three committed single-version spans, one per landing
+              val ends = q.recentProgress.toSeq
+                .flatMap(_.sources.headOption)
+                .flatMap(s0 => Option(s0.endOffset))
+                .map(_.trim.toLong).distinct.sorted
+              require(ends == Seq(1L, 2L, 3L),
+                s"three landed versions should drain as three " +
+                  s"single-version micro-batches, got offset ends $ends")
+              val sunk = s.table(name).orderBy("seg")
+              s.createDataFrame(sunk.collectAsList(), sunk.schema)
+            } finally {
+              q.stop()
+              s.catalog.dropTempView(name)
+              StateStore.stop()
+            }
+          }
         }
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      }
     },
     Some(raw"""
 WITH eras AS (

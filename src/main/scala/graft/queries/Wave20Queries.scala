@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Conf, QuerySpec, Tables}
+import graft.{Conf, QuerySpec, Scratch, Tables}
 import graft.sources.GraftCatalog
 
 /** Round-20 engine wave: the catalog tier's remaining
@@ -38,88 +38,89 @@ object Wave20Queries {
     * rollup; the oracle replays it relationally. */
   val q414 = QuerySpec("q414_zorder_optimize",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q414_cat")
       val cat = s"graftzo${System.nanoTime()}"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
-          ("spark.sql.shuffle.partitions" -> "8"): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.zf (id BIGINT, x BIGINT, " +
-          "y BIGINT, v BIGINT)")
-        // x and y are decorrelated arithmetic coordinates the oracle
-        // replays exactly (orderkeys are dense in the synthetic
-        // corpus); the FRAGMENT assignment is engine-side only
-        // (contents are fragment-agnostic), so it may hash-scatter:
-        // ntile over hash(id) gives 16 equal-size era fragments each
-        // spanning the full (x, y) domain — the sustained-ingest
-        // shape where neither dimension prunes
-        val src = s.sql(s"""
-          SELECT o_orderkey AS id, o_orderkey % 64 AS x,
-            (o_orderkey div 64) % 64 AS y,
-            cast(round(o_totalprice * 100) as bigint) AS v,
-            ntile(16) OVER (ORDER BY hash(o_orderkey)) AS frag
-          FROM ord_$cat""").persist()
-        src.createOrReplaceTempView(s"zfsrc_$cat")
-        try {
-          // the 16 era INSERTs are independent single-file appends over
-          // the one cached projection: submit concurrently (guide §2.6
-          // overlap independent jobs — the q352 precedent) and let the
-          // catalog's lost-race append rebase serialize the commits;
-          // contents and version COUNT (v1..v16) are order-independent
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          Await.result(Future.sequence((1 to 16).map { r =>
-            Future(s.sql(s"INSERT INTO $cat.db.zf " +
-              s"SELECT /*+ REPARTITION(1) */ id, x, y, v " +
-              s"FROM zfsrc_$cat WHERE frag = $r"))            // v1..v16
-          }), scala.concurrent.duration.Duration(20, "min"))
-        } finally src.unpersist()
-        val total = s.sql(s"SELECT count(*) FROM ord_$cat")
-          .collect().head.getLong(0)
-        def keptGroups(pred: String): Int =
-          s.sql(s"SELECT x, y, v FROM $cat.db.zf WHERE $pred")
-            .rdd.getNumPartitions // one InputPartition per kept group
-        require(keptGroups("x = 7") == 16 && keptGroups("y = 9") == 16,
-          "interleaved fragments must defeat 2-D pruning (the premise)")
-        val pre = s.sql(s"SELECT id, x, y, v FROM $cat.db.zf")
-          .collect().map(_.toSeq).toSet
-        // ~16 Z-ranges regardless of scale factor (an even interleave
-        // depth, so the implied grid is square); ntile fragments
-        // (≤ total/16 + 1 rows) stay below targetRows, and full
-        // chunks hold ≥ targetRows so they leave candidacy and the
-        // repeat run is a no-op by construction
-        val target = total / 16 + 2
-        val res = s.sql(s"CALL $cat.system.optimize('db.zf', $target, " +
-          "NULL, 'x,y')").collect().head
-        require(res.getLong(0) == 16,
-          s"all 16 fragments should re-cut, removed=${res.getLong(0)}")
-        val f = res.getLong(1).toInt
-        require(f >= 12 && f <= 20, s"~16 Z-range files expected: $f")
-        require(s.sql(s"SELECT id, x, y, v FROM $cat.db.zf")
-          .collect().map(_.toSeq).toSet == pre,
-          "Z-ordering changed table contents")
-        val keptX = keptGroups("x = 7")
-        val keptY = keptGroups("y = 9")
-        require(keptX <= f / 2 && keptY <= f / 2,
-          s"Z-order must restore pruning on BOTH dims: " +
-            s"x→$keptX y→$keptY of $f")
-        val keptXY = keptGroups("x = 7 AND y = 9")
-        require(keptXY <= math.max(2, f / 4) && keptXY <= keptX &&
-          keptXY <= keptY,
-          s"conjunctive point predicate must prune to ~1 cell: " +
-            s"$keptXY of $f")
-        // incremental idempotence through the same SQL surface
-        val again = s.sql(s"CALL $cat.system.optimize('db.zf', " +
-          s"$target, NULL, 'x,y')").collect().head
-        require(again.getLong(0) == 0 && again.getLong(1) == 0,
-          s"Z-order OPTIMIZE must be idempotent: $again")
-        val out = s.sql(s"SELECT x div 16 AS xb, y div 16 AS yb, " +
-          s"count(*) AS n, sum(v) AS total_cents FROM $cat.db.zf " +
-          "GROUP BY x div 16, y div 16 ORDER BY xb, yb")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.catalog.dropTempView(s"zfsrc_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q414_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+            ("spark.sql.shuffle.partitions" -> "8"): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.zf (id BIGINT, x BIGINT, " +
+            "y BIGINT, v BIGINT)")
+          // x and y are decorrelated arithmetic coordinates the oracle
+          // replays exactly (orderkeys are dense in the synthetic
+          // corpus); the FRAGMENT assignment is engine-side only
+          // (contents are fragment-agnostic), so it may hash-scatter:
+          // ntile over hash(id) gives 16 equal-size era fragments each
+          // spanning the full (x, y) domain — the sustained-ingest
+          // shape where neither dimension prunes
+          val src = s.sql(s"""
+            SELECT o_orderkey AS id, o_orderkey % 64 AS x,
+              (o_orderkey div 64) % 64 AS y,
+              cast(round(o_totalprice * 100) as bigint) AS v,
+              ntile(16) OVER (ORDER BY hash(o_orderkey)) AS frag
+            FROM ord_$cat""").persist()
+          src.createOrReplaceTempView(s"zfsrc_$cat")
+          try {
+            // the 16 era INSERTs are independent single-file appends over
+            // the one cached projection: submit concurrently (guide §2.6
+            // overlap independent jobs — the q352 precedent) and let the
+            // catalog's lost-race append rebase serialize the commits;
+            // contents and version COUNT (v1..v16) are order-independent
+            import scala.concurrent.{Await, Future}
+            import scala.concurrent.ExecutionContext.Implicits.global
+            Await.result(Future.sequence((1 to 16).map { r =>
+              Future(s.sql(s"INSERT INTO $cat.db.zf " +
+                s"SELECT /*+ REPARTITION(1) */ id, x, y, v " +
+                s"FROM zfsrc_$cat WHERE frag = $r"))            // v1..v16
+            }), scala.concurrent.duration.Duration(20, "min"))
+          } finally src.unpersist()
+          val total = s.sql(s"SELECT count(*) FROM ord_$cat")
+            .collect().head.getLong(0)
+          def keptGroups(pred: String): Int =
+            s.sql(s"SELECT x, y, v FROM $cat.db.zf WHERE $pred")
+              .rdd.getNumPartitions // one InputPartition per kept group
+          require(keptGroups("x = 7") == 16 && keptGroups("y = 9") == 16,
+            "interleaved fragments must defeat 2-D pruning (the premise)")
+          val pre = s.sql(s"SELECT id, x, y, v FROM $cat.db.zf")
+            .collect().map(_.toSeq).toSet
+          // ~16 Z-ranges regardless of scale factor (an even interleave
+          // depth, so the implied grid is square); ntile fragments
+          // (≤ total/16 + 1 rows) stay below targetRows, and full
+          // chunks hold ≥ targetRows so they leave candidacy and the
+          // repeat run is a no-op by construction
+          val target = total / 16 + 2
+          val res = s.sql(s"CALL $cat.system.optimize('db.zf', $target, " +
+            "NULL, 'x,y')").collect().head
+          require(res.getLong(0) == 16,
+            s"all 16 fragments should re-cut, removed=${res.getLong(0)}")
+          val f = res.getLong(1).toInt
+          require(f >= 12 && f <= 20, s"~16 Z-range files expected: $f")
+          require(s.sql(s"SELECT id, x, y, v FROM $cat.db.zf")
+            .collect().map(_.toSeq).toSet == pre,
+            "Z-ordering changed table contents")
+          val keptX = keptGroups("x = 7")
+          val keptY = keptGroups("y = 9")
+          require(keptX <= f / 2 && keptY <= f / 2,
+            s"Z-order must restore pruning on BOTH dims: " +
+              s"x→$keptX y→$keptY of $f")
+          val keptXY = keptGroups("x = 7 AND y = 9")
+          require(keptXY <= math.max(2, f / 4) && keptXY <= keptX &&
+            keptXY <= keptY,
+            s"conjunctive point predicate must prune to ~1 cell: " +
+              s"$keptXY of $f")
+          // incremental idempotence through the same SQL surface
+          val again = s.sql(s"CALL $cat.system.optimize('db.zf', " +
+            s"$target, NULL, 'x,y')").collect().head
+          require(again.getLong(0) == 0 && again.getLong(1) == 0,
+            s"Z-order OPTIMIZE must be idempotent: $again")
+          val out = s.sql(s"SELECT x div 16 AS xb, y div 16 AS yb, " +
+            s"count(*) AS n, sum(v) AS total_cents FROM $cat.db.zf " +
+            "GROUP BY x div 16, y div 16 ORDER BY xb, yb")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.catalog.dropTempView(s"zfsrc_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH seed AS (
@@ -147,61 +148,60 @@ FROM seed GROUP BY x // 16, y // 16 ORDER BY xb, yb
     * change rows relationally from the base corpus. */
   val q415 = QuerySpec("q415_change_data_feed",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q415_cat")
       val cat = s"graftcdf${System.nanoTime()}"
-      val ck = graft.Scratch.dir("graft_q415_ck")
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
-          ("spark.sql.shuffle.partitions" -> "8"): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.cdf (k BIGINT, v BIGINT) " +
-          "TBLPROPERTIES ('delete.mode'='merge-on-read'," +
-          "'update.mode'='merge-on-read','merge.mode'='merge-on-read')")
-        s.sql(s"""
-          SELECT o_custkey % 100 AS k,
-            sum(cast(round(o_totalprice * 100) as bigint)) AS v
-          FROM ord_$cat GROUP BY 1""")
-          .createOrReplaceTempView(s"cdfsrc_$cat")
-        s.sql(s"INSERT INTO $cat.db.cdf " +
-          s"SELECT /*+ REPARTITION(1) */ k, v FROM cdfsrc_$cat")  // v1
-        s.sql(s"DELETE FROM $cat.db.cdf WHERE k % 10 = 3")        // v2
-        s.sql(s"UPDATE $cat.db.cdf SET v = v + 7 WHERE k % 10 = 4") // v3
-        s.sql(s"""
-          MERGE INTO $cat.db.cdf t
-          USING (SELECT k, v FROM cdfsrc_$cat WHERE k % 10 = 5
-                 UNION ALL
-                 SELECT k + 1000 AS k, CAST(1 AS BIGINT) AS v
-                 FROM cdfsrc_$cat WHERE k % 10 = 6) s
-          ON t.k = s.k
-          WHEN MATCHED THEN UPDATE SET v = t.v * 2
-          WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""") // v4
-        val feedSql = "SELECT k, v, _change_type, _commit_version " +
-          s"FROM $cat.db.`cdf$$changes`"
-        val batch = s.sql(feedSql).collect()
-          .map(_.toSeq).sortBy(_.toString)
-        // STREAMING drains the SAME planner — must agree exactly
-        import org.apache.spark.sql.streaming.Trigger
-        val mem = s"cdf_feed_$cat"
-        val q = s.readStream.option("maxVersionsPerBatch", "2")
-          .table(s"$cat.db.`cdf$$changes`")
-          .writeStream.option("checkpointLocation", ck.toString)
-          .trigger(Trigger.AvailableNow()).format("memory")
-          .queryName(mem).start()
-        try q.awaitTermination() finally q.stop()
-        val streamed = s.sql(
-          s"SELECT k, v, _change_type, _commit_version FROM $mem")
-          .collect().map(_.toSeq).sortBy(_.toString)
-        require(streamed.toSeq == batch.toSeq,
-          s"streaming feed (${streamed.length} rows) must equal the " +
-            s"batch feed (${batch.length} rows)")
-        val out = s.sql(feedSql)
-          .orderBy("_commit_version", "_change_type", "k", "v")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.catalog.dropTempView(s"cdfsrc_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-        graft.streaming.StreamingResidue.deleteRecursively(ck)
+      Scratch.scoped("graft_q415_cat") { root =>
+        Scratch.scoped("graft_q415_ck") { ck =>
+          Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+              ("spark.sql.shuffle.partitions" -> "8"): _*) {
+            Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+            s.sql(s"CREATE TABLE $cat.db.cdf (k BIGINT, v BIGINT) " +
+              "TBLPROPERTIES ('delete.mode'='merge-on-read'," +
+              "'update.mode'='merge-on-read','merge.mode'='merge-on-read')")
+            s.sql(s"""
+              SELECT o_custkey % 100 AS k,
+                sum(cast(round(o_totalprice * 100) as bigint)) AS v
+              FROM ord_$cat GROUP BY 1""")
+              .createOrReplaceTempView(s"cdfsrc_$cat")
+            s.sql(s"INSERT INTO $cat.db.cdf " +
+              s"SELECT /*+ REPARTITION(1) */ k, v FROM cdfsrc_$cat")  // v1
+            s.sql(s"DELETE FROM $cat.db.cdf WHERE k % 10 = 3")        // v2
+            s.sql(s"UPDATE $cat.db.cdf SET v = v + 7 WHERE k % 10 = 4") // v3
+            s.sql(s"""
+              MERGE INTO $cat.db.cdf t
+              USING (SELECT k, v FROM cdfsrc_$cat WHERE k % 10 = 5
+                     UNION ALL
+                     SELECT k + 1000 AS k, CAST(1 AS BIGINT) AS v
+                     FROM cdfsrc_$cat WHERE k % 10 = 6) s
+              ON t.k = s.k
+              WHEN MATCHED THEN UPDATE SET v = t.v * 2
+              WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""") // v4
+            val feedSql = "SELECT k, v, _change_type, _commit_version " +
+              s"FROM $cat.db.`cdf$$changes`"
+            val batch = s.sql(feedSql).collect()
+              .map(_.toSeq).sortBy(_.toString)
+            // STREAMING drains the SAME planner — must agree exactly
+            import org.apache.spark.sql.streaming.Trigger
+            val mem = s"cdf_feed_$cat"
+            val q = s.readStream.option("maxVersionsPerBatch", "2")
+              .table(s"$cat.db.`cdf$$changes`")
+              .writeStream.option("checkpointLocation", ck.toString)
+              .trigger(Trigger.AvailableNow()).format("memory")
+              .queryName(mem).start()
+            try q.awaitTermination() finally q.stop()
+            val streamed = s.sql(
+              s"SELECT k, v, _change_type, _commit_version FROM $mem")
+              .collect().map(_.toSeq).sortBy(_.toString)
+            require(streamed.toSeq == batch.toSeq,
+              s"streaming feed (${streamed.length} rows) must equal the " +
+                s"batch feed (${batch.length} rows)")
+            val out = s.sql(feedSql)
+              .orderBy("_commit_version", "_change_type", "k", "v")
+            val sunk = out.collect()
+            s.catalog.dropTempView(s"ord_$cat")
+            s.catalog.dropTempView(s"cdfsrc_$cat")
+            s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+          }
+        }
       }
     },
     Some(raw"""
@@ -247,91 +247,90 @@ FROM changes ORDER BY "_commit_version", "_change_type", k, v
     * computes. */
   val q416 = QuerySpec("q416_streaming_upsert",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q416_cat")
       val cat = s"graftsu${System.nanoTime()}"
-      val ck = graft.Scratch.dir("graft_q416_ck")
-      val ckStale = graft.Scratch.dir("graft_q416_cks")
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
-          ("spark.sql.shuffle.partitions" -> "8"): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.cdcsrc (k BIGINT, v BIGINT)")
-        s.sql(s"CREATE TABLE $cat.db.target (k BIGINT, v BIGINT) " +
-          "TBLPROPERTIES ('merge.mode'='merge-on-read')")
-        val tdir = root.resolve("db").resolve("target")
-        import org.apache.spark.sql.streaming.Trigger
-        // the Delta txnAppId discipline: a stable app-chosen id keys
-        // the epoch high-water mark across restarts
-        val appId = s"q416cdc_$cat"
-        def drain(fromCk: java.nio.file.Path): Unit = {
-          val q = s.readStream.table(s"$cat.db.cdcsrc")
-            .writeStream
-            .option("checkpointLocation", fromCk.toString)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-                epoch: Long) =>
-              // foreachBatch hands an isolated session clone — the
-              // staging view and the MERGE must live on THAT session
-              val bs = batch.sparkSession
-              val view = s"cdc_${cat}_$epoch"
-              batch.groupBy("k")
-                .agg(org.apache.spark.sql.functions.sum("v").as("v"))
-                .createOrReplaceTempView(view)
-              graft.sources.GraftCatalog.exactlyOnceEpoch(
-                tdir, appId, epoch) {
-                bs.sql(s"""MERGE INTO $cat.db.target t USING $view s
-                  ON t.k = s.k
-                  WHEN MATCHED THEN UPDATE SET v = t.v + s.v
-                  WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""")
+      Scratch.scoped("graft_q416_cat") { root =>
+        Scratch.scoped("graft_q416_ck") { ck =>
+          Scratch.scoped("graft_q416_cks") { ckStale =>
+            Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+                ("spark.sql.shuffle.partitions" -> "8"): _*) {
+              Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+              s.sql(s"CREATE TABLE $cat.db.cdcsrc (k BIGINT, v BIGINT)")
+              s.sql(s"CREATE TABLE $cat.db.target (k BIGINT, v BIGINT) " +
+                "TBLPROPERTIES ('merge.mode'='merge-on-read')")
+              val tdir = root.resolve("db").resolve("target")
+              import org.apache.spark.sql.streaming.Trigger
+              // the Delta txnAppId discipline: a stable app-chosen id keys
+              // the epoch high-water mark across restarts
+              val appId = s"q416cdc_$cat"
+              def drain(fromCk: java.nio.file.Path): Unit = {
+                val q = s.readStream.table(s"$cat.db.cdcsrc")
+                  .writeStream
+                  .option("checkpointLocation", fromCk.toString)
+                  .trigger(Trigger.AvailableNow())
+                  .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
+                      epoch: Long) =>
+                    // foreachBatch hands an isolated session clone — the
+                    // staging view and the MERGE must live on THAT session
+                    val bs = batch.sparkSession
+                    val view = s"cdc_${cat}_$epoch"
+                    batch.groupBy("k")
+                      .agg(org.apache.spark.sql.functions.sum("v").as("v"))
+                      .createOrReplaceTempView(view)
+                    graft.sources.GraftCatalog.exactlyOnceEpoch(
+                      tdir, appId, epoch) {
+                      bs.sql(s"""MERGE INTO $cat.db.target t USING $view s
+                        ON t.k = s.k
+                        WHEN MATCHED THEN UPDATE SET v = t.v + s.v
+                        WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""")
+                    }
+                    ()
+                  }
+                  .start()
+                try q.awaitTermination() finally q.stop()
               }
-              ()
-            }
-            .start()
-          try q.awaitTermination() finally q.stop()
-        }
-        // CDC arrives in three source commits → three epochs
-        def feed(slice: Int): Unit =
-          s.sql(s"INSERT INTO $cat.db.cdcsrc " +
-            s"SELECT /*+ REPARTITION(1) */ o_custkey % 50 AS k, " +
-            s"cast(round(o_totalprice * 100) as bigint) AS v " +
-            s"FROM ord_$cat WHERE o_orderkey % 3 = $slice")
-        feed(0)
-        drain(ck) // epoch 0
-        // the stale copy knows epoch 0 only: restarting from it
-        // replays epoch 1 — which the cumulative MERGE cannot survive
-        // unless the marker swallows it
-        def copyTree(from: java.nio.file.Path,
-            to: java.nio.file.Path): Unit =
-          scala.util.Using.resource(java.nio.file.Files.walk(from)) { st =>
-            st.forEach { p =>
-              val d = to.resolve(from.relativize(p).toString)
-              if (java.nio.file.Files.isDirectory(p))
-                java.nio.file.Files.createDirectories(d)
-              else {
-                java.nio.file.Files.createDirectories(d.getParent)
-                java.nio.file.Files.copy(p, d)
-              }
+              // CDC arrives in three source commits → three epochs
+              def feed(slice: Int): Unit =
+                s.sql(s"INSERT INTO $cat.db.cdcsrc " +
+                  s"SELECT /*+ REPARTITION(1) */ o_custkey % 50 AS k, " +
+                  s"cast(round(o_totalprice * 100) as bigint) AS v " +
+                  s"FROM ord_$cat WHERE o_orderkey % 3 = $slice")
+              feed(0)
+              drain(ck) // epoch 0
+              // the stale copy knows epoch 0 only: restarting from it
+              // replays epoch 1 — which the cumulative MERGE cannot survive
+              // unless the marker swallows it
+              def copyTree(from: java.nio.file.Path,
+                  to: java.nio.file.Path): Unit =
+                scala.util.Using.resource(java.nio.file.Files.walk(from)) { st =>
+                  st.forEach { p =>
+                    val d = to.resolve(from.relativize(p).toString)
+                    if (java.nio.file.Files.isDirectory(p))
+                      java.nio.file.Files.createDirectories(d)
+                    else {
+                      java.nio.file.Files.createDirectories(d.getParent)
+                      java.nio.file.Files.copy(p, d)
+                    }
+                  }
+                }
+              copyTree(ck, ckStale)
+              feed(1)
+              drain(ck) // epoch 1, live
+              feed(2)
+              drain(ckStale) // replays epoch 1 (skipped), then drains epoch 2
+              val out = s.sql(s"SELECT k, v FROM $cat.db.target ORDER BY k")
+              val sunk = out.collect()
+              // engine-side proof against the one-shot relational merge
+              val oneShot = s.sql(s"SELECT o_custkey % 50 AS k, " +
+                "sum(cast(round(o_totalprice * 100) as bigint)) AS v " +
+                s"FROM ord_$cat GROUP BY 1 ORDER BY k").collect()
+              require(sunk.map(_.toSeq).toSeq == oneShot.map(_.toSeq).toSeq,
+                "streamed upsert must equal the one-shot batch CDC merge " +
+                  "(a replayed epoch would inflate the sums)")
+              s.catalog.dropTempView(s"ord_$cat")
+              s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
             }
           }
-        copyTree(ck, ckStale)
-        feed(1)
-        drain(ck) // epoch 1, live
-        feed(2)
-        drain(ckStale) // replays epoch 1 (skipped), then drains epoch 2
-        val out = s.sql(s"SELECT k, v FROM $cat.db.target ORDER BY k")
-        val sunk = out.collect()
-        // engine-side proof against the one-shot relational merge
-        val oneShot = s.sql(s"SELECT o_custkey % 50 AS k, " +
-          "sum(cast(round(o_totalprice * 100) as bigint)) AS v " +
-          s"FROM ord_$cat GROUP BY 1 ORDER BY k").collect()
-        require(sunk.map(_.toSeq).toSeq == oneShot.map(_.toSeq).toSeq,
-          "streamed upsert must equal the one-shot batch CDC merge " +
-            "(a replayed epoch would inflate the sums)")
-        s.catalog.dropTempView(s"ord_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally {
-        graft.streaming.StreamingResidue.deleteRecursively(root)
-        graft.streaming.StreamingResidue.deleteRecursively(ck)
-        graft.streaming.StreamingResidue.deleteRecursively(ckStale)
+        }
       }
     },
     Some(raw"""
@@ -358,50 +357,51 @@ FROM orders GROUP BY 1 ORDER BY k
     * relationally. */
   val q417 = QuerySpec("q417_partition_evolution",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q417_cat")
       val cat = s"graftpe${System.nanoTime()}"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
-          ("spark.sql.shuffle.partitions" -> "8"): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.pe (p1 BIGINT, p2 BIGINT, " +
-          "v BIGINT) PARTITIONED BY (p1)")
-        def feed(pred: String): Unit =
-          s.sql(s"INSERT INTO $cat.db.pe " +
-            s"SELECT o_custkey % 4 AS p1, o_orderkey % 5 AS p2, " +
-            s"cast(round(o_totalprice * 100) as bigint) AS v " +
-            s"FROM ord_$cat WHERE $pred")
-        feed("o_orderkey % 2 = 0")                              // era 0
-        val t = root.resolve("db").resolve("pe")
-        val hook = graft.sources.GraftCatalogTestHook
-        val era0 = hook.manifestFiles(t, hook.manifestVersions(t).max)
-        require(era0.size == 4,
-          s"era 0 must cluster by p1 (4 values): ${era0.size}")
-        val era = s.sql(
-          s"CALL $cat.system.evolve_partition('db.pe', 'p2')")
-          .collect().head
-        require(era.getLong(0) == 1L && era.getString(1) == "p2",
-          s"evolution must publish era 1 on p2: $era")
-        feed("o_orderkey % 2 = 1")                              // era 1
-        val all = hook.manifestFiles(t, hook.manifestVersions(t).max)
-        val era1 = all.filterNot(era0.contains)
-        require(era1.size == 5,
-          s"era 1 must cluster by p2 (5 values): ${era1.size}")
-        def keptGroups(pred: String): Int =
-          s.sql(s"SELECT p1, p2, v FROM $cat.db.pe WHERE $pred")
-            .rdd.getNumPartitions
-        require(keptGroups("p1 = 1") == 1 + era1.size,
-          s"p1 point must prune era-0 files to one across the mix: " +
-            s"${keptGroups("p1 = 1")}")
-        require(keptGroups("p2 = 2") == era0.size + 1,
-          s"p2 point must prune era-1 files to one across the mix: " +
-            s"${keptGroups("p2 = 2")}")
-        val out = s.sql(s"SELECT p1, p2, count(*) AS n, " +
-          s"sum(v) AS total_cents FROM $cat.db.pe " +
-          "GROUP BY p1, p2 ORDER BY p1, p2")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+      Scratch.scoped("graft_q417_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+            ("spark.sql.shuffle.partitions" -> "8"): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.pe (p1 BIGINT, p2 BIGINT, " +
+            "v BIGINT) PARTITIONED BY (p1)")
+          def feed(pred: String): Unit =
+            s.sql(s"INSERT INTO $cat.db.pe " +
+              s"SELECT o_custkey % 4 AS p1, o_orderkey % 5 AS p2, " +
+              s"cast(round(o_totalprice * 100) as bigint) AS v " +
+              s"FROM ord_$cat WHERE $pred")
+          feed("o_orderkey % 2 = 0")                              // era 0
+          val t = root.resolve("db").resolve("pe")
+          val hook = graft.sources.GraftCatalogTestHook
+          val era0 = hook.manifestFiles(t, hook.manifestVersions(t).max)
+          require(era0.size == 4,
+            s"era 0 must cluster by p1 (4 values): ${era0.size}")
+          val era = s.sql(
+            s"CALL $cat.system.evolve_partition('db.pe', 'p2')")
+            .collect().head
+          require(era.getLong(0) == 1L && era.getString(1) == "p2",
+            s"evolution must publish era 1 on p2: $era")
+          feed("o_orderkey % 2 = 1")                              // era 1
+          val all = hook.manifestFiles(t, hook.manifestVersions(t).max)
+          val era1 = all.filterNot(era0.contains)
+          require(era1.size == 5,
+            s"era 1 must cluster by p2 (5 values): ${era1.size}")
+          def keptGroups(pred: String): Int =
+            s.sql(s"SELECT p1, p2, v FROM $cat.db.pe WHERE $pred")
+              .rdd.getNumPartitions
+          require(keptGroups("p1 = 1") == 1 + era1.size,
+            s"p1 point must prune era-0 files to one across the mix: " +
+              s"${keptGroups("p1 = 1")}")
+          require(keptGroups("p2 = 2") == era0.size + 1,
+            s"p2 point must prune era-1 files to one across the mix: " +
+              s"${keptGroups("p2 = 2")}")
+          val out = s.sql(s"SELECT p1, p2, count(*) AS n, " +
+            s"sum(v) AS total_cents FROM $cat.db.pe " +
+            "GROUP BY p1, p2 ORDER BY p1, p2")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 SELECT o_custkey % 4 AS p1, o_orderkey % 5 AS p2,
@@ -428,71 +428,72 @@ FROM orders GROUP BY 1, 2 ORDER BY p1, p2
     * relationally. */
   val q418 = QuerySpec("q418_branch_wap",
     (s, dir) => {
-      val root = graft.Scratch.dir("graft_q418_cat")
       val cat = s"graftbw${System.nanoTime()}"
-      try Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
-          ("spark.sql.shuffle.partitions" -> "8"): _*) {
-        Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
-        s.sql(s"CREATE TABLE $cat.db.wap (k BIGINT, v BIGINT) " +
-          "TBLPROPERTIES ('delete.mode'='merge-on-read')")
-        s.sql(s"INSERT INTO $cat.db.wap " +
-          s"SELECT /*+ REPARTITION(1) */ o_custkey % 100 AS k, " +
-          "sum(cast(round(o_totalprice * 100) as bigint)) AS v " +
-          s"FROM ord_$cat GROUP BY 1")                          // v1
-        val mainBefore = s.sql(s"SELECT k, v FROM $cat.db.wap")
-          .collect().map(_.toSeq).toSet
-        val fork = s.sql(
-          s"CALL $cat.system.create_branch('db.wap', 'audit')")
-          .collect().head
-        require(fork.getLong(1) == 1L, s"fork at v1: $fork")
-        // the backfill lands ON THE BRANCH: delete the k%10=3 cohort
-        // (a DV on a MAIN file through the ../ reference), append a
-        // correction cohort
-        s.sql(s"DELETE FROM $cat.db.`wap$$branch$$audit` " +
-          "WHERE k % 10 = 3")
-        s.sql(s"INSERT INTO $cat.db.`wap$$branch$$audit` " +
-          s"SELECT /*+ REPARTITION(1) */ k + 1000 AS k, " +
-          "CAST(7 AS BIGINT) AS v " +
-          s"FROM (SELECT DISTINCT o_custkey % 100 AS k FROM ord_$cat " +
-          "WHERE o_custkey % 10 = 6)")
-        // main is FROZEN while the branch carries the work
-        require(s.sql(s"SELECT k, v FROM $cat.db.wap")
-          .collect().map(_.toSeq).toSet == mainBefore,
-          "main readers must not see unpublished branch work")
-        // the audit runs on the branch head
-        val audit = s.sql("SELECT count(*) AS n, sum(v) AS total " +
-          s"FROM $cat.db.`wap$$branch$$audit`").collect().head
-        require(audit.getLong(0) > 0, "audit must see branch state")
-        // publish = one atomic main advance to the audited state
-        val pub = s.sql(
-          s"CALL $cat.system.publish_branch('db.wap', 'audit')")
-          .collect().head
-        require(pub.getLong(1) == 2L, s"publish at v2: $pub")
-        require(s.sql("SELECT count(*), sum(v) " +
-          s"FROM $cat.db.wap").collect().head.toSeq ==
-          Seq(audit.getLong(0), audit.getLong(1)),
-          "published main must equal the audited branch state")
-        // time travel still serves the pre-publish snapshot
-        require(s.sql(s"SELECT k, v FROM $cat.db.wap VERSION AS OF 1")
-          .collect().map(_.toSeq).toSet == mainBefore,
-          "v1 must remain the pre-publish state")
-        // stale-fork refusal: main moves after a second fork
-        s.sql(s"CALL $cat.system.create_branch('db.wap', 'stale')")
-          .collect()
-        s.sql(s"INSERT INTO $cat.db.wap VALUES (99999, 1)")
-        val refused = try {
-          s.sql(s"CALL $cat.system.publish_branch('db.wap', 'stale')")
+      Scratch.scoped("graft_q418_cat") { root =>
+        Conf.scoped(s)(GraftCatalog.conf(cat, root) :+
+            ("spark.sql.shuffle.partitions" -> "8"): _*) {
+          Tables(s, dir, "orders").createOrReplaceTempView(s"ord_$cat")
+          s.sql(s"CREATE TABLE $cat.db.wap (k BIGINT, v BIGINT) " +
+            "TBLPROPERTIES ('delete.mode'='merge-on-read')")
+          s.sql(s"INSERT INTO $cat.db.wap " +
+            s"SELECT /*+ REPARTITION(1) */ o_custkey % 100 AS k, " +
+            "sum(cast(round(o_totalprice * 100) as bigint)) AS v " +
+            s"FROM ord_$cat GROUP BY 1")                          // v1
+          val mainBefore = s.sql(s"SELECT k, v FROM $cat.db.wap")
+            .collect().map(_.toSeq).toSet
+          val fork = s.sql(
+            s"CALL $cat.system.create_branch('db.wap', 'audit')")
+            .collect().head
+          require(fork.getLong(1) == 1L, s"fork at v1: $fork")
+          // the backfill lands ON THE BRANCH: delete the k%10=3 cohort
+          // (a DV on a MAIN file through the ../ reference), append a
+          // correction cohort
+          s.sql(s"DELETE FROM $cat.db.`wap$$branch$$audit` " +
+            "WHERE k % 10 = 3")
+          s.sql(s"INSERT INTO $cat.db.`wap$$branch$$audit` " +
+            s"SELECT /*+ REPARTITION(1) */ k + 1000 AS k, " +
+            "CAST(7 AS BIGINT) AS v " +
+            s"FROM (SELECT DISTINCT o_custkey % 100 AS k FROM ord_$cat " +
+            "WHERE o_custkey % 10 = 6)")
+          // main is FROZEN while the branch carries the work
+          require(s.sql(s"SELECT k, v FROM $cat.db.wap")
+            .collect().map(_.toSeq).toSet == mainBefore,
+            "main readers must not see unpublished branch work")
+          // the audit runs on the branch head
+          val audit = s.sql("SELECT count(*) AS n, sum(v) AS total " +
+            s"FROM $cat.db.`wap$$branch$$audit`").collect().head
+          require(audit.getLong(0) > 0, "audit must see branch state")
+          // publish = one atomic main advance to the audited state
+          val pub = s.sql(
+            s"CALL $cat.system.publish_branch('db.wap', 'audit')")
+            .collect().head
+          require(pub.getLong(1) == 2L, s"publish at v2: $pub")
+          require(s.sql("SELECT count(*), sum(v) " +
+            s"FROM $cat.db.wap").collect().head.toSeq ==
+            Seq(audit.getLong(0), audit.getLong(1)),
+            "published main must equal the audited branch state")
+          // time travel still serves the pre-publish snapshot
+          require(s.sql(s"SELECT k, v FROM $cat.db.wap VERSION AS OF 1")
+            .collect().map(_.toSeq).toSet == mainBefore,
+            "v1 must remain the pre-publish state")
+          // stale-fork refusal: main moves after a second fork
+          s.sql(s"CALL $cat.system.create_branch('db.wap', 'stale')")
             .collect()
-          false
-        } catch { case _: Throwable => true }
-        require(refused,
-          "publish over a moved main must refuse (stale audit)")
-        val out = s.sql(s"SELECT k, v FROM $cat.db.wap " +
-          "WHERE k != 99999 ORDER BY k")
-        val sunk = out.collect()
-        s.catalog.dropTempView(s"ord_$cat")
-        s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(root)
+          s.sql(s"INSERT INTO $cat.db.wap VALUES (99999, 1)")
+          val refused = try {
+            s.sql(s"CALL $cat.system.publish_branch('db.wap', 'stale')")
+              .collect()
+            false
+          } catch { case _: Throwable => true }
+          require(refused,
+            "publish over a moved main must refuse (stale audit)")
+          val out = s.sql(s"SELECT k, v FROM $cat.db.wap " +
+            "WHERE k != 99999 ORDER BY k")
+          val sunk = out.collect()
+          s.catalog.dropTempView(s"ord_$cat")
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
+        }
+      }
     },
     Some(raw"""
 WITH seed AS (

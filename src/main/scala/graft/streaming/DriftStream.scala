@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.streaming.Trigger
 
 /** Online distribution-drift monitoring — the data-quality alarm a
@@ -32,21 +33,22 @@ object DriftStream {
       stateDir: Path, outDir: Path,
       threshold: Double = 0.05,
       checkpoint: Option[Path] = None): Unit = {
-    val ckpt = checkpoint.getOrElse(
-      graft.Scratch.dir("graft_ckpt_drift"))
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[KeyedDoc], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, stateDir, outDir, threshold)
+    def run(ckpt: Path): Unit = {
+      val q = docs.writeStream
+        .foreachBatch { (batch: Dataset[KeyedDoc], batchId: Long) =>
+          processBatch(batch.toDF(), batchId, stateDir, outDir, threshold)
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination()
+      finally {
+        q.stop()
+        StateStore.stop()
       }
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally {
-      q.stop()
-      if (checkpoint.isEmpty) StreamingResidue.release(ckpt)
-      else org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     }
+    // a caller-given checkpoint is the caller's to keep
+    checkpoint.fold(graft.Scratch.scoped("graft_ckpt_drift")(run))(run)
   }
 
   private def hasParquet(dir: Path): Boolean = {

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Dedup
 
@@ -120,24 +121,25 @@ object NearDupStream {
       ccMaxIter: Int = 20,
       onNonConvergence: NonConvergence = Fail,
       compactEvery: Int = 16): Unit = {
-    val ckpt = checkpoint.getOrElse(
-      graft.Scratch.dir("graft_ckpt_neardup"))
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[DedupStream.Doc], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, stateDir, outDir, k, bands,
-          shingleN, ccMaxIter, onNonConvergence)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactState(spark, stateDir)
+    def run(ckpt: Path): Unit = {
+      val q = docs.writeStream
+        .foreachBatch { (batch: Dataset[DedupStream.Doc], batchId: Long) =>
+          processBatch(batch.toDF(), batchId, stateDir, outDir, k, bands,
+            shingleN, ccMaxIter, onNonConvergence)
+          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+            compactState(spark, stateDir)
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination()
+      finally {
+        q.stop()
+        StateStore.stop()
       }
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally {
-      q.stop()
-      if (checkpoint.isEmpty) StreamingResidue.release(ckpt)
-      else org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     }
+    // a caller-given checkpoint is the caller's to keep
+    checkpoint.fold(graft.Scratch.scoped("graft_ckpt_neardup")(run))(run)
   }
 
   private def processBatch(batch: DataFrame, batchId: Long,
@@ -282,26 +284,28 @@ object NearDupStream {
       ccMaxIter: Int = 20,
       onNonConvergence: NonConvergence = Fail,
       compactEvery: Int = 16): Unit = {
-    val ckpt = checkpoint.getOrElse(
-      graft.Scratch.dir("graft_ckpt_neardup_media"))
-    val q = media.writeStream
-      .foreachBatch {
-        (batch: Dataset[graft.operators.Multimodal.MediaRecord],
-            batchId: Long) =>
-          processMediaBatch(batch, batchId, stateDir, outDir, maxHamming,
-            ccMaxIter, onNonConvergence)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            compactState(spark, stateDir)
+    def run(ckpt: Path): Unit = {
+      val q = media.writeStream
+        .foreachBatch {
+          (batch: Dataset[graft.operators.Multimodal.MediaRecord],
+              batchId: Long) =>
+            processMediaBatch(batch, batchId, stateDir, outDir, maxHamming,
+              ccMaxIter, onNonConvergence)
+            if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+              compactState(spark, stateDir)
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination()
+      finally {
+        q.stop()
+        StateStore.stop()
       }
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally {
-      q.stop()
-      if (checkpoint.isEmpty) StreamingResidue.release(ckpt)
-      else org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     }
+    // a caller-given checkpoint is the caller's to keep
+    checkpoint.fold(
+      graft.Scratch.scoped("graft_ckpt_neardup_media")(run))(run)
   }
 
   // private[streaming] so RestartSpec can replay one batch exactly as

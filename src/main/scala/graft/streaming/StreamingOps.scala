@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -186,23 +187,24 @@ object StreamingOps {
   def drainToBatch(spark: SparkSession, agg: DataFrame,
       tag: String, outputMode: String = "complete"): DataFrame = {
     val name = s"${tag}_${System.nanoTime()}"
-    val ckpt = graft.Scratch.dir(s"graft_ckpt_$name")
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      val sunk = spark.table(name)
-      // LocalRelation copy: independent of the sink object's row buffer
-      spark.createDataFrame(sunk.collectAsList(), sunk.schema)
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(name)
-      StreamingResidue.release(ckpt)
+    graft.Scratch.scoped(s"graft_ckpt_$name") { ckpt =>
+      val q = agg.writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode(outputMode)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try {
+        q.awaitTermination()
+        val sunk = spark.table(name)
+        // LocalRelation copy: independent of the sink object's row buffer
+        spark.createDataFrame(sunk.collectAsList(), sunk.schema)
+      } finally {
+        q.stop()
+        spark.catalog.dropTempView(name)
+        StateStore.stop()
+      }
     }
   }
 }

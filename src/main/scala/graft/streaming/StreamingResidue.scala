@@ -9,18 +9,13 @@ import scala.util.Using
   * executor-global state-store maintenance thread keeps cycling over
   * unloaded providers — enough to inflate a LATER streamed query ~5×
   * in a packed 65-query session. Every drained stream releases all
-  * three before handing its result back.
+  * three before handing its result back: it stops the query, drops its
+  * sink view, calls `StateStore.stop()` (safe while other BATCH queries
+  * run; the next streaming query lazily restarts maintenance on first
+  * state-store load), and its `Scratch.scoped` checkpoint dir is
+  * deleted as the scope closes.
   */
 object StreamingResidue {
-
-  /** Delete a checkpoint tree and stop state-store maintenance. Safe
-    * while other BATCH queries run; the next streaming query lazily
-    * restarts maintenance on first state-store load.
-    */
-  def release(checkpointDir: Path): Unit = {
-    deleteRecursively(checkpointDir)
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-  }
 
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

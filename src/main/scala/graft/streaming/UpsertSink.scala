@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming keep-latest UPSERT sink — the online form of the q98 CDC
@@ -41,18 +42,19 @@ object UpsertSink {
     * final snapshot as a DataFrame. Rows: (doc_id, version, text). */
   def drainUpsert(spark: SparkSession, stream: DataFrame,
       tableDir: String): DataFrame = {
-    val ckpt = graft.Scratch.dir("graft_upsert_ckpt")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(spark, batch, batchId, tableDir)
+    graft.Scratch.scoped("graft_upsert_ckpt") { ckpt =>
+      val q = stream.writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          mergeBatch(spark, batch, batchId, tableDir)
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination()
+      finally {
+        q.stop()
+        StateStore.stop()
       }
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally {
-      q.stop()
-      StreamingResidue.release(ckpt)
     }
     latestSnapshot(spark, tableDir, belowBatch = None)
       .getOrElse(throw new IllegalStateException("no snapshot written"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Registry-wide driver-comparability lint — the invariants two rounds
   * of driver red rows taught, enforced at build time for EVERY query
@@ -34,100 +35,110 @@ class RegistryLintSpec extends SparkSpec {
       s"non-conforming: ${names.filterNot(_.matches("q[0-9]+[a-z0-9_]*"))}")
   }
 
-  test("every query's output schema is scalar, driver-hashable, " +
-      "deduplicated — no arrays/structs/maps/dates at top level") {
-    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
+  /** Findings of the one pass over the registry, one list per check. */
+  private case class Findings(schema: Seq[String], broadcast: Seq[String],
+      window: Seq[String], scan: Seq[String])
+
+  /** Every query's frame is built ONCE per spec run (its eager counts,
+    * plan asserts and streaming drains run once), and every per-query
+    * check runs on that frame: the plan lints before the query's
+    * cleanup, because the NDV and scan probes execute subplans that can
+    * reference checkpoint blocks `releaseAll` destroys; the residue
+    * checks after it. */
+  private lazy val findings: Findings = {
+    val schema, broadcast, window, scan =
+      scala.collection.mutable.ArrayBuffer.empty[String]
+    def scratchEntries: Set[String] =
+      scala.util.Using.resource(java.nio.file.Files.list(Scratch.base)) {
+        s => s.iterator().asScala.map(_.getFileName.toString).toSet
+      }
     // the one intentionally sticky setting (Tables.nanosAsLong) goes in
     // first, so the per-query conf comparison below sees only drift
     Tables(spark, dir, "region")
     for (q <- graft.queries.Registry.all) {
       val confBefore = spark.conf.getAll
+      val scratchBefore = scratchEntries
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
       try {
-        val schema = q.fn(spark, dir).schema
-        val dup = schema.fieldNames.diff(schema.fieldNames.distinct)
+        val df = q.fn(spark, dir)
+        val sch = df.schema
+        val dup = sch.fieldNames.diff(sch.fieldNames.distinct)
         if (dup.nonEmpty)
-          bad += s"${q.name}: duplicate columns ${dup.mkString(",")}"
-        for (f <- schema.fields) f.dataType match {
+          schema += s"${q.name}: duplicate columns ${dup.mkString(",")}"
+        for (f <- sch.fields) f.dataType match {
           case _: ArrayType | _: MapType | _: StructType | NullType |
               BinaryType =>
-            bad += s"${q.name}.${f.name}: ${f.dataType.simpleString} " +
+            schema += s"${q.name}.${f.name}: ${f.dataType.simpleString} " +
               "(driver canon cannot sort/hash it — stringify)"
           case DateType | _: TimestampType | TimestampNTZType =>
-            bad += s"${q.name}.${f.name}: ${f.dataType.simpleString} " +
+            schema += s"${q.name}.${f.name}: ${f.dataType.simpleString} " +
               "(pandas dtype kind differs between Spark parquet and " +
               "DuckDB — emit a formatted string instead)"
           case _ => ()
         }
+        // each lint on its own, so one lint's failure hides no other
+        def lint(out: scala.collection.mutable.ArrayBuffer[String])(
+            f: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =>
+              Seq[String]): Unit =
+          try out ++= f(df.queryExecution.analyzed).map(w => s"${q.name}: $w")
+          catch { case _: Throwable => () }
+        lint(broadcast)(BroadcastLint.unboundedBroadcasts(_).map(k =>
+          s"broadcast over groupBy($k) — unbounded cardinality; drop the " +
+            "hint or bound with top-k"))
+        lint(window)(BroadcastLint.globalWindowsOverCorpus)
+        // NDV-aware companion (r15 verdict #3): an Aggregate bounds
+        // the frame only if its key's value domain does — probe it
+        lint(window)(BroadcastLint.aggWindowsOverUnboundedNdv(_, spark))
+        lint(scan)(BroadcastLint.singlePartitionCorpusScans(_, spark))
       } catch {
         case e: Throwable =>
-          bad += s"${q.name}: fn threw ${e.getClass.getSimpleName}: " +
+          schema += s"${q.name}: fn threw ${e.getClass.getSimpleName}: " +
             String.valueOf(e.getMessage).take(120)
       }
       CacheRegistry.releaseAll()
       spark.catalog.clearCache()
-      // every session-conf override must be released on every exit
+      // every session-conf override, scratch dir and persist must be
+      // released on every exit
       val confAfter = spark.conf.getAll
       val drift = (confBefore.keySet ++ confAfter.keySet).toSeq.sorted
         .filter(k => confBefore.get(k) != confAfter.get(k))
         .map(k => s"$k: ${confBefore.getOrElse(k, "<unset>")} -> " +
           confAfter.getOrElse(k, "<unset>"))
       if (drift.nonEmpty)
-        bad += s"${q.name}: session conf drift ${drift.mkString("; ")}"
+        schema += s"${q.name}: session conf drift ${drift.mkString("; ")}"
+      val scratchLeft = (scratchEntries -- scratchBefore).toSeq.sorted
+      if (scratchLeft.nonEmpty)
+        schema += s"${q.name}: scratch residue ${scratchLeft.mkString(", ")}"
+      val rddsLeft = persistedSince(rddsBefore)
+      if (rddsLeft.nonEmpty)
+        schema += s"${q.name}: persistent RDD residue " +
+          rddsLeft.mkString("; ").take(300)
     }
-    assert(bad.isEmpty, "\n" + bad.mkString("\n"))
+    Findings(schema.toSeq, broadcast.toSeq, window.toSeq, scan.toSeq)
+  }
+
+  test("every query's output schema is scalar, driver-hashable, " +
+      "deduplicated — no arrays/structs/maps/dates at top level") {
+    assert(findings.schema.isEmpty, "\n" + findings.schema.mkString("\n"))
   }
 
   test("no broadcast hint whose build side derives from an " +
       "unbounded-key groupBy (per-user/doc/node frames grow with the " +
       "data; a hint forces a driver collect at any size)") {
-    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (q <- graft.queries.Registry.all) {
-      try {
-        val plan = q.fn(spark, dir).queryExecution.analyzed
-        bad ++= BroadcastLint.unboundedBroadcasts(plan)
-          .map(k => s"${q.name}: broadcast over groupBy($k) — " +
-            "unbounded cardinality; drop the hint or bound with top-k")
-      } catch { case _: Throwable => () } // fn errors are test #2's job
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-    }
-    assert(bad.isEmpty, "\n" + bad.mkString("\n"))
+    assert(findings.broadcast.isEmpty,
+      "\n" + findings.broadcast.mkString("\n"))
   }
 
   test("no global (unpartitioned) ordered Window directly over " +
       "corpus-cardinality rows — a single-partition sort of the " +
       "whole input at 100 TB") {
-    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (q <- graft.queries.Registry.all) {
-      try {
-        val plan = q.fn(spark, dir).queryExecution.analyzed
-        bad ++= BroadcastLint.globalWindowsOverCorpus(plan)
-          .map(w => s"${q.name}: $w")
-        // NDV-aware companion (r15 verdict #3): an Aggregate bounds
-        // the frame only if its key's value domain does — probe it
-        bad ++= BroadcastLint.aggWindowsOverUnboundedNdv(plan, spark)
-          .map(w => s"${q.name}: $w")
-      } catch { case _: Throwable => () } // fn errors are test #2's job
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-    }
-    assert(bad.isEmpty, "\n" + bad.mkString("\n"))
+    assert(findings.window.isEmpty, "\n" + findings.window.mkString("\n"))
   }
 
   test("no single-partition DSv2 BatchScan over corpus-proportional " +
       "rows — a connector that plans one InputPartition for a big " +
       "table serializes the whole read at 100 TB") {
-    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (q <- graft.queries.Registry.all) {
-      try {
-        val plan = q.fn(spark, dir).queryExecution.analyzed
-        bad ++= BroadcastLint.singlePartitionCorpusScans(plan, spark)
-          .map(s => s"${q.name}: $s")
-      } catch { case _: Throwable => () } // fn errors are test #2's job
-      CacheRegistry.releaseAll()
-      spark.catalog.clearCache()
-    }
-    assert(bad.isEmpty, "\n" + bad.mkString("\n"))
+    assert(findings.scan.isEmpty, "\n" + findings.scan.mkString("\n"))
   }
 
   test("single-partition-scan lint catches a deliberately misused " +
