@@ -88,6 +88,13 @@ object CacheRegistry {
     p
   }
 
+  /** Persist `ds` at MEMORY_AND_DISK for `body` and unpersist it on
+    * every exit (untracked): for caches an operator consumes itself. */
+  def persisting[T, R](ds: Dataset[T])(body: Dataset[T] => R): R = {
+    val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(p) finally p.unpersist(blocking = false)
+  }
+
   /** The materialized `localCheckpoint` RDDs referenced by `ds`'s
     * plan (each `localCheckpoint(true)` leaves a LogicalRDD leaf over
     * a MEMORY_AND_DISK-persisted RDD). */

@@ -49,9 +49,12 @@ object Prof {
     val mem = new MemListener
     spark.sparkContext.addSparkListener(mem)
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
     for (name <- names; i <- 1 to n) {
       val fn = SparkEntry.queries(name)
       mem.reset()
+      val compilesBefore = compiles.getCount
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
@@ -69,16 +72,18 @@ object Prof {
         snap = mem.spillMem.get + mem.spillDisk.get +
           mem.peakExecMem.get + mem.shuffleWrite.get
       }
-      // cumulative janino work so far in this JVM (codahale counters —
-      // deltas between runs attribute a query's own codegen cost)
-      val cg = org.apache.spark.metrics.source.CodegenMetrics
+      // janino compiles of this run (the codahale count is exact); the
+      // per-compile ms come only from a decaying JVM-wide reservoir, so
+      // they are a sample's mean and max, never this run's total
+      val sampled = compiles.getSnapshot
       println(f"PROF $name run$i $sec%.3f s " +
         s"spillMemMB=${mb(mem.spillMem.get)} " +
         s"spillDiskMB=${mb(mem.spillDisk.get)} " +
         s"peakTaskExecMemMB=${mb(mem.peakExecMem.get)} " +
         s"shuffleWriteMB=${mb(mem.shuffleWrite.get)} " +
-        s"codegenUnits=${cg.METRIC_COMPILATION_TIME.getCount} " +
-        s"codegenMsInWindow=${cg.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum}")
+        s"codegenCompiles=${compiles.getCount - compilesBefore} " +
+        f"codegenMsSampledMean=${sampled.getMean}%.1f " +
+        s"codegenMsSampledMax=${sampled.getMax}")
     }
     spark.stop()
   }

@@ -8,10 +8,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * row order are mirrored exactly on both sides; float aggregates are
   * rounded identically (QueryUtil.roundDoubles) so the hash compare is
   * insensitive to summation order.
+  *
+  * Callers run [[fn]]: `body` inside one [[Views.scoped]] loan, so the
+  * temp views a body makes are released when `fn` returns or throws,
+  * and the frame it returns must not look a view up by name later.
   */
 final case class QuerySpec(
     name: String,
-    fn: (SparkSession, String) => DataFrame,
+    body: (SparkSession, String) => DataFrame,
     oracle: Option[String],
     /** True for queries that RUN A STREAM (start/stop a
       * StreamingQuery): a concurrent host must hold one global lock
@@ -21,4 +25,7 @@ final case class QuerySpec(
       * closed thread pool when parallel Verify stopped one stream
       * while another committed); one-active-stream-at-a-time is the
       * principled exclusion, and batch queries stay fully parallel. */
-    serial: Boolean = false)
+    serial: Boolean = false) {
+  val fn: (SparkSession, String) => DataFrame =
+    (s, d) => Views.scoped(s)(body(s, d))
+}

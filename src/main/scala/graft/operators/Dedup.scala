@@ -238,20 +238,6 @@ object Dedup {
     // intermediates before returning, so nothing stale ever sits in
     // the process-global registry (NearDupStream runs CC once per
     // micro-batch — a tracked handle per batch would accumulate).
-    val p0 = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sym = p0.union(p0.select(col("v").as("u"), col("u").as("v")))
-    val edges = sym.union(sym.select(col("u"), col("u").as("v"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("label", col("id"))
-    // checkpoint blocks of the PREVIOUS round, freed explicitly once
-    // the next round materializes: without this each round leaks one
-    // MEMORY_AND_DISK block-set until GC + ContextCleaner get around
-    // to it — measured in r4 as a multi-query interference band in the
-    // packed bench (blocks from q89/q93's CC squeezing every query
-    // that ran after them).
-    var prevCkpt: Seq[org.apache.spark.rdd.RDD[_]] = Nil
     var converged = false
     var i = 0
     // per-invocation observability (judge-requested after the r9 q89
@@ -260,93 +246,107 @@ object Dedup {
     val changedPerRound = scala.collection.mutable.ArrayBuffer.empty[Long]
     var edgeRows = 0L
     var vertices = 0L
-    try {
-      // materialize p0 EAGERLY: its four references below land in ONE
-      // union stage, and concurrent tasks of different union branches
-      // hitting the same not-yet-cached partition each recompute the
-      // upstream pair join — a cache stampede measured as ~4x the
-      // pairwise-cosine work on q112's pair graph (r21 attribution).
-      // One cheap count materializes every partition exactly once.
-      // Inside the try: a task failure here must release p0 as well.
-      p0.count()
-      while (!converged && i < maxIter) {
-        // each vertex adopts min(own label, neighbors' labels)…
-        // localCheckpoint (NOT persist): truncates the logical plan to
-        // the materialized RDD. With persist, round i's plan nests round
-        // i−1's inside its InMemoryRelation and the driver's plan tree /
-        // explain string grow exponentially with rounds — measured as a
-        // driver OOM in generateTreeString. Standard iterative-algorithm
-        // hygiene (same reason ALS/GraphX checkpoint). Checkpoint blocks
-        // are freed by the ContextCleaner when the round frame is GC'd.
-        // Eager-checkpointing `stepped` ALSO matters for cost: the
-        // pointer-jump below references it twice, and without
-        // materialization the join+agg would execute twice per round
-        // (measured ~40% of CC wall-clock on the q89 pair graph).
-        // convergence is observed DURING the checkpoint materialization
-        // (CollectMetricsExec accumulator) — no separate count job per
-        // round. This is the round's ONLY job.
-        val obs = new org.apache.spark.sql.Observation()
-        val obsE = new org.apache.spark.sql.Observation()
-        val stepped = edges
-          .join(labels.withColumnRenamed("id", "v"), "v")
-          .observe(obsE, count(lit(1)).as("edge_rows"))
-          .groupBy(col("u").as("id"))
-          .agg(min("label").as("label"),
-            min(when(col("u") === col("v"), col("label"))).as("old"))
-          .observe(obs, sum((col("label") =!= col("old")).cast("long")).as("changed"),
-            count(lit(1)).as("vertices"))
-          .localCheckpoint(true)
-        // this round's checkpoint now holds the whole label state (the
-        // lazy pointer-jump only references the CURRENT round), so the
-        // previous round's blocks are unreachable — free them now
-        prevCkpt.foreach(_.unpersist(blocking = false))
-        prevCkpt = graft.CacheRegistry.checkpointRdds(stepped)
-        val changed = obs.get.get("changed") match {
-          case Some(n: java.lang.Long) => n.longValue
-          case _ => 0L // empty frame: sum over zero rows is null
+    val labels = graft.CacheRegistry.persisting(
+        pairs.select(col(aCol).as("u"), col(bCol).as("v"))) { p0 =>
+      val sym = p0.union(p0.select(col("v").as("u"), col("u").as("v")))
+      val loops = sym.union(sym.select(col("u"), col("u").as("v"))).distinct()
+      graft.CacheRegistry.persisting(loops) { edges =>
+        var labels = edges.select(col("u").as("id")).distinct()
+          .withColumn("label", col("id"))
+        // checkpoint blocks of the PREVIOUS round, freed explicitly once
+        // the next round materializes: without this each round leaks one
+        // MEMORY_AND_DISK block-set until GC + ContextCleaner get around
+        // to it — measured in r4 as a multi-query interference band in the
+        // packed bench (blocks from q89/q93's CC squeezing every query
+        // that ran after them).
+        var prevCkpt: Seq[org.apache.spark.rdd.RDD[_]] = Nil
+        try {
+          // materialize p0 EAGERLY: its four references below land in ONE
+          // union stage, and concurrent tasks of different union branches
+          // hitting the same not-yet-cached partition each recompute the
+          // upstream pair join — a cache stampede measured as ~4x the
+          // pairwise-cosine work on q112's pair graph (r21 attribution).
+          // One cheap count materializes every partition exactly once.
+          p0.count()
+          while (!converged && i < maxIter) {
+            // each vertex adopts min(own label, neighbors' labels)…
+            // localCheckpoint (NOT persist): truncates the logical plan to
+            // the materialized RDD. With persist, round i's plan nests round
+            // i−1's inside its InMemoryRelation and the driver's plan tree /
+            // explain string grow exponentially with rounds — measured as a
+            // driver OOM in generateTreeString. Standard iterative-algorithm
+            // hygiene (same reason ALS/GraphX checkpoint). Checkpoint blocks
+            // are freed by the ContextCleaner when the round frame is GC'd.
+            // Eager-checkpointing `stepped` ALSO matters for cost: the
+            // pointer-jump below references it twice, and without
+            // materialization the join+agg would execute twice per round
+            // (measured ~40% of CC wall-clock on the q89 pair graph).
+            // convergence is observed DURING the checkpoint materialization
+            // (CollectMetricsExec accumulator) — no separate count job per
+            // round. This is the round's ONLY job.
+            val obs = new org.apache.spark.sql.Observation()
+            val obsE = new org.apache.spark.sql.Observation()
+            val stepped = edges
+              .join(labels.withColumnRenamed("id", "v"), "v")
+              .observe(obsE, count(lit(1)).as("edge_rows"))
+              .groupBy(col("u").as("id"))
+              .agg(min("label").as("label"),
+                min(when(col("u") === col("v"), col("label"))).as("old"))
+              .observe(obs, sum((col("label") =!= col("old")).cast("long")).as("changed"),
+                count(lit(1)).as("vertices"))
+              .localCheckpoint(true)
+            // this round's checkpoint now holds the whole label state (the
+            // lazy pointer-jump only references the CURRENT round), so the
+            // previous round's blocks are unreachable — free them now
+            prevCkpt.foreach(_.unpersist(blocking = false))
+            prevCkpt = graft.CacheRegistry.checkpointRdds(stepped)
+            val changed = obs.get.get("changed") match {
+              case Some(n: java.lang.Long) => n.longValue
+              case _ => 0L // empty frame: sum over zero rows is null
+            }
+            changedPerRound += changed
+            vertices = obs.get.get("vertices") match {
+              case Some(n: java.lang.Long) => n.longValue
+              case _ => 0L
+            }
+            edgeRows = obsE.get.get("edge_rows") match {
+              case Some(n: java.lang.Long) => n.longValue
+              case _ => 0L
+            }
+            converged = changed == 0
+            // …then pointer-jumps: label ← label's own current label (path
+            // compression — hash-min alone needs O(diameter) rounds, the
+            // jump makes long chains collapse in O(log diameter)). A label
+            // is always a vertex id, so the self-join always matches. The
+            // jump stays LAZY: it sits one plan level above the checkpointed
+            // `stepped` RDD (constant plan depth, no lineage nesting) and is
+            // evaluated inside the NEXT round's job — and skipped entirely
+            // on the converged round, where hash-min is at its fixpoint and
+            // the jump is the identity (every label is a component minimum
+            // that labels itself).
+            labels =
+              if (converged) stepped.select("id", "label")
+              else stepped
+                .join(stepped.select(col("id").as("label"), col("label").as("ll")),
+                  Seq("label"), "left")
+                .select(col("id"), coalesce(col("ll"), col("label")).as("label"))
+            i += 1
+          }
+        } finally {
+          // ANY exit — normal, non-convergence, task failure, job
+          // cancellation — releases p0 and edges (the loans): the final
+          // labels frame is localCheckpointed (lineage truncated), so
+          // they are never referenced by the returned frame, and an
+          // exception escaping the loop must not leak plain-persisted
+          // blocks that no registry entry records (NearDupStream's
+          // foreachBatch retries would accumulate them). On an abnormal
+          // exit the last round's checkpoint blocks are orphaned too —
+          // free them; on the normal path they ARE the returned labels,
+          // so leave them for the caller's releaseAll (tracked below).
+          if (!converged) prevCkpt.foreach(_.unpersist(blocking = false))
         }
-        changedPerRound += changed
-        vertices = obs.get.get("vertices") match {
-          case Some(n: java.lang.Long) => n.longValue
-          case _ => 0L
-        }
-        edgeRows = obsE.get.get("edge_rows") match {
-          case Some(n: java.lang.Long) => n.longValue
-          case _ => 0L
-        }
-        converged = changed == 0
-        // …then pointer-jumps: label ← label's own current label (path
-        // compression — hash-min alone needs O(diameter) rounds, the
-        // jump makes long chains collapse in O(log diameter)). A label
-        // is always a vertex id, so the self-join always matches. The
-        // jump stays LAZY: it sits one plan level above the checkpointed
-        // `stepped` RDD (constant plan depth, no lineage nesting) and is
-        // evaluated inside the NEXT round's job — and skipped entirely
-        // on the converged round, where hash-min is at its fixpoint and
-        // the jump is the identity (every label is a component minimum
-        // that labels itself).
-        labels =
-          if (converged) stepped.select("id", "label")
-          else stepped
-            .join(stepped.select(col("id").as("label"), col("label").as("ll")),
-              Seq("label"), "left")
-            .select(col("id"), coalesce(col("ll"), col("label")).as("label"))
-        i += 1
+        labels
       }
-    } finally {
-      // ANY exit — normal, non-convergence, task failure, job
-      // cancellation — releases the input/edge caches here: the final
-      // labels frame is localCheckpointed (lineage truncated), so they
-      // are never referenced by the returned frame, and an exception
-      // escaping the loop must not leak plain-persisted blocks that no
-      // registry entry records (NearDupStream's foreachBatch retries
-      // would accumulate them). On an abnormal exit the last round's
-      // checkpoint blocks are orphaned too — free them; on the normal
-      // path they ARE the returned labels, so leave them for the
-      // caller's releaseAll (tracked below).
-      p0.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-      if (!converged) prevCkpt.foreach(_.unpersist(blocking = false))
     }
     // Pointer jumping covers huge diameters in 20 rounds, so hitting
     // maxIter unconverged means a pathological graph — fail loudly

@@ -1527,7 +1527,7 @@ ORDER BY e.win_start, e.event_type
       // statements x 4 jobs -> x1; measured 161 jobs -> ~45,
       // warm solo 6.7 -> 5.8 s at 32 cores). Scale-safe: a count's
       // reduce side is #partitions rows regardless of corpus size.
-      try Conf.scoped(s)("spark.sql.scripting.enabled" -> "true",
+      Conf.scoped(s)("spark.sql.scripting.enabled" -> "true",
           "spark.sql.adaptive.enabled" -> "false") {
         // materialize the 1-column probe frame once (tracked cache,
         // released with the query): the scripted WHILE loop issues
@@ -1556,7 +1556,7 @@ ORDER BY e.win_start, e.event_type
           |  SELECT t AS threshold_cents, CAST(it AS BIGINT) AS doublings,
           |    cnt AS n_below, n AS n_total;
           |END""".stripMargin)
-      } finally s.catalog.dropTempView("q344_ord_v")
+      }
     },
     Some(raw"""
 WITH o AS (

@@ -962,12 +962,11 @@ GROUP BY 1 ORDER BY 1
   val q352 = QuerySpec("q352_format_matrix_audit",
     (s, dir) => {
       Scratch.scoped("graft_q352_fmt") { tmp =>
-        val base = Tables(s, dir, "orders")
+        val projected = Tables(s, dir, "orders")
           .select(col("o_orderkey"),
             expr("cast(round(o_totalprice * 100) as bigint)").as("cents"),
             col("o_orderpriority").as("prio"),
             expr("date_format(o_orderdate, 'yyyy-MM-dd')").as("d"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // the four format writes are INDEPENDENT jobs over the one
         // cached projection — submit them concurrently and let the
         // scheduler interleave their tasks (serial writes made this
@@ -975,15 +974,16 @@ GROUP BY 1 ORDER BY 1
         // projection itself is computed once, not four times)
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
-        val writes = Seq[() => Unit](
-          () => base.write.mode("overwrite").parquet(s"$tmp/p"),
-          () => base.write.mode("overwrite").orc(s"$tmp/o"),
-          () => base.write.mode("overwrite").option("header", "true")
-            .csv(s"$tmp/c"),
-          () => base.write.mode("overwrite").json(s"$tmp/j"))
-        Await.result(Future.sequence(writes.map(w => Future(w()))),
-          scala.concurrent.duration.Duration(20, "min"))
-        base.unpersist()
+        graft.CacheRegistry.persisting(projected) { base =>
+          val writes = Seq[() => Unit](
+            () => base.write.mode("overwrite").parquet(s"$tmp/p"),
+            () => base.write.mode("overwrite").orc(s"$tmp/o"),
+            () => base.write.mode("overwrite").option("header", "true")
+              .csv(s"$tmp/c"),
+            () => base.write.mode("overwrite").json(s"$tmp/j"))
+          Await.result(Future.sequence(writes.map(w => Future(w()))),
+            scala.concurrent.duration.Duration(20, "min"))
+        }
         val schema = "o_orderkey bigint, cents bigint, prio string, d string"
         val reads = Seq(
           "parquet" -> s.read.parquet(s"$tmp/p"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
-import graft.{Conf, QuerySpec, Scratch, Tables}
+import graft.{Conf, QuerySpec, Scratch, Tables, Views}
 import graft.sources.GraftCatalog
 
 /** Round-16 engine wave: the Spark 4 surfaces a 100 TB deployment
@@ -89,13 +89,12 @@ FROM events GROUP BY 1 ORDER BY event_type
         val agg = ev.withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "6 hours"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-        val name = s"q360_${System.nanoTime()}"
-        val q = agg.writeStream.format("memory").queryName(name)
+        val q = agg.writeStream.format("memory")
+          .queryName(s"q360_${System.nanoTime()}")
           .outputMode("complete")
           .option("checkpointLocation", ckpt.toString)
           .trigger(Trigger.AvailableNow()).start()
         try q.awaitTermination() finally q.stop()
-        s.catalog.dropTempView(name)
         val state = s.read.format("statestore").load(ckpt.toString)
           .select(
             date_format(col("key.window.start"), "yyyy-MM-dd HH:mm:ss")
@@ -451,13 +450,14 @@ FROM orders ORDER BY x LIMIT 50 OFFSET 100
         val agg = ev.withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "6 hours"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-        val name = s"q368_${System.nanoTime()}"
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-        s2.catalog.dropTempView(name)
+        Views.scoped(s2) {
+          val q = agg.writeStream.format("memory")
+            .queryName(s"q368_${System.nanoTime()}")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt.toString)
+            .trigger(Trigger.AvailableNow()).start()
+          try q.awaitTermination() finally q.stop()
+        }
         val md = s.read.format("state-metadata").load(ckpt.toString)
           .select(col("operatorId").cast("long").as("operator_id"),
             col("operatorName").as("operator_name"),
@@ -1116,11 +1116,7 @@ FROM r WHERE rn = CAST(ceil(n * 0.9) AS BIGINT) ORDER BY g
                 col("event_type"), col("n"), col("sum_cents"))
               .orderBy("win_start", "event_type")
             s.createDataFrame(sunk.collectAsList(), sunk.schema)
-          } finally {
-            q.stop()
-            s.catalog.dropTempView(name)
-            StateStore.stop()
-          }
+          } finally { q.stop(); StateStore.stop() }
         }
       }
     },
@@ -1807,7 +1803,6 @@ FROM w GROUP BY lang ORDER BY lang
           val out = s.sql(
             s"SELECT k, seg, v FROM $cat.db.balances ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -1886,7 +1881,6 @@ FROM updated WHERE v >= 50000000 ORDER BY k
               s"FROM $cat.db.bal VERSION AS OF $v")
           }.reduce(_ unionByName _).orderBy("version")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }

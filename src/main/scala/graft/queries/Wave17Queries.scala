@@ -100,9 +100,6 @@ object Wave17Queries {
               s"before=$v5 after=$v6")
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.mg ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"src_$cat")
-          s.catalog.dropTempView(s"delta_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -200,8 +197,6 @@ FROM deleted ORDER BY k
             java.util.Arrays.asList((pre ++ post): _*),
             audit(3, "pre").schema).orderBy("version", "phase")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"rdelta_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -299,8 +294,6 @@ SELECT * FROM (
             "a grouped aggregate must NOT take the metadata path")
           val out = fast.crossJoin(hi)
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"masrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -366,8 +359,6 @@ FROM t
             "misaligned delete must fall back to the COW rewrite")
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.md ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"mdsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -453,9 +444,11 @@ FROM seed WHERE k >= 50 ORDER BY k
             "bucketing-off control lost its exchange — assert is vacuous")
           s.conf.set(BucketKey, "true")
           // k is unique (both sides GROUP BY k), so the driver-side sort
-          // of the collected rows IS orderBy("k") — no third execution
+          // of the collected rows IS orderBy("k") — no third execution;
+          // a null k would fail the sort with an anonymous NPE
+          require(!rows.exists(_.isNullAt(0)),
+            "q390_partitioned_catalog_spj: null k in the reconciled join")
           val sunk = rows.sortBy(_.getLong(0))
-          s.catalog.dropTempView(s"ord_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -625,11 +618,7 @@ ORDER BY a, b
                 s"in exactly $expectedBatches micro-batches, got $fed")
             val sunk = s.table(name).orderBy("event_type")
             s.createDataFrame(sunk.collectAsList(), sunk.schema)
-          } finally {
-            q.stop()
-            s.catalog.dropTempView(name)
-            StateStore.stop()
-          }
+          } finally { q.stop(); StateStore.stop() }
         }
       }
     },
@@ -688,7 +677,6 @@ FROM events GROUP BY 1 ORDER BY event_type
             SELECT k, seg, v, delta FROM $cat.db.ev
             ORDER BY k, coalesce(delta, -1), v""")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -776,11 +764,7 @@ FROM unioned ORDER BY k, coalesce(delta, -1), v
                   s"single-version micro-batches, got offset ends $ends")
               val sunk = s.table(name).orderBy("seg")
               s.createDataFrame(sunk.collectAsList(), sunk.schema)
-            } finally {
-              q.stop()
-              s.catalog.dropTempView(name)
-              StateStore.stop()
-            }
+            } finally { q.stop(); StateStore.stop() }
           }
         }
       }

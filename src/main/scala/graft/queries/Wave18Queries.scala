@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{Conf, QuerySpec, Scratch, Tables}
+import graft.{Conf, QuerySpec, Scratch, Tables, Views}
 import graft.sources.GraftCatalog
 
 /** Round-18 engine wave: the DML tier's MAINTENANCE and DERIVED-STATE
@@ -115,7 +115,7 @@ object Wave18Queries {
                 .flatMap(p => Option(p.endOffset)).map(_.trim.toLong)
                 .distinct.sorted
               (t, ends)
-            } finally { q.stop(); s.catalog.dropTempView(name) }
+            } finally q.stop()
           }
           // (2a) strict consumer refuses the compaction commit loudly
           val refused = Scratch.scoped("graft_q395_sk") { strictCk =>
@@ -145,8 +145,6 @@ object Wave18Queries {
           }
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.fr ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"src_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -203,20 +201,21 @@ ORDER BY k
               .foreachBatch {
                 (batch: org.apache.spark.sql.Dataset[
                    org.apache.spark.sql.Row], batchId: Long) =>
-                  val view = s"mvdelta_${cat}_$batchId"
-                  batch.groupBy("seg")
-                    .agg(count(lit(1)).as("n"), sum("v").as("t"))
-                    .createOrReplaceTempView(view)
-                  batch.sparkSession.sql(s"""
-                    MERGE INTO $cat.db.mv m USING $view d ON m.seg = d.seg
-                    WHEN MATCHED THEN UPDATE SET
-                      n_slices = m.n_slices + d.n,
-                      total_cents = m.total_cents + d.t
-                    WHEN NOT MATCHED THEN
-                      INSERT (seg, n_slices, total_cents)
-                      VALUES (d.seg, d.n, d.t)
-                  """)
-                  batch.sparkSession.catalog.dropTempView(view)
+                  Views.scoped(batch.sparkSession) {
+                    val view = s"mvdelta_${cat}_$batchId"
+                    batch.groupBy("seg")
+                      .agg(count(lit(1)).as("n"), sum("v").as("t"))
+                      .createOrReplaceTempView(view)
+                    batch.sparkSession.sql(s"""
+                      MERGE INTO $cat.db.mv m USING $view d ON m.seg = d.seg
+                      WHEN MATCHED THEN UPDATE SET
+                        n_slices = m.n_slices + d.n,
+                        total_cents = m.total_cents + d.t
+                      WHEN NOT MATCHED THEN
+                        INSERT (seg, n_slices, total_cents)
+                        VALUES (d.seg, d.n, d.t)
+                    """)
+                  }
                   ()
               }
               .option("checkpointLocation", ck.toString)
@@ -255,7 +254,6 @@ ORDER BY k
           val out = s.sql(s"SELECT seg, n_slices, total_cents " +
             s"FROM $cat.db.mv ORDER BY seg")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -342,8 +340,6 @@ FROM eras GROUP BY seg ORDER BY seg
           val out = doubleProbe.unionByName(stringProbe)
             .orderBy("probe", "k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"pxsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -436,8 +432,6 @@ SELECT * FROM (
           val out = rollup("VERSION AS OF 'quarterly'", "tagged")
             .unionByName(rollup("", "live")).orderBy("ref", "seg")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"tdelta_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -503,8 +497,6 @@ SELECT * FROM (
           """)
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.sync ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"sdelta_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -600,17 +592,16 @@ SELECT CAST(k AS BIGINT) AS k, seg, CAST(v AS BIGINT) AS v FROM (
             "aligned delete must be metadata-only even under vectors")
           // the DV commit is a CHANGE commit: strict append-only
           // streaming must refuse it by name
-          val name = s"dv_sink_${System.nanoTime()}"
           val refused = Scratch.scoped("graft_q400_ck") { ckpt =>
             try {
               val q = s.readStream.table(s"$cat.db.dv")
                 .groupBy().agg(count(lit(1)).as("n"))
-                .writeStream.format("memory").queryName(name)
+                .writeStream.format("memory")
+                .queryName(s"dv_sink_${System.nanoTime()}")
                 .outputMode("complete")
                 .option("checkpointLocation", ckpt.toString)
                 .trigger(Trigger.AvailableNow()).start()
-              try { q.awaitTermination(); None }
-              finally { q.stop(); s.catalog.dropTempView(name) }
+              try { q.awaitTermination(); None } finally q.stop()
             } catch { case e: Exception =>
               Some(Iterator.iterate[Throwable](e)(_.getCause)
                 .takeWhile(_ != null)
@@ -622,8 +613,6 @@ SELECT CAST(k AS BIGINT) AS k, seg, CAST(v AS BIGINT) AS v FROM (
             s"strict stream must refuse the DV commit: $refused")
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.dv ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"dvsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -698,8 +687,6 @@ FROM seed WHERE k % 10 <> 7 AND k >= 34 ORDER BY k
             "OPTIMIZE fold changed MOR-updated contents")
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.mu ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"musrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -781,8 +768,6 @@ FROM seed ORDER BY k
             "count(*) under merge vectors lost the metadata path")
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.sync ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"mdelta_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }

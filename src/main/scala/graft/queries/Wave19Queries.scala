@@ -103,8 +103,6 @@ object Wave19Queries {
             s"expected one vector per deleted-from group: ${files("dv-")}")
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.fd ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"fdsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -185,8 +183,6 @@ ORDER BY k
               s"the restarted stream must have appended era 4: $total")
             val out = s.sql(s"SELECT k, seg, v FROM $cat.db.snk ORDER BY k")
             val sunk = out.collect()
-            s.catalog.dropTempView(s"ord_$cat")
-            s.catalog.dropTempView(s"swsrc_$cat")
             s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
           }
         }
@@ -252,8 +248,6 @@ ORDER BY k
             "pre-OPTIMIZE history lost")
           val out = s.sql(s"SELECT k, seg, v FROM $cat.db.dop ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"dosrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -309,7 +303,6 @@ WHERE k <> 30 ORDER BY k
           val after = hook.groupOccupancy(tdir)
           require(after.forall { case (_, r, l) => r == l },
             s"fold must clear every mask: $after")
-          s.catalog.dropTempView(s"ord_$cat")
           import s.implicits._
           Seq((total, live, total - live, after.map(_._2).sum))
             .toDF("total_rows", "live_rows", "dead_rows", "rows_after_fold")
@@ -384,9 +377,6 @@ FROM seed
           val out = s.sql(
             s"SELECT k, seg, v, origin FROM $cat.db.se ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"sesrc_$cat")
-          s.catalog.dropTempView(s"sedelta_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -459,8 +449,6 @@ FROM (
             .toDF("version", "operation", "files_added", "files_removed")
             .orderBy("version")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"hsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -532,8 +520,6 @@ ORDER BY version
             s"sum(v) AS total_cents, min(k) AS min_k, max(k) AS max_k " +
             s"FROM $cat.db.cl GROUP BY seg ORDER BY seg")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"clsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -619,9 +605,6 @@ FROM seed GROUP BY seg ORDER BY seg
           val out = s.createDataFrame(
             java.util.Arrays.asList(sunk: _*), q.schema).orderBy("seg")
           val sorted = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"cust_$cat")
-          s.catalog.dropTempView(s"dfsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sorted: _*), out.schema)
         }
       }
@@ -689,8 +672,6 @@ GROUP BY f.seg ORDER BY f.seg
           val out = ((Seq(before, after) ++ hist)
             .toDF("item", "a", "b")).orderBy("item")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"prsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -746,11 +727,7 @@ SELECT item, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b FROM (
             .contains("graft-rl-agg"),
             "grouped rollup must plan the metadata-only scan:\n" +
               q.queryExecution.executedPlan)
-          val out = s.createDataFrame(
-            java.util.Arrays.asList(sunk: _*), q.schema)
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"gasrc_$cat")
-          out
+          s.createDataFrame(java.util.Arrays.asList(sunk: _*), q.schema)
         }
       }
     },

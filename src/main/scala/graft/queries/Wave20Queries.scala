@@ -52,14 +52,14 @@ object Wave20Queries {
           // ntile over hash(id) gives 16 equal-size era fragments each
           // spanning the full (x, y) domain — the sustained-ingest
           // shape where neither dimension prunes
-          val src = s.sql(s"""
+          val framed = s.sql(s"""
             SELECT o_orderkey AS id, o_orderkey % 64 AS x,
               (o_orderkey div 64) % 64 AS y,
               cast(round(o_totalprice * 100) as bigint) AS v,
               ntile(16) OVER (ORDER BY hash(o_orderkey)) AS frag
-            FROM ord_$cat""").persist()
-          src.createOrReplaceTempView(s"zfsrc_$cat")
-          try {
+            FROM ord_$cat""")
+          graft.CacheRegistry.persisting(framed) { src =>
+            src.createOrReplaceTempView(s"zfsrc_$cat")
             // the 16 era INSERTs are independent single-file appends over
             // the one cached projection: submit concurrently (guide §2.6
             // overlap independent jobs — the q352 precedent) and let the
@@ -72,7 +72,7 @@ object Wave20Queries {
                 s"SELECT /*+ REPARTITION(1) */ id, x, y, v " +
                 s"FROM zfsrc_$cat WHERE frag = $r"))            // v1..v16
             }), scala.concurrent.duration.Duration(20, "min"))
-          } finally src.unpersist()
+          }
           val total = s.sql(s"SELECT count(*) FROM ord_$cat")
             .collect().head.getLong(0)
           def keptGroups(pred: String): Int =
@@ -116,8 +116,6 @@ object Wave20Queries {
             s"count(*) AS n, sum(v) AS total_cents FROM $cat.db.zf " +
             "GROUP BY x div 16, y div 16 ORDER BY xb, yb")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
-          s.catalog.dropTempView(s"zfsrc_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -197,8 +195,6 @@ FROM seed GROUP BY x // 16, y // 16 ORDER BY xb, yb
             val out = s.sql(feedSql)
               .orderBy("_commit_version", "_change_type", "k", "v")
             val sunk = out.collect()
-            s.catalog.dropTempView(s"ord_$cat")
-            s.catalog.dropTempView(s"cdfsrc_$cat")
             s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
           }
         }
@@ -326,7 +322,6 @@ FROM changes ORDER BY "_commit_version", "_change_type", k, v
               require(sunk.map(_.toSeq).toSeq == oneShot.map(_.toSeq).toSeq,
                 "streamed upsert must equal the one-shot batch CDC merge " +
                   "(a replayed epoch would inflate the sums)")
-              s.catalog.dropTempView(s"ord_$cat")
               s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
             }
           }
@@ -398,7 +393,6 @@ FROM orders GROUP BY 1 ORDER BY k
             s"sum(v) AS total_cents FROM $cat.db.pe " +
             "GROUP BY p1, p2 ORDER BY p1, p2")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }
@@ -490,7 +484,6 @@ FROM orders GROUP BY 1, 2 ORDER BY p1, p2
           val out = s.sql(s"SELECT k, v FROM $cat.db.wap " +
             "WHERE k != 99999 ORDER BY k")
           val sunk = out.collect()
-          s.catalog.dropTempView(s"ord_$cat")
           s.createDataFrame(java.util.Arrays.asList(sunk: _*), out.schema)
         }
       }

@@ -147,76 +147,76 @@ object NearDupStream {
       k: Int, bands: Int, shingleN: Int,
       ccMaxIter: Int, onNonConvergence: NonConvergence): Unit = {
     val spark = batch.sparkSession
-    val b = batch.persist()
-    // declared outside the try (building it runs no job) so the finally
-    // releases it on ANY exit: a Fail-policy batch throws mid-try, and
-    // the stream's replay would otherwise pile up one cache per attempt
-    val buckets = Dedup.bandBuckets(b, "doc_id", "text", k, bands, shingleN)
-      .persist()
-    try {
-      val seen =
-        if (Files.exists(stateDir) && hasParquet(stateDir))
-          spark.read.parquet(stateDir.toString)
-        else spark.emptyDataFrame.select(lit("").as("bucket")).limit(0)
-      // 2. cross-batch: any bucket already seen → drop
-      val hits = buckets.join(seen, Seq("bucket"), "left_semi")
-        .select("id").distinct()
-      // 3. in-batch: transitive resolution. Star edges (member, bucket
-      //    min) connect every bucket's members; chains that share docs
-      //    connect across buckets; connected components then labels
-      //    each doc with its component's min id — the same transitive
-      //    clustering as the offline pair graph (one-hop min alone
-      //    keeps two docs from a chain A~B~C where offline keeps one).
-      val bucketMin = buckets.groupBy("bucket").agg(min("id").as("bmin"))
-      val pairs = buckets.join(bucketMin, "bucket")
-        .where(col("id") =!= col("bmin"))
-        .select(col("id").as("a"), col("bmin").as("b")).distinct()
-      val inBatchDrop =
-        try Dedup.connectedComponents(pairs, maxIter = ccMaxIter)
-          .where(col("cluster") < col("id")).select("id")
-        catch {
-          case e: IllegalStateException => onNonConvergence match {
-            case Fail =>
-              // poison pill: a restart replays this batch into the
-              // same graph — surface the playbook, don't loop silently
-              throw new IllegalStateException(
-                s"NearDupStream batch $batchId: in-batch connected " +
-                  s"components did not converge in $ccMaxIter rounds. " +
-                  "Restart with a higher ccMaxIter, or set " +
-                  "onNonConvergence=Fallback to degrade this batch to " +
-                  "one-hop resolution (conservative: may over-keep).", e)
-            case Fallback =>
-              System.err.println(
-                s"[neardup] batch $batchId: CC non-convergence " +
-                  s"(ccMaxIter=$ccMaxIter); falling back to one-hop " +
-                  "bucket-min resolution for this batch")
-              // one-hop: drop docs whose some bucket has a smaller
-              // member — `pairs`' left side is exactly that set
-              pairs.select(col("a").as("id")).distinct()
-          }
+    // both caches are loans, released on ANY exit: a Fail-policy batch
+    // throws mid-body, and the stream's replay would otherwise pile up
+    // one cache per attempt
+    graft.CacheRegistry.persisting(batch) { b =>
+      val bucketed = Dedup.bandBuckets(b, "doc_id", "text", k, bands, shingleN)
+      graft.CacheRegistry.persisting(bucketed) { buckets =>
+        try {
+          val seen =
+            if (Files.exists(stateDir) && hasParquet(stateDir))
+              spark.read.parquet(stateDir.toString)
+            else spark.emptyDataFrame.select(lit("").as("bucket")).limit(0)
+          // 2. cross-batch: any bucket already seen → drop
+          val hits = buckets.join(seen, Seq("bucket"), "left_semi")
+            .select("id").distinct()
+          // 3. in-batch: transitive resolution. Star edges (member, bucket
+          //    min) connect every bucket's members; chains that share docs
+          //    connect across buckets; connected components then labels
+          //    each doc with its component's min id — the same transitive
+          //    clustering as the offline pair graph (one-hop min alone
+          //    keeps two docs from a chain A~B~C where offline keeps one).
+          val bucketMin = buckets.groupBy("bucket").agg(min("id").as("bmin"))
+          val pairs = buckets.join(bucketMin, "bucket")
+            .where(col("id") =!= col("bmin"))
+            .select(col("id").as("a"), col("bmin").as("b")).distinct()
+          val inBatchDrop =
+            try Dedup.connectedComponents(pairs, maxIter = ccMaxIter)
+              .where(col("cluster") < col("id")).select("id")
+            catch {
+              case e: IllegalStateException => onNonConvergence match {
+                case Fail =>
+                  // poison pill: a restart replays this batch into the
+                  // same graph — surface the playbook, don't loop silently
+                  throw new IllegalStateException(
+                    s"NearDupStream batch $batchId: in-batch connected " +
+                      s"components did not converge in $ccMaxIter rounds. " +
+                      "Restart with a higher ccMaxIter, or set " +
+                      "onNonConvergence=Fallback to degrade this batch to " +
+                      "one-hop resolution (conservative: may over-keep).", e)
+                case Fallback =>
+                  System.err.println(
+                    s"[neardup] batch $batchId: CC non-convergence " +
+                      s"(ccMaxIter=$ccMaxIter); falling back to one-hop " +
+                      "bucket-min resolution for this batch")
+                  // one-hop: drop docs whose some bucket has a smaller
+                  // member — `pairs`' left side is exactly that set
+                  pairs.select(col("a").as("id")).distinct()
+              }
+            }
+          val dropped = hits.union(inBatchDrop).distinct()
+            .withColumnRenamed("id", "doc_id")
+          // 4. emit survivors (short un-shingleable docs pass through).
+          //    Output BEFORE state, deliberately: a crash between the two
+          //    appends then replays to a duplicate output (at-least-once,
+          //    offline backstop removes it). The reverse order is LOSSY —
+          //    the replayed batch would see its own buckets in state and
+          //    drop every doc with no admitted copy anywhere.
+          b.join(dropped, Seq("doc_id"), "left_anti")
+            .write.mode("append").parquet(outDir.toString)
+          // 5. register every batch bucket (transitive chaining)
+          buckets.select("bucket").distinct()
+            .write.mode("append").parquet(stateDir.toString)
+        } finally {
+          // a micro-batch is one unit of work: free the checkpoint blocks
+          // connectedComponents registered for this batch's in-batch CC
+          // (nothing else calls releaseAll on the streaming path, and a
+          // long-lived stream would otherwise accumulate one block-set +
+          // one registry thunk per batch)
+          graft.CacheRegistry.releaseAll()
         }
-      val dropped = hits.union(inBatchDrop).distinct()
-        .withColumnRenamed("id", "doc_id")
-      // 4. emit survivors (short un-shingleable docs pass through).
-      //    Output BEFORE state, deliberately: a crash between the two
-      //    appends then replays to a duplicate output (at-least-once,
-      //    offline backstop removes it). The reverse order is LOSSY —
-      //    the replayed batch would see its own buckets in state and
-      //    drop every doc with no admitted copy anywhere.
-      b.join(dropped, Seq("doc_id"), "left_anti")
-        .write.mode("append").parquet(outDir.toString)
-      // 5. register every batch bucket (transitive chaining)
-      buckets.select("bucket").distinct()
-        .write.mode("append").parquet(stateDir.toString)
-    } finally {
-      buckets.unpersist(blocking = false)
-      b.unpersist(blocking = false)
-      // a micro-batch is one unit of work: free the checkpoint blocks
-      // connectedComponents registered for this batch's in-batch CC
-      // (nothing else calls releaseAll on the streaming path, and a
-      // long-lived stream would otherwise accumulate one block-set +
-      // one registry thunk per batch)
-      graft.CacheRegistry.releaseAll()
+      }
     }
   }
 
@@ -316,65 +316,63 @@ object NearDupStream {
       ccMaxIter: Int, onNonConvergence: NonConvergence): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val b = batch.persist()
-    // narrow decode+hash pass: ~8 rows of (id, bucket, hash) leave per
-    // image; the container bytes never shuffle. Outside the try, as in
-    // the text tier, so the finally releases it on any exit.
-    val keys = b.flatMap(r => mediaBandRows(r.doc_id, r.data))
-      .toDF("id", "bucket", "hash").persist()
-    try {
-      val seen =
-        if (Files.exists(stateDir) && hasParquet(stateDir))
-          spark.read.parquet(stateDir.toString)
-        else spark.emptyDataFrame
-          .select(lit("").as("bucket"), lit(0L).as("hash")).limit(0)
-      // cross-batch: bucket equi-join + full-hash hamming verify (the
-      // family prefix in the bucket key guarantees hashes compared
-      // here are same-family)
-      val hits = keys
-        .join(seen.withColumnRenamed("hash", "shash"), Seq("bucket"))
-        .where(bit_count(col("hash").bitwiseXOR(col("shash"))) <= maxHamming)
-        .select("id").distinct()
-      // in-batch: the offline candidate shape (per-bucket self-join),
-      // hamming-verified, then transitive min-id resolution
-      val cand = keys.as("x").join(keys.as("y"), Seq("bucket"))
-        .where(col("x.id") < col("y.id"))
-        .where(bit_count(col("x.hash").bitwiseXOR(col("y.hash")))
-          <= maxHamming)
-        .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
-      val inBatchDrop =
-        try Dedup.connectedComponents(cand, maxIter = ccMaxIter)
-          .where(col("cluster") < col("id")).select("id")
-        catch {
-          case e: IllegalStateException => onNonConvergence match {
-            case Fail =>
-              throw new IllegalStateException(
-                s"NearDupStream media batch $batchId: in-batch connected " +
-                  s"components did not converge in $ccMaxIter rounds. " +
-                  "Restart with a higher ccMaxIter, or set " +
-                  "onNonConvergence=Fallback to degrade this batch to " +
-                  "verified-pair resolution (conservative: may over-keep).",
-                e)
-            case Fallback =>
-              System.err.println(
-                s"[neardup-media] batch $batchId: CC non-convergence " +
-                  s"(ccMaxIter=$ccMaxIter); dropping the larger member " +
-                  "of each verified pair for this batch")
-              cand.select(col("b").as("id")).distinct()
-          }
-        }
-      val dropped = hits.union(inBatchDrop).distinct()
-        .withColumnRenamed("id", "doc_id")
-      // output BEFORE state — same crash-replay direction as the text
-      // tier (duplicate output, never a lost novel doc)
-      b.join(dropped, Seq("doc_id"), "left_anti")
-        .write.mode("append").parquet(outDir.toString)
-      keys.select("bucket", "hash").distinct()
-        .write.mode("append").parquet(stateDir.toString)
-    } finally {
-      keys.unpersist(blocking = false)
-      b.unpersist(blocking = false)
-      graft.CacheRegistry.releaseAll()
+    graft.CacheRegistry.persisting(batch) { b =>
+      // narrow decode+hash pass: ~8 rows of (id, bucket, hash) leave per
+      // image; the container bytes never shuffle
+      val hashed = b.flatMap(r => mediaBandRows(r.doc_id, r.data))
+        .toDF("id", "bucket", "hash")
+      graft.CacheRegistry.persisting(hashed) { keys =>
+        try {
+          val seen =
+            if (Files.exists(stateDir) && hasParquet(stateDir))
+              spark.read.parquet(stateDir.toString)
+            else spark.emptyDataFrame
+              .select(lit("").as("bucket"), lit(0L).as("hash")).limit(0)
+          // cross-batch: bucket equi-join + full-hash hamming verify (the
+          // family prefix in the bucket key guarantees hashes compared
+          // here are same-family)
+          val hits = keys
+            .join(seen.withColumnRenamed("hash", "shash"), Seq("bucket"))
+            .where(bit_count(col("hash").bitwiseXOR(col("shash"))) <= maxHamming)
+            .select("id").distinct()
+          // in-batch: the offline candidate shape (per-bucket self-join),
+          // hamming-verified, then transitive min-id resolution
+          val cand = keys.as("x").join(keys.as("y"), Seq("bucket"))
+            .where(col("x.id") < col("y.id"))
+            .where(bit_count(col("x.hash").bitwiseXOR(col("y.hash")))
+              <= maxHamming)
+            .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
+          val inBatchDrop =
+            try Dedup.connectedComponents(cand, maxIter = ccMaxIter)
+              .where(col("cluster") < col("id")).select("id")
+            catch {
+              case e: IllegalStateException => onNonConvergence match {
+                case Fail =>
+                  throw new IllegalStateException(
+                    s"NearDupStream media batch $batchId: in-batch connected " +
+                      s"components did not converge in $ccMaxIter rounds. " +
+                      "Restart with a higher ccMaxIter, or set " +
+                      "onNonConvergence=Fallback to degrade this batch to " +
+                      "verified-pair resolution (conservative: may over-keep).",
+                    e)
+                case Fallback =>
+                  System.err.println(
+                    s"[neardup-media] batch $batchId: CC non-convergence " +
+                      s"(ccMaxIter=$ccMaxIter); dropping the larger member " +
+                      "of each verified pair for this batch")
+                  cand.select(col("b").as("id")).distinct()
+              }
+            }
+          val dropped = hits.union(inBatchDrop).distinct()
+            .withColumnRenamed("id", "doc_id")
+          // output BEFORE state — same crash-replay direction as the text
+          // tier (duplicate output, never a lost novel doc)
+          b.join(dropped, Seq("doc_id"), "left_anti")
+            .write.mode("append").parquet(outDir.toString)
+          keys.select("bucket", "hash").distinct()
+            .write.mode("append").parquet(stateDir.toString)
+        } finally graft.CacheRegistry.releaseAll()
+      }
     }
   }
 

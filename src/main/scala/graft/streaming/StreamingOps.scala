@@ -188,22 +188,20 @@ object StreamingOps {
       tag: String, outputMode: String = "complete"): DataFrame = {
     val name = s"${tag}_${System.nanoTime()}"
     graft.Scratch.scoped(s"graft_ckpt_$name") { ckpt =>
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        val sunk = spark.table(name)
-        // LocalRelation copy: independent of the sink object's row buffer
-        spark.createDataFrame(sunk.collectAsList(), sunk.schema)
-      } finally {
-        q.stop()
-        spark.catalog.dropTempView(name)
-        StateStore.stop()
+      graft.Views.scoped(spark) {
+        val q = agg.writeStream
+          .format("memory")
+          .queryName(name)
+          .outputMode(outputMode)
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        try {
+          q.awaitTermination()
+          val sunk = spark.table(name)
+          // LocalRelation copy: independent of the sink object's row buffer
+          spark.createDataFrame(sunk.collectAsList(), sunk.schema)
+        } finally { q.stop(); StateStore.stop() }
       }
     }
   }

@@ -242,6 +242,21 @@ class DedupSpec extends SparkSpec {
     assert(leaked.isEmpty, s"leaked blocks: ${leaked.mkString(", ")}")
   }
 
+  test("persisting releases its cache when the body throws over a " +
+      "non-local input") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException] {
+      CacheRegistry.persisting(spark.range(0, 100, 1, 4)) { p =>
+        assert(p.count() == 100)
+        assert(persistedSince(before).nonEmpty, "the body's cache is live")
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(e.getMessage == "boom")
+    val leaked = persistedSince(before)
+    assert(leaked.isEmpty, s"leaked blocks: ${leaked.mkString(", ")}")
+  }
+
   test("packed SimHash votes fail loudly at 2^21 tokens, not corrupt silently") {
     // The 3×21-bit packed counters are carry-free only below 2^21
     // tokens per document; the guard converts the documented assumption

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.Path
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -34,26 +34,26 @@ class EventsEncodingSpec extends SparkSpec {
     }.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
   }
 
-  /** Stage the base events under one physical encoding; returns the
-    * table dir (contains `events.parquet`). */
-  private def stage(encoding: String): java.nio.file.Path = {
-    val df = base
+  /** Stage the base events under one physical encoding and lend the
+    * table dir (contains `events.parquet`) to `f`; the dir is deleted
+    * when `f` exits. */
+  private def staged[T](encoding: String)(f: Path => T): T = {
     val ts = encoding match {
       case "nanos-long" => col("ts_us") * 1000L
       case "us-ntz"     => timestamp_micros(col("ts_us")).cast(TimestampNTZType)
       case "us-tz"      => timestamp_micros(col("ts_us"))
     }
-    val dir = Files.createTempDirectory(s"graft_enc_$encoding")
-    df.withColumn("ts", ts)
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(dir.resolve("events.parquet").toString)
-    dir
+    Scratch.scoped(s"graft_enc_$encoding") { dir =>
+      base.withColumn("ts", ts)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(dir.resolve("events.parquet").toString)
+      f(dir)
+    }
   }
 
   test("batch Tables read normalizes all three encodings to identical µs instants") {
-    val perEncoding = encodings.map { enc =>
-      val dir = stage(enc)
+    val perEncoding = encodings.map { enc => staged(enc) { dir =>
       val read = Tables(spark, dir.toString, "events")
       assert(Tables.eventTsType(read).contains(TimestampType),
         s"$enc: expected TimestampType after normalization, got ${Tables.eventTsType(read)}")
@@ -61,7 +61,7 @@ class EventsEncodingSpec extends SparkSpec {
       // failure mode was a DATATYPE_MISMATCH here on the NTZ branch
       enc -> read.select(col("event_id"), unix_micros(col("ts")).as("us"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    }
+    }}
     val expected = base.select("event_id", "ts_us")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     perEncoding.foreach { case (enc, got) =>
@@ -73,26 +73,27 @@ class EventsEncodingSpec extends SparkSpec {
     // the footer probe cannot resolve an encoding before the first file
     // arrives — the stream must still start (raw-long fallback), drain
     // zero batches, and emit an empty frame rather than throw
-    val dir = Files.createTempDirectory("graft_enc_empty")
-    val drained = StreamingOps.drainToBatch(spark,
-      StreamingOps.hourlyAgg(StreamingOps.eventsStream(spark, dir.toString)),
-      "enc_empty")
-    assert(drained.collect().isEmpty)
+    Scratch.scoped("graft_enc_empty") { dir =>
+      val drained = StreamingOps.drainToBatch(spark,
+        StreamingOps.hourlyAgg(StreamingOps.eventsStream(spark, dir.toString)),
+        "enc_empty")
+      assert(drained.collect().isEmpty)
+    }
   }
 
   test("streaming hourlyAgg is identical across all three encodings and matches batch") {
-    val results = encodings.map { enc =>
-      val dir = stage(enc)
+    val results = encodings.map { enc => staged(enc) { dir =>
       val streamed = StreamingOps.drainToBatch(spark,
         StreamingOps.hourlyAgg(
           StreamingOps.eventsStream(spark, dir.resolve("events.parquet").toString)),
         s"enc_${enc.replace('-', '_')}")
         .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
       enc -> streamed
+    }}
+    val batch = staged("us-tz") { dir =>
+      StreamingOps.hourlyAgg(Tables(spark, dir.toString, "events"))
+        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     }
-    val batch = StreamingOps.hourlyAgg(
-        Tables(spark, stage("us-tz").toString, "events"))
-      .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     assert(batch.size > 3, s"fixture must span several hourly windows, got ${batch.size}")
     results.foreach { case (enc, streamed) =>
       assert(streamed == batch,

@@ -50,33 +50,35 @@ class NearDupMediaStreamSpec extends SparkSpec {
   }
 
   test("re-encode arriving in a later micro-batch is dropped by state") {
-    val dir = Files.createTempDirectory("graft_neardup_media_in")
-    val stateDir = Files.createTempDirectory("graft_neardup_media_state")
-    val outDir = Files.createTempDirectory("graft_neardup_media_out")
-    val recs = fixture(0L to 8L).map(r => r.doc_id -> r).toMap
-    // batch 1: the PNG member of each group
-    writeChunk(Seq(recs(0L), recs(3L), recs(6L)).toDS().toDF(), dir, 0)
-    // batch 2: BMP + GIF re-encodes of group 0, BMP of group 1 (all
-    // share ZERO bytes with the admitted PNGs), plus an undecodable
-    // payload that must pass through
-    writeChunk(Seq(recs(1L), recs(2L), recs(4L),
-      MediaRecord(100L, "image", Array[Byte](1, 2, 3, 4),
-        MediaMeta(0, 0, "bin", 0))).toDS().toDF(), dir, 1)
+    Scratch.scoped("graft_neardup_media") { tmp =>
+      val dir = Files.createDirectory(tmp.resolve("in"))
+      val stateDir = Files.createDirectory(tmp.resolve("state"))
+      val outDir = Files.createDirectory(tmp.resolve("out"))
+      val recs = fixture(0L to 8L).map(r => r.doc_id -> r).toMap
+      // batch 1: the PNG member of each group
+      writeChunk(Seq(recs(0L), recs(3L), recs(6L)).toDS().toDF(), dir, 0)
+      // batch 2: BMP + GIF re-encodes of group 0, BMP of group 1 (all
+      // share ZERO bytes with the admitted PNGs), plus an undecodable
+      // payload that must pass through
+      writeChunk(Seq(recs(1L), recs(2L), recs(4L),
+        MediaRecord(100L, "image", Array[Byte](1, 2, 3, 4),
+          MediaMeta(0, 0, "bin", 0))).toDS().toDF(), dir, 1)
 
-    val media = spark.readStream
-      .schema(mediaSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir.toString).as[MediaRecord]
-    NearDupStream.drainMedia(spark, media, stateDir, outDir)
+      val media = spark.readStream
+        .schema(mediaSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(dir.toString).as[MediaRecord]
+      NearDupStream.drainMedia(spark, media, stateDir, outDir)
 
-    val kept = spark.read.parquet(outDir.toString)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // 1, 2, 4 dropped across batches though byte-disjoint; 100 has no
-    // perceptual identity and passes through
-    assert(kept == Set(0L, 3L, 6L, 100L), s"got $kept")
+      val kept = spark.read.parquet(outDir.toString)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      // 1, 2, 4 dropped across batches though byte-disjoint; 100 has no
+      // perceptual identity and passes through
+      assert(kept == Set(0L, 3L, 6L, 100L), s"got $kept")
 
-    // the byte tier would NOT have caught these: containers disjoint
-    assert(recs(0L).data.toSeq != recs(1L).data.toSeq)
+      // the byte tier would NOT have caught these: containers disjoint
+      assert(recs(0L).data.toSeq != recs(1L).data.toSeq)
+    }
   }
 
   test("one-batch drain matches the offline decision rule exactly") {
@@ -100,19 +102,21 @@ class NearDupMediaStreamSpec extends SparkSpec {
     }
     val expectedKept = ids.filter(i => find(i) == i).toSet
 
-    val dir = Files.createTempDirectory("graft_neardup_media_one_in")
-    val stateDir = Files.createTempDirectory("graft_neardup_media_one_state")
-    val outDir = Files.createTempDirectory("graft_neardup_media_one_out")
-    writeChunk(recs.toDS().toDF(), dir, 0)
-    val media = spark.readStream
-      .schema(mediaSchema)
-      .parquet(dir.toString).as[MediaRecord]
-    NearDupStream.drainMedia(spark, media, stateDir, outDir)
+    Scratch.scoped("graft_neardup_media_one") { tmp =>
+      val dir = Files.createDirectory(tmp.resolve("in"))
+      val stateDir = Files.createDirectory(tmp.resolve("state"))
+      val outDir = Files.createDirectory(tmp.resolve("out"))
+      writeChunk(recs.toDS().toDF(), dir, 0)
+      val media = spark.readStream
+        .schema(mediaSchema)
+        .parquet(dir.toString).as[MediaRecord]
+      NearDupStream.drainMedia(spark, media, stateDir, outDir)
 
-    val kept = spark.read.parquet(outDir.toString)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept == expectedKept, s"got $kept, offline rule says $expectedKept")
-    // the fixture's group structure: one representative per id/3 group
-    assert(expectedKept == ids.filter(_ % 3 == 0).toSet)
+      val kept = spark.read.parquet(outDir.toString)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(kept == expectedKept, s"got $kept, offline rule says $expectedKept")
+      // the fixture's group structure: one representative per id/3 group
+      assert(expectedKept == ids.filter(_ % 3 == 0).toSet)
+    }
   }
 }

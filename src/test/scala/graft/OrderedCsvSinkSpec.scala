@@ -17,8 +17,8 @@ class OrderedCsvSinkSpec extends SparkSpec {
     Files.readAllLines(Paths.get(p)).asScala.toSeq
 
   test("writes one ordered headered CSV file via the declared " +
-      "distribution (planner inserts the sort, not the caller)") {
-    val dir = Files.createTempDirectory("graft_csv_v2")
+      "distribution (planner inserts the sort, not the " +
+      "caller)") { Scratch.scoped("graft_csv_v2") { dir =>
     val target = s"$dir/out.csv"
     val df = Seq((3L, "c", 1.5), (1L, "a", 2.0), (2L, "b", 0.25))
       .toDF("id", "name", "score")
@@ -32,10 +32,9 @@ class OrderedCsvSinkSpec extends SparkSpec {
     // no temp residue
     assert(Files.list(Paths.get(dir.toString)).iterator().asScala
       .map(_.getFileName.toString).toSet == Set("out.csv"))
-  }
+  }}
 
-  test("multi-column order + quoting + null rendering") {
-    val dir = Files.createTempDirectory("graft_csv_v2")
+  test("multi-column order + quoting + null rendering") { Scratch.scoped("graft_csv_v2") { dir =>
     val target = s"$dir/q.csv"
     Seq((2L, Some("x,y"), "k"), (1L, None, "a\"b"), (2L, Some("p"), "z"))
       .toDF("g", "v", "s")
@@ -45,10 +44,10 @@ class OrderedCsvSinkSpec extends SparkSpec {
       .mode("overwrite").save()
     assert(readLines(target) == Seq("g,v,s", "1,,\"a\"\"b\"",
       "2,\"x,y\",k", "2,p,z"))
-  }
+  }}
 
-  test("byte-identical to the S4 driver-side sink on a real frame") {
-    val dir = Files.createTempDirectory("graft_csv_v2")
+  test("byte-identical to the S4 driver-side sink on a real " +
+      "frame") { Scratch.scoped("graft_csv_v2") { dir =>
     val df = Tables(spark, "/root/testdata/sf0.001", "part")
       .select(col("p_partkey"), col("p_name"))
       .orderBy("p_partkey")
@@ -59,10 +58,9 @@ class OrderedCsvSinkSpec extends SparkSpec {
       .option("path", s"$dir/v2.csv").option("order", "p_partkey")
       .mode("overwrite").save()
     assert(readLines(s"$dir/v2.csv") == readLines(s"$dir/s4.csv"))
-  }
+  }}
 
-  test("overwrite replaces the previous file") {
-    val dir = Files.createTempDirectory("graft_csv_v2")
+  test("overwrite replaces the previous file") { Scratch.scoped("graft_csv_v2") { dir =>
     val target = s"$dir/o.csv"
     Seq((1L, "a")).toDF("id", "v").write.format("graft-csv")
       .option("path", target).option("order", "id")
@@ -71,5 +69,5 @@ class OrderedCsvSinkSpec extends SparkSpec {
       .option("path", target).option("order", "id")
       .mode("overwrite").save()
     assert(readLines(target) == Seq("id,v", "9,z"))
-  }
+  }}
 }

@@ -52,11 +52,14 @@ class RegistryLintSpec extends SparkSpec {
       scala.util.Using.resource(java.nio.file.Files.list(Scratch.base)) {
         s => s.iterator().asScala.map(_.getFileName.toString).toSet
       }
+    def tempViews: Set[String] =
+      spark.sessionState.catalog.getTempViewNames().toSet
     // the one intentionally sticky setting (Tables.nanosAsLong) goes in
     // first, so the per-query conf comparison below sees only drift
     Tables(spark, dir, "region")
     for (q <- graft.queries.Registry.all) {
       val confBefore = spark.conf.getAll
+      val viewsBefore = tempViews
       val scratchBefore = scratchEntries
       val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
       try {
@@ -97,8 +100,8 @@ class RegistryLintSpec extends SparkSpec {
       }
       CacheRegistry.releaseAll()
       spark.catalog.clearCache()
-      // every session-conf override, scratch dir and persist must be
-      // released on every exit
+      // every session-conf override, temp view, scratch dir and persist
+      // must be released on every exit
       val confAfter = spark.conf.getAll
       val drift = (confBefore.keySet ++ confAfter.keySet).toSeq.sorted
         .filter(k => confBefore.get(k) != confAfter.get(k))
@@ -106,6 +109,9 @@ class RegistryLintSpec extends SparkSpec {
           confAfter.getOrElse(k, "<unset>"))
       if (drift.nonEmpty)
         schema += s"${q.name}: session conf drift ${drift.mkString("; ")}"
+      val viewsLeft = (tempViews -- viewsBefore).toSeq.sorted
+      if (viewsLeft.nonEmpty)
+        schema += s"${q.name}: temp view residue ${viewsLeft.mkString(", ")}"
       val scratchLeft = (scratchEntries -- scratchBefore).toSeq.sorted
       if (scratchLeft.nonEmpty)
         schema += s"${q.name}: scratch residue ${scratchLeft.mkString(", ")}"
