@@ -5,9 +5,20 @@ package graft
   * `perf <name> wall_ms=… cpu_ms=… rss_mb=… delta_rss_mb=…`.
   */
 object Perf {
+  /** The process's resident set (`VmRSS` of `/proc/self/status`) in
+    * MiB; JVM heap in use where that file is absent (non-Linux hosts). */
   private def rssMb: Double = {
-    val r = Runtime.getRuntime
-    (r.totalMemory - r.freeMemory) / 1048576.0
+    val vmRss =
+      try scala.util.Using.resource(
+          scala.io.Source.fromFile("/proc/self/status")) { s =>
+        s.getLines().find(_.startsWith("VmRSS:"))
+          .map(_.trim.split("\\s+")(1).toDouble / 1024)
+      }
+      catch { case _: java.io.IOException => None }
+    vmRss.getOrElse {
+      val r = Runtime.getRuntime
+      (r.totalMemory - r.freeMemory) / 1048576.0
+    }
   }
 
   def timed[A](name: String)(f: => A): A = {

@@ -25,6 +25,10 @@ import java.nio.file.{Files, Path, Paths}
   * This changes WHERE ephemeral state lives, never WHAT is computed:
   * every query still computes from its parquet inputs each run.
   *
+  * Each JVM gets its own `graft-scratch/jvm-<pid>-…` subdir as its
+  * [[base]], removed at exit once empty: listing the base shows this
+  * process's scopes only, never those of another graft JVM on the host.
+  *
   * Scope contract: [[scoped]] is the only way to get a scratch dir. It
   * lends a fresh dir under [[base]] to its body and deletes the whole
   * tree when the body exits, normally or by exception, so nothing under
@@ -41,8 +45,10 @@ object Scratch {
         else None
       }
       .getOrElse(Paths.get(sys.props("java.io.tmpdir")))
-    val root = pick.resolve("graft-scratch")
-    Files.createDirectories(root)
+    val shared = Files.createDirectories(pick.resolve("graft-scratch"))
+    val root = Files.createTempDirectory(shared,
+      s"jvm-${ProcessHandle.current.pid}-")
+    root.toFile.deleteOnExit()
     root
   }
 

@@ -37,11 +37,12 @@ object TickerRefresh {
     * (the reference prints it, `update_nasdaq100_tickers.py:53`). */
   def refresh(spark: SparkSession, html: Option[String],
       csvFallback: String, outputPath: String): Long = {
-    // loadTickers already yields normalized, distinct, sorted tickers
+    // loadTickers already yields normalized, distinct, sorted tickers,
+    // as a local frame: the write and the count re-run no resolve
     val tickers: DataFrame = Sources.loadTickers(spark, html, csvFallback)
-    val out = tickers.select(col("ticker").as("Symbol"))
-    Sources.writeSingleCsv(out, outputPath)
-    val n = out.count()
+    Sources.writeSingleCsv(tickers.select(col("ticker").as("Symbol")),
+      outputPath)
+    val n = tickers.collect().length.toLong
     println(s"Updated $outputPath with $n tickers")
     n
   }

@@ -135,15 +135,24 @@ object Sources extends org.apache.spark.internal.Logging {
 
   /** The composed extract with fallback (`extract_tickers.py:65-82`):
     * html result if present, else CSV; zero tickers → error, like the
-    * reference's raise. */
+    * reference's raise. The resolve plan runs once; the result is a
+    * local frame, so later stages never re-run it. */
   def loadTickers(spark: SparkSession, html: Option[String],
       csvFallback: String): DataFrame = {
-    val df = html.flatMap(tickersFromHtml(spark, _))
-      .getOrElse(tickersFromCsv(spark, csvFallback))
+    val df = collectLocal(html.flatMap(tickersFromHtml(spark, _))
+      .getOrElse(tickersFromCsv(spark, csvFallback)))
     if (df.isEmpty)
       throw new IllegalStateException("no tickers resolved from any source")
     df
   }
+
+  /** Run `df` once and return its rows, in order, as a frame over a
+    * `LocalRelation`: actions on the result re-run nothing upstream
+    * (an emptiness check or a collect runs no job at all), and nothing
+    * is persisted, so there is no cache to release. For driver-sized
+    * results only. */
+  def collectLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
 
   /** One ticker's fundamentals snapshot (the reference's 14-field
     * projection of the yfinance payload, `transform_valuation.py:56-87`;

@@ -61,7 +61,8 @@ class HtmlTickerSourceSpec extends SparkSpec {
   }
 
   test("file option reads fixture HTML from disk") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-html").toFile
+      Scratch.scoped("graft-html") { dirPath =>
+    val dir = dirPath.toFile
     val f = new java.io.File(dir, "page.html")
     val w = new java.io.FileWriter(f)
     w.write(htmlPage(82)); w.close()
@@ -69,7 +70,7 @@ class HtmlTickerSourceSpec extends SparkSpec {
       .option("file", f.getAbsolutePath).load()
       .collect().map(_.getString(0))
     assert(got.length == 82)
-  }
+  }}
 
   test("connector output feeds the S3 snapshot fan-out unchanged") {
     val tickers = spark.read.format("graft-html")

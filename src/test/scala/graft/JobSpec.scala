@@ -1,40 +1,82 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.time.{Clock, Instant, ZoneId}
+import scala.jdk.CollectionConverters._
 import graft.sources.Sources
+
+object JobSpec {
+  /** Every ticker the counting fetcher was called with, one entry per
+    * call. A static field, so fetch calls made inside Spark tasks land
+    * here too. */
+  val fetched = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** The counting fetcher: a fixed snapshot per ticker. */
+  def fetch(t: String): Sources.Snapshot = {
+    fetched.add(t)
+    Sources.Snapshot(t, s"$t Co", if (t == "MSFT") "Tech" else "Fin",
+      Some(100.0 + t.length), Some(1e9), "USD", Some(20.0), Some(18.0),
+      Some(4.0), Some(4.2), Some(0.12), None, Some(30.0), None)
+  }
+}
 
 /** End-to-end of the orchestrated main: extract (CSV fallback) →
   * hermetic fetch → valuation → latest + dated CSV.
   */
 class JobSpec extends SparkSpec {
 
+  private val clock =
+    Clock.fixed(Instant.parse("2026-08-12T23:30:00Z"), ZoneId.of("UTC"))
+
+  /** Calls per ticker since the last `fetched.clear()`. */
+  private def fetchCalls: Map[String, Int] =
+    JobSpec.fetched.asScala.toSeq.groupBy(identity).map { case (t, c) => t -> c.size }
+
+  private def runJob(dir: Path, tickersCsv: String) = {
+    Files.writeString(dir.resolve("tickers.csv"), tickersCsv)
+    Job.run(spark, Settings(outputDir = s"$dir/out", timezone = "Asia/Bangkok"),
+      clock, JobSpec.fetch, html = None, csvPath = s"$dir/tickers.csv")
+  }
+
   test("full job writes latest + dated CSVs with identical content") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job").toString
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/tickers.csv"),
-      "Symbol\nAAPL\nMSFT\nbrk.b\nAAPL\n")
-    val settings = Settings(outputDir = s"$dir/out", timezone = "Asia/Bangkok")
-    val clock = Clock.fixed(Instant.parse("2026-08-12T23:30:00Z"), ZoneId.of("UTC"))
+    Scratch.scoped("graft_job") { dir =>
+      val out = runJob(dir, "Symbol\nAAPL\nMSFT\nbrk.b\nAAPL\n")
 
-    def fetch(t: String): Sources.Snapshot =
-      Sources.Snapshot(t, s"$t Co", if (t == "MSFT") "Tech" else "Fin",
-        Some(100.0 + t.length), Some(1e9), "USD", Some(20.0), Some(18.0),
-        Some(4.0), Some(4.2), Some(0.12), None, Some(30.0), None)
+      // 3 distinct tickers (AAPL deduped, brk.b normalized)
+      assert(out.count() == 3)
+      assert(out.select("ticker").collect().map(_.getString(0)).sorted.toSeq ==
+        Seq("AAPL", "BRK-B", "MSFT"))
+      // business date crossed midnight in Bangkok
+      assert(out.select("as_of_date").first().getString(0) == "2026-08-13")
 
-    val out = Job.run(spark, settings, clock, fetch,
-      html = None, csvPath = s"$dir/tickers.csv")
+      val latest = Files.readString(
+        dir.resolve("out/nasdaq100_valuations_latest.csv"))
+      val dated = Files.readString(
+        dir.resolve("out/nasdaq100_valuations_2026-08-13.csv"))
+      assert(latest == dated && latest.linesIterator.size == 4)
+      assert(latest.startsWith("as_of_date,run_ts_utc,ticker,"))
+    }
+  }
 
-    // 3 distinct tickers (AAPL deduped, brk.b normalized)
-    assert(out.count() == 3)
-    assert(out.select("ticker").collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("AAPL", "BRK-B", "MSFT"))
-    // business date crossed midnight in Bangkok
-    assert(out.select("as_of_date").first().getString(0) == "2026-08-13")
+  test("one run calls the fetcher once per distinct ticker, and acting " +
+      "on the returned frame calls it no more") {
+    Scratch.scoped("graft_job_fetch") { dir =>
+      JobSpec.fetched.clear()
+      val out = runJob(dir, "Symbol\nAAPL\nMSFT\nbrk.b\nAAPL\n")
+      assert(fetchCalls == Map("AAPL" -> 1, "BRK-B" -> 1, "MSFT" -> 1))
+      assert(out.count() == 3)
+      assert(out.collect().length == 3)
+      assert(fetchCalls == Map("AAPL" -> 1, "BRK-B" -> 1, "MSFT" -> 1))
+    }
+  }
 
-    val latest = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      s"$dir/out/nasdaq100_valuations_latest.csv"))
-    val dated = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      s"$dir/out/nasdaq100_valuations_2026-08-13.csv"))
-    assert(latest == dated && latest.linesIterator.size == 4)
-    assert(latest.startsWith("as_of_date,run_ts_utc,ticker,"))
+  test("a source with zero tickers throws before any fetch") {
+    Scratch.scoped("graft_job_empty") { dir =>
+      JobSpec.fetched.clear()
+      val e = intercept[IllegalStateException](runJob(dir, "Symbol\n"))
+      assert(e.getMessage == "no tickers resolved from any source")
+      assert(fetchCalls.isEmpty)
+      assert(!Files.exists(dir.resolve("out")))
+    }
   }
 }

@@ -27,8 +27,9 @@ class ParityGapsSpec extends SparkSpec {
     assert(content.linesIterator.toSeq == Seq("Symbol", "AAPL", "BRK-B", "MSFT"))
   }
 
-  test(".env loader: comments, quotes, export prefix, env-wins override") {
-    val env = Files.createTempDirectory("graft_env").resolve(".env")
+  test(".env loader: comments, quotes, export prefix, env-wins " +
+      "override") { Scratch.scoped("graft_env") { dir =>
+    val env = dir.resolve(".env")
     Files.writeString(env,
       """# pipeline config
         |PIPELINE_TZ=America/New_York
@@ -46,10 +47,11 @@ class ParityGapsSpec extends SparkSpec {
     // missing file → pure defaults, like python-dotenv
     val d = Settings.fromEnvFile(Paths.get("/nonexistent/.env"), env = Map.empty)
     assert(d.timezone == "Asia/Bangkok")
-  }
+  }}
 
-  test("dated run log: <prefix>_<asOfDate>.log with asctime|LEVEL|msg lines") {
-    val dir = Files.createTempDirectory("graft_log").toString
+  test("dated run log: <prefix>_<asOfDate>.log with asctime|LEVEL|msg " +
+      "lines") { Scratch.scoped("graft_log") { dirPath =>
+    val dir = dirPath.toString
     val log = RunLog.dated(dir, "pipeline", "2026-08-13", clock, echo = false)
     log.info("Starting pipeline")
     log.warning("something odd")
@@ -59,10 +61,10 @@ class ParityGapsSpec extends SparkSpec {
     assert(lines == Seq(
       "2026-08-12 23:30:00,000 | INFO | Starting pipeline",
       "2026-08-12 23:30:00,000 | WARNING | something odd"))
-  }
+  }}
 
-  test("job with logDir + driveRoot writes the log and upserts the CSV") {
-    val dir = Files.createTempDirectory("graft_job2").toString
+  test("job with logDir + driveRoot writes the log and upserts the " +
+      "CSV") { Scratch.scoped("graft_job2") { dir =>
     Files.writeString(Paths.get(s"$dir/tickers.csv"), "Symbol\nAAPL\nMSFT\n")
     val settings = Settings(outputDir = s"$dir/out",
       logDir = Some(s"$dir/logs"))
@@ -70,7 +72,7 @@ class ParityGapsSpec extends SparkSpec {
       Sources.Snapshot(t, s"$t Co", "Tech", Some(100.0), Some(1e9), "USD",
         Some(20.0), Some(18.0), Some(4.0), Some(4.2), Some(0.12), None,
         Some(30.0), None)
-    val root = Files.createTempDirectory("graft_job2_drive")
+    val root = Files.createDirectories(dir.resolve("drive"))
 
     Job.run(spark, settings, clock, fetch, html = None,
       csvPath = s"$dir/tickers.csv", driveRoot = Some(root))
@@ -96,13 +98,12 @@ class ParityGapsSpec extends SparkSpec {
       csvPath = s"$dir/tickers.csv", driveRoot = Some(root))
     assert(LocalDrive.listEntries(root)
       .count(_.name == "nasdaq100_valuations_latest.csv") == 1)
-  }
+  }}
 
   test("drive auth dispatch: oauth cached-token flow (reuse / refresh " +
       "/ mint) and the two missing-file failures — load_drive.py:26-82") {
-    import java.nio.file.Files
+      Scratch.scoped("graft_auth") { dir =>
     import graft.sources.DriveAuth
-    val dir = Files.createTempDirectory("graft_auth")
     val client = dir.resolve("client.json")
     Files.writeString(client, """{"client_id":"graft-local"}""")
     val token = dir.resolve("cache").resolve("oauth_token.tsv")
@@ -159,5 +160,5 @@ class ParityGapsSpec extends SparkSpec {
     val svc = DriveAuth.getDriveAuth("", serviceAccountFile = Some(key),
       now = t0)
     assert(svc.mode === "service_account" && svc.refreshToken.isEmpty)
-  }
+  }}
 }

@@ -28,13 +28,25 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.tickersFromHtml(spark, htmlPage(85, "NotATicker")).isEmpty)
   }
 
-  test("S2 + fallback: CSV symbol column (case-insensitive), else first column") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+  test("S2 + fallback: CSV symbol column (case-insensitive), else first " +
+      "column") { Scratch.scoped("graft_csv") { dir =>
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/t.csv"),
       "SYMBOL,Name\naapl,Apple\nbrk.b,Berkshire\naapl,Dup\n")
     val got = Sources.loadTickers(spark, html = None, csvFallback = s"$dir/t.csv")
       .collect().map(_.getString(0)).toSeq
     assert(got == Seq("AAPL", "BRK-B"))
+  }}
+
+  test("collectLocal keeps rows, order and schema, and the local frame's " +
+      "collect and emptiness check plan a LocalTableScan (no job)") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    val src = Seq("b", "c", "a").toDF("t").orderBy("t")
+    val local = Sources.collectLocal(src)
+    assert(local.schema == src.schema)
+    assert(local.collect().map(_.getString(0)).toSeq == Seq("a", "b", "c"))
+    for (df <- Seq(local, local.select().limit(1)))
+      assert(df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        df.queryExecution.executedPlan.treeString)
   }
 
   test("S3: per-partition snapshot fetch, failures degrade to empty rows") {
@@ -206,14 +218,14 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S4: single-file ordered CSV sink writes one exact file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_out").toString
+      Scratch.scoped("graft_out") { dir =>
     val df = Seq((2, "b"), (1, "a")).toDF("k", "v").orderBy("k")
     Sources.writeSingleCsv(df, s"$dir/out.csv")
     val content = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$dir/out.csv"))
     assert(content == "k,v\n1,a\n2,b\n")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/out.csv.tmpdir")))
-  }
+  }}
 
   test("httpSplit: status/headers/body; body keeps blank lines; edges -> None") {
     val ok = Sources.httpSplit(

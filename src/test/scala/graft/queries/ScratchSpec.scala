@@ -7,7 +7,7 @@ import graft.{Scratch, SparkSpec}
 
 /** `Scratch.scoped` lends a fresh dir under the scratch base and deletes
   * it on every exit; a helper that stages through scopes leaves nothing
-  * behind when its write fails. */
+  * behind when its write fails; the base holds this JVM's dirs only. */
 class ScratchSpec extends SparkSpec {
 
   private def entries(): Set[String] =
@@ -58,6 +58,20 @@ class ScratchSpec extends SparkSpec {
       assert(Files.isDirectory(o), "the inner scope must not touch the outer")
     }
     assert(!Files.exists(outer))
+  }
+
+  test("the base is this JVM's own: a dir leaked into it is listed, " +
+      "another JVM's base beside it is not") {
+    assert(Scratch.base.getFileName.toString
+      .startsWith(s"jvm-${ProcessHandle.current.pid}-"))
+    val before = entries()
+    val other = Files.createTempDirectory(Scratch.base.getParent, "jvm-other-")
+    val leaked = Files.createTempDirectory(Scratch.base, "graft_spec_leak")
+    try {
+      Files.createDirectory(other.resolve("graft_other_run"))
+      assert(entries() -- before == Set(leaked.getFileName.toString))
+    } finally Seq(other, leaked).foreach(
+      graft.streaming.StreamingResidue.deleteRecursively)
   }
 
   test("a staging write that fails on a task leaves the scratch base " +
