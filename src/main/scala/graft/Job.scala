@@ -42,14 +42,16 @@ object Job {
 
     // each stage runs once and hands the next a local frame, so every
     // perf line times the stage it names, the fetcher is called once per
-    // ticker, and the dated copy is a byte copy of the latest file
+    // ticker, and the dated copy is a byte copy of the latest file.
+    // The fundamentals are driver-sized, so the transform plans them as
+    // one partition: its window, medians and sort need no exchange.
     val tickers = Perf.timed("extract_tickers")(
       Sources.loadTickers(spark, html, csvPath))
     val fundamentals = Perf.timed("fetch_fundamentals")(
       Sources.collectLocal(Sources.fetchSnapshots(tickers, fetch)))
     val out = Perf.timed("transform_valuation")(Sources.collectLocal(
-      Pipeline.run(fundamentals, col("ticker"), settings.thresholds, asOf, ts)
-        .orderBy("ticker")))
+      Pipeline.run(fundamentals.coalesce(1), col("ticker"),
+        settings.thresholds, asOf, ts).orderBy("ticker")))
 
     val latestPath = s"${settings.outputDir}/${settings.latestName}"
     Perf.timed("load_csv") {

@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Valuation => V, ValuationThresholds}
@@ -21,35 +22,39 @@ object Pipeline {
   def applyValuation(df: DataFrame,
       th: ValuationThresholds = ValuationThresholds()): DataFrame = {
     val enriched = SectorStats.enrich(df)
-    val withScalars = enriched
-      .withColumn("graham_value",
-        V.grahamValue(col("trailing_eps"), col("book_value_per_share")))
-      .withColumn("peg_ratio_source",
-        V.pegSource(col("peg_ratio"), col("trailing_pe"), col("earnings_growth")))
-      .withColumn("peg_ratio",
-        V.pegValue(col("peg_ratio"), col("trailing_pe"), col("earnings_growth")))
-      .withColumn("fair_value",
+    // one projection per dependency layer (each layer reads only the
+    // columns of the layers before it); ListMap keeps the column order
+    // the reference's chained assignments produce
+    val scalars = enriched.withColumns(ListMap(
+      "graham_value" ->
+        V.grahamValue(col("trailing_eps"), col("book_value_per_share")),
+      "peg_ratio_source" ->
+        V.pegSource(col("peg_ratio"), col("trailing_pe"), col("earnings_growth")),
+      "peg_ratio" ->
+        V.pegValue(col("peg_ratio"), col("trailing_pe"), col("earnings_growth"))))
+    val fair = scalars.withColumns(ListMap(
+      "fair_value" ->
         V.fairValue(col("graham_value"), col("target_mean_price"),
           col("trailing_eps"), col("pe_median_used"),
-          col("forward_eps"), col("fpe_median_used")))
-      .withColumn("fair_value_source",
+          col("forward_eps"), col("fpe_median_used")),
+      "fair_value_source" ->
         V.fairValueSource(col("graham_value"), col("target_mean_price"),
           col("trailing_eps"), col("pe_median_used"),
-          col("forward_eps"), col("fpe_median_used")))
-      .withColumn("margin_of_safety",
-        V.marginOfSafety(col("graham_value"), col("price")))
-    withScalars
-      .withColumn("peg_pass", V.pegPass(col("peg_ratio"), th))
-      .withColumn("pe_vs_sector_pass",
-        V.peVsSectorPass(col("trailing_pe"), col("pe_median_used"), th))
-      .withColumn("margin_of_safety_pass",
-        V.marginOfSafetyPass(col("margin_of_safety"), th))
-      .withColumn("valuation_hunter",
+          col("forward_eps"), col("fpe_median_used")),
+      "margin_of_safety" ->
+        V.marginOfSafety(col("graham_value"), col("price"))))
+    val passes = fair.withColumns(ListMap(
+      "peg_pass" -> V.pegPass(col("peg_ratio"), th),
+      "pe_vs_sector_pass" ->
+        V.peVsSectorPass(col("trailing_pe"), col("pe_median_used"), th),
+      "margin_of_safety_pass" ->
+        V.marginOfSafetyPass(col("margin_of_safety"), th)))
+    passes.withColumns(ListMap(
+      "valuation_hunter" ->
         V.valuationHunter(col("peg_pass"), col("pe_vs_sector_pass"),
-          col("margin_of_safety_pass")))
-      .withColumn("valuation",
-        V.classifyValuation(col("price"), col("fair_value"), th))
-      .withColumn("pct_diff", V.pctDiff(col("price"), col("fair_value")))
+          col("margin_of_safety_pass")),
+      "valuation" -> V.classifyValuation(col("price"), col("fair_value"), th),
+      "pct_diff" -> V.pctDiff(col("price"), col("fair_value"))))
       // drop BOTH forward-PE intermediates: the reference's output has
       // exactly the 29 ordered columns (`pipeline_job.py:22-61`) and
       // never materializes forward-PE medians; keeping sector_median_fpe
@@ -73,12 +78,11 @@ object Pipeline {
     "target_mean_price")
 
   def buildOutput(df: DataFrame, asOfDate: String, runTsUtc: String): DataFrame = {
-    val stamped = df
-      .withColumn("as_of_date", lit(asOfDate))
-      .withColumn("run_ts_utc", lit(runTsUtc))
-    val present = orderedCols.filter(stamped.columns.contains)
-    val rest = stamped.columns.filterNot(orderedCols.contains)
-    stamped.select((present ++ rest).map(col): _*)
+    val stamps = Map("as_of_date" -> lit(asOfDate), "run_ts_utc" -> lit(runTsUtc))
+    val present = orderedCols.filter(c => stamps.contains(c) || df.columns.contains(c))
+    val rest = df.columns.filterNot(orderedCols.contains)
+    df.select(present.map(c => stamps.get(c).fold(col(c))(_.as(c))) ++
+      rest.map(col): _*)
   }
 
   /** Full pipeline: raw fundamentals snapshot → 28-column valuation table.

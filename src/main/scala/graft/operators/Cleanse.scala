@@ -1,5 +1,6 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -45,15 +46,17 @@ object Cleanse {
       .withColumn("ticker", Valuation.normalizeTicker(col("ticker")))
       .filter(col("ticker").isNotNull && col("ticker") =!= "")
     val deduped = keepFirst(normalized, "ticker", order)
-    val coerced = numericCols.foldLeft(deduped) { (d, c) =>
-      if (d.columns.contains(c)) d.withColumn(c, Valuation.safeDouble(col(c))) else d
-    }
-    coerced
-      .withColumn("price", when(col("price") <= 0, lit(null).cast("double"))
-        .otherwise(col("price")))
-      .withColumn("market_cap", when(col("market_cap") <= 0, lit(null).cast("double"))
-        .otherwise(col("market_cap")))
-      .withColumn("sector", when(col("sector").isNull || col("sector") === "",
-        lit("Unknown")).otherwise(col("sector")))
+    // one projection per dependency layer: the fix-ups read the coerced
+    // columns, so they are a second projection over the first
+    val coerced = deduped.withColumns(ListMap.from(
+      numericCols.filter(deduped.columns.contains)
+        .map(c => c -> Valuation.safeDouble(col(c)))))
+    coerced.withColumns(ListMap(
+      "price" -> when(col("price") <= 0, lit(null).cast("double"))
+        .otherwise(col("price")),
+      "market_cap" -> when(col("market_cap") <= 0, lit(null).cast("double"))
+        .otherwise(col("market_cap")),
+      "sector" -> when(col("sector").isNull || col("sector") === "",
+        lit("Unknown")).otherwise(col("sector"))))
   }
 }

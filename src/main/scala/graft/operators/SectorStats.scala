@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sector-median statistics (SURVEY.md §2.5 A1/A2 + §2.6 J1/J2/J3):
@@ -48,10 +49,11 @@ object SectorStats {
 
     df.join(broadcast(perSector), Seq("sector"), "left")
       .crossJoin(broadcast(overall))
-      .withColumn("pe_median_used",
-        coalesce(col("sector_median_pe"), col("overall_median_pe")))
-      .withColumn("fpe_median_used",
-        coalesce(col("sector_median_fpe"), col("overall_median_fpe")))
+      .withColumns(ListMap(
+        "pe_median_used" ->
+          coalesce(col("sector_median_pe"), col("overall_median_pe")),
+        "fpe_median_used" ->
+          coalesce(col("sector_median_fpe"), col("overall_median_fpe"))))
       .drop("overall_median_pe", "overall_median_fpe")
   }
 }

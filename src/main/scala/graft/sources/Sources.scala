@@ -126,9 +126,12 @@ object Sources extends org.apache.spark.internal.Logging {
   }
 
   /** E10 + F1 + D2 + O1 over a 1-column ticker frame
-    * (`extract_tickers.py:39-41`). */
+    * (`extract_tickers.py:39-41`). A ticker list is driver-sized, so it
+    * is planned as one partition: the distinct and the sort then need
+    * no exchange, and the whole resolve is one job. */
   private def normalize(df: DataFrame): DataFrame =
-    df.select(Valuation.normalizeTicker(col("ticker")).as("ticker"))
+    df.coalesce(1)
+      .select(Valuation.normalizeTicker(col("ticker")).as("ticker"))
       .filter(col("ticker").isNotNull && col("ticker") =!= "")
       .distinct()
       .orderBy("ticker")
@@ -783,15 +786,20 @@ object Sources extends org.apache.spark.internal.Logging {
     */
   def writeSingleCsv(df: DataFrame, path: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
     val tmp = path + ".tmpdir"
     df.coalesce(1).write.mode("overwrite").option("header", true).csv(tmp)
-    val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-      .find(p => p.endsWith(".csv"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
+    val part = Using.resource(Files.list(Paths.get(tmp))) { s =>
+      s.iterator().asScala.map(_.toString).find(_.endsWith(".csv"))
+        .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
+    }
     Files.createDirectories(Paths.get(path).toAbsolutePath.getParent)
     Files.move(Paths.get(part), Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
     // clean the temp dir (part checksums etc.)
-    Files.walk(Paths.get(tmp)).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    Using.resource(Files.walk(Paths.get(tmp))) { s =>
+      s.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+    }
   }
 }

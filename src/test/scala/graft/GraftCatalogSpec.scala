@@ -7,10 +7,10 @@ import java.nio.file.Files
   * copy-on-write DELETE / UPDATE / MERGE INTO through
   * SupportsRowLevelOperations, TRUNCATE-overwrite, value fidelity
   * (tabs/newlines/nulls/exact doubles), and staged-file hygiene. */
-class GraftCatalogSpec extends SparkSpec {
+class GraftCatalogSpec extends SparkSpec with SuiteScratch {
 
   private lazy val root = {
-    val r = Files.createTempDirectory("graft_catalog_spec")
+    val r = suiteScratch
     spark.conf.set("spark.sql.catalog.graftrl",
       "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graftrl.root", r.toString)
@@ -582,46 +582,46 @@ class GraftCatalogSpec extends SparkSpec {
     root
     import org.apache.spark.sql.streaming.Trigger
     spark.sql("CREATE TABLE graftrl.db.cs (k BIGINT, seg STRING, v BIGINT)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cs_ckpt")
-    def drain(skipChanges: Boolean = false): (Long, Int) = {
-      val name = s"cs_sink_${System.nanoTime()}"
-      val r = spark.readStream
-      if (skipChanges) r.option("skipChangeCommits", "true")
-      val q = r.table("graftrl.db.cs")
-        .groupBy().agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()).start()
-      try {
-        q.awaitTermination()
-        val n = rows(spark.table(name)).head.getLong(0)
-        val fed = q.recentProgress.count(_.numInputRows > 0)
-        (n, fed)
-      } finally { q.stop(); spark.catalog.dropTempView(name) }
+    Scratch.scoped("graft_cs_ckpt") { ckpt =>
+      def drain(skipChanges: Boolean = false): (Long, Int) = {
+        val name = s"cs_sink_${System.nanoTime()}"
+        val r = spark.readStream
+        if (skipChanges) r.option("skipChangeCommits", "true")
+        val q = r.table("graftrl.db.cs")
+          .groupBy().agg(org.apache.spark.sql.functions.count(
+            org.apache.spark.sql.functions.lit(1)).as("n"))
+          .writeStream.format("memory").queryName(name)
+          .outputMode("complete")
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow()).start()
+        try {
+          q.awaitTermination()
+          val n = rows(spark.table(name)).head.getLong(0)
+          val fed = q.recentProgress.count(_.numInputRows > 0)
+          (n, fed)
+        } finally { q.stop(); spark.catalog.dropTempView(name) }
+      }
+      spark.sql("INSERT INTO graftrl.db.cs VALUES (1,'a',10), (2,'a',20)")
+      spark.sql("INSERT INTO graftrl.db.cs VALUES (3,'b',30)")
+      // one micro-batch per version, all appended rows served
+      assert(drain() == ((3L, 2)))
+      // a resume sees ONLY the new version
+      spark.sql("INSERT INTO graftrl.db.cs VALUES (4,'b',40)")
+      assert(drain() == ((4L, 1)))
+      // a change commit (UPDATE rewrites a group) refuses loudly...
+      spark.sql("UPDATE graftrl.db.cs SET v = v + 1 WHERE k = 1")
+      val ex = intercept[Exception] { drain() }
+      def chain(t: Throwable): Seq[Throwable] =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain(ex).exists(t => Option(t.getMessage)
+        .exists(_.contains("append-only"))), s"got: $ex")
+      // ...unless skipChangeCommits opts in; later appends still arrive
+      spark.sql("INSERT INTO graftrl.db.cs VALUES (5,'c',50)")
+      val (n2, _) = drain(skipChanges = true)
+      // the skipped change commit contributes nothing; the new insert
+      // and nothing else lands on top of the 4 already-counted rows
+      assert(n2 == 5L, s"expected 4 prior + 1 appended, got $n2")
     }
-    spark.sql("INSERT INTO graftrl.db.cs VALUES (1,'a',10), (2,'a',20)")
-    spark.sql("INSERT INTO graftrl.db.cs VALUES (3,'b',30)")
-    // one micro-batch per version, all appended rows served
-    assert(drain() == ((3L, 2)))
-    // a resume sees ONLY the new version
-    spark.sql("INSERT INTO graftrl.db.cs VALUES (4,'b',40)")
-    assert(drain() == ((4L, 1)))
-    // a change commit (UPDATE rewrites a group) refuses loudly...
-    spark.sql("UPDATE graftrl.db.cs SET v = v + 1 WHERE k = 1")
-    val ex = intercept[Exception] { drain() }
-    def chain(t: Throwable): Seq[Throwable] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
-    assert(chain(ex).exists(t => Option(t.getMessage)
-      .exists(_.contains("append-only"))), s"got: $ex")
-    // ...unless skipChangeCommits opts in; later appends still arrive
-    spark.sql("INSERT INTO graftrl.db.cs VALUES (5,'c',50)")
-    val (n2, _) = drain(skipChanges = true)
-    // the skipped change commit contributes nothing; the new insert
-    // and nothing else lands on top of the 4 already-counted rows
-    assert(n2 == 5L, s"expected 4 prior + 1 appended, got $n2")
-    graft.streaming.StreamingResidue.deleteRecursively(ckpt)
   }
 
   test("typed stats pruning: DOUBLE and STRING predicates prune group " +

@@ -15,6 +15,72 @@ class LocalDriveSpec extends SparkSpec {
     p
   }
 
+  test("the driver-inferred payload schema and rows equal the inferSchema " +
+      "reader's") {
+    Scratch.scoped("graft_drive_infer") { root =>
+      def file(name: String, text: String): Path = {
+        val p = root.resolve(name); Files.writeString(p, text); p
+      }
+      def gzip(name: String, text: String): Path = {
+        val p = root.resolve(name)
+        scala.util.Using.resource(new java.util.zip.GZIPOutputStream(
+          Files.newOutputStream(p)))(_.write(text.getBytes("UTF-8")))
+        p
+      }
+      val split = ("n,x,ts,name\n" +: (1 to 40).map { i =>
+        val x = if (i <= 20) s"$i" else s"$i.5"
+        val ts = if (i <= 20) f"2026-01-$i%02d 10:00:00" else "2026-02-01"
+        s"""$i,$x,$ts,"r$i, x"\n"""
+      }).mkString
+      val splitTypes = Map("n" -> "int", "x" -> "double",
+        "ts" -> "timestamp", "name" -> "string")
+      Job.run(spark, Settings(outputDir = s"$root/job"),
+        java.time.Clock.fixed(java.time.Instant.parse("2026-08-12T23:30:00Z"),
+          java.time.ZoneId.of("UTC")),
+        JobSpec.fetch, html = None,
+        csvPath = file("tickers.csv", "Symbol\nAAPL\nMSFT\nbrk.b\n").toString)
+      def matchesReader(csv: Path, types: Map[String, String],
+          name: String): Unit = {
+        val reader = spark.read.option("header", true)
+          .option("inferSchema", true).csv(csv.toString)
+        val inferred = LocalDrive.inferCsvSchema(spark, csv)
+        assert(inferred === reader.schema, csv)
+        types.foreach { case (c, t) =>
+          assert(inferred(c).dataType.simpleString === t, s"$csv: $c")
+        }
+        val id = LocalDrive.uploadCsv(spark, csv, root, name)
+        val payload = spark.read.parquet(
+          LocalDrive.payloadPath(root, id, LocalDrive.SheetMime).toString)
+        assert(payload.schema === reader.schema, csv)
+        assert(payload.collect().toSeq === reader.collect().toSeq, csv)
+      }
+      val fixtures = Seq(
+        root.resolve("job/nasdaq100_valuations_latest.csv") ->
+          Map("as_of_date" -> "date", "run_ts_utc" -> "timestamp",
+            "price" -> "double", "ticker" -> "string"),
+        file("mixed.csv", "n,flag,name,empty,big\n" +
+          "1,true,\"Smith, J\",,12345678901\n" +
+          "2,false,\"a \"\"b\"\", c\",,3\n") ->
+          Map("n" -> "int", "flag" -> "boolean", "name" -> "string",
+            "empty" -> "string", "big" -> "bigint"),
+        file("header_only.csv", "a,b\n") ->
+          Map("a" -> "string", "b" -> "string"),
+        // the reader decompresses this one
+        gzip("split.csv.gz", split) -> splitTypes)
+      fixtures.zipWithIndex.foreach { case ((csv, types), i) =>
+        matchesReader(csv, types, s"sheet$i.csv")
+      }
+      // read as one split, then split by the reader, which merges
+      // per-split types
+      val plain = file("split.csv", split)
+      matchesReader(plain, splitTypes, "whole_sheet.csv")
+      Conf.scoped(spark)("spark.sql.files.maxPartitionBytes" -> "256") {
+        assert(spark.read.csv(plain.toString).rdd.getNumPartitions > 1)
+        matchesReader(plain, splitTypes, "split_sheet.csv")
+      }
+    }
+  }
+
   test("create then update-in-place keeps the same file id") {
     Scratch.scoped("graft_drive") { root =>
       val src1 = csvFile(root, "src1.csv", Seq("1,x", "2,y"))

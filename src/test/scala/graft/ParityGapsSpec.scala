@@ -16,15 +16,17 @@ class ParityGapsSpec extends SparkSpec {
     Clock.fixed(Instant.parse("2026-08-12T23:30:00Z"), ZoneId.of("UTC"))
 
   test("ticker refresh writes a Symbol-headed sorted unique CSV") {
-    val dir = Files.createTempDirectory("graft_refresh").toString
-    Files.writeString(Paths.get(s"$dir/fallback.csv"),
-      "Ticker\nmsft\nAAPL\nbrk.b\nMSFT\n\n")
-    val n = TickerRefresh.refresh(spark, html = None,
-      csvFallback = s"$dir/fallback.csv", outputPath = s"$dir/tickers.csv")
-    assert(n == 3)
-    val content = Files.readString(Paths.get(s"$dir/tickers.csv"))
-    // header exactly `Symbol`, rows normalized + deduped + sorted
-    assert(content.linesIterator.toSeq == Seq("Symbol", "AAPL", "BRK-B", "MSFT"))
+    Scratch.scoped("graft_refresh") { dirPath =>
+      val dir = dirPath.toString
+      Files.writeString(Paths.get(s"$dir/fallback.csv"),
+        "Ticker\nmsft\nAAPL\nbrk.b\nMSFT\n\n")
+      val n = TickerRefresh.refresh(spark, html = None,
+        csvFallback = s"$dir/fallback.csv", outputPath = s"$dir/tickers.csv")
+      assert(n == 3)
+      val content = Files.readString(Paths.get(s"$dir/tickers.csv"))
+      // header exactly `Symbol`, rows normalized + deduped + sorted
+      assert(content.linesIterator.toSeq == Seq("Symbol", "AAPL", "BRK-B", "MSFT"))
+    }
   }
 
   test(".env loader: comments, quotes, export prefix, env-wins " +

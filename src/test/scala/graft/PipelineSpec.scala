@@ -9,28 +9,34 @@ import org.apache.spark.sql.functions._
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  test("full pipeline on a hand-computed fixture") {
-    // (ord, ticker, company, sector, price, mcap, currency, tpe, fpe,
-    //  teps, feps, growth, peg, bvps, target)
-    val raw = Seq(
-      // AAA: graham path. graham = sqrt(22.5*4*20) = sqrt(1800) ≈ 42.426
-      // price 40 < graham → mos > 0; peg derived = 20/(0.5*100) = 0.4
-      (1L, "aaa", "Alpha", "Tech", 40.0, 1e9, "USD",
-        Some(20.0), Some(18.0), Some(4.0), Some(4.5), Some(0.5), None: Option[Double], Some(20.0), None: Option[Double]),
-      // BBB: no graham (eps<0) → target path; peg reported 0.8
-      (2L, "bbb", "Beta", "Tech", 100.0, 2e9, "USD",
-        Some(30.0), Some(25.0), Some(-1.0), Some(2.0), Some(10.0), Some(0.8), Some(10.0), Some(120.0)),
-      // CCC: no graham/target → sector-median-trailing-pe path:
-      // fair = teps * median_pe(Fin) = 2 * 15
-      (3L, "ccc", "Fin", "Fin", 25.0, 5e8, "USD",
-        Some(15.0), Some(12.0), Some(2.0), Some(2.2), None, None, None, None),
-      // DDD: everything missing → unknown ladder
-      (4L, "ddd", "Delta", "", -5.0, 0.0, "USD",
-        None, None, None, None, None, None, None, None)
-    ).toDF("ord", "ticker", "company", "sector", "price", "market_cap",
-      "currency", "trailing_pe", "forward_pe", "trailing_eps", "forward_eps",
-      "earnings_growth", "peg_ratio", "book_value_per_share", "target_mean_price")
+  // (ord, ticker, company, sector, price, mcap, currency, tpe, fpe,
+  //  teps, feps, growth, peg, bvps, target)
+  private lazy val raw = Seq(
+    // AAA: graham path. graham = sqrt(22.5*4*20) = sqrt(1800) ≈ 42.426
+    // price 40 < graham → mos > 0; peg derived = 20/(0.5*100) = 0.4
+    (1L, "aaa", "Alpha", "Tech", 40.0, 1e9, "USD",
+      Some(20.0), Some(18.0), Some(4.0), Some(4.5), Some(0.5), None: Option[Double], Some(20.0), None: Option[Double]),
+    // BBB: no graham (eps<0) → target path; peg reported 0.8
+    (2L, "bbb", "Beta", "Tech", 100.0, 2e9, "USD",
+      Some(30.0), Some(25.0), Some(-1.0), Some(2.0), Some(10.0), Some(0.8), Some(10.0), Some(120.0)),
+    // CCC: no graham/target → sector-median-trailing-pe path:
+    // fair = teps * median_pe(Fin) = 2 * 15
+    (3L, "ccc", "Fin", "Fin", 25.0, 5e8, "USD",
+      Some(15.0), Some(12.0), Some(2.0), Some(2.2), None, None, None, None),
+    // DDD: everything missing → unknown ladder
+    (4L, "ddd", "Delta", "", -5.0, 0.0, "USD",
+      None, None, None, None, None, None, None, None)
+  ).toDF("ord", "ticker", "company", "sector", "price", "market_cap",
+    "currency", "trailing_pe", "forward_pe", "trailing_eps", "forward_eps",
+    "earnings_growth", "peg_ratio", "book_value_per_share", "target_mean_price")
 
+  test("output columns are exactly the 29 ordered columns, in order") {
+    val out = Pipeline.run(raw.drop("ord"), col("ticker"))
+    assert(Pipeline.orderedCols.length == 29)
+    assert(out.columns.toSeq == Pipeline.orderedCols)
+  }
+
+  test("full pipeline on a hand-computed fixture") {
     val out = Pipeline.run(raw, col("ord"), asOfDate = "2026-08-12",
       runTsUtc = "2026-08-12T00:00:00Z")
     val rows = out.collect().map(r => r.getAs[String]("ticker") -> r).toMap

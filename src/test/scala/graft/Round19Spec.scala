@@ -13,10 +13,10 @@ import graft.sources.{GraftCatalog, GraftCatalogTestHook => Hook}
   * into the catalog with exactly-once epoch replay, MERGE SCHEMA
   * EVOLUTION (auto-widen), explicit `#ts` commit headers, and the
   * tag-vs-retention retraction. */
-class Round19Spec extends SparkSpec {
+class Round19Spec extends SparkSpec with SuiteScratch {
 
   private lazy val root = {
-    val r = Files.createTempDirectory("graft_r19_spec")
+    val r = suiteScratch
     spark.conf.set("spark.sql.catalog.g19", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.g19.root", r.toString)
     r
@@ -136,56 +136,56 @@ class Round19Spec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     spark.sql("CREATE TABLE g19.db.ssrc (k BIGINT, v BIGINT)")
     spark.sql("CREATE TABLE g19.db.ssink (k BIGINT, v BIGINT)")
-    val ck = Files.createTempDirectory("graft_r19_ck")
-    def drain(fromCk: Path): Unit = {
-      val q = spark.readStream.table("g19.db.ssrc")
-        .writeStream.option("checkpointLocation", fromCk.toString)
-        .trigger(Trigger.AvailableNow())
-        .toTable("g19.db.ssink")
-      try q.awaitTermination() finally q.stop()
-    }
-    spark.sql("INSERT INTO g19.db.ssrc SELECT id, id * 2 FROM range(0, 5)")
-    drain(ck)
-    assert(sqlRows("SELECT k, v FROM g19.db.ssink ORDER BY k") ==
-      (0L until 5L).map(i => Seq(i, i * 2)))
-    // the epoch marker rode the SAME manifest publish as the rows
-    val sink = dir("ssink")
-    val v1meta = Hook.manifestMeta(sink, Hook.manifestVersions(sink).max)
-    assert(v1meta.contains("txn") && v1meta.contains("ts"),
-      s"streaming commit must stamp txn+ts headers: $v1meta")
-    // stale-checkpoint replay: copy the checkpoint BEFORE batch 2,
-    // drain batch 2 through the live checkpoint, then restart from
-    // the stale copy — Spark replans the same epoch with the same
-    // data, and the txn marker must swallow the duplicate
-    val ckStale = Files.createTempDirectory("graft_r19_ck_stale")
-    def copyTree(from: Path, to: Path): Unit =
-      scala.util.Using.resource(Files.walk(from)) { s =>
-        s.forEach { p =>
-          val d = to.resolve(from.relativize(p).toString)
-          if (Files.isDirectory(p)) Files.createDirectories(d)
-          else { Files.createDirectories(d.getParent); Files.copy(p, d) }
-        }
+    Scratch.scoped("graft_r19_ck") { ck =>
+      def drain(fromCk: Path): Unit = {
+        val q = spark.readStream.table("g19.db.ssrc")
+          .writeStream.option("checkpointLocation", fromCk.toString)
+          .trigger(Trigger.AvailableNow())
+          .toTable("g19.db.ssink")
+        try q.awaitTermination() finally q.stop()
       }
-    copyTree(ck, ckStale)
-    spark.sql("INSERT INTO g19.db.ssrc SELECT id, id * 2 FROM range(5, 8)")
-    drain(ck) // live: commits epoch 1 with rows 5..7
-    assert(sqlRows("SELECT count(*) FROM g19.db.ssink").head.head == 8L)
-    drain(ckStale) // replays epoch 1 → marker present → skipped
-    assert(sqlRows("SELECT count(*) FROM g19.db.ssink").head.head == 8L,
-      "replayed epoch must not double-append")
-    assert(sqlRows("SELECT k, v FROM g19.db.ssink ORDER BY k") ==
-      (0L until 8L).map(i => Seq(i, i * 2)),
-      "sink must equal the one-shot batch content exactly once")
-    // hygiene: the replay's re-staged files were deleted, every
-    // data file on disk is manifest-bound
-    val referenced = Hook.manifestVersions(sink)
-      .flatMap(v => Hook.manifestFiles(sink, v)).toSet
-    val onDisk = Option(sink.toFile.listFiles()).get
-      .map(_.getName).filter(n => n.startsWith("data-")).toSet
-    assert(onDisk == referenced,
-      s"orphaned streaming files: ${onDisk -- referenced}")
-    graft.streaming.StreamingResidue.deleteRecursively(ck)
-    graft.streaming.StreamingResidue.deleteRecursively(ckStale)
+      spark.sql("INSERT INTO g19.db.ssrc SELECT id, id * 2 FROM range(0, 5)")
+      drain(ck)
+      assert(sqlRows("SELECT k, v FROM g19.db.ssink ORDER BY k") ==
+        (0L until 5L).map(i => Seq(i, i * 2)))
+      // the epoch marker rode the SAME manifest publish as the rows
+      val sink = dir("ssink")
+      val v1meta = Hook.manifestMeta(sink, Hook.manifestVersions(sink).max)
+      assert(v1meta.contains("txn") && v1meta.contains("ts"),
+        s"streaming commit must stamp txn+ts headers: $v1meta")
+      // stale-checkpoint replay: copy the checkpoint BEFORE batch 2,
+      // drain batch 2 through the live checkpoint, then restart from
+      // the stale copy — Spark replans the same epoch with the same
+      // data, and the txn marker must swallow the duplicate
+      Scratch.scoped("graft_r19_ck_stale") { ckStale =>
+        def copyTree(from: Path, to: Path): Unit =
+          scala.util.Using.resource(Files.walk(from)) { s =>
+            s.forEach { p =>
+              val d = to.resolve(from.relativize(p).toString)
+              if (Files.isDirectory(p)) Files.createDirectories(d)
+              else { Files.createDirectories(d.getParent); Files.copy(p, d) }
+            }
+          }
+        copyTree(ck, ckStale)
+        spark.sql("INSERT INTO g19.db.ssrc SELECT id, id * 2 FROM range(5, 8)")
+        drain(ck) // live: commits epoch 1 with rows 5..7
+        assert(sqlRows("SELECT count(*) FROM g19.db.ssink").head.head == 8L)
+        drain(ckStale) // replays epoch 1 → marker present → skipped
+        assert(sqlRows("SELECT count(*) FROM g19.db.ssink").head.head == 8L,
+          "replayed epoch must not double-append")
+        assert(sqlRows("SELECT k, v FROM g19.db.ssink ORDER BY k") ==
+          (0L until 8L).map(i => Seq(i, i * 2)),
+          "sink must equal the one-shot batch content exactly once")
+        // hygiene: the replay's re-staged files were deleted, every
+        // data file on disk is manifest-bound
+        val referenced = Hook.manifestVersions(sink)
+          .flatMap(v => Hook.manifestFiles(sink, v)).toSet
+        val onDisk = Option(sink.toFile.listFiles()).get
+          .map(_.getName).filter(n => n.startsWith("data-")).toSet
+        assert(onDisk == referenced,
+          s"orphaned streaming files: ${onDisk -- referenced}")
+      }
+    }
   }
 
   test("MERGE schema evolution: widenForMerge appends missing source " +
@@ -365,53 +365,54 @@ class Round19Spec extends SparkSpec {
         s"FROM range(${r * 2500}, ${r * 2500 + 2500}, 1, 1)")
     // the dim must be a REAL scan (a local Seq folds to a
     // LocalRelation and the selective Filter DPP keys on disappears)
-    val dimDir = Files.createTempDirectory("graft_r19_dfp_dim")
-    locally {
-      import spark.implicits._
-      (0L until 10000L).map(k => (k, if (k < 2500) "hot" else "cold"))
-        .toDF("k", "tag").write.mode("overwrite")
-        .parquet(dimDir.toString)
-    }
-    spark.read.parquet(dimDir.toString)
-      .createOrReplaceTempView("dfp_dim")
-    val saved = spark.conf.getOption(
-      "spark.sql.optimizer.dynamicPartitionPruning.enabled")
-    try {
-      spark.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-      // the dim is the build side (DPP-via-broadcast-reuse, the
-      // default mode); the fact scan is the probe getting pruned
-      val q = spark.sql("""
-        SELECT /*+ BROADCAST(d) */ count(*) AS n, sum(f.v) AS s
-        FROM g19.db.dfp f JOIN dfp_dim d ON f.k = d.k
-        WHERE d.tag = 'hot'""")
-      val got = q.collect().head
-      assert(got.getLong(0) == 2500L &&
-        got.getLong(1) == (0L until 2500L).sum)
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruningexpression"),
-        s"no runtime pruning subquery in plan:\n$plan")
-      // the scan read ONE group's rows, not four: the other three
-      // groups' k-ranges provably exclude every build-side key
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-      def scanRows(p: SparkPlan): Seq[Long] = p match {
-        case qs: QueryStageExec => scanRows(qs.plan)
-        case b: BatchScanExec if b.toString.contains("graft-rl-table") =>
-          Seq(b.metrics("numOutputRows").value)
-        case _ => p.children.flatMap(scanRows)
+    Scratch.scoped("graft_r19_dfp_dim") { dimDir =>
+      locally {
+        import spark.implicits._
+        (0L until 10000L).map(k => (k, if (k < 2500) "hot" else "cold"))
+          .toDF("k", "tag").write.mode("overwrite")
+          .parquet(dimDir.toString)
       }
-      val rows = scanRows(q.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      })
-      assert(rows == Seq(2500L),
-        s"runtime file pruning should leave one 2500-row group: $rows")
-    } finally {
-      saved.foreach(v => spark.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.enabled", v))
-      spark.catalog.dropTempView("dfp_dim")
+      spark.read.parquet(dimDir.toString)
+        .createOrReplaceTempView("dfp_dim")
+      val saved = spark.conf.getOption(
+        "spark.sql.optimizer.dynamicPartitionPruning.enabled")
+      try {
+        spark.conf.set(
+          "spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
+        // the dim is the build side (DPP-via-broadcast-reuse, the
+        // default mode); the fact scan is the probe getting pruned
+        val q = spark.sql("""
+          SELECT /*+ BROADCAST(d) */ count(*) AS n, sum(f.v) AS s
+          FROM g19.db.dfp f JOIN dfp_dim d ON f.k = d.k
+          WHERE d.tag = 'hot'""")
+        val got = q.collect().head
+        assert(got.getLong(0) == 2500L &&
+          got.getLong(1) == (0L until 2500L).sum)
+        val plan = q.queryExecution.executedPlan.toString
+        assert(plan.contains("dynamicpruningexpression"),
+          s"no runtime pruning subquery in plan:\n$plan")
+        // the scan read ONE group's rows, not four: the other three
+        // groups' k-ranges provably exclude every build-side key
+        import org.apache.spark.sql.execution.SparkPlan
+        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+        import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+        def scanRows(p: SparkPlan): Seq[Long] = p match {
+          case qs: QueryStageExec => scanRows(qs.plan)
+          case b: BatchScanExec if b.toString.contains("graft-rl-table") =>
+            Seq(b.metrics("numOutputRows").value)
+          case _ => p.children.flatMap(scanRows)
+        }
+        val rows = scanRows(q.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        })
+        assert(rows == Seq(2500L),
+          s"runtime file pruning should leave one 2500-row group: $rows")
+      } finally {
+        saved.foreach(v => spark.conf.set(
+          "spark.sql.optimizer.dynamicPartitionPruning.enabled", v))
+        spark.catalog.dropTempView("dfp_dim")
+      }
     }
   }
 
@@ -524,21 +525,21 @@ class Round19Spec extends SparkSpec {
       "PARTITIONED BY (p)")
     spark.sql("INSERT INTO g19.db.pssrc SELECT id % 3, id FROM " +
       "range(0, 30)")
-    val ck = Files.createTempDirectory("graft_r19_psck")
-    val q = spark.readStream.table("g19.db.pssrc")
-      .writeStream.option("checkpointLocation", ck.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .toTable("g19.db.pssink")
-    try q.awaitTermination() finally q.stop()
-    assert(sqlRows("SELECT p, count(*) AS n FROM g19.db.pssink " +
-      "GROUP BY p ORDER BY p") ==
-      Seq(Seq(0L, 10L), Seq(1L, 10L), Seq(2L, 10L)))
-    // one group file per partition value → 3 scan partitions, and the
-    // grouped rollup above stays metadata-only on streamed data
-    assert(spark.sql("SELECT * FROM g19.db.pssink")
-      .rdd.getNumPartitions == 3,
-      "streamed partitioned layout must stay one group per value")
-    graft.streaming.StreamingResidue.deleteRecursively(ck)
+    Scratch.scoped("graft_r19_psck") { ck =>
+      val q = spark.readStream.table("g19.db.pssrc")
+        .writeStream.option("checkpointLocation", ck.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable("g19.db.pssink")
+      try q.awaitTermination() finally q.stop()
+      assert(sqlRows("SELECT p, count(*) AS n FROM g19.db.pssink " +
+        "GROUP BY p ORDER BY p") ==
+        Seq(Seq(0L, 10L), Seq(1L, 10L), Seq(2L, 10L)))
+      // one group file per partition value → 3 scan partitions, and the
+      // grouped rollup above stays metadata-only on streamed data
+      assert(spark.sql("SELECT * FROM g19.db.pssink")
+        .rdd.getNumPartitions == 3,
+        "streamed partitioned layout must stay one group per value")
+    }
   }
 
   test("tag-vs-retention race: a tag that wins publication but lost " +

@@ -12,10 +12,10 @@ import graft.sources.{GraftCatalogTestHook => Hook}
   * loop), OPTIMIZE commits through the file-disjoint rebase (a
   * concurrent append no longer discards a whole compaction run), and
   * SQL procedures refuse path-traversal table names. */
-class Round20Spec extends SparkSpec {
+class Round20Spec extends SparkSpec with SuiteScratch {
 
   private lazy val root = {
-    val r = Files.createTempDirectory("graft_r20_spec")
+    val r = suiteScratch
     spark.conf.set("spark.sql.catalog.g20", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.g20.root", r.toString)
     r
@@ -42,51 +42,51 @@ class Round20Spec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     spark.sql("CREATE TABLE g20.db.rsrc (k BIGINT, v BIGINT)")
     spark.sql("CREATE TABLE g20.db.rsink (k BIGINT, v BIGINT)")
-    val ck = Files.createTempDirectory("graft_r20_ck")
-    def drain(fromCk: Path): Unit = {
-      val q = spark.readStream.table("g20.db.rsrc")
-        .writeStream.option("checkpointLocation", fromCk.toString)
-        .trigger(Trigger.AvailableNow())
-        .toTable("g20.db.rsink")
-      try q.awaitTermination() finally q.stop()
+    Scratch.scoped("graft_r20_ck") { ck =>
+      def drain(fromCk: Path): Unit = {
+        val q = spark.readStream.table("g20.db.rsrc")
+          .writeStream.option("checkpointLocation", fromCk.toString)
+          .trigger(Trigger.AvailableNow())
+          .toTable("g20.db.rsink")
+        try q.awaitTermination() finally q.stop()
+      }
+      val sink = dir("rsink")
+      spark.sql("INSERT INTO g20.db.rsrc SELECT id, id * 3 FROM range(0, 6)")
+      drain(ck) // epoch 0 commits with its txn marker
+      // the stale copy knows epoch 0 but not epoch 1: restarting from
+      // it re-plans epoch 1 with the same data (the classic replay)
+      Scratch.scoped("graft_r20_ck_stale") { ckStale =>
+        copyTree(ck, ckStale)
+        spark.sql("INSERT INTO g20.db.rsrc SELECT id, id * 3 FROM range(6, 9)")
+        drain(ck) // epoch 1, live
+        val txn = Hook.manifestMeta(sink, Hook.manifestVersions(sink).max)("txn")
+        val qid = txn.take(txn.lastIndexOf(':'))
+        assert(Hook.lastTxnEpoch(sink, qid).contains(1L))
+        // batch commits pile on top, then retention drops every manifest
+        // but the newest — including every txn-bearing one
+        spark.sql("INSERT INTO g20.db.rsink VALUES (100, 100), (101, 101)")
+        spark.sql("INSERT INTO g20.db.rsink VALUES (102, 102)")
+        val res = Hook.expireSnapshots(sink, retainLast = 1)
+        assert(res.expiredVersions.nonEmpty, s"nothing expired: $res")
+        assert(Hook.manifestVersions(sink).forall(v =>
+          !Hook.manifestMeta(sink, v).contains("txn")),
+          "precondition: no retained manifest still carries the marker")
+        // the sidecar carries the high-water mark the expired manifests held
+        assert(Hook.readTxnSidecar(sink) == Map(qid -> 1L),
+          s"sidecar must hold the expired high-water mark: " +
+            s"${Hook.readTxnSidecar(sink)}")
+        assert(Hook.lastTxnEpoch(sink, qid).contains(1L),
+          "lastTxnEpoch must resolve from the sidecar after the expire")
+        // the e2e proof: replaying epoch 1 from the stale checkpoint now
+        // (post-expire) must be swallowed by the sidecar mark — without
+        // it, rows 6..8 would land twice
+        drain(ckStale)
+        assert(sqlRows("SELECT count(*) FROM g20.db.rsink").head.head == 12L,
+          "replayed epoch after expire must not double-append")
+        assert(sqlRows("SELECT k FROM g20.db.rsink ORDER BY k").flatten ==
+          ((0L until 9L) ++ Seq(100L, 101L, 102L)))
+      }
     }
-    val sink = dir("rsink")
-    spark.sql("INSERT INTO g20.db.rsrc SELECT id, id * 3 FROM range(0, 6)")
-    drain(ck) // epoch 0 commits with its txn marker
-    // the stale copy knows epoch 0 but not epoch 1: restarting from
-    // it re-plans epoch 1 with the same data (the classic replay)
-    val ckStale = Files.createTempDirectory("graft_r20_ck_stale")
-    copyTree(ck, ckStale)
-    spark.sql("INSERT INTO g20.db.rsrc SELECT id, id * 3 FROM range(6, 9)")
-    drain(ck) // epoch 1, live
-    val txn = Hook.manifestMeta(sink, Hook.manifestVersions(sink).max)("txn")
-    val qid = txn.take(txn.lastIndexOf(':'))
-    assert(Hook.lastTxnEpoch(sink, qid).contains(1L))
-    // batch commits pile on top, then retention drops every manifest
-    // but the newest — including every txn-bearing one
-    spark.sql("INSERT INTO g20.db.rsink VALUES (100, 100), (101, 101)")
-    spark.sql("INSERT INTO g20.db.rsink VALUES (102, 102)")
-    val res = Hook.expireSnapshots(sink, retainLast = 1)
-    assert(res.expiredVersions.nonEmpty, s"nothing expired: $res")
-    assert(Hook.manifestVersions(sink).forall(v =>
-      !Hook.manifestMeta(sink, v).contains("txn")),
-      "precondition: no retained manifest still carries the marker")
-    // the sidecar carries the high-water mark the expired manifests held
-    assert(Hook.readTxnSidecar(sink) == Map(qid -> 1L),
-      s"sidecar must hold the expired high-water mark: " +
-        s"${Hook.readTxnSidecar(sink)}")
-    assert(Hook.lastTxnEpoch(sink, qid).contains(1L),
-      "lastTxnEpoch must resolve from the sidecar after the expire")
-    // the e2e proof: replaying epoch 1 from the stale checkpoint now
-    // (post-expire) must be swallowed by the sidecar mark — without
-    // it, rows 6..8 would land twice
-    drain(ckStale)
-    assert(sqlRows("SELECT count(*) FROM g20.db.rsink").head.head == 12L,
-      "replayed epoch after expire must not double-append")
-    assert(sqlRows("SELECT k FROM g20.db.rsink ORDER BY k").flatten ==
-      ((0L until 9L) ++ Seq(100L, 101L, 102L)))
-    graft.streaming.StreamingResidue.deleteRecursively(ck)
-    graft.streaming.StreamingResidue.deleteRecursively(ckStale)
   }
 
   test("zombie-epoch race: a twin committing the same epoch between " +
@@ -96,49 +96,49 @@ class Round20Spec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     spark.sql("CREATE TABLE g20.db.zsrc (k BIGINT)")
     spark.sql("CREATE TABLE g20.db.zsink (k BIGINT)")
-    val ck = Files.createTempDirectory("graft_r20_zck")
-    val sink = dir("zsink")
-    def drain(): Unit = {
-      val q = spark.readStream.table("g20.db.zsrc")
-        .writeStream.option("checkpointLocation", ck.toString)
-        .trigger(Trigger.AvailableNow())
-        .toTable("g20.db.zsink")
-      try q.awaitTermination() finally q.stop()
-    }
-    spark.sql("INSERT INTO g20.db.zsrc SELECT id FROM range(0, 4)")
-    drain() // epoch 0: learn the query id from its marker
-    val txn = Hook.manifestMeta(sink, Hook.manifestVersions(sink).max)("txn")
-    val qid = txn.take(txn.lastIndexOf(':'))
-    spark.sql("INSERT INTO g20.db.zsrc SELECT id FROM range(10, 13)")
-    // the zombie twin: at the racy instant (base version pinned,
-    // marker scanned clean, publish not yet attempted) it commits
-    // epoch 1 itself — our publish must lose the link race and the
-    // re-loop must see the marker and stand down
-    @volatile var fired = false
-    Hook.setBeforeEpochPublish { () =>
-      if (!fired) {
-        fired = true
-        val cur = Hook.manifestVersions(sink).max
-        assert(Hook.republishWithMeta(sink, cur, cur + 1,
-          Map("txn" -> s"$qid:1")), "zombie publish must win")
+    Scratch.scoped("graft_r20_zck") { ck =>
+      val sink = dir("zsink")
+      def drain(): Unit = {
+        val q = spark.readStream.table("g20.db.zsrc")
+          .writeStream.option("checkpointLocation", ck.toString)
+          .trigger(Trigger.AvailableNow())
+          .toTable("g20.db.zsink")
+        try q.awaitTermination() finally q.stop()
       }
+      spark.sql("INSERT INTO g20.db.zsrc SELECT id FROM range(0, 4)")
+      drain() // epoch 0: learn the query id from its marker
+      val txn = Hook.manifestMeta(sink, Hook.manifestVersions(sink).max)("txn")
+      val qid = txn.take(txn.lastIndexOf(':'))
+      spark.sql("INSERT INTO g20.db.zsrc SELECT id FROM range(10, 13)")
+      // the zombie twin: at the racy instant (base version pinned,
+      // marker scanned clean, publish not yet attempted) it commits
+      // epoch 1 itself — our publish must lose the link race and the
+      // re-loop must see the marker and stand down
+      @volatile var fired = false
+      Hook.setBeforeEpochPublish { () =>
+        if (!fired) {
+          fired = true
+          val cur = Hook.manifestVersions(sink).max
+          assert(Hook.republishWithMeta(sink, cur, cur + 1,
+            Map("txn" -> s"$qid:1")), "zombie publish must win")
+        }
+      }
+      try drain()
+      finally Hook.clearPublishHooks()
+      assert(fired, "the racy instant was never reached")
+      // the zombie's commit (rows-free in this simulation) is the
+      // authoritative epoch-1 commit; the real writer must append
+      // NOTHING on top of it
+      assert(sqlRows("SELECT k FROM g20.db.zsink ORDER BY k").flatten ==
+        (0L until 4L), "epoch 1 must not be appended on top of the twin's")
+      assert(Hook.lastTxnEpoch(sink, qid).contains(1L))
+      // the loser's staged files were deleted, not orphaned
+      val referenced = Hook.manifestVersions(sink)
+        .flatMap(v => Hook.manifestFiles(sink, v)).toSet
+      val onDisk = Option(sink.toFile.listFiles()).get
+        .map(_.getName).filter(_.startsWith("data-")).toSet
+      assert(onDisk == referenced, s"orphans: ${onDisk -- referenced}")
     }
-    try drain()
-    finally Hook.clearPublishHooks()
-    assert(fired, "the racy instant was never reached")
-    // the zombie's commit (rows-free in this simulation) is the
-    // authoritative epoch-1 commit; the real writer must append
-    // NOTHING on top of it
-    assert(sqlRows("SELECT k FROM g20.db.zsink ORDER BY k").flatten ==
-      (0L until 4L), "epoch 1 must not be appended on top of the twin's")
-    assert(Hook.lastTxnEpoch(sink, qid).contains(1L))
-    // the loser's staged files were deleted, not orphaned
-    val referenced = Hook.manifestVersions(sink)
-      .flatMap(v => Hook.manifestFiles(sink, v)).toSet
-    val onDisk = Option(sink.toFile.listFiles()).get
-      .map(_.getName).filter(_.startsWith("data-")).toSet
-    assert(onDisk == referenced, s"orphans: ${onDisk -- referenced}")
-    graft.streaming.StreamingResidue.deleteRecursively(ck)
   }
 
   test("OPTIMIZE rebases past a concurrent append (compaction and " +
@@ -322,37 +322,37 @@ class Round20Spec extends SparkSpec {
     // streaming: the SAME slice planner serves micro-batches; a
     // drained AvailableNow run equals the batch feed exactly
     import org.apache.spark.sql.streaming.Trigger
-    val ck = Files.createTempDirectory("graft_r20_cdcck")
-    val q = spark.readStream.option("maxVersionsPerBatch", "2")
-      .table("g20.db.`cdc$changes`")
-      .writeStream.option("checkpointLocation", ck.toString)
-      .trigger(Trigger.AvailableNow()).format("memory")
-      .queryName("cdc_feed_r20").start()
-    try q.awaitTermination() finally q.stop()
-    val streamed = spark.sql("SELECT k, v, _change_type, " +
-      "_commit_version FROM cdc_feed_r20").collect().toSeq
-    assert(asTuples(streamed) == norm(expected),
-      "streaming feed must equal the batch feed")
-    // a rewrite commit (OPTIMIZE folds the DVs) is not representable
-    // from a manifest diff: refuse loudly, or skip wholesale on
-    // explicit opt-in — and OPTIMIZE is content-preserving, so the
-    // skipped feed is still the exact change history
-    val res = Hook.optimizeTable(dir("cdc"), targetRows = 1000L)
-    assert(res.removedFiles.nonEmpty, s"expected a rewrite: $res")
-    val ex = intercept[Exception] {
-      spark.sql("SELECT count(*) FROM g20.db.`cdc$changes`").collect()
+    Scratch.scoped("graft_r20_cdcck") { ck =>
+      val q = spark.readStream.option("maxVersionsPerBatch", "2")
+        .table("g20.db.`cdc$changes`")
+        .writeStream.option("checkpointLocation", ck.toString)
+        .trigger(Trigger.AvailableNow()).format("memory")
+        .queryName("cdc_feed_r20").start()
+      try q.awaitTermination() finally q.stop()
+      val streamed = spark.sql("SELECT k, v, _change_type, " +
+        "_commit_version FROM cdc_feed_r20").collect().toSeq
+      assert(asTuples(streamed) == norm(expected),
+        "streaming feed must equal the batch feed")
+      // a rewrite commit (OPTIMIZE folds the DVs) is not representable
+      // from a manifest diff: refuse loudly, or skip wholesale on
+      // explicit opt-in — and OPTIMIZE is content-preserving, so the
+      // skipped feed is still the exact change history
+      val res = Hook.optimizeTable(dir("cdc"), targetRows = 1000L)
+      assert(res.removedFiles.nonEmpty, s"expected a rewrite: $res")
+      val ex = intercept[Exception] {
+        spark.sql("SELECT count(*) FROM g20.db.`cdc$changes`").collect()
+      }
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(ex).exists(_.contains("REWRITES group")),
+        s"rewrite commit must refuse: ${msgs(ex)}")
+      val skipped = spark.read.option("skipRewrites", "true")
+        .table("g20.db.`cdc$changes`")
+        .select("k", "v", "_change_type", "_commit_version")
+        .collect().toSeq
+      assert(asTuples(skipped) == norm(expected),
+        "skipRewrites must serve the pre-rewrite history unchanged")
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(ex).exists(_.contains("REWRITES group")),
-      s"rewrite commit must refuse: ${msgs(ex)}")
-    val skipped = spark.read.option("skipRewrites", "true")
-      .table("g20.db.`cdc$changes`")
-      .select("k", "v", "_change_type", "_commit_version")
-      .collect().toSeq
-    assert(asTuples(skipped) == norm(expected),
-      "skipRewrites must serve the pre-rewrite history unchanged")
-    graft.streaming.StreamingResidue.deleteRecursively(ck)
   }
 
   test("branch/WAP: write to a branch, audit on the branch, publish " +
@@ -448,22 +448,23 @@ class Round20Spec extends SparkSpec {
       "the filesystem outside the catalog root") {
     root
     spark.sql("CREATE TABLE g20.db.safe (k BIGINT)")
-    // a real table outside the catalog root that '..' would reach
-    val outside = root.getParent.resolve(
-      root.getFileName.toString + "_outside")
-    Files.createDirectories(outside)
-    Files.writeString(outside.resolve("schema.json"),
-      Files.readString(dir("safe").resolve("schema.json")))
-    for (bad <- Seq(s"../${outside.getFileName}", "db..safe",
-        "/etc.passwd", "db./safe")) {
-      val ex = intercept[Exception] {
-        spark.sql(s"CALL g20.system.expire_snapshots('$bad', 1)").collect()
+    // a real table outside the catalog root that '..' would reach: a
+    // sibling of the root, since both are scratch dirs under one base
+    Scratch.scoped(root.getFileName.toString + "_outside") { outside =>
+      assert(outside.getParent == root.getParent)
+      Files.writeString(outside.resolve("schema.json"),
+        Files.readString(dir("safe").resolve("schema.json")))
+      for (bad <- Seq(s"../${outside.getFileName}", "db..safe",
+          "/etc.passwd", "db./safe")) {
+        val ex = intercept[Exception] {
+          spark.sql(s"CALL g20.system.expire_snapshots('$bad', 1)").collect()
+        }
+        def msgs(t: Throwable): Seq[String] =
+          if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+        assert(msgs(ex).exists(m => m.contains("malformed table name") ||
+          m.contains("escapes the catalog root")),
+          s"'$bad' must be refused by validation, got: ${msgs(ex)}")
       }
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      assert(msgs(ex).exists(m => m.contains("malformed table name") ||
-        m.contains("escapes the catalog root")),
-        s"'$bad' must be refused by validation, got: ${msgs(ex)}")
     }
     // the legitimate two-segment form still resolves
     assert(spark.sql("CALL g20.system.history('db.safe')").collect()

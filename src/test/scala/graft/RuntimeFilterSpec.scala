@@ -19,38 +19,40 @@ import org.apache.spark.sql.functions._
 class RuntimeFilterSpec extends SparkSpec {
 
   test("dynamic partition pruning injects a runtime partition filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
-    val sf = "/root/testdata/sf0.001"
-    // fact partitioned by custkey bucket; dim carries the bucket too
-    Tables(spark, sf, "orders")
-      .withColumn("ckb", (col("o_custkey") % 10).cast("int"))
-      .write.mode("overwrite").partitionBy("ckb").parquet(s"$dir/orders_p")
-    val fact = spark.read.parquet(s"$dir/orders_p")
-    val dim = Tables(spark, sf, "customer")
-      .withColumn("ckb", (col("c_custkey") % 10).cast("int"))
-      .where(col("c_mktsegment") === "BUILDING" && col("c_custkey") < 30)
-
-    val conf = spark.conf
-    val savedB = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // DPP via broadcast reuse is the default path; keep broadcast on
-      conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-      val q = fact.join(dim, Seq("ckb"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n"))
-      val got = q.collect().toSeq.map(_.toSeq)
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruningexpression"),
-        s"no DPP in plan:\n$plan")
-      // result equals the plain (unpartitioned) join
-      val plain = Tables(spark, sf, "orders")
+    Scratch.scoped("graft_dpp") { dirPath =>
+      val dir = dirPath.toString
+      val sf = "/root/testdata/sf0.001"
+      // fact partitioned by custkey bucket; dim carries the bucket too
+      Tables(spark, sf, "orders")
         .withColumn("ckb", (col("o_custkey") % 10).cast("int"))
-        .join(dim, Seq("ckb"))
-        .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
-        .collect().toSeq.map(_.toSeq)
-      assert(got == plain)
-    } finally {
-      savedB.foreach(conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+        .write.mode("overwrite").partitionBy("ckb").parquet(s"$dir/orders_p")
+      val fact = spark.read.parquet(s"$dir/orders_p")
+      val dim = Tables(spark, sf, "customer")
+        .withColumn("ckb", (col("c_custkey") % 10).cast("int"))
+        .where(col("c_mktsegment") === "BUILDING" && col("c_custkey") < 30)
+
+      val conf = spark.conf
+      val savedB = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+      try {
+        // DPP via broadcast reuse is the default path; keep broadcast on
+        conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
+        val q = fact.join(dim, Seq("ckb"))
+          .groupBy("c_mktsegment")
+          .agg(count(lit(1)).as("n"))
+        val got = q.collect().toSeq.map(_.toSeq)
+        val plan = q.queryExecution.executedPlan.toString
+        assert(plan.contains("dynamicpruningexpression"),
+          s"no DPP in plan:\n$plan")
+        // result equals the plain (unpartitioned) join
+        val plain = Tables(spark, sf, "orders")
+          .withColumn("ckb", (col("o_custkey") % 10).cast("int"))
+          .join(dim, Seq("ckb"))
+          .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
+          .collect().toSeq.map(_.toSeq)
+        assert(got == plain)
+      } finally {
+        savedB.foreach(conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+      }
     }
   }
 

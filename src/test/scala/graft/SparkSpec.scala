@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{Args, BeforeAndAfterAll, Status}
 
 /** Shared local SparkSession for all suites (one JVM, Test/fork=true):
   * the harness session at a fixed 4 cores.
@@ -52,4 +52,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         .forEach(p => Files.deleteIfExists(p))
     }
   }
+}
+
+/** A scratch dir as long-lived as the suite: [[Scratch.scoped]] wraps the
+  * suite's whole run, so the dir is deleted when the suite ends, however
+  * its tests end. For state every test shares, such as a catalog root. */
+trait SuiteScratch extends SparkSpec {
+  private var dir: java.nio.file.Path = _
+
+  protected def suiteScratch: java.nio.file.Path = dir
+
+  override def run(testName: Option[String], args: Args): Status =
+    Scratch.scoped(s"graft_${getClass.getSimpleName}") { d =>
+      dir = d
+      super.run(testName, args)
+    }
 }

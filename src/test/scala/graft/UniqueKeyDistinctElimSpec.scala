@@ -20,63 +20,68 @@ class UniqueKeyDistinctElimSpec extends SparkSpec {
     }
   }
 
-  private def staged(): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_uniq_elim").toString
-    spark.range(0, 100)
-      .select(col("id").as("k"), (col("id") % 7).as("grp"),
-        (col("id") * 3).as("v"))
-      .write.mode("overwrite").parquet(dir)
-    dir
-  }
+  /** Lends `f` a fresh 100-row parquet table, deleted when `f` exits. */
+  private def staged[T](f: String => T): T =
+    Scratch.scoped("graft_uniq_elim") { d =>
+      val dir = d.toString
+      spark.range(0, 100)
+        .select(col("id").as("k"), (col("id") % 7).as("grp"),
+          (col("id") * 3).as("v"))
+        .write.mode("overwrite").parquet(dir)
+      f(dir)
+    }
 
   private def hasAgg(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.optimizedPlan.exists(_.isInstanceOf[Aggregate])
 
   test("distinct over the unique key is removed; result identical") {
-    val dir = staged()
-    withKey(dir, "k") {
-      val df = spark.read.parquet(dir)
-        .where(col("grp") === 2).select("k", "grp").distinct()
-      assert(!hasAgg(df), "Aggregate should be eliminated")
-      val naive = spark.read.parquet(dir)
-        .where(col("grp") === 2).select("k", "grp").dropDuplicates()
-      assert(df.orderBy("k").collect().toSeq ==
-        naive.orderBy("k").collect().toSeq)
+    staged { dir =>
+      withKey(dir, "k") {
+        val df = spark.read.parquet(dir)
+          .where(col("grp") === 2).select("k", "grp").distinct()
+        assert(!hasAgg(df), "Aggregate should be eliminated")
+        val naive = spark.read.parquet(dir)
+          .where(col("grp") === 2).select("k", "grp").dropDuplicates()
+        assert(df.orderBy("k").collect().toSeq ==
+          naive.orderBy("k").collect().toSeq)
+      }
     }
   }
 
   test("no fire: grouping without the key / expression projection / " +
       "other relation / nondeterministic filter / real aggregates") {
-    val dir = staged()
-    withKey(dir, "k") {
-      // key column absent → duplicates possible
-      assert(hasAgg(spark.read.parquet(dir).select("grp").distinct()))
-      // expression projection can collapse distinct keys
-      assert(hasAgg(spark.read.parquet(dir)
-        .select((col("k") % 2).as("k2"), col("grp")).distinct()))
-      // a different relation with the same schema
-      val other = staged()
-      assert(hasAgg(spark.read.parquet(other).select("k", "grp").distinct()))
-      // nondeterministic filter (rand < 0.5 — a tautological rand
-      // predicate like rand > -1 is FOLDED AWAY by Spark 4's
-      // optimizer before this rule ever sees it)
-      assert(hasAgg(spark.read.parquet(dir)
-        .where(rand(7) < 0.5).select("k", "grp").distinct()))
-      // a genuine aggregate is not a distinct shape
-      val agg = spark.read.parquet(dir).groupBy("k").agg(sum("v").as("s"))
-      assert(hasAgg(agg))
+    staged { dir =>
+      withKey(dir, "k") {
+        // key column absent → duplicates possible
+        assert(hasAgg(spark.read.parquet(dir).select("grp").distinct()))
+        // expression projection can collapse distinct keys
+        assert(hasAgg(spark.read.parquet(dir)
+          .select((col("k") % 2).as("k2"), col("grp")).distinct()))
+        // a different relation with the same schema
+        staged { other =>
+          assert(hasAgg(spark.read.parquet(other).select("k", "grp").distinct()))
+          // nondeterministic filter (rand < 0.5 — a tautological rand
+          // predicate like rand > -1 is FOLDED AWAY by Spark 4's
+          // optimizer before this rule ever sees it)
+          assert(hasAgg(spark.read.parquet(dir)
+            .where(rand(7) < 0.5).select("k", "grp").distinct()))
+          // a genuine aggregate is not a distinct shape
+          val agg = spark.read.parquet(dir).groupBy("k").agg(sum("v").as("s"))
+          assert(hasAgg(agg))
+        }
+      }
+      // rule disabled without the conf pair
+      assert(hasAgg(spark.read.parquet(dir).select("k", "grp").distinct()))
     }
-    // rule disabled without the conf pair
-    assert(hasAgg(spark.read.parquet(dir).select("k", "grp").distinct()))
   }
 
   test("composite key: all declared columns must be in the grouping") {
-    val dir = staged()
-    withKey(dir, "k, grp") {
-      assert(!hasAgg(spark.read.parquet(dir)
-        .select("k", "grp", "v").distinct()))
-      assert(hasAgg(spark.read.parquet(dir).select("grp", "v").distinct()))
+    staged { dir =>
+      withKey(dir, "k, grp") {
+        assert(!hasAgg(spark.read.parquet(dir)
+          .select("k", "grp", "v").distinct()))
+        assert(hasAgg(spark.read.parquet(dir).select("grp", "v").distinct()))
+      }
     }
   }
 }
