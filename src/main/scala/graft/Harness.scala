@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session the dev mains (Attr, Bench, Explain, Prof,
-  * ScaleProbe, Smoke, Verify) and the test suites run on. */
+/** The one local session the dev mains (Bench, Explain, Prof, Smoke,
+  * Verify) and the test suites run on. */
 object Harness {
 
   /** Core count from `SPARK_GRAFT_CPUS`; every available processor by

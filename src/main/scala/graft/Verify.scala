@@ -138,10 +138,14 @@ object Verify {
     println(f"[verify] wall=${(System.nanoTime() - t0) / 1e9}%.1f s " +
       s"workers=${workers.size}")
     // session-hygiene evidence: after the whole registry ran with
-    // per-query scoped release, nothing may remain pinned in the JVM —
-    // the r4 bench band came from exactly this kind of residue
+    // per-query scoped release, nothing may remain pinned in the JVM or
+    // left under the scratch base — the r4 bench band came from exactly
+    // this kind of residue
+    val scratchLeft = scala.util.Using.resource(
+      java.nio.file.Files.list(Scratch.base))(_.count())
     println(s"[verify] residue: tracked=${CacheRegistry.trackedCount} " +
-      s"persistentRdds=${spark.sparkContext.getPersistentRDDs.size}")
+      s"persistentRdds=${spark.sparkContext.getPersistentRDDs.size} " +
+      s"scratchEntries=$scratchLeft")
     spark.stop()
     // Zero-output sentinel (round-16 hardening, verdict r15 #1): a run
     // that produced NOTHING comparable must be LOUD and non-zero, not a

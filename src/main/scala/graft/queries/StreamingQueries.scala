@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{Conf, QuerySpec, Scratch}
+import graft.sources.Sources
 import graft.streaming.StreamingOps
 
 /** Streaming query inventory. Each runs a real Structured Streaming
@@ -28,13 +29,15 @@ object StreamingQueries {
     stageParts(df.repartitionByRange(n, sortCols: _*), inDir, 0)
 
   /** Stages `df` into `inDir` as ONE parquet file, micro-batch `idx`. */
-  private def stageBatch(df: DataFrame, inDir: Path, idx: Int): Unit =
-    stageParts(df.coalesce(1), inDir, idx)
+  private def stageBatch(df: DataFrame, inDir: Path, idx: Int): Unit = {
+    val dest = inDir.resolve(f"part-$idx%04d.parquet")
+    Sources.writeSinglePart(df, dest)(_.parquet(_))
+    pinBatchOrder(dest, idx)
+  }
 
   /** Writes `df` to a scratch dir and moves its parquet parts into
     * `inDir` as `part-<i>.parquet`, numbered from `first` in part-name
-    * order, with ascending mod-times pinned: FileStreamSource orders
-    * files by mod time, so file order = micro-batch order. */
+    * order. */
   private def stageParts(df: DataFrame, inDir: Path, first: Int): Unit =
     Scratch.scoped("graft_stream_stage") { tmp =>
       df.write.mode("overwrite").parquet(tmp.toString)
@@ -45,10 +48,14 @@ object StreamingQueries {
       for ((f, i) <- parts.zipWithIndex; idx = first + i) {
         val dest = inDir.resolve(f"part-$idx%04d.parquet")
         Files.move(f, dest)
-        Files.setLastModifiedTime(dest,
-          FileTime.fromMillis(1000000000L + idx * 60000L))
+        pinBatchOrder(dest, idx)
       }
     }
+
+  /** Pins ascending mod-times: FileStreamSource orders files by mod time,
+    * so file order = micro-batch order. */
+  private def pinBatchOrder(file: Path, idx: Int): Unit =
+    Files.setLastModifiedTime(file, FileTime.fromMillis(1000000000L + idx * 60000L))
 
   /** q40 — streaming hourly window aggregation == batch q14. */
   val q40 = QuerySpec("q40_stream_hourly",

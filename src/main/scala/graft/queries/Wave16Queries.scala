@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
 import graft.{Conf, QuerySpec, Scratch, Tables, Views}
-import graft.sources.GraftCatalog
+import graft.sources.{GraftCatalog, Sources}
 
 /** Round-16 engine wave: the Spark 4 surfaces a 100 TB deployment
   * leans on that the registry had not yet certified — watermarked
@@ -1061,7 +1061,6 @@ FROM r WHERE rn = CAST(ceil(n * 0.9) AS BIGINT) ORDER BY g
     * re-deriving it per run. */
   private[queries] def stageEventSegments(s: SparkSession, dir: String,
       target: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
     val ev = Tables(s, dir, "events").select(
       expr("unix_micros(ts)").as("ts_us"),
       col("user_id"), col("event_type"),
@@ -1069,19 +1068,12 @@ FROM r WHERE rn = CAST(ceil(n * 0.9) AS BIGINT) ORDER BY g
     val Array(lo, hi) = ev.agg(min("ts_us"), max("ts_us"))
       .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
     val span = math.max(1L, (hi - lo) / 4 + 1)
-    Scratch.scoped("graft_replay_stage") { work =>
-      for (i <- 0 until 4) {
-        val stage = work.resolve(s"stage$i")
-        ev.where(col("ts_us") >= lo + i * span &&
-            col("ts_us") < lo + (i + 1) * span)
-          .select(concat_ws(",", col("ts_us"), col("user_id"),
-            col("event_type"), col("cents")).as("line"))
-          .coalesce(1).write.mode("overwrite").text(stage.toString)
-        val part = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-          .find(f => f.getName.startsWith("part-")).get
-        Files.move(part.toPath, target.resolve(f"seg$i%02d.csv"))
-      }
-    }
+    for (i <- 0 until 4)
+      Sources.writeSinglePart(ev.where(col("ts_us") >= lo + i * span &&
+          col("ts_us") < lo + (i + 1) * span)
+        .select(concat_ws(",", col("ts_us"), col("user_id"),
+          col("event_type"), col("cents")).as("line")),
+        target.resolve(f"seg$i%02d.csv"))(_.text(_))
   }
 
   val q376 = QuerySpec("q376_custom_stream_source",

@@ -1,17 +1,8 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import scala.util.Using
-import com.univocity.parsers.csv.CsvParser
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.csv.CSVUtils
-import org.apache.spark.sql.types.{DataType, NullType, StructType}
+import org.apache.spark.sql.SparkSession
 
 /** S5 — the reference's Google Drive sink
   * (`/root/reference/one_one_one_rule/load_drive.py:83-274`) replicated
@@ -289,45 +280,6 @@ object LocalDrive {
     }
   }
 
-  /** The schema `spark.read.option("header", true).option("inferSchema",
-    * true).csv(path)` gives `path`. Where the reader reads the file as one
-    * split of plain text, it is computed on the driver: Spark's own
-    * `CSVInferSchema`, under the options that reader builds, folded over
-    * the file's tokenized lines exactly as the reader folds one split, and
-    * streamed, so driver memory does not grow with the file. Reading with
-    * this schema then runs no header job and no inference job. A file the
-    * reader splits (it merges per-split types, which can differ from one
-    * fold) or decompresses is left to the reader's own inference. */
-  def inferCsvSchema(spark: SparkSession, path: Path): StructType = {
-    val size = Files.size(path)
-    val plain = new CompressionCodecFactory(spark.sessionState.newHadoopConf())
-      .getCodec(new HPath(path.toUri)) == null
-    if (plain && size <= FilePartition.maxSplitBytes(spark,
-        size + spark.sessionState.conf.filesOpenCostInBytes)) foldCsvSchema(spark, path)
-    else spark.read.option("header", true).option("inferSchema", true)
-      .csv(path.toString).schema
-  }
-
-  private def foldCsvSchema(spark: SparkSession, path: Path): StructType = {
-    val conf = spark.sessionState.conf
-    val opts = new CSVOptions(Map("header" -> "true", "inferSchema" -> "true"),
-      conf.csvColumnPruning, conf.sessionLocalTimeZone)
-    def lines[A](f: Iterator[String] => A): A = Using.resource(new BufferedReader(
-        new InputStreamReader(Files.newInputStream(path), opts.charset))) { r =>
-      f(CSVUtils.filterCommentAndEmpty(r.lines().iterator().asScala, opts))
-    }
-    lines(_.nextOption()).fold(new StructType()) { first =>
-      val parser = new CsvParser(opts.asParserSettings)
-      val header = CSVUtils.makeSafeHeader(parser.parseLine(first),
-        conf.caseSensitiveAnalysis, opts)
-      val infer = new CSVInferSchema(opts)
-      val types = lines(CSVUtils.filterHeaderLine(_, first, opts)
-        .map(parser.parseLine)
-        .foldLeft(Array.fill[DataType](header.length)(NullType))(infer.inferRowType))
-      StructType(infer.toStructFields(types, header))
-    }
-  }
-
   /** Payload writer: plain byte copy, or the CSV→parquet conversion
     * (the engine-side analog of Drive's CSV→Sheets import). */
   private def writePayload(spark: SparkSession, source: Path, target: Path,
@@ -336,19 +288,9 @@ object LocalDrive {
     if (!convert) {
       Files.copy(source, target, StandardCopyOption.REPLACE_EXISTING)
     } else {
-      val df: DataFrame = spark.read.option("header", true)
-        .schema(inferCsvSchema(spark, source)).csv(source.toString)
-      val tmp = target.toString + ".tmpdir"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Using.resource(Files.list(Paths.get(tmp))) { s =>
-        s.iterator().asScala.map(_.toString).find(_.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-      }
-      Files.move(Paths.get(part), target, StandardCopyOption.REPLACE_EXISTING)
-      Using.resource(Files.walk(Paths.get(tmp))) { s =>
-        s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-      }
+      val df = spark.read.option("header", true)
+        .schema(Sources.csvSchema(spark, source, inferSchema = true)).csv(source.toString)
+      Sources.writeSinglePart(df, target)(_.parquet(_))
     }
   }
 }

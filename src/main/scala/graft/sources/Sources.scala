@@ -1,9 +1,20 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, NullType, StringType, StructField, StructType}
 import graft.functions.Valuation
+import graft.streaming.StreamingResidue
 
 /** Engine sources mirroring the reference's extract stage
   * (SURVEY.md §2.1):
@@ -116,13 +127,59 @@ object Sources extends org.apache.spark.internal.Logging {
     }
 
   /** S2 — tickers from a CSV file: column named `symbol`
-    * (case-insensitive) else the first column. */
+    * (case-insensitive) else the first column. The header is read on the
+    * driver ([[csvSchema]]), so the resolve is the read's only job. */
   def tickersFromCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("header", true).csv(path)
-    if (raw.columns.isEmpty) return spark.emptyDataFrame.withColumn("ticker", lit(""))
+    val schema = csvSchema(spark, Paths.get(path), inferSchema = false)
+    if (schema.isEmpty) return spark.emptyDataFrame.withColumn("ticker", lit(""))
+    val raw = spark.read.option("header", true).schema(schema).csv(path)
     val col0 = raw.columns
       .find(_.equalsIgnoreCase("symbol")).getOrElse(raw.columns.head)
     normalize(raw.select(col(col0).as("ticker")))
+  }
+
+  /** The schema `spark.read.option("header", true).option("inferSchema",
+    * inferSchema).csv(path)` gives `path`: all-string columns named by the
+    * header when `inferSchema` is off. Where the reader reads the file as
+    * one split of plain text, it is computed on the driver: Spark's own
+    * `CSVInferSchema`, under the options that reader builds, folded over
+    * the file's tokenized lines exactly as the reader folds one split, and
+    * streamed, so driver memory does not grow with the file. Reading with
+    * this schema then runs no header job and no inference job. An absent
+    * file, a file the reader splits (it merges per-split types, which can
+    * differ from one fold) or one it decompresses is left to the reader,
+    * so its errors and types stay the reader's. */
+  def csvSchema(spark: SparkSession, path: Path, inferSchema: Boolean): StructType = {
+    lazy val size = Files.size(path)
+    val plainOneSplit = Files.isRegularFile(path) && new CompressionCodecFactory(
+        spark.sessionState.newHadoopConf()).getCodec(new HPath(path.toUri)) == null &&
+      size <= FilePartition.maxSplitBytes(spark, size + spark.sessionState.conf.filesOpenCostInBytes)
+    if (plainOneSplit) foldCsvSchema(spark, path, inferSchema)
+    else spark.read.option("header", true).option("inferSchema", inferSchema)
+      .csv(path.toString).schema
+  }
+
+  private def foldCsvSchema(spark: SparkSession, path: Path,
+      inferSchema: Boolean): StructType = {
+    val conf = spark.sessionState.conf
+    val opts = new CSVOptions(Map("header" -> "true", "inferSchema" -> inferSchema.toString),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    def lines[A](f: Iterator[String] => A): A = Using.resource(new BufferedReader(
+        new InputStreamReader(Files.newInputStream(path), opts.charset))) { r =>
+      f(CSVUtils.filterCommentAndEmpty(r.lines().iterator().asScala, opts))
+    }
+    lines(_.nextOption()).fold(new StructType()) { first =>
+      val parser = new CsvParser(opts.asParserSettings)
+      val header = CSVUtils.makeSafeHeader(parser.parseLine(first),
+        conf.caseSensitiveAnalysis, opts)
+      val infer = new CSVInferSchema(opts)
+      val types =
+        if (!inferSchema) Array.fill[DataType](header.length)(StringType)
+        else lines(CSVUtils.filterHeaderLine(_, first, opts)
+          .map(parser.parseLine)
+          .foldLeft(Array.fill[DataType](header.length)(NullType))(infer.inferRowType))
+      StructType(infer.toStructFields(types, header))
+    }
   }
 
   /** E10 + F1 + D2 + O1 over a 1-column ticker frame
@@ -784,22 +841,23 @@ object Sources extends org.apache.spark.internal.Logging {
     * driver-side: single-file output is a collection endpoint, not a
     * distributed write (SURVEY.md §7.3 risk 7).
     */
-  def writeSingleCsv(df: DataFrame, path: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
-    val tmp = path + ".tmpdir"
-    df.coalesce(1).write.mode("overwrite").option("header", true).csv(tmp)
-    val part = Using.resource(Files.list(Paths.get(tmp))) { s =>
-      s.iterator().asScala.map(_.toString).find(_.endsWith(".csv"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-    }
-    Files.createDirectories(Paths.get(path).toAbsolutePath.getParent)
-    Files.move(Paths.get(part), Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
-    // clean the temp dir (part checksums etc.)
-    Using.resource(Files.walk(Paths.get(tmp))) { s =>
-      s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    }
+  def writeSingleCsv(df: DataFrame, path: String): Unit =
+    writeSinglePart(df, Paths.get(path))(_.option("header", true).csv(_))
+
+  /** Writes `df` as ONE part file at `target`. `save` writes the
+    * one-partition frame into a staging dir beside `target`: hidden, so
+    * no reader listing the target's dir sees it, and on the same
+    * filesystem, so the move is a rename. The staging dir is deleted on
+    * every exit: a write that throws leaves the target's dir as it was. */
+  def writeSinglePart(df: DataFrame, target: Path)(
+      save: (DataFrameWriter[Row], String) => Unit): Unit = {
+    val stage = target.resolveSibling(s".${target.getFileName}.tmpdir")
+    try {
+      save(df.coalesce(1).write.mode("overwrite"), stage.toString)
+      val part = Using.resource(Files.list(stage))(_.iterator.asScala
+        .find(_.getFileName.toString.startsWith("part-")))
+        .getOrElse(throw new IllegalStateException(s"no part file under $stage"))
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    } finally StreamingResidue.deleteRecursively(stage)
   }
 }

@@ -83,8 +83,7 @@ class CodecPropertySpec extends SparkSpec {
       if (s == null) null else UTF8String.fromString(s),
       java.lang.Double.valueOf(v))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_codec_pq")
-    try {
+    Scratch.scoped("graft_codec_pq") { dir =>
       val f = dir.resolve("g.parquet")
       hook.writeGroup(f, schema, in)
       val back = hook.readGroup(f, schema, schema, width = 3)
@@ -117,7 +116,7 @@ class CodecPropertySpec extends SparkSpec {
       evo.zip(rows).foreach { case (row, (k, _, _)) =>
         assert(row.getLong(0) == k && row.isNullAt(1))
       }
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("pinned replay offsets round-trip, and bare-integer offsets " +

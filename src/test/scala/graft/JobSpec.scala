@@ -2,15 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.time.{Clock, Instant, ZoneId}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sources.Sources
 
 object JobSpec {
@@ -46,66 +41,40 @@ class JobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       clock, JobSpec.fetch, html = None, csvPath = s"$dir/tickers.csv")
   }
 
-  /** Runs `body` and returns the Spark jobs it started and the executed
-    * plans of its SQL executions. Jobs are matched by a job tag that only
-    * `body`'s thread (and the executions it spawns) carries, so nothing
-    * else running in the JVM is counted. Listener events arrive in the
-    * order they were posted: once a marker job started after `body` has
-    * been seen, every event of `body` has been seen too. */
-  private def jobsAndPlans(body: => Unit): (Int, Seq[SparkPlan]) = {
-    val sc = spark.sparkContext
-    val tag = s"jobspec-${java.util.UUID.randomUUID}"
-    val marker = s"$tag-marker"
-    val jobs = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val tags = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .fold(Set.empty[String])(_.split(",").toSet)
-        if (tags(marker)) markerSeen.countDown()
-        else if (tags(tag)) jobs.incrementAndGet()
-      }
-    }
-    val planListener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.executedPlan)
-    }
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    try {
-      sc.addJobTag(tag)
-      try body finally sc.removeJobTag(tag)
-      sc.addJobTag(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
-      (jobs.get, plans.asScala.toSeq)
-    } finally {
-      spark.listenerManager.unregister(planListener)
-      sc.removeSparkListener(jobListener)
-    }
-  }
-
   test("an HTML-path run with a drive upload starts at most 7 Spark jobs, " +
       "and its plans shuffle nothing") {
     Scratch.scoped("graft_job_jobs") { dir =>
       val rows = (1 to 85).map(i => s"<tr><td> t.$i </td><td>Co $i</td></tr>").mkString
       val html = s"<table><tr><th>Ticker</th><th>Company</th></tr>$rows</table>"
-      val (jobs, plans) = jobsAndPlans {
+      val (_, run) = QueryMetrics.measure(spark) {
         Job.run(spark, Settings(outputDir = s"$dir/out"), clock, JobSpec.fetch,
           html = Some(html), csvPath = s"$dir/absent.csv",
           driveRoot = Some(dir.resolve("drive")))
       }
+      val plans = run.plans
       // extract 1, fetch 1, transform 3 (two broadcasts and the collect),
       // latest CSV 1, drive payload 1
-      assert(jobs <= 7, s"$jobs Spark jobs")
+      assert(run.jobs.size <= 7, s"${run.jobs.size} Spark jobs")
       assert(plans.exists(p => find(p)(_.isInstanceOf[WindowExec]).isDefined),
         "the transform's plan was not seen")
       val shuffles = plans.filter(p => find(p)(_.isInstanceOf[ShuffleExchangeExec]).isDefined)
       assert(shuffles.isEmpty, shuffles.mkString("\n"))
+    }
+  }
+
+  test("a CSV-path run with a drive upload starts at most 7 Spark jobs: " +
+      "the ticker CSV's header is read on the driver") {
+    Scratch.scoped("graft_job_csv_jobs") { dir =>
+      Files.writeString(dir.resolve("tickers.csv"), "Symbol\nAAPL\nMSFT\nbrk.b\n")
+      val (out, run) = QueryMetrics.measure(spark) {
+        Job.run(spark, Settings(outputDir = s"$dir/out"), clock, JobSpec.fetch,
+          html = None, csvPath = s"$dir/tickers.csv",
+          driveRoot = Some(dir.resolve("drive")))
+      }
+      // extract 1 (no header job), fetch 1, transform 3, latest CSV 1,
+      // drive payload 1
+      assert(run.jobs.size <= 7, s"${run.jobs.size} Spark jobs")
+      assert(out.count() == 3)
     }
   }
 

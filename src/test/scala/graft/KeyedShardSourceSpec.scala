@@ -82,8 +82,7 @@ class KeyedShardSourceSpec extends SparkSpec {
   }
 
   test("refuses a non-keyed directory rather than mis-declare") {
-    val tmp = Files.createTempDirectory("graft_keyed_flat")
-    try {
+    Scratch.scoped("graft_keyed_flat") { tmp =>
       Files.writeString(tmp.resolve("a.csv"), "g1,5\n")
       val err = intercept[Exception] {
         spark.read.format("graft-shard-keyed")
@@ -91,7 +90,7 @@ class KeyedShardSourceSpec extends SparkSpec {
       }
       assert(err.getMessage.contains("g=") ||
         (err.getCause != null && err.getCause.getMessage.contains("g=")))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+    }
   }
 
   private def stageSorted(): java.nio.file.Path = {

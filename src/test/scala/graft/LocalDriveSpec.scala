@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import graft.sources.LocalDrive
+import graft.sources.{LocalDrive, Sources}
 
 /** S5 upsert-by-name sink semantics (`load_drive.py:83-274` replicated
   * hermetically): create, update-in-place, MIME-verify-else-recreate,
@@ -43,8 +43,10 @@ class LocalDriveSpec extends SparkSpec {
           name: String): Unit = {
         val reader = spark.read.option("header", true)
           .option("inferSchema", true).csv(csv.toString)
-        val inferred = LocalDrive.inferCsvSchema(spark, csv)
+        val inferred = Sources.csvSchema(spark, csv, inferSchema = true)
         assert(inferred === reader.schema, csv)
+        assert(Sources.csvSchema(spark, csv, inferSchema = false) ===
+          spark.read.option("header", true).csv(csv.toString).schema, csv)
         types.foreach { case (c, t) =>
           assert(inferred(c).dataType.simpleString === t, s"$csv: $c")
         }

@@ -44,9 +44,7 @@ class ReplaySourceSpec extends SparkSpec {
 
   test("byte-based admission: maxBytesPerBatch packs files until the " +
       "budget trips, never splitting below one file") {
-    val dir = Files.createTempDirectory("graft_replay_bytes")
-    val ckpt = Files.createTempDirectory("graft_replay_bytes_ckpt")
-    try {
+    Scratch.scoped("graft_replay_bytes") { dir => Scratch.scoped("graft_replay_bytes_ckpt") { ckpt =>
       writeSeg(dir, 0, Seq("1000,1,view,10", "2000,2,view,20")) // 30 B
       writeSeg(dir, 1, Seq("3000,1,buy,100"))                   // 15 B
       writeSeg(dir, 2, Seq("4000,3,view,30", "5000,1,buy,200")) // 31 B
@@ -95,17 +93,12 @@ class ReplaySourceSpec extends SparkSpec {
         q2.stop(); spark.catalog.dropTempView(name2)
         graft.streaming.StreamingResidue.deleteRecursively(ckpt2)
       }
-    } finally {
-      graft.streaming.StreamingResidue.deleteRecursively(dir)
-      graft.streaming.StreamingResidue.deleteRecursively(ckpt)
-    }
+    }}
   }
 
   test("prefix drift: a segment landing BEFORE consumed ones in sort " +
       "order refuses the resume loudly instead of shifting offsets") {
-    val dir = Files.createTempDirectory("graft_replay_drift")
-    val ckpt = Files.createTempDirectory("graft_replay_drift_ckpt")
-    try {
+    Scratch.scoped("graft_replay_drift") { dir => Scratch.scoped("graft_replay_drift_ckpt") { ckpt =>
       writeSeg(dir, 0, Seq("1000,1,view,10"))
       writeSeg(dir, 1, Seq("2000,1,buy,100"))
       drain(dir, ckpt) // consumes seg00, seg01; checkpoint pins seg01
@@ -118,17 +111,12 @@ class ReplaySourceSpec extends SparkSpec {
       assert(chain(ex).exists(t => Option(t.getMessage)
         .exists(_.contains("shifted the consumed prefix"))),
         s"expected a loud prefix-drift refusal, got: $ex")
-    } finally {
-      graft.streaming.StreamingResidue.deleteRecursively(dir)
-      graft.streaming.StreamingResidue.deleteRecursively(ckpt)
-    }
+    }}
   }
 
   test("user-declared schema: a non-default BIGINT/DOUBLE/STRING " +
       "layout reads through readStream.schema(...)") {
-    val dir = Files.createTempDirectory("graft_replay_schema")
-    val ckpt = Files.createTempDirectory("graft_replay_schema_ckpt")
-    try {
+    Scratch.scoped("graft_replay_schema") { dir => Scratch.scoped("graft_replay_schema_ckpt") { ckpt =>
       Files.writeString(dir.resolve("seg00.csv"),
         "alpha,1.5,7\nbeta,-0.25,9\n")
       Files.writeString(dir.resolve("seg01.csv"), "gamma,3.0,11\n")
@@ -166,16 +154,11 @@ class ReplaySourceSpec extends SparkSpec {
           .option("path", dir.toString).load()
       }
       assert(ex.getMessage.contains("unsupported column type"))
-    } finally {
-      graft.streaming.StreamingResidue.deleteRecursively(dir)
-      graft.streaming.StreamingResidue.deleteRecursively(ckpt)
-    }
+    }}
   }
 
   test("admission control: one micro-batch per file, exact totals") {
-    val dir = Files.createTempDirectory("graft_replay_spec")
-    val ckpt = Files.createTempDirectory("graft_replay_ckpt")
-    try {
+    Scratch.scoped("graft_replay_spec") { dir => Scratch.scoped("graft_replay_ckpt") { ckpt =>
       writeSeg(dir, 0, Seq("1000,1,view,10", "2000,2,view,20"))
       writeSeg(dir, 1, Seq("3000,1,buy,100"))
       writeSeg(dir, 2, Seq("4000,3,view,30", "5000,1,buy,200"))
@@ -183,17 +166,12 @@ class ReplaySourceSpec extends SparkSpec {
       assert(batches.size == 3, s"expected 3 fed batches, got $batches")
       assert(batches == Seq(2L, 1L, 2L))
       assert(out == Seq(("buy", 2L, 300L), ("view", 3L, 60L)))
-    } finally {
-      graft.streaming.StreamingResidue.deleteRecursively(dir)
-      graft.streaming.StreamingResidue.deleteRecursively(ckpt)
-    }
+    }}
   }
 
   test("checkpointed offsets resume: a second drain reads ONLY new " +
       "files and carries the state forward") {
-    val dir = Files.createTempDirectory("graft_replay_resume")
-    val ckpt = Files.createTempDirectory("graft_replay_resume_ckpt")
-    try {
+    Scratch.scoped("graft_replay_resume") { dir => Scratch.scoped("graft_replay_resume_ckpt") { ckpt =>
       writeSeg(dir, 0, Seq("1000,1,view,10"))
       writeSeg(dir, 1, Seq("2000,2,view,20"))
       val (out1, batches1) = drain(dir, ckpt)
@@ -208,16 +186,11 @@ class ReplaySourceSpec extends SparkSpec {
       assert(batches2.sum == 3L,
         s"resume re-read already-committed files: $batches2")
       assert(out2 == Seq(("buy", 2L, 300L), ("view", 3L, 70L)))
-    } finally {
-      graft.streaming.StreamingResidue.deleteRecursively(dir)
-      graft.streaming.StreamingResidue.deleteRecursively(ckpt)
-    }
+    }}
   }
 
   test("malformed line fails naming the file") {
-    val dir = Files.createTempDirectory("graft_replay_bad")
-    val ckpt = Files.createTempDirectory("graft_replay_bad_ckpt")
-    try {
+    Scratch.scoped("graft_replay_bad") { dir => Scratch.scoped("graft_replay_bad_ckpt") { ckpt =>
       writeSeg(dir, 0, Seq("1000,1,view,10", "not-a-number,2,view,20"))
       val err = intercept[Exception] { drain(dir, ckpt) }
       def messages(t: Throwable): Seq[String] =
@@ -225,9 +198,6 @@ class ReplaySourceSpec extends SparkSpec {
         else String.valueOf(t.getMessage) +: messages(t.getCause)
       assert(messages(err).exists(m =>
         m.contains("seg00.csv") && m.contains("malformed")))
-    } finally {
-      graft.streaming.StreamingResidue.deleteRecursively(dir)
-      graft.streaming.StreamingResidue.deleteRecursively(ckpt)
-    }
+    }}
   }
 }

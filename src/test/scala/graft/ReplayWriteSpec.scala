@@ -31,8 +31,7 @@ class ReplayWriteSpec extends SparkSpec {
 
   test("string values that cannot round-trip the CSV layout are " +
       "refused at write time, not accepted and corrupted") {
-    val dir = Files.createTempDirectory("graft_rw_inject")
-    try {
+    Scratch.scoped("graft_rw_inject") { dir =>
       val w = mkWrite(dir)
       for (hostile <- Seq("has,comma", "has\nnewline", "has\rreturn")) {
         val task = w.createStreamingWriterFactory(null)
@@ -45,13 +44,12 @@ class ReplayWriteSpec extends SparkSpec {
       }
       // nothing got published
       assert(!dir.toFile.listFiles().exists(_.getName.endsWith(".csv")))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("custom-schema write: BIGINT/DOUBLE/STRING rows publish and " +
       "re-read exactly") {
-    val dir = Files.createTempDirectory("graft_rw_schema")
-    try {
+    Scratch.scoped("graft_rw_schema") { dir =>
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("tag",
           org.apache.spark.sql.types.StringType, nullable = false),
@@ -70,12 +68,11 @@ class ReplayWriteSpec extends SparkSpec {
       assert(content == "alpha,1.5,7\nbeta,-0.12345678901234568,9\n")
       // Double.toString → parseDouble is an exact round trip
       assert("-0.12345678901234568".toDouble == -0.1234567890123456789)
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("epoch replay republishes the SAME segment names — no dups") {
-    val dir = Files.createTempDirectory("graft_rw_idem")
-    try {
+    Scratch.scoped("graft_rw_idem") { dir =>
       val w = mkWrite(dir)
       val m1 = writeVia(w, epochId = 0L, partitionId = 0,
         Seq((1000L, 1L, "view", 10L)))
@@ -90,12 +87,11 @@ class ReplayWriteSpec extends SparkSpec {
       assert(files.toSeq == Seq("epoch00000-p00000.csv"))
       assert(Files.readString(dir.resolve("epoch00000-p00000.csv"))
         == "1000,1,view,10\n")
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("abort deletes staged files and leaves published epochs intact") {
-    val dir = Files.createTempDirectory("graft_rw_abort")
-    try {
+    Scratch.scoped("graft_rw_abort") { dir =>
       val w = mkWrite(dir)
       val ok = writeVia(w, 0L, 0, Seq((1L, 1L, "a", 1L)))
       w.commit(0L, Array(ok))
@@ -105,18 +101,17 @@ class ReplayWriteSpec extends SparkSpec {
       w.abort(1L, Array(doomed))
       val files = dir.toFile.listFiles().map(_.getName).sorted
       assert(files.toSeq == Seq("epoch00000-p00000.csv"))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("staged files are invisible to the replay READ side") {
-    val dir = Files.createTempDirectory("graft_rw_hidden")
-    try {
+    Scratch.scoped("graft_rw_hidden") { dir =>
       val w = mkWrite(dir)
       w.commit(0L, Array(writeVia(w, 0L, 0, Seq((1L, 1L, "a", 1L)))))
       writeVia(w, 1L, 0, Seq((2L, 2L, "b", 2L))) // staged, uncommitted
       val listed = graft.sources.ReplaySourceTestHook.listFiles(dir.toString)
       assert(listed.length == 1 &&
         listed.head.endsWith("epoch00000-p00000.csv"))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 }

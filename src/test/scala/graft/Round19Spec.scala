@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 import graft.sources.{GraftCatalog, GraftCatalogTestHook => Hook}
 
 /** Round-19 catalog tier: DISTRIBUTED OPTIMIZE (one Spark task per
@@ -48,26 +46,11 @@ class Round19Spec extends SparkSpec with SuiteScratch {
       }
     }
     // pairs of 10-row fragments at targetRows=20 → 8 bins
-    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        tasks.incrementAndGet()
-    }
     val serial = Hook.optimizeTable(dir("opts"), targetRows = 20L)
-    spark.sparkContext.addSparkListener(listener)
-    val distributed = try {
-      val before = tasks.get()
-      val r = Hook.optimizeTableDistributed(spark, dir("optd"),
-        targetRows = 20L)
-      // listener events are async: wait for the bin tasks to be seen
-      val deadline = System.currentTimeMillis() + 10000
-      while (tasks.get() - before < r.addedFiles.size &&
-          System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(tasks.get() - before >= r.addedFiles.size,
-        s"expected >= ${r.addedFiles.size} tasks (one per bin), saw " +
-          s"${tasks.get() - before}")
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (distributed, run) = QueryMetrics.measure(spark)(
+      Hook.optimizeTableDistributed(spark, dir("optd"), targetRows = 20L))
+    assert(run.tasks >= distributed.addedFiles.size,
+      s"expected >= ${distributed.addedFiles.size} tasks (one per bin), saw ${run.tasks}")
     assert(serial.removedFiles.size == 16 &&
       serial.addedFiles.size == 8,
       s"expected 16 fragments into 8 bins: $serial")

@@ -75,8 +75,7 @@ class ShardStatsSourceSpec extends SparkSpec {
   test("pushdown reduces rows crossing the source boundary") {
     // 2 shards x 3 distinct groups: the pushed scan emits <= 6 rows
     // where the row scan emits 2000
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard_big")
-    try {
+    Scratch.scoped("graft_shard_big") { dir =>
       val sb = new StringBuilder
       (0 until 1000).foreach(i => sb.append(s"g${i % 3},$i\n"))
       java.nio.file.Files.write(dir.resolve("a.csv"),
@@ -90,13 +89,12 @@ class ShardStatsSourceSpec extends SparkSpec {
       val scanRows = pushed.queryExecution.executedPlan.collectLeaves()
         .map(_.metrics.get("numOutputRows").map(_.value).getOrElse(0L)).sum
       assert(scanRows <= 6L, s"scan emitted $scanRows rows")
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("top-n pushdown: per-shard bounded heap, exact answer both " +
       "directions, boundary traffic = files x k") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard_topn")
-    try {
+    Scratch.scoped("graft_shard_topn") { dir =>
       // distinct x everywhere so the top-k row SET is deterministic
       val sb1 = new StringBuilder; val sb2 = new StringBuilder
       (0 until 500).foreach(i => sb1.append(s"g${i % 3},${i * 2}\n"))
@@ -127,13 +125,12 @@ class ShardStatsSourceSpec extends SparkSpec {
       assert(!declined.queryExecution.executedPlan.toString
         .contains("PushedTopN"))
       assert(declined.collect().length == 2)
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("limit pushdown: shards stop reading after k lines; global " +
       "limit still exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard_lim")
-    try {
+    Scratch.scoped("graft_shard_lim") { dir =>
       val sb = new StringBuilder
       (0 until 1000).foreach(i => sb.append(s"g,$i\n"))
       java.nio.file.Files.write(dir.resolve("a.csv"),
@@ -151,7 +148,7 @@ class ShardStatsSourceSpec extends SparkSpec {
       assert(scanRows <= 20L, s"scan emitted $scanRows rows") // 2 files x 10
       // limit larger than the corpus: every row, exactly once
       assert(df.limit(5000).count() == 2000L)
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("filter pushdown: parse-time evaluation, trusted (no post-scan " +
@@ -193,9 +190,7 @@ class ShardStatsSourceSpec extends SparkSpec {
 
   test("runtime filtering: the join's observed build-side keys reach " +
       "the scan as In(g) and prune at parse time (DSv2 DPP analog)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard_rf")
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_shard_rfd")
-    try {
+    Scratch.scoped("graft_shard_rf") { dir => Scratch.scoped("graft_shard_rfd") { dimDir =>
       val sb = new StringBuilder
       for (g <- 0 until 10; i <- 0 until 200) sb.append(s"g$g,${g * 1000 + i}\n")
       java.nio.file.Files.write(dir.resolve("a.csv"),
@@ -236,10 +231,7 @@ class ShardStatsSourceSpec extends SparkSpec {
       // and the capability itself, independent of planner heuristics
       assert(graft.sources.ShardStatsSourceTestHook
         .rowsAfterRuntimeFilter(dir.toString, Set("g0", "g5")) == 800L)
-    } finally {
-      graft.streaming.StreamingResidue.deleteRecursively(dir)
-      graft.streaming.StreamingResidue.deleteRecursively(dimDir)
-    }
+    }}
   }
 
   test("column pruning: single-column and zero-column reads") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,8 +20,7 @@ class ShardWriteSpec extends SparkSpec {
   }
 
   test("append publishes every task file; round-trip preserves rows") {
-    val tmp = Files.createTempDirectory("graft_shardw_spec")
-    try {
+    Scratch.scoped("graft_shardw_spec") { tmp =>
       spark.range(0, 1000).select(
         concat(lit("g"), (col("id") % 7).cast("string")).as("g"),
         col("id").as("x"))
@@ -45,12 +42,11 @@ class ShardWriteSpec extends SparkSpec {
         .mode("append").save()
       assert(spark.read.format("graft-shard").load(s"$tmp/out")
         .count() == 1010)
-    } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+    }
   }
 
   test("overwrite truncates the previous generation atomically-enough") {
-    val tmp = Files.createTempDirectory("graft_shardw_trunc")
-    try {
+    Scratch.scoped("graft_shardw_trunc") { tmp =>
       spark.range(0, 100).select(lit("a").as("g"), col("id").as("x"))
         .repartition(3)
         .write.format("graft-shard").option("path", s"$tmp/out")
@@ -62,12 +58,11 @@ class ShardWriteSpec extends SparkSpec {
       val back = spark.read.format("graft-shard").load(s"$tmp/out")
       assert(back.count() == 7)
       assert(col1(back.select("g").distinct(), "g") == Seq("b"))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+    }
   }
 
   test("job abort and speculative orphans leave no residue") {
-    val tmp = Files.createTempDirectory("graft_shardw_abort")
-    try {
+    Scratch.scoped("graft_shardw_abort") { tmp =>
       val target = s"$tmp/out"
       // pre-existing generation that must survive an aborted write
       spark.range(0, 5).select(lit("keep").as("g"), col("id").as("x"))
@@ -93,12 +88,11 @@ class ShardWriteSpec extends SparkSpec {
         "keep,3", "keep,4"))
       assert(!new java.io.File(target).listFiles()
         .exists(_.getName.startsWith(".staging")))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+    }
   }
 
   test("job commit publishes ONLY message-named files (spec orphans die)") {
-    val tmp = Files.createTempDirectory("graft_shardw_spec2")
-    try {
+    Scratch.scoped("graft_shardw_spec2") { tmp =>
       val target = s"$tmp/out"
       val bw = new ShardBatchWrite(target, "q-spec-test",
         truncateFirst = false)
@@ -115,12 +109,11 @@ class ShardWriteSpec extends SparkSpec {
       assert(lines(target) == Seq("win,1"))
       assert(!new java.io.File(target).listFiles()
         .exists(_.getName.startsWith(".staging")))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+    }
   }
 
   test("schema drift and separator-corrupting values are rejected") {
-    val tmp = Files.createTempDirectory("graft_shardw_schema")
-    try {
+    Scratch.scoped("graft_shardw_schema") { tmp =>
       intercept[Exception] {
         spark.range(0, 3).select(col("id").as("wrong"))
           .write.format("graft-shard").option("path", s"$tmp/out")
@@ -131,12 +124,11 @@ class ShardWriteSpec extends SparkSpec {
           .write.format("graft-shard").option("path", s"$tmp/out2")
           .mode("append").save()
       }
-    } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+    }
   }
 
   test("offset pushes only on a single shard; multi-shard stays exact") {
-    val tmp = Files.createTempDirectory("graft_shardw_off")
-    try {
+    Scratch.scoped("graft_shardw_off") { tmp =>
       spark.range(0, 60).select(lit("g").as("g"), col("id").as("x"))
         .orderBy("x").coalesce(1)
         .write.format("graft-shard").option("path", s"$tmp/one")
@@ -156,6 +148,6 @@ class ShardWriteSpec extends SparkSpec {
       assert(!many.queryExecution.executedPlan.toString
         .contains("PushedOffset"))
       assert(many.count() == 50)
-    } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+    }
   }
 }

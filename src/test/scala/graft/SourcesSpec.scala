@@ -70,59 +70,57 @@ class SourcesSpec extends SparkSpec {
   test("S7: JSONL source — gzip, coercing schema, PERMISSIVE corrupt rows") {
     import java.nio.file.{Files, Paths}
     import java.util.zip.GZIPOutputStream
-    val dir = Files.createTempDirectory("graft_jsonl")
-    val lines = Seq(
-      """{"doc_id": 1, "text": "alpha beta", "lang": "en", "source": "web", "n_chars": 10}""",
-      // quoted number → coercing schema must still land a long
-      """{"doc_id": "2", "text": "gamma", "lang": "en", "source": "web", "n_chars": "5"}""",
-      // uncastable numeric → try_cast degrades that FIELD to null
-      """{"doc_id": 3, "text": "delta", "lang": "en", "source": "web", "n_chars": "many"}""",
-      // invalid JSON → PERMISSIVE null-row, flagged, raw line kept
-      """{broken json line""",
-      // missing fields → present ones parse, absent ones null
-      """{"doc_id": 5, "text": "epsilon"}""")
-    val out = new GZIPOutputStream(
-      Files.newOutputStream(dir.resolve("part-0000.jsonl.gz")))
-    out.write(lines.mkString("\n").getBytes("UTF-8")); out.close()
-    val got = Sources.documentsFromJsonl(spark, dir.toString)
-      .orderBy(org.apache.spark.sql.functions.asc_nulls_last("doc_id"))
-      .collect()
-    assert(got.length == 5)
-    assert(got(0).getAs[Long]("doc_id") == 1L && got(0).getAs[Long]("n_chars") == 10L)
-    assert(got(1).getAs[Long]("doc_id") == 2L && got(1).getAs[Long]("n_chars") == 5L)
-    assert(got(2).getAs[Long]("doc_id") == 3L && got(2).isNullAt(got(2).fieldIndex("n_chars")))
-    assert(got(3).getAs[Long]("doc_id") == 5L && got(3).isNullAt(got(3).fieldIndex("source")))
-    val corrupt = got(4)
-    assert(corrupt.isNullAt(corrupt.fieldIndex("doc_id")))
-    assert(corrupt.getAs[Boolean]("is_corrupt"))
-    assert(corrupt.getAs[String]("corrupt_record").startsWith("{broken"))
-    assert(got.take(4).forall(!_.getAs[Boolean]("is_corrupt")))
-    Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    Scratch.scoped("graft_jsonl") { dir =>
+      val lines = Seq(
+        """{"doc_id": 1, "text": "alpha beta", "lang": "en", "source": "web", "n_chars": 10}""",
+        // quoted number → coercing schema must still land a long
+        """{"doc_id": "2", "text": "gamma", "lang": "en", "source": "web", "n_chars": "5"}""",
+        // uncastable numeric → try_cast degrades that FIELD to null
+        """{"doc_id": 3, "text": "delta", "lang": "en", "source": "web", "n_chars": "many"}""",
+        // invalid JSON → PERMISSIVE null-row, flagged, raw line kept
+        """{broken json line""",
+        // missing fields → present ones parse, absent ones null
+        """{"doc_id": 5, "text": "epsilon"}""")
+      val out = new GZIPOutputStream(
+        Files.newOutputStream(dir.resolve("part-0000.jsonl.gz")))
+      out.write(lines.mkString("\n").getBytes("UTF-8")); out.close()
+      val got = Sources.documentsFromJsonl(spark, dir.toString)
+        .orderBy(org.apache.spark.sql.functions.asc_nulls_last("doc_id"))
+        .collect()
+      assert(got.length == 5)
+      assert(got(0).getAs[Long]("doc_id") == 1L && got(0).getAs[Long]("n_chars") == 10L)
+      assert(got(1).getAs[Long]("doc_id") == 2L && got(1).getAs[Long]("n_chars") == 5L)
+      assert(got(2).getAs[Long]("doc_id") == 3L && got(2).isNullAt(got(2).fieldIndex("n_chars")))
+      assert(got(3).getAs[Long]("doc_id") == 5L && got(3).isNullAt(got(3).fieldIndex("source")))
+      val corrupt = got(4)
+      assert(corrupt.isNullAt(corrupt.fieldIndex("doc_id")))
+      assert(corrupt.getAs[Boolean]("is_corrupt"))
+      assert(corrupt.getAs[String]("corrupt_record").startsWith("{broken"))
+      assert(got.take(4).forall(!_.getAs[Boolean]("is_corrupt")))
+    }
   }
 
   test("S9: JSONL writer round-trips losslessly through the reader") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_out")
-    val docs = Seq(
-      (1L, "plain text", "en", "web", 10L),
-      (2L, "quotes \" and \\ backslash\nand a newline", "en", "web", 38L),
-      (3L, "unicode ⋯ tail", "de", "books", 14L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    Sources.writeJsonl(docs, dir.toString, shards = 2)
-    val files = java.nio.file.Files.list(dir).toArray.map(_.toString)
-      .filter(_.endsWith(".txt.gz"))
-    assert(files.length == 2, "sharded gzip output")
-    // cached: a corrupt-column-only query over a raw JSON scan is
-    // disallowed (Spark's documented restriction — materialize first)
-    val back = Sources.documentsFromJsonl(spark, dir.toString).cache()
-    assert(back.where(col("is_corrupt")).count() == 0)
-    val got = back.select("doc_id", "text", "lang", "source", "n_chars")
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(got == docs.orderBy("doc_id").collect().map(_.toSeq).toSeq)
-    back.unpersist(blocking = false)
-    java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    Scratch.scoped("graft_jsonl_out") { dir =>
+      val docs = Seq(
+        (1L, "plain text", "en", "web", 10L),
+        (2L, "quotes \" and \\ backslash\nand a newline", "en", "web", 38L),
+        (3L, "unicode ⋯ tail", "de", "books", 14L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+      Sources.writeJsonl(docs, dir.toString, shards = 2)
+      val files = java.nio.file.Files.list(dir).toArray.map(_.toString)
+        .filter(_.endsWith(".txt.gz"))
+      assert(files.length == 2, "sharded gzip output")
+      // cached: a corrupt-column-only query over a raw JSON scan is
+      // disallowed (Spark's documented restriction — materialize first)
+      val back = Sources.documentsFromJsonl(spark, dir.toString).cache()
+      assert(back.where(col("is_corrupt")).count() == 0)
+      val got = back.select("doc_id", "text", "lang", "source", "n_chars")
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(got == docs.orderBy("doc_id").collect().map(_.toSeq).toSeq)
+      back.unpersist(blocking = false)
+    }
   }
 
   test("S8: WET parser — byte framing, blank-line bodies, degradation") {
@@ -152,80 +150,93 @@ class SourcesSpec extends SparkSpec {
 
   test("S9/zstd: .jsonl.zst shards round-trip losslessly through the reader") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_zst")
-    val docs = Seq(
-      (1L, "plain text", "en", "web", 10L),
-      (2L, "quotes \" and \\ backslash\nand a newline", "en", "web", 38L),
-      (3L, "unicode ⋯ tail", "de", "books", 14L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    Sources.writeJsonl(docs, dir.toString, shards = 2, compression = "zstd")
-    val files = java.nio.file.Files.list(dir).toArray.map(_.toString)
-      .filter(_.endsWith(".txt.zst"))
-    assert(files.length == 2, "sharded zstd output with .zst extension")
-    // the shard bytes really are zstandard (magic 0xFD2FB528 LE)
-    val head = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(files.head)).take(4).map(_ & 0xff)
-    assert(head.sameElements(Array(0x28, 0xb5, 0x2f, 0xfd)), "zstd magic")
-    val back = Sources.documentsFromJsonl(spark, dir.toString).cache()
-    assert(back.where(col("is_corrupt")).count() == 0)
-    val got = back.select("doc_id", "text", "lang", "source", "n_chars")
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(got == docs.orderBy("doc_id").collect().map(_.toSeq).toSeq)
-    back.unpersist(blocking = false)
-    java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    Scratch.scoped("graft_jsonl_zst") { dir =>
+      val docs = Seq(
+        (1L, "plain text", "en", "web", 10L),
+        (2L, "quotes \" and \\ backslash\nand a newline", "en", "web", 38L),
+        (3L, "unicode ⋯ tail", "de", "books", 14L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+      Sources.writeJsonl(docs, dir.toString, shards = 2, compression = "zstd")
+      val files = java.nio.file.Files.list(dir).toArray.map(_.toString)
+        .filter(_.endsWith(".txt.zst"))
+      assert(files.length == 2, "sharded zstd output with .zst extension")
+      // the shard bytes really are zstandard (magic 0xFD2FB528 LE)
+      val head = java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(files.head)).take(4).map(_ & 0xff)
+      assert(head.sameElements(Array(0x28, 0xb5, 0x2f, 0xfd)), "zstd magic")
+      val back = Sources.documentsFromJsonl(spark, dir.toString).cache()
+      assert(back.where(col("is_corrupt")).count() == 0)
+      val got = back.select("doc_id", "text", "lang", "source", "n_chars")
+        .orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(got == docs.orderBy("doc_id").collect().map(_.toSeq).toSeq)
+      back.unpersist(blocking = false)
+    }
   }
 
   test("S8/zstd: .wet.zst shards parse byte-identically to plain WET") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wet_zst")
-    val body = "payload one ⋯"
-    val n = body.getBytes("UTF-8").length
-    val wet = s"WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: http://a/7\r\n" +
-      s"Content-Length: $n\r\n\r\n$body\r\n"
-    val f = dir.resolve("shard-00.warc.wet.zst")
-    val out = new com.github.luben.zstd.ZstdOutputStream(
-      java.nio.file.Files.newOutputStream(f))
-    out.write(wet.getBytes("UTF-8")); out.close()
-    val recs = Sources.readWet(spark, dir.toString)
-      .collect().map(r => (r.getAs[String]("target_uri"), r.getAs[String]("body")))
-    assert(recs.toSeq == Seq(("http://a/7", body)))
-    java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    Scratch.scoped("graft_wet_zst") { dir =>
+      val body = "payload one ⋯"
+      val n = body.getBytes("UTF-8").length
+      val wet = s"WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: http://a/7\r\n" +
+        s"Content-Length: $n\r\n\r\n$body\r\n"
+      val f = dir.resolve("shard-00.warc.wet.zst")
+      val out = new com.github.luben.zstd.ZstdOutputStream(
+        java.nio.file.Files.newOutputStream(f))
+      out.write(wet.getBytes("UTF-8")); out.close()
+      val recs = Sources.readWet(spark, dir.toString)
+        .collect().map(r => (r.getAs[String]("target_uri"), r.getAs[String]("body")))
+      assert(recs.toSeq == Seq(("http://a/7", body)))
+    }
   }
 
   test("under-shard guard: warns on one fat compressed shard, quiet on many") {
     import org.apache.spark.sql.functions.col
-    val one = java.nio.file.Files.createTempDirectory("graft_shard1")
-    val many = java.nio.file.Files.createTempDirectory("graft_shard8")
-    val docs = spark.range(64).select(col("id").as("doc_id"))
-    docs.coalesce(1).selectExpr("to_json(struct(doc_id)) AS value")
-      .write.mode("overwrite").option("compression", "gzip").text(one.toString)
-    docs.repartition(8).selectExpr("to_json(struct(doc_id)) AS value")
-      .write.mode("overwrite").option("compression", "gzip").text(many.toString)
-    // local[4] ⇒ threshold files < 2: a 1-shard gzip dir warns …
-    val warn = Sources.underShardWarning(spark, one.toString)
-    assert(warn.exists(m => m.contains("non-splittable") && m.contains("1 file")))
-    // … an 8-shard dir does not, nor does uncompressed parquet-ish text
-    assert(Sources.underShardWarning(spark, many.toString).isEmpty)
-    val plain = java.nio.file.Files.createTempDirectory("graft_shardp")
-    docs.coalesce(1).selectExpr("to_json(struct(doc_id)) AS value")
-      .write.mode("overwrite").text(plain.toString)
-    assert(Sources.underShardWarning(spark, plain.toString).isEmpty)
-    Seq(one, many, plain).foreach { d =>
-      java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    Scratch.scoped("graft_shard") { root =>
+      val one = root.resolve("one")
+      val many = root.resolve("many")
+      val docs = spark.range(64).select(col("id").as("doc_id"))
+      docs.coalesce(1).selectExpr("to_json(struct(doc_id)) AS value")
+        .write.mode("overwrite").option("compression", "gzip").text(one.toString)
+      docs.repartition(8).selectExpr("to_json(struct(doc_id)) AS value")
+        .write.mode("overwrite").option("compression", "gzip").text(many.toString)
+      // local[4] ⇒ threshold files < 2: a 1-shard gzip dir warns …
+      val warn = Sources.underShardWarning(spark, one.toString)
+      assert(warn.exists(m => m.contains("non-splittable") && m.contains("1 file")))
+      // … an 8-shard dir does not, nor does uncompressed parquet-ish text
+      assert(Sources.underShardWarning(spark, many.toString).isEmpty)
+      val plain = root.resolve("plain")
+      docs.coalesce(1).selectExpr("to_json(struct(doc_id)) AS value")
+        .write.mode("overwrite").text(plain.toString)
+      assert(Sources.underShardWarning(spark, plain.toString).isEmpty)
     }
   }
 
   test("S4: single-file ordered CSV sink writes one exact file") {
-      Scratch.scoped("graft_out") { dir =>
-    val df = Seq((2, "b"), (1, "a")).toDF("k", "v").orderBy("k")
-    Sources.writeSingleCsv(df, s"$dir/out.csv")
-    val content = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/out.csv"))
-    assert(content == "k,v\n1,a\n2,b\n")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/out.csv.tmpdir")))
-  }}
+    Scratch.scoped("graft_out") { dir =>
+      val df = Seq((2, "b"), (1, "a")).toDF("k", "v").orderBy("k")
+      Sources.writeSingleCsv(df, s"$dir/out.csv")
+      val content = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$dir/out.csv"))
+      assert(content == "k,v\n1,a\n2,b\n")
+      assert(dir.toFile.list().toSeq == Seq("out.csv"))
+    }
+  }
+
+  test("S4: a frame that throws mid-write leaves the output dir holding " +
+      "only the previous file, byte for byte") {
+    Scratch.scoped("graft_out_fail") { dir =>
+      val latest = dir.resolve("latest.csv")
+      Sources.writeSingleCsv(Seq((1, "a")).toDF("k", "v"), latest.toString)
+      val before = java.nio.file.Files.readAllBytes(latest)
+      val bad = spark.range(4).select(
+        org.apache.spark.sql.functions.expr("if(id = 2, raise_error('mid-write'), id)").as("k"))
+      val e = intercept[Exception](Sources.writeSingleCsv(bad, latest.toString))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("mid-write")), e)
+      assert(dir.toFile.list().toSeq == Seq("latest.csv"))
+      assert(java.nio.file.Files.readAllBytes(latest).sameElements(before))
+    }
+  }
 
   test("httpSplit: status/headers/body; body keeps blank lines; edges -> None") {
     val ok = Sources.httpSplit(
@@ -320,14 +331,13 @@ class SourcesSpec extends SparkSpec {
     val recs = Sources.parseWarcBytes(rec ++ rec)
     assert(recs.length == 2 &&
       recs.forall(_.body.toSeq == body.toSeq))
-    val dir = java.nio.file.Files.createTempDirectory("graft_warcbytes")
-    try {
+    Scratch.scoped("graft_warcbytes") { dir =>
       java.nio.file.Files.write(dir.resolve("shard.warc"), rec ++ rec)
       val got = Sources.readWarcBytes(spark, dir.toString).collect()
       assert(got.length == 2)
       assert(got.map(_.getAs[Array[Byte]]("body").toSeq).toSet ==
         Set(body.toSeq))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("readWarcBytes: per-record gzip members (WARC style) stream out intact") {
@@ -349,15 +359,14 @@ class SourcesSpec extends SparkSpec {
     val shard = bodies.zipWithIndex
       .map { case (b, i) => member(s"http://x.example/$i", b) }
       .reduce(_ ++ _)
-    val dir = java.nio.file.Files.createTempDirectory("graft_warcgz")
-    try {
+    Scratch.scoped("graft_warcgz") { dir =>
       java.nio.file.Files.write(dir.resolve("shard.warc.gz"), shard)
       val got = Sources.readWarcBytes(spark, dir.toString)
         .orderBy("target_uri").collect()
       assert(got.length == 5)
       assert(got.map(_.getAs[Array[Byte]]("body").toSeq).toSeq ==
         bodies.map(_.toSeq))
-    } finally graft.streaming.StreamingResidue.deleteRecursively(dir)
+    }
   }
 
   test("parseWarcStream is record-streaming: emitting the head of a fat " +

@@ -35,22 +35,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * ascending mod-time — streaming file sources process oldest-first,
     * so chunk index order IS arrival order. */
   def writeChunk(df: DataFrame, dir: java.nio.file.Path, idx: Int): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("graft_chunk")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = scala.util.Using.resource(Files.list(tmp)) { s =>
-      s.iterator().asScala.find(_.toString.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-    }
     val dest = dir.resolve(f"part-$idx%04d.parquet")
-    Files.move(part, dest)
-    Files.setLastModifiedTime(dest,
+    graft.sources.Sources.writeSinglePart(df, dest)(_.parquet(_))
+    java.nio.file.Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(1000000000L + idx * 60000L))
-    scala.util.Using.resource(Files.walk(tmp)) { s =>
-      s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    }
   }
 }
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -59,8 +57,7 @@ class SummaryRewriteSpec extends SparkSpec {
   test("covered aggregate rewrites to the summary scan and matches " +
       "the full-scan answer (nulls in measures, group-col filter)") {
     withExtSession { sess =>
-      val tmp = Files.createTempDirectory("graft_sumrw")
-      try {
+      Scratch.scoped("graft_sumrw") { tmp =>
         val basePath = s"$tmp/fact"
         val sumPath = s"$tmp/summary"
         writeFixture(sess, basePath)
@@ -84,15 +81,14 @@ class SummaryRewriteSpec extends SparkSpec {
         assert(scans.nonEmpty && scans.forall(_.contains("summary")),
           s"expected summary scan, got $scans")
         assert(after.collect().map(_.toSeq).toSeq == before.toSeq)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     }
   }
 
   test("scope guards: measure filter / DISTINCT / uncovered grouping " +
       "/ uncovered aggregate / unset conf all scan the base table") {
     withExtSession { sess =>
-      val tmp = Files.createTempDirectory("graft_sumrw_guard")
-      try {
+      Scratch.scoped("graft_sumrw_guard") { tmp =>
         val basePath = s"$tmp/fact"
         val sumPath = s"$tmp/summary"
         writeFixture(sess, basePath)
@@ -137,15 +133,14 @@ class SummaryRewriteSpec extends SparkSpec {
         // and a COVERED query in the same session still rewrites
         val q6 = fact().groupBy("g2").agg(max("m").as("s"))
         assert(scannedPaths(q6).forall(_.contains("summary")))
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     }
   }
 
   test("rewritten values equal full scan across every covered " +
       "aggregate shape at two granularities") {
     withExtSession { sess =>
-      val tmp = Files.createTempDirectory("graft_sumrw_vals")
-      try {
+      Scratch.scoped("graft_sumrw_vals") { tmp =>
         val basePath = s"$tmp/fact"
         val sumPath = s"$tmp/summary"
         writeFixture(sess, basePath)
@@ -167,7 +162,7 @@ class SummaryRewriteSpec extends SparkSpec {
         sess.conf.set("spark.graft.summary.path", sumPath)
         assert(q(sess, Seq("g1")) == want1)
         assert(q(sess, Seq("g1", "g2")) == want2)
-      } finally graft.streaming.StreamingResidue.deleteRecursively(tmp)
+      }
     }
   }
 }

@@ -86,8 +86,7 @@ class WarehouseSpec extends SparkSpec {
       "below-k sketches must be exact")
     // estimation regime: two sources, ~1200 distinct tokens each,
     // 50% overlap — far above k = 64
-    val tmp = java.nio.file.Files.createTempDirectory("theta")
-    try {
+    Scratch.scoped("theta") { tmp =>
       // sa covers w0..w599, sb covers w300..w899 → overlap = 300
       val docs = (0 until 120).flatMap { d =>
         val src = if (d % 2 == 0) "sa" else "sb"
@@ -109,11 +108,6 @@ class WarehouseSpec extends SparkSpec {
       assert(math.abs(est - exact) <= exact * 40 / 100,
         s"est $est vs exact $exact outside the envelope")
       assert(est != exact, "large vocab must actually be estimating")
-    } finally {
-      scala.util.Using.resource(java.nio.file.Files.walk(tmp)) { s =>
-        s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
     }
   }
 

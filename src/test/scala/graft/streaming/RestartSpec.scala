@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.operators.Multimodal
 import graft.operators.Multimodal.MediaRecord
 
@@ -30,8 +30,7 @@ class RestartSpec extends SparkSpec {
 
   test("UpsertSink replay: a marker-less partial snapshot_N is skipped; " +
       "the replayed batch merges from committed N-1 and overwrites N") {
-    val tableDir = Files.createTempDirectory("graft_upsert_restart")
-    try {
+    Scratch.scoped("graft_upsert_restart") { tableDir =>
       // committed snapshot_0 (spark write emits _SUCCESS); rows carry
       // batch_id 0, the shape mergeBatch writes
       Seq((1L, 1L, "one", 0L), (2L, 1L, "two", 0L))
@@ -66,13 +65,12 @@ class RestartSpec extends SparkSpec {
         .select("doc_id", "version", "text")
         .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
       assert(again == got)
-    } finally StreamingResidue.deleteRecursively(tableDir)
+    }
   }
 
   test("UpsertSink first-batch replay: a partial snapshot_0 with NO " +
       "committed predecessor merges from nothing, not the partial") {
-    val tableDir = Files.createTempDirectory("graft_upsert_restart0")
-    try {
+    Scratch.scoped("graft_upsert_restart0") { tableDir =>
       write(Seq((7L, 99L, "partial")), s"$tableDir/snapshot_0")
       assert(new java.io.File(s"$tableDir/snapshot_0/_SUCCESS").delete())
       UpsertSink.mergeBatch(spark,
@@ -81,7 +79,7 @@ class RestartSpec extends SparkSpec {
       val got = spark.read.parquet(s"$tableDir/snapshot_0")
         .select("doc_id", "version").as[(Long, Long)].collect().toSeq
       assert(got == Seq((7L, 1L)), s"got $got")
-    } finally StreamingResidue.deleteRecursively(tableDir)
+    }
   }
 
   /** q127 fixture records: ids in the same group (id/3) share a pixel
@@ -92,9 +90,7 @@ class RestartSpec extends SparkSpec {
 
   test("drainMedia replay after crash between output and state append: " +
       "duplicate output rows, never a lost doc") {
-    val stateDir = Files.createTempDirectory("graft_media_restart_state")
-    val outDir = Files.createTempDirectory("graft_media_restart_out")
-    try {
+    Scratch.scoped("graft_media_restart_state") { stateDir => Scratch.scoped("graft_media_restart_out") { outDir =>
       val recs = media(0L, 1L, 6L).map(r => r.doc_id -> r).toMap
       // batch 0: group-0 PNG (id 0) admitted normally
       NearDupStream.processMediaBatch(
@@ -135,10 +131,7 @@ class RestartSpec extends SparkSpec {
       // the offline exact backstop recovers exactly-once
       assert(spark.read.parquet(outDir.toString)
         .dropDuplicates("doc_id").count() == 2L)
-    } finally {
-      StreamingResidue.deleteRecursively(stateDir)
-      StreamingResidue.deleteRecursively(outDir)
-    }
+    }}
   }
 
   test("processMediaBatch poison pill (Fail): the failed batch admits " +
@@ -147,9 +140,7 @@ class RestartSpec extends SparkSpec {
     // throws mid-way, after its band-key cache is materialized. The
     // replay of a failed batch must not find the previous attempt's
     // blocks still pinned, so residue is compared before and after.
-    val stateDir = Files.createTempDirectory("graft_media_pp_state")
-    val outDir = Files.createTempDirectory("graft_media_pp_out")
-    try {
+    Scratch.scoped("graft_media_pp_state") { stateDir => Scratch.scoped("graft_media_pp_out") { outDir =>
       val batch = media(0L, 1L, 6L).toDS()
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val e = intercept[IllegalStateException] {
@@ -163,17 +154,12 @@ class RestartSpec extends SparkSpec {
       assert(leaked.isEmpty, s"leaked blocks: ${leaked.mkString(", ")}")
       // failed before its output append: nothing admitted
       assert(outDir.toFile.list().isEmpty)
-    } finally {
-      StreamingResidue.deleteRecursively(stateDir)
-      StreamingResidue.deleteRecursively(outDir)
-    }
+    }}
   }
 
   test("drainMedia state loss (compaction mid-swap hazard) only " +
       "over-admits — a novel doc is never dropped") {
-    val stateDir = Files.createTempDirectory("graft_media_swap_state")
-    val outDir = Files.createTempDirectory("graft_media_swap_out")
-    try {
+    Scratch.scoped("graft_media_swap_state") { stateDir => Scratch.scoped("graft_media_swap_out") { outDir =>
       val recs = media(0L, 1L, 6L).map(r => r.doc_id -> r).toMap
       NearDupStream.processMediaBatch(
         Seq(recs(0L)).toDS(), 0L, stateDir, outDir,
@@ -191,9 +177,6 @@ class RestartSpec extends SparkSpec {
       // conservative direction: the re-encode (1) is over-ADMITTED
       // because its state evidence was lost; the novel doc (6) is kept
       assert(kept == Set(0L, 1L, 6L), s"got $kept")
-    } finally {
-      StreamingResidue.deleteRecursively(stateDir)
-      StreamingResidue.deleteRecursively(outDir)
-    }
+    }}
   }
 }
